@@ -49,20 +49,15 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     // shape (see RollupRewriteRule's doc for the exactness conditions).
     ext.injectPostHocResolutionRule(session =>
       new graft.plans.RollupRewriteRule(session))
-    // Multi-way (snowflake) aggregate-over-join MV rewrite — matches
-    // N ≥ 3-table inner-join trees, a shape disjoint from the two-table
-    // rule below; registered first so the decision order is
-    // deterministic.
+    // Aggregate-over-join MV rewrite for inner-join trees of N ≥ 2
+    // tables (two tables are the one-edge tree) — BEFORE the plain join
+    // rewrite: both match a two-table Join node, and serving the
+    // aggregate from O(groups) partials beats serving the join view then
+    // re-aggregating O(join rows). When this one declines, the join
+    // rewrite still may serve the inner join (re-aggregation over the
+    // served view is value-identical).
     ext.injectPostHocResolutionRule(session =>
       new graft.plans.MultiAggJoinRewriteRule(session))
-    // Aggregate-over-join MV rewrite — BEFORE the plain join rewrite:
-    // both match the same Join node, and serving the aggregate from
-    // O(groups) partials beats serving the join view then re-aggregating
-    // O(join rows). When this one declines, the join rewrite still may
-    // serve the inner join (re-aggregation over the served view is
-    // value-identical).
-    ext.injectPostHocResolutionRule(session =>
-      new graft.plans.AggJoinRewriteRule(session))
     // Quantile-serving rewrite (percentile_approx → the maintained
     // quantile view's O(bins) read, per-view explicit opt-in) — BEFORE
     // the plain join rewrite: a percentile over a registered join

@@ -4453,7 +4453,7 @@ object SparkEntry {
             .agg(count(lit(1)).as("n_orders"),
               sum(col("o_totalprice").cast("decimal(18,2)")).as("rev"),
               // avg served as stored-sum ÷ cnt with Average's own decimal
-              // arithmetic (see AggJoinRewriteRule) — the oracle replays
+              // arithmetic (see MultiAggJoinRewriteRule) — the oracle replays
               // the half-up rounding in exact integer micro-units
               avg(col("o_totalprice").cast("decimal(18,2)")).as("ap"))
           val usedView = graft.plans.PlanProbe.scansOnly(q, "/view")

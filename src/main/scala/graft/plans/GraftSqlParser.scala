@@ -8,7 +8,7 @@ import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 import org.apache.spark.sql.execution.command.LeafRunnableCommand
 import org.apache.spark.sql.types.{DataType, IntegerType, StringType, StructType}
 
-import graft.sources.{AggJoinView, JoinView, MultiAggJoinView, MultiNdvJoinView, MultiQuantileJoinView, NdvJoinView, NdvView, QuantileJoinView, QuantileView, RollupView}
+import graft.sources.{JoinView, MultiAggJoinView, MultiNdvJoinView, MultiQuantileJoinView, NdvView, QuantileJoinView, QuantileView, RollupView}
 import graft.sources.MultiAggJoinView.Edge
 
 /** The SQL DDL surface for the engine's materialized views — the
@@ -42,9 +42,12 @@ import graft.sources.MultiAggJoinView.Edge
   *     RIGHT_KEYS => 'c,d' [, HOW => 'inner'|'left_outer'|'full_outer']
   *     [, STALE => …])`
   *   - `AGG_JOIN(LEFT, RIGHT, LEFT_KEYS, RIGHT_KEYS, GROUPS => 'g,…',
-  *     MEASURES => 'm,…' [, EXTENTS => 'true'] [, STALE => …])`
+  *     MEASURES => 'm,…' [, EXTENTS => 'true'] [, STALE => …])` — the
+  *     one-edge MULTI_AGG_JOIN (ROOTS => 'LEFT;RIGHT', EDGES =>
+  *     '0:LEFT_KEYS:RIGHT_KEYS')
   *   - `NDV_JOIN(LEFT, RIGHT, LEFT_KEYS, RIGHT_KEYS, GROUPS,
-  *     DISTINCT_COL => 'x' [, STALE => …])`
+  *     DISTINCT_COL => 'x' [, STALE => …])` — the one-edge
+  *     MULTI_NDV_JOIN
   *   - `MULTI_AGG_JOIN(ROOTS => 'r0;r1;…', EDGES =>
   *     'parent:pk,…:ck,…;…' (edge i attaches table i+1), GROUPS,
   *     MEASURES [, EXTENTS => 'true'] [, STALE => …])`
@@ -64,6 +67,10 @@ import graft.sources.MultiAggJoinView.Edge
   *     `percentile_approx`-over-the-tree shape into the O(bins)
   *     Catalyst serve, STALE adds the telescoped delta-compensated
   *     serving (sound over churn gaps — signed counts retract)
+  *
+  * Ten kinds over eight view implementations: AGG_JOIN and NDV_JOIN
+  * build the same spec as their MULTI_ twins, and SHOW still reports
+  * the kind the CREATE named.
   *
   * CREATE registers AND materializes (the initial refresh runs — a
   * CREATE that didn't materialize would serve nothing); REFRESH brings
@@ -113,32 +120,22 @@ object GraftDdl {
     def refresh(spark: SparkSession, view: String): Int =
       JoinView.refreshKeys(spark, l, r, view, lks, rks, how)
   }
-  private final case class AggJoinSpec(l: String, r: String, lks: Seq[String],
-                                       rks: Seq[String], groups: Seq[String],
-                                       measures: Seq[String], extents: Boolean,
-                                       stale: Boolean) extends Spec {
-    def refresh(spark: SparkSession, view: String): Int =
-      AggJoinView.refreshKeys(spark, l, r, view, lks, rks, groups,
-        measures, extents)
-  }
-  private final case class NdvJoinSpec(l: String, r: String, lks: Seq[String],
-                                       rks: Seq[String], groups: Seq[String],
-                                       x: String, stale: Boolean) extends Spec {
-    def refresh(spark: SparkSession, view: String): Int =
-      NdvJoinView.refresh(spark, l, r, view, lks, rks, groups, x)
-  }
+  /** `kind`: the DDL kind SHOW reports — MULTI_AGG_JOIN, or AGG_JOIN
+    * for its one-edge spelling (likewise for [[MultiNdvSpec]]). */
   private final case class MultiSpec(roots: Seq[String], edges: Seq[Edge],
                                      groups: Seq[String],
                                      measures: Seq[String],
                                      extents: Boolean,
-                                     stale: Boolean) extends Spec {
+                                     stale: Boolean,
+                                     kind: String) extends Spec {
     def refresh(spark: SparkSession, view: String): Int =
       MultiAggJoinView.refresh(spark, roots, view, edges, groups, measures,
         extents)
   }
   private final case class MultiNdvSpec(roots: Seq[String], edges: Seq[Edge],
                                         groups: Seq[String], x: String,
-                                        stale: Boolean) extends Spec {
+                                        stale: Boolean,
+                                        kind: String) extends Spec {
     def refresh(spark: SparkSession, view: String): Int =
       MultiNdvJoinView.refresh(spark, roots, view, edges, groups, x)
   }
@@ -289,10 +286,8 @@ object GraftDdl {
         case _: RollupSpec          => "ROLLUP"
         case _: QuantileSpec        => "QUANTILE"
         case _: JoinSpec            => "JOIN"
-        case _: AggJoinSpec         => "AGG_JOIN"
-        case _: NdvJoinSpec         => "NDV_JOIN"
-        case _: MultiSpec           => "MULTI_AGG_JOIN"
-        case _: MultiNdvSpec        => "MULTI_NDV_JOIN"
+        case m: MultiSpec           => m.kind
+        case m: MultiNdvSpec        => m.kind
         case _: QuantileJoinSpec    => "QUANTILE_JOIN"
         case _: MultiQuantileJoinSpec => "MULTI_QUANTILE_JOIN"
       }
@@ -308,6 +303,23 @@ object GraftDdl {
 
   private def flag(args: Map[String, String], k: String): Boolean =
     args.get(k).exists(_.equalsIgnoreCase("true"))
+
+  /** The join tree of a kind: ROOTS + EDGES for the MULTI_ kinds, the
+    * one-edge tree LEFT ⋈ RIGHT otherwise. */
+  private def tree(args: Map[String, String],
+                   kind: String): (Seq[String], Seq[Edge]) =
+    if (kind.startsWith("MULTI_"))
+      (need(args, "ROOTS", kind).split(";").map(_.trim).toSeq,
+        need(args, "EDGES", kind).split(";").map(_.trim).map { e =>
+          e.split(":") match {
+            case Array(p, pks, cks) => Edge(p.trim.toInt, list(pks), list(cks))
+            case _ => sys.error(s"bad EDGES entry '$e' (parent:pk,…:ck,…)")
+          }
+        }.toSeq)
+    else
+      (Seq(need(args, "LEFT", kind), need(args, "RIGHT", kind)),
+        Seq(Edge(0, list(need(args, "LEFT_KEYS", kind)),
+          list(need(args, "RIGHT_KEYS", kind)))))
 
   /** Build the spec + perform the registration for CREATE; the entry
     * persists so a restarted session rehydrates it. */
@@ -344,40 +356,15 @@ object GraftDdl {
           list(need(args, "LEFT_KEYS", kind)),
           list(need(args, "RIGHT_KEYS", kind)),
           args.getOrElse("HOW", "inner").toLowerCase, flag(args, "STALE"))
-      case "AGG_JOIN" =>
-        AggJoinSpec(need(args, "LEFT", kind), need(args, "RIGHT", kind),
-          list(need(args, "LEFT_KEYS", kind)),
-          list(need(args, "RIGHT_KEYS", kind)),
-          list(need(args, "GROUPS", kind)),
-          list(need(args, "MEASURES", kind)),
-          flag(args, "EXTENTS"), flag(args, "STALE"))
-      case "NDV_JOIN" =>
-        NdvJoinSpec(need(args, "LEFT", kind), need(args, "RIGHT", kind),
-          list(need(args, "LEFT_KEYS", kind)),
-          list(need(args, "RIGHT_KEYS", kind)),
-          list(need(args, "GROUPS", kind)),
-          need(args, "DISTINCT_COL", kind), flag(args, "STALE"))
-      case "MULTI_AGG_JOIN" =>
-        val roots = need(args, "ROOTS", kind).split(";").map(_.trim).toSeq
-        val edges = need(args, "EDGES", kind).split(";").map(_.trim).map { e =>
-          e.split(":") match {
-            case Array(p, pks, cks) => Edge(p.trim.toInt, list(pks), list(cks))
-            case _ => sys.error(s"bad EDGES entry '$e' (parent:pk,…:ck,…)")
-          }
-        }.toSeq
+      case "AGG_JOIN" | "MULTI_AGG_JOIN" =>
+        val (roots, edges) = tree(args, kind)
         MultiSpec(roots, edges, list(need(args, "GROUPS", kind)),
           list(need(args, "MEASURES", kind)), flag(args, "EXTENTS"),
-          flag(args, "STALE"))
-      case "MULTI_NDV_JOIN" =>
-        val roots = need(args, "ROOTS", kind).split(";").map(_.trim).toSeq
-        val edges = need(args, "EDGES", kind).split(";").map(_.trim).map { e =>
-          e.split(":") match {
-            case Array(p, pks, cks) => Edge(p.trim.toInt, list(pks), list(cks))
-            case _ => sys.error(s"bad EDGES entry '$e' (parent:pk,…:ck,…)")
-          }
-        }.toSeq
+          flag(args, "STALE"), kind)
+      case "NDV_JOIN" | "MULTI_NDV_JOIN" =>
+        val (roots, edges) = tree(args, kind)
         MultiNdvSpec(roots, edges, list(need(args, "GROUPS", kind)),
-          need(args, "DISTINCT_COL", kind), flag(args, "STALE"))
+          need(args, "DISTINCT_COL", kind), flag(args, "STALE"), kind)
       case "QUANTILE_JOIN" =>
         QuantileJoinSpec(need(args, "LEFT", kind), need(args, "RIGHT", kind),
           list(need(args, "LEFT_KEYS", kind)),
@@ -388,13 +375,7 @@ object GraftDdl {
             .getOrElse(QuantileJoinView.DefaultBins),
           flag(args, "SERVE"), flag(args, "STALE"))
       case "MULTI_QUANTILE_JOIN" =>
-        val roots = need(args, "ROOTS", kind).split(";").map(_.trim).toSeq
-        val edges = need(args, "EDGES", kind).split(";").map(_.trim).map { e =>
-          e.split(":") match {
-            case Array(p, pks, cks) => Edge(p.trim.toInt, list(pks), list(cks))
-            case _ => sys.error(s"bad EDGES entry '$e' (parent:pk,…:ck,…)")
-          }
-        }.toSeq
+        val (roots, edges) = tree(args, kind)
         MultiQuantileJoinSpec(roots, edges, list(need(args, "GROUPS", kind)),
           need(args, "VALUE_COL", kind),
           args.get("BINS").map(_.toInt)
@@ -418,13 +399,9 @@ object GraftDdl {
       if (serve) MaterializedQuantiles.enable(src, view, grainSec, stale)
     case JoinSpec(l, r, lks, rks, how, stale) =>
       MaterializedJoins.enableKeys(l, r, view, lks, rks, how, stale)
-    case AggJoinSpec(l, r, lks, rks, g, m, _, stale) =>
-      MaterializedAggJoins.enableKeys(l, r, view, lks, rks, g, m, stale)
-    case NdvJoinSpec(l, r, lks, rks, g, x, stale) =>
-      MaterializedAggJoins.enableNdvKeys(l, r, view, lks, rks, g, x, stale)
-    case MultiSpec(roots, edges, g, m, _, stale) =>
+    case MultiSpec(roots, edges, g, m, _, stale, _) =>
       MaterializedMultiJoins.enable(roots, view, edges, g, m, stale)
-    case MultiNdvSpec(roots, edges, g, x, stale) =>
+    case MultiNdvSpec(roots, edges, g, x, stale, _) =>
       MaterializedMultiJoins.enableNdv(roots, view, edges, g, x, stale)
     case QuantileJoinSpec(l, r, lks, rks, g, x, bins, serve, stale) =>
       if (serve)
@@ -469,12 +446,10 @@ object GraftDdl {
       case _: RollupSpec   => MaterializedRollups.disableView(view)
       case _: QuantileSpec => MaterializedQuantiles.disableView(view)
       case _: JoinSpec     => MaterializedJoins.disableView(view)
-      case _: AggJoinSpec  => MaterializedAggJoins.disableView(view)
-      case _: NdvJoinSpec  => MaterializedAggJoins.disableView(view)
-      case _: MultiSpec        => MaterializedMultiJoins.disable(view)
-      case _: MultiNdvSpec     => MaterializedMultiJoins.disable(view)
+      case _: MultiSpec        => MaterializedMultiJoins.disableView(view)
+      case _: MultiNdvSpec     => MaterializedMultiJoins.disableView(view)
       case _: QuantileJoinSpec => MaterializedQuantiles.disableView(view)
-      case _: MultiQuantileJoinSpec => MaterializedMultiJoins.disable(view)
+      case _: MultiQuantileJoinSpec => MaterializedMultiJoins.disableView(view)
     }
     java.nio.file.Files.deleteIfExists(entryFile(catalogDir(spark), view))
   }

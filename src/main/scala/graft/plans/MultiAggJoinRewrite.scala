@@ -14,9 +14,10 @@ import org.apache.spark.sql.types.DecimalType
 import graft.sources.{MultiAggJoinView, MultiNdvJoinView, SnapshotStore}
 import graft.sources.MultiAggJoinView.Edge
 
-/** Registry of N-table join-tree specs → maintained
+/** Registry of N-table (N ≥ 2) join-tree specs → maintained
   * [[MultiAggJoinView]] the [[MultiAggJoinRewriteRule]] may answer
-  * from. Explicit opt-in like every sibling registry. */
+  * from. Explicit opt-in like every sibling registry; the two-table
+  * registrations ([[MaterializedAggJoins]]) are its one-edge trees. */
 object MaterializedMultiJoins {
 
   /** A registration: ordered roots, the edge tree, spec columns, and the
@@ -93,6 +94,13 @@ object MaterializedMultiJoins {
       .map(_.getKey).toSeq.foreach { k =>
         regs.remove(k); probeCache.remove(k)
       }
+  }
+
+  /** Unregister exactly the registration serving from `viewRoot` —
+    * registrations that read it as a source keep serving. */
+  def disableView(viewRoot: String): Unit = {
+    val c = canon(viewRoot)
+    regs.remove(c); probeCache.remove(c)
   }
 
   def clear(): Unit = { regs.clear(); probeCache.clear() }
@@ -249,11 +257,11 @@ private[plans] object MultiTreeMatch {
     }
 
   /** Flatten + match: every registration of `kind` whose tree equals the
-    * user plan's. None when the plan isn't an N ≥ 3 inner-join tree of
+    * user plan's. None when the plan isn't an N ≥ 2 inner-join tree of
     * plain scans or an equality isn't attr = attr across two leaves. */
   def candidates(child: LogicalPlan, kind: String): Option[(Ctx, Seq[Hit])] = {
     val (leaves, eqs, filters) = flatten(child).getOrElse(return None)
-    if (leaves.size < 3) return None // two-table shapes belong to the 2-way rules
+    if (leaves.size < 2) return None
     val leafPaths = leaves.map(l =>
       MaterializedJoins.canonPaths(l).getOrElse(return None))
     val leafOf: Map[ExprId, Int] = leaves.zipWithIndex.flatMap {
@@ -302,9 +310,10 @@ private[plans] object MultiTreeMatch {
   }
 }
 
-/** Materialized MULTI-WAY aggregate-over-join rewrite — the snowflake MV
+/** Materialized aggregate-over-join rewrite — the star and snowflake MV
   * as one Catalyst rule: a user-shaped chain of INNER equi-joins over N
-  * registered stores' current snapshots, grouped on registered columns
+  * ≥ 2 registered stores' current snapshots (two tables are the one-edge
+  * tree), grouped on registered columns
   * and aggregated as `count(1)` / `sum(CAST(m AS DECIMAL(18..30, 2)))` /
   * the matching `avg`, is answered from the O(groups) maintained
   * [[MultiAggJoinView]] — the whole join TREE disappears from the plan.
@@ -312,8 +321,7 @@ private[plans] object MultiTreeMatch {
   * dims, GROUP BY dim attributes) served from partial rows the refresh
   * already paid for.
   *
-  * Fires only when EXACT (the [[AggJoinRewriteRule]] posture, lifted to
-  * a tree):
+  * Fires only when EXACT:
   *   - the aggregate's child flattens to INNER joins over exactly the
   *     registered stores' current-version scans (at most column-pruning
   *     Projects and deterministic grouping-column Filters in between);
@@ -339,9 +347,10 @@ private[plans] object MultiTreeMatch {
   *     OWNING table (a same-named column on another table declines).
   *     Anything else declines.
   *
-  * Registered BEFORE the two-table agg-join rule: they match disjoint
-  * shapes (N ≥ 3 plans never dissect to one Join of two scans), the
-  * order just keeps the decision deterministic. */
+  * Output attributes keep the original exprIds. Registered BEFORE
+  * [[JoinRewriteRule]] in [[graft.GraftExtensions]]: both match a
+  * two-table Join, and serving the aggregate from O(groups) partials
+  * beats serving the join view and re-aggregating O(join rows). */
 class MultiAggJoinRewriteRule(spark: SparkSession) extends Rule[LogicalPlan] {
 
   override def apply(plan: LogicalPlan): LogicalPlan = {
@@ -359,12 +368,11 @@ class MultiAggJoinRewriteRule(spark: SparkSession) extends Rule[LogicalPlan] {
       case a: AttributeReference => a
       case _                     => return None
     }
-    // the aggregate list picks the view KIND it needs (the 2-table
-    // rule's posture): any datasketches distinct-count shape wants an
-    // ndv view, everything else the agg kind — "quantile"-kind
-    // registrations never serve here (their store holds bin partials;
-    // the QuantileRewriteRule owns them). Freshness breaks ties among
-    // same-kind candidates.
+    // the aggregate list picks the view KIND it needs: any datasketches
+    // distinct-count shape wants an ndv view, everything else the agg
+    // kind — "quantile"-kind registrations never serve here (their store
+    // holds bin partials; the QuantileRewriteRule owns them). Freshness
+    // breaks ties among same-kind candidates.
     val wantsNdv = ae.exists {
       case Alias(HllSketchEstimate(_), _) => true
       case _                              => false
@@ -427,7 +435,13 @@ class MultiAggJoinRewriteRule(spark: SparkSession) extends Rule[LogicalPlan] {
         val c = viewCol("cnt").filter(_.dataType == ag.dataType)
           .getOrElse(return None)
         Alias(c, al.name)(exprId = al.exprId)
-      // precision floor 18 — the AggJoinRewrite rationale verbatim
+      // sum(CAST(m AS DECIMAL(p, 2))) serves the exact stored
+      // DECIMAL(30,2) partial: casting to scale 2 at any precision ≥ the
+      // values' magnitude rounds identically. Precision FLOOR 18 (the
+      // repo-wide decimal(18,2) convention): a sub-magnitude cast like
+      // DECIMAL(4,2) overflows per-VALUE to null in the base plan
+      // (non-ANSI cast) while the stored partial counted the value — the
+      // same query would answer differently served vs declined.
       case al @ Alias(ag @ AggregateExpression(
           Sum(Cast(v: AttributeReference, dt: DecimalType, _, _), _),
           _, false, None, _), _)
@@ -435,9 +449,16 @@ class MultiAggJoinRewriteRule(spark: SparkSession) extends Rule[LogicalPlan] {
             measureNorm(v).isDefined =>
         val c = viewCol(s"sum_${measureNorm(v).get}").getOrElse(return None)
         Alias(Cast(c, ag.dataType), al.name)(exprId = al.exprId)
-      // avg = stored sum ÷ stored NON-NULL count (Average's divisor),
-      // Average's decimal arithmetic replicated — the AggJoinRewrite avg
-      // case verbatim, nn declining when absent
+      // avg(CAST(m AS DECIMAL(p,2))) = stored sum ÷ the stored NON-NULL
+      // count `nn_<m>` (Average divides by the non-null inputs, not the
+      // row count — [2.00, NULL] averages to 2.00), with Average's OWN
+      // decimal arithmetic replicated: operands cast to Average's
+      // internal types (sum at DECIMAL(p+10,2), count at LongDecimal), so
+      // the Divide's result type — and hence its HALF_UP rounding — is
+      // the base plan's, then the same final cast. Served == declined to
+      // the last digit. An all-NULL group has a NULL stored sum and
+      // nn = 0; NULL ÷ 0 under LEGACY eval is NULL, the base plan's
+      // answer. A view without the nn column declines.
       case al @ Alias(ag @ AggregateExpression(
           Average(Cast(v: AttributeReference, dt: DecimalType, _, _), _),
           _, false, None, _), _)

@@ -353,7 +353,7 @@ class QuantileRewriteRule(spark: SparkSession) extends Rule[LogicalPlan] {
     }.toSeq
     // grouping attrs normalize onto the registered groups (a grouped-on
     // reg-right key serves from its paired left key — value-identical
-    // under the inner equality, the AggJoinRewrite contract)
+    // under the inner equality, the MultiTreeMatch contract)
     def groupNorm(h: Hit): Option[Map[ExprId, String]] = {
       val rkToLk = h.keyPairs.map(_.swap).toMap
       def normName(n: String): String = {
@@ -445,7 +445,8 @@ class QuantileRewriteRule(spark: SparkSession) extends Rule[LogicalPlan] {
 
   // ---- multiway arm --------------------------------------------------------
 
-  /** `percentile_approx` over an N ≥ 3 INNER join tree, answered from a
+  /** `percentile_approx` over an N ≥ 2 INNER join tree (a two-table
+    * shape reaches it only after the join arm declines), answered from a
     * registered [[MultiQuantileJoinView]] (a "quantile"-kind
     * [[MaterializedMultiJoins]] registration): the whole TREE leaves the
     * plan for the view's O(live bins) read. Matching is the

@@ -337,7 +337,7 @@ class RollupRewriteRule(spark: SparkSession) extends Rule[LogicalPlan] {
     al match {
       case Alias(AggregateExpression(Count(Seq(Literal(1, _))), _, false, None, _), _) =>
         Some(Alias(viewCol("cnt"), al.name)(exprId = al.exprId))
-      // precision floor 18, mirroring AggJoinRewrite: below it a
+      // precision floor 18, mirroring MultiAggJoinRewriteRule: below it a
       // non-ANSI per-value cast can overflow to null in the base plan
       // while the DECIMAL(30,2) partial counted the value — served and
       // declined answers would diverge
@@ -355,7 +355,7 @@ class RollupRewriteRule(spark: SparkSession) extends Rule[LogicalPlan] {
       // plan, including the all-NULL group (vsum NULL ÷ 0 under LEGACY
       // eval is NULL, Average's own answer). A pre-nn legacy view lacks
       // the column and DECLINES avg until a refresh migrates it; see
-      // AggJoinRewrite's avg case for the twin
+      // MultiAggJoinRewriteRule's avg case for the twin
       case Alias(ag @ AggregateExpression(
           Average(Cast(v: AttributeReference, dt: DecimalType, _, _), _),
           _, false, None, _), _)

@@ -1,496 +1,31 @@
 package graft.sources
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
+import org.apache.spark.sql.{DataFrame, SparkSession}
 
-/** Incrementally maintained AGGREGATE-OVER-JOIN view — the star-schema
-  * materialized view (`SELECT g…, count(*), sum(m…) FROM L JOIN R ON
-  * lk = rk GROUP BY g…`), composing the engine's two IVM halves
-  * ([[JoinView]]'s delta-join identity, [[RollupView]]'s mergeable
-  * partials) WITHOUT materializing the join: the view stores one
-  * SIGNED partial row per group, so storage is O(groups), never
-  * O(join rows).
+import MultiAggJoinView.Edge
+
+/** The two-table AGGREGATE-OVER-JOIN view (`SELECT g…, count(*),
+  * sum(m…) FROM L JOIN R ON lk = rk GROUP BY g…`, optional min/max
+  * extents) — the one-edge [[MultiAggJoinView]] tree (N = 2). Every
+  * entry point forwards `(left, right, leftKeys, rightKeys)` as the
+  * roots `Seq(left, right)` and the single edge `Edge(0, leftKeys,
+  * rightKeys)`; storage, maintenance, reads and serving
+  * ([[graft.plans.MultiAggJoinRewriteRule]]) are the N-way view's.
   *
-  * Maintenance aggregates the same delta terms the join view computes
-  * and appends them as signed partials:
-  *
-  *   - append-only delta: Δ(L⋈R) = ΔL⋈R_new ∪ L_old⋈ΔR (disjoint,
-  *     exactly the new join rows — [[JoinView]]'s identity), folded to
-  *     POSITIVE partials per group and appended: O(Δ + matching), with
-  *     the standing sides bloom-prefiltered and file-pruned by the
-  *     delta's key range exactly like the join view's refresh.
-  *   - row churn (delete/upsert on either source): COUNT and a DECIMAL
-  *     SUM are retractable monoids, so — unlike the join view, which
-  *     must rewrite itself, and unlike [[RollupView]]'s min/max, which
-  *     force a dirty-group recompute — churn is pure arithmetic: the
-  *     dirty join keys come from the sources' O(churn) change feeds,
-  *     the OLD join rows they owned (time-travel reads at the view's
-  *     cursor, dirty-pruned) fold to NEGATIVE partials, the NEW join
-  *     rows they own fold to positive ones, and both land in ONE
-  *     append. No view rewrite, no dirty-group upsert.
-  *   - `extents = true` additionally stores min/max partials per
-  *     measure, trading the pure-arithmetic churn for the honest
-  *     dirty-group recompute (see [[refreshKeys]]) — the caller picks
-  *     which contract the view pays; the default keeps count/sum-only
-  *     arithmetic.
-  *   - a source compaction (or vacuumed refresh baseline) invalidates
-  *     the manifest diff: one full rebuild, same as both parent views.
-  *
-  * Read merges partials per group and drops `cnt = 0` groups (a group
-  * whose join rows all vanished; its sums are exactly zero too —
-  * decimal arithmetic replays the same rows with opposite sign).
-  * Decimal partials keep the merge EXACT in any order, which is what
-  * makes the view bit-equal to a from-scratch GROUP BY over the join —
-  * the property the oracle checks and the serving rewrite
-  * ([[graft.plans.AggJoinRewriteRule]]) relies on.
-  *
-  * At 100 TB this is the warehouse dashboard shape: facts × dims join
-  * once per REFRESH over just the delta, and every served query reads
-  * O(groups) partial rows instead of re-running the join. The view's
-  * spec (key pairs, group columns, measure columns) is recorded at
-  * bootstrap and every later refresh must pass the same spec — a
-  * mismatched refresh would silently mix group shapes.
-  *
-  * Contract: inner equi-join only (outer joins would need null-extended
-  * group bookkeeping that retracts non-monotonically); group and
-  * measure columns must each resolve unambiguously in the joined
-  * `l.* ++ r.*` (right keys excluded — each is recoverable from its
-  * paired left key); measures are summed as DECIMAL(30,2) (the
-  * [[RollupView]] partial-sum posture: fixed so every version's schema
-  * is identical, wide enough that re-merged partials stay exact).
+  * A store written by the earlier two-table implementation (an
+  * `_aggspec` spec file and a base-10⁶ cursor) is refused on refresh
+  * and declined by serving — rebuild it into a fresh store.
   */
 object AggJoinView {
 
-  /** Fixed partial-sum type — see [[RollupView]]'s SumType rationale. */
-  private val SumType = "decimal(30,2)"
-
-  private def sumCol(m: String): String = s"sum_$m"
-  private def minCol(m: String): String = s"min_$m"
-  private def maxCol(m: String): String = s"max_$m"
-
-  /** Signed NON-NULL value count per measure — what lets the merged sum
-    * stay NULL-exact: Spark's sum over an all-NULL group is NULL, but
-    * signed partials that retracted to zero (or a tombstone's 0) would
-    * otherwise serve 0 when the group re-arrives with only NULL
-    * measures. The merge serves `sum` only while `nn > 0`. */
-  private def nnCol(m: String): String = s"nn_$m"
-
-  /** The recorded view spec — written at bootstrap BEFORE the first
-    * publish (a crash between the two re-bootstraps and rewrites the
-    * file), checked by every later refresh. */
-  private def specLine(lks: Seq[String], rks: Seq[String],
-                       groups: Seq[String], measures: Seq[String],
-                       extents: Boolean): String = {
-    def lc(xs: Seq[String]) = xs.map(_.toLowerCase(java.util.Locale.ROOT))
-    // p=2 marks the nn-carrying partial format: a store recorded without
-    // it predates the non-null counts, so a refresh refuses (spec
-    // mismatch) and compensatedRead declines instead of merging
-    // wrong-shaped partials — rebuild such a view from scratch
-    s"lk=${lc(lks).mkString(",")};rk=${lc(rks).mkString(",")};" +
-      s"g=${lc(groups).sorted.mkString(",")};m=${lc(measures).sorted.mkString(",")}" +
-      (if (extents) ";x=1" else "") + ";p=2"
-  }
-
-  /** Does this view's recorded spec carry min/max partials? (absent flag
-    * = the count/sum-only legacy shape) */
-  private def recordedExtents(viewRoot: String): Boolean =
-    recordedSpec(viewRoot).exists(_.split(";").contains("x=1"))
-
-  private def recordedSpec(viewRoot: String): Option[String] = {
-    val p = java.nio.file.Paths.get(viewRoot, "_aggspec")
-    if (java.nio.file.Files.exists(p))
-      Some(new String(java.nio.file.Files.readAllBytes(p), "UTF-8").trim)
-    else None
-  }
-
-  private def recordSpec(viewRoot: String, line: String): Unit = {
-    java.nio.file.Files.createDirectories(java.nio.file.Paths.get(viewRoot))
-    java.nio.file.Files.write(
-      java.nio.file.Paths.get(viewRoot, "_aggspec"), line.getBytes("UTF-8"))
-  }
-
-  /** The view-shaped inner join ([[JoinView.joined]] — ONE definition of
-    * "conjunction of pairwise equalities, right keys dropped") projected
-    * to group + measure columns. */
-  private def joinedSlice(l: DataFrame, r: DataFrame,
-                          lks: Seq[String], rks: Seq[String],
-                          groups: Seq[String], measures: Seq[String]): DataFrame =
-    JoinView.joined(l, r, lks, rks).select((groups ++ measures).map(col): _*)
-
-  /** Fold join rows to one signed partial per group. `sign` is +1 for
-    * arriving rows, -1 for retracted ones; count/sum retract by
-    * arithmetic, which is the whole design. `extents = true` adds
-    * min/max partials — insert-monotone only, so signed folding is
-    * forbidden there (the churn path replaces dirty groups whole
-    * instead). */
-  private def fold(rows: DataFrame, groups: Seq[String],
-                   measures: Seq[String], sign: Int,
-                   extents: Boolean = false): DataFrame = {
-    require(sign == 1 || !extents,
-      "internal: min/max partials cannot fold signed")
-    val aggs: Seq[Column] =
-      (count(lit(1)) * lit(sign.toLong)).as("cnt") +:
-        measures.flatMap(m =>
-          Seq((sum(col(m).cast(SumType)) * lit(sign)).cast(SumType).as(sumCol(m)),
-            (count(col(m)) * lit(sign.toLong)).as(nnCol(m))) ++
-            (if (extents)
-              Seq(min(col(m)).as(minCol(m)), max(col(m)).as(maxCol(m)))
-            else Nil))
-    rows.groupBy(groups.map(col): _*).agg(aggs.head, aggs.tail: _*)
-  }
-
-  /** Tombstone partials for dirty groups whose join rows all vanished
-    * (extents path only — the signed path retracts to cnt = 0 by
-    * arithmetic): logically-absent markers [[read]] filters and
-    * [[compact]] folds away. */
-  private def tombstones(gone: DataFrame, recomputed: DataFrame,
-                         measures: Seq[String]): DataFrame = {
-    val cols: Seq[Column] = gone.columns.toSeq.map(col) ++
-      (lit(0L).as("cnt") +: measures.flatMap { m =>
-        val mt = recomputed.schema(recomputed.columns
-          .find(_.equalsIgnoreCase(minCol(m))).get).dataType
-        Seq(lit(0).cast(SumType).as(sumCol(m)), lit(0L).as(nnCol(m)),
-          lit(null).cast(mt).as(minCol(m)), lit(null).cast(mt).as(maxCol(m)))
-      })
-    gone.select(cols: _*)
-  }
-
-  /** Bring the view up to both sources' current versions. Returns the
-    * view version (unchanged when both cursors already match). Spec
-    * arguments must repeat the bootstrap's spec verbatim — including
-    * `extents`: `extents = true` additionally stores min/max partials
-    * per measure. Extents keep the O(Δ) append path (min/max are
-    * insert-monotone), but CHURN can no longer retract by arithmetic (a
-    * deleted extremum un-derives nothing) — dirty GROUPS re-aggregate
-    * whole from the current join (group-restricted per side, the
-    * [[RollupView]] dirty-group technique lifted to the join) and
-    * REPLACE by group key in ONE stamped publish (`upsertEpoch`: the
-    * replace and the cursor advance are atomic, so no reader ever sees
-    * recomputed groups next to a stale cursor), emptied groups
-    * tombstone. The count/sum-only default keeps the pure-arithmetic
-    * churn. */
+  /** Bring the view up to both sources' current versions (see
+    * [[MultiAggJoinView.refresh]]). Returns the view version. */
   def refreshKeys(spark: SparkSession, leftRoot: String, rightRoot: String,
                   viewRoot: String, leftKeys: Seq[String],
                   rightKeys: Seq[String], groupCols: Seq[String],
-                  measureCols: Seq[String], extents: Boolean = false): Int = {
-    require(leftKeys.nonEmpty && leftKeys.size == rightKeys.size,
-      s"key lists must be non-empty and pair up: $leftKeys vs $rightKeys")
-    require(groupCols.nonEmpty, "at least one group column")
-    // a group column named like a partial column would collide in the
-    // folded frame (duplicate output names — downstream writes refuse
-    // confusingly; refuse at the cause)
-    locally {
-      val reserved = "cnt" +: measureCols.flatMap(m =>
-        Seq(sumCol(m), nnCol(m)) ++
-          (if (extents) Seq(minCol(m), maxCol(m)) else Nil))
-      groupCols.find(g => reserved.exists(_.equalsIgnoreCase(g))).foreach(g =>
-        sys.error(s"group column '$g' collides with a partial column name"))
-    }
-    val lv = SnapshotStore.currentVersion(leftRoot)
-    val rv = SnapshotStore.currentVersion(rightRoot)
-    require(lv > 0 && rv > 0,
-      s"both sources must have a published version ($leftRoot=$lv, $rightRoot=$rv)")
-    val (plv, prv) = JoinView.cursors(viewRoot)
-    if (lv == plv && rv == prv) return SnapshotStore.currentVersion(viewRoot)
-    require(lv >= plv && rv >= prv,
-      s"source went backwards: ($plv,$prv) -> ($lv,$rv)")
-    val spec = specLine(leftKeys, rightKeys, groupCols, measureCols, extents)
-    if (plv != 0 || prv != 0) {
-      val rec = recordedSpec(viewRoot).getOrElse("")
-      require(rec == spec,
-        s"view at $viewRoot is maintained with spec '$rec', refresh asked '$spec'")
-    }
-
-    val lNew = SnapshotStore.readEvolved(spark, leftRoot, lv)
-    val rNew = SnapshotStore.readEvolved(spark, rightRoot, rv)
-    // paired keys must share a dataType — the composite bloom hashes by
-    // type (the JoinView contract, enforced per refresh: schemas evolve)
-    leftKeys.zip(rightKeys).foreach { case (lk, rk) =>
-      val (lt, rt) = (lNew.schema(lk).dataType, rNew.schema(rk).dataType)
-      require(lt == rt,
-        s"paired join keys must share a dataType: $lk:$lt vs $rk:$rt")
-    }
-    // every group/measure column must resolve to exactly ONE side of the
-    // joined l.* ++ r.* (right keys excluded) — an ambiguous name would
-    // make the fold group by an arbitrary side
-    locally {
-      def has(df: DataFrame, c: String) =
-        df.columns.exists(_.equalsIgnoreCase(c))
-      (groupCols ++ measureCols).foreach { c =>
-        val inR = has(rNew, c) && !rightKeys.exists(_.equalsIgnoreCase(c))
-        require(has(lNew, c) != inR,
-          s"view column '$c' must resolve on exactly one join side " +
-            "(right keys are dropped — name their paired left key instead)")
-      }
-    }
-
-    def slice(l: DataFrame, r: DataFrame): DataFrame =
-      joinedSlice(l, r, leftKeys, rightKeys, groupCols, measureCols)
-
-    val vNew = if (plv == 0 && prv == 0) {
-      recordSpec(viewRoot, spec) // BEFORE the publish: crash re-bootstraps
-      SnapshotStore.appendEpoch(fold(slice(lNew, rNew), groupCols,
-        measureCols, 1, extents), viewRoot, JoinView.pack(lv, rv))
-    } else if (JoinView.appendOnly(leftRoot, plv, lv) &&
-               JoinView.appendOnly(rightRoot, prv, rv)) {
-      val adds = fold(deltaJoinRows(spark, leftRoot, rightRoot,
-        leftKeys, rightKeys, groupCols, measureCols,
-        plv, prv, lv, rv, lNew, rNew), groupCols, measureCols, 1, extents)
-      // an empty delta still publishes the cursor stamp (one
-      // schema-bearing file — the RollupView empty-append posture)
-      SnapshotStore.appendEpoch(
-        if (adds.isEmpty) adds.repartition(1) else adds,
-        viewRoot, JoinView.pack(lv, rv))
-    } else if (JoinView.churnOnly(leftRoot, plv, lv) &&
-               JoinView.churnOnly(rightRoot, prv, rv)) {
-      // RETRACTION BY ARITHMETIC: dirty join keys from both change
-      // feeds; the old join rows they owned fold negative, the new join
-      // rows they own fold positive, ONE append publishes both (and the
-      // cursor stamp) — crash-idempotent because appendEpoch replays as
-      // a no-op. Old sides are time-travel reads at the view's cursor
-      // (churnOnly guarantees both endpoint manifests are alive),
-      // dirty-pruned exactly like a delta's standing side.
-      val dirty = JoinView.keyTuples(
-        SnapshotStore.changes(spark, leftRoot, plv, lv)
-          .select(leftKeys.map(col): _*)
-          .unionByName(SnapshotStore.changes(spark, rightRoot, prv, rv)
-            .select(rightKeys.zip(leftKeys).map { case (rk, lk) =>
-              col(rk).as(lk)
-            }: _*)),
-        leftKeys)
-      // σ_{key∈dirty}(L ⋈ R) factors through the equi-join:
-      // (σ L) ⋈ (σ R) — and [[JoinView.prefiltered]] IS the exact σ
-      // (an inner equi-join against the distinct dirty tuples), so each
-      // side restricts once, file-pruned by the dirty key range. Dirty
-      // NULL keys restrict to nothing on either leg (null never
-      // equi-joins), which is exactly their join contribution.
-      def dirtyJoinRows(lVer: Int, rVer: Int): DataFrame =
-        slice(
-          JoinView.prefiltered(
-            JoinView.standing(spark, leftRoot, lVer, leftKeys, dirty),
-            leftKeys, dirty),
-          JoinView.prefiltered(
-            JoinView.standing(spark, rightRoot, rVer, rightKeys, dirty),
-            rightKeys, dirty))
-      if (!extents) {
-        val neg = fold(dirtyJoinRows(plv, prv), groupCols, measureCols, -1)
-        val pos = fold(dirtyJoinRows(lv, rv), groupCols, measureCols, 1)
-        val partials = pos.unionByName(neg)
-        SnapshotStore.appendEpoch(
-          if (partials.isEmpty) partials.repartition(1) else partials,
-          viewRoot, JoinView.pack(lv, rv))
-      } else {
-        // EXTENTS churn: min/max cannot retract, so the dirty GROUPS —
-        // every group that owned or gained a dirty-key join row —
-        // re-aggregate WHOLE from the current join and REPLACE by group
-        // key in ONE stamped publish (upsertEpoch — see the publish
-        // site), emptied groups tombstone. The recompute restricts
-        // each side by its own group columns first (broadcastable —
-        // dirty groups are group-key-sized) and refines to the exact
-        // dirty tuples after the join; cost is O(dirty groups' rows),
-        // the honest price of serving extrema (the RollupView
-        // dirty-group contract). NULL-keyed dirty groups would slip the
-        // null-unsafe keyed replace — one full rebuild handles them
-        // exactly (the RollupView precedent).
-        val dirtyG = dirtyJoinRows(plv, prv).select(groupCols.map(col): _*)
-          .unionByName(dirtyJoinRows(lv, rv).select(groupCols.map(col): _*))
-          .distinct().localCheckpoint(true)
-        val anyNull = groupCols.map(col(_).isNull).reduce(_ || _)
-        if (!dirtyG.where(anyNull).isEmpty) {
-          SnapshotStore.compactWith(fold(slice(lNew, rNew), groupCols,
-            measureCols, 1, extents), viewRoot,
-            epochOverride = Some(JoinView.pack(lv, rv)))
-        } else {
-          if (!dirtyG.isEmpty) {
-            val lG = groupCols.filter(c =>
-              lNew.columns.exists(_.equalsIgnoreCase(c)))
-            val rG = groupCols.filterNot(lG.contains)
-            // Each side restricts by its own group columns BEFORE the
-            // join: a conservative range pre-filter first (the
-            // RollupView day-band trick — a plain between-predicate
-            // reaches the parquet scan as a PushedFilter, so a
-            // stats-carrying layout whose files correlate with the
-            // group columns prunes), then the exact broadcast semi on
-            // the dirty tuples. A group column that IS a left join key
-            // additionally restricts the RIGHT side through its paired
-            // key (the inner equality makes them value-identical) —
-            // without it a key-grouped view's recompute would rescan
-            // the whole fact side. `pairs` maps dirtyG column → this
-            // side's column. Bounds are one model-sized driver row; the
-            // null guard is belt-and-braces (the null-group rebuild
-            // branch ran above).
-            def restrict(df: DataFrame, pairs: Seq[(String, String)]): DataFrame =
-              if (pairs.isEmpty) df
-              else {
-                val b = dirtyG.agg(lit(1).as("__one"),
-                  pairs.flatMap { case (gc, _) =>
-                    Seq(min(col(gc)).as(s"__lo_$gc"),
-                      max(col(gc)).as(s"__hi_$gc"))
-                  }: _*).head()
-                val banded = pairs.foldLeft(df) { case (d, (gc, dc)) =>
-                  val lo = b.getAs[Any](s"__lo_$gc")
-                  val hi = b.getAs[Any](s"__hi_$gc")
-                  if (lo == null || hi == null) d
-                  else d.where(col(dc) >= lit(lo) && col(dc) <= lit(hi))
-                }
-                banded.join(
-                  broadcast(dirtyG.select(pairs.map { case (gc, dc) =>
-                    col(gc).as(dc)
-                  }: _*).distinct()),
-                  pairs.map(_._2), "left_semi")
-              }
-            val lPairs = lG.map(g => (g, g))
-            val rPairs = rG.map(g => (g, g)) ++ lG.flatMap(g =>
-              leftKeys.zip(rightKeys)
-                .find(_._1.equalsIgnoreCase(g)).map(p => (g, p._2)))
-            val cur = slice(restrict(lNew, lPairs), restrict(rNew, rPairs))
-              .join(broadcast(dirtyG), groupCols, "left_semi")
-            // checkpointed: group-sized, referenced twice (replace + gone)
-            val recomputed = fold(cur, groupCols, measureCols, 1, extents)
-              .localCheckpoint(true)
-            val gone = dirtyG.join(
-              recomputed.select(groupCols.map(col): _*), groupCols, "left_anti")
-            // ONE publish: the keyed replace carries the new cursor
-            // stamp itself (upsertEpoch), so a reader never sees dirty
-            // groups at (lv,rv) next to an old cursor — the replace and
-            // the stamp are atomic, and a crashed re-run replays as an
-            // epoch no-op
-            SnapshotStore.upsertEpoch(spark,
-              recomputed.unionByName(tombstones(gone, recomputed, measureCols)),
-              viewRoot, groupCols, JoinView.pack(lv, rv))
-          } else {
-            // no dirty join rows: just publish the cursor stamp
-            val empty = fold(slice(lNew.limit(0), rNew.limit(0)),
-              groupCols, measureCols, 1, extents)
-            SnapshotStore.appendEpoch(empty.repartition(1), viewRoot,
-              JoinView.pack(lv, rv))
-          }
-        }
-      }
-    } else {
-      // a source compaction (or vacuumed baseline) broke the diff: rebuild
-      SnapshotStore.compactWith(fold(slice(lNew, rNew), groupCols,
-        measureCols, 1, extents), viewRoot,
-        epochOverride = Some(JoinView.pack(lv, rv)))
-    }
-    // the refreshed cursors pin BOTH sources' vacuums (viewrefs guard)
-    SnapshotStore.recordViewBaseline(leftRoot, viewRoot, lv)
-    SnapshotStore.recordViewBaseline(rightRoot, viewRoot, rv)
-    vNew
-  }
-
-  /** The append-only gap's new join rows, sliced to (groups, measures):
-    * Δ(L⋈R) = ΔL⋈R_new ∪ L_old⋈ΔR, each standing side file-pruned by
-    * the delta's key range and bloom-prefiltered by its key tuples —
-    * the JoinView delta machinery verbatim. Shared by [[refreshKeys]]'s
-    * append path (folds positive partials) and [[compensatedRead]]
-    * (folds them on the fly for a stale serve). At least one side must
-    * have moved. */
-  private[sources] def deltaJoinRows(spark: SparkSession,
-                            leftRoot: String, rightRoot: String,
-                            leftKeys: Seq[String], rightKeys: Seq[String],
-                            groupCols: Seq[String], measureCols: Seq[String],
-                            plv: Int, prv: Int, lv: Int, rv: Int,
-                            lNew: DataFrame, rNew: DataFrame): DataFrame = {
-    def slice(l: DataFrame, r: DataFrame): DataFrame =
-      joinedSlice(l, r, leftKeys, rightKeys, groupCols, measureCols)
-    val lPart =
-      if (lv > plv) {
-        val delta = SnapshotStore.incremental(spark, leftRoot, plv, lv,
-          Some(lNew.schema))
-        val dk = JoinView.keyTuples(delta, leftKeys)
-        Some(slice(delta,
-          JoinView.prefiltered(
-            JoinView.standing(spark, rightRoot, rv, rightKeys, dk),
-            rightKeys, dk)))
-      } else None
-    val rPart =
-      if (rv > prv) {
-        val delta = SnapshotStore.incremental(spark, rightRoot, prv, rv,
-          Some(rNew.schema))
-        val dk = JoinView.keyTuples(delta, rightKeys)
-        Some(slice(
-          JoinView.prefiltered(
-            JoinView.standing(spark, leftRoot, plv, leftKeys, dk),
-            leftKeys, dk),
-          delta))
-      } else None
-    (lPart.toSeq ++ rPart.toSeq).reduce(_ unionByName _)
-  }
-
-  /** DELTA-COMPENSATED content of a STALE agg-join view — round-16's
-    * items 1 and 2 composed: when the view's cursor lags the sources and
-    * every gap commit is an APPEND, the current aggregate is exactly the
-    * stored partials merged with the gap's delta-join rows folded on the
-    * fly (count/decimal-sum are insert-monotone; only churn needs the
-    * signed-refresh machinery) — fresh answers at O(partials + Δ join)
-    * without waiting for the refresh. None when unsound (churned gap,
-    * vacuumed baseline, no cursor); an already-fresh view returns the
-    * plain read. */
-  def compensatedRead(spark: SparkSession, leftRoot: String,
-                      rightRoot: String, viewRoot: String,
-                      leftKeys: Seq[String], rightKeys: Seq[String],
-                      groupCols: Seq[String],
-                      measureCols: Seq[String]): Option[DataFrame] = {
-    val (plv, prv) = JoinView.cursors(viewRoot)
-    if (plv == 0 && prv == 0) return None
-    val lv = SnapshotStore.currentVersion(leftRoot)
-    val rv = SnapshotStore.currentVersion(rightRoot)
-    if (lv < plv || rv < prv) return None
-    if (lv == plv && rv == prv) return Some(read(spark, viewRoot))
-    if (!JoinView.appendOnly(leftRoot, plv, lv) ||
-        !JoinView.appendOnly(rightRoot, prv, rv)) return None
-    val lNew = SnapshotStore.readEvolved(spark, leftRoot, lv)
-    val rNew = SnapshotStore.readEvolved(spark, rightRoot, rv)
-    val extents = recordedExtents(viewRoot)
-    // the caller's spec must MATCH the recorded one — a registration
-    // that drifted from the maintained spec must DECLINE here, not
-    // merge wrong-shaped partials (refreshKeys refuses loudly; a read
-    // path declines to the correct base plan)
-    if (!recordedSpec(viewRoot).contains(
-        specLine(leftKeys, rightKeys, groupCols, measureCols, extents)))
-      return None
-    val deltaPartials = fold(deltaJoinRows(spark, leftRoot, rightRoot,
-      leftKeys, rightKeys, groupCols, measureCols,
-      plv, prv, lv, rv, lNew, rNew), groupCols, measureCols, 1, extents)
-    val stored = SnapshotStore.read(spark, viewRoot)
-    Some(merged(stored.unionByName(deltaPartials), groupCols,
-      measureCols, extents))
-  }
-
-  /** Merge signed partial rows to the materialized aggregate — ONE
-    * definition shared by [[read]] and [[compensatedRead]]. The sum
-    * serves NULL while the group's merged non-null count is zero (the
-    * [[nnCol]] rationale); min/max already skip nulls natively. */
-  private def merged(partials: DataFrame, groups: Seq[String],
-                     measures: Seq[String], extents: Boolean): DataFrame = {
-    def resolve(n: String): String =
-      partials.columns.find(_.equalsIgnoreCase(n)).getOrElse(n)
-    // pre-nn stores (none persist, but the read must not crash on one)
-    val hasNn = measures.forall(m =>
-      partials.columns.exists(_.equalsIgnoreCase(nnCol(m))))
-    val aggs: Seq[Column] = sum(col("cnt")).as("cnt") +:
-      measures.flatMap { m =>
-        val s = resolve(sumCol(m))
-        val sumMerged =
-          if (hasNn)
-            when(sum(col(resolve(nnCol(m)))) > 0, sum(col(s)).cast(SumType))
-              .otherwise(lit(null).cast(SumType)).as(s)
-          else sum(col(s)).cast(SumType).as(s)
-        sumMerged +:
-          ((if (hasNn) {
-            val nn = resolve(nnCol(m))
-            Seq(sum(col(nn)).as(nn))
-          } else Nil) ++
-            (if (extents) {
-              val mn = resolve(minCol(m)); val mx = resolve(maxCol(m))
-              Seq(min(col(mn)).as(mn), max(col(mx)).as(mx))
-            } else Nil))
-      }
-    partials.groupBy(groups.map(col): _*)
-      .agg(aggs.head, aggs.tail: _*)
-      .where(col("cnt") > 0)
-  }
+                  measureCols: Seq[String], extents: Boolean = false): Int =
+    MultiAggJoinView.refresh(spark, Seq(leftRoot, rightRoot), viewRoot,
+      Seq(Edge(0, leftKeys, rightKeys)), groupCols, measureCols, extents)
 
   /** Single-key [[refreshKeys]]. */
   def refresh(spark: SparkSession, leftRoot: String, rightRoot: String,
@@ -500,39 +35,20 @@ object AggJoinView {
     refreshKeys(spark, leftRoot, rightRoot, viewRoot,
       Seq(leftKey), Seq(rightKey), groupCols, measureCols, extents)
 
-  /** The materialized aggregate: merge all signed partials per group,
-    * drop retracted-empty groups. Columns: groups…, `cnt`,
-    * `sum_<measure>` (decimal-exact, NULL while the group's merged
-    * non-null count is zero) and its `nn_<measure>` bookkeeping count
-    * (kept in the output so [[compact]]'s round-trip preserves the
-    * NULL-exactness invariant), plus `min_/max_<measure>` on an extents
-    * view. */
-  def read(spark: SparkSession, viewRoot: String): DataFrame = {
-    val partials = SnapshotStore.read(spark, viewRoot)
-    val extents = recordedExtents(viewRoot)
-    // the recorded spec names the measures (a group column could itself
-    // be named sum_…, so a prefix heuristic would misclassify it)
-    val specMeasures: Seq[String] = recordedSpec(viewRoot) match {
-      case Some(line) =>
-        line.split(";").find(_.startsWith("m=")).map(_.drop(2)) match {
-          case Some("") | None => Seq.empty[String]
-          case Some(ms)        => ms.split(",").toSeq
-        }
-      case None =>
-        partials.columns.filter(_.startsWith("sum_")).map(_.drop(4)).toSeq
-    }
-    val aggNames = "cnt" +: specMeasures.flatMap(m =>
-      Seq(sumCol(m), nnCol(m)) ++
-        (if (extents) Seq(minCol(m), maxCol(m)) else Nil))
-    val groups = partials.columns.filterNot(c =>
-      aggNames.exists(_.equalsIgnoreCase(c))).toSeq
-    merged(partials, groups, specMeasures, extents)
-  }
+  /** See [[MultiAggJoinView.compensatedRead]]. */
+  def compensatedRead(spark: SparkSession, leftRoot: String,
+                      rightRoot: String, viewRoot: String,
+                      leftKeys: Seq[String], rightKeys: Seq[String],
+                      groupCols: Seq[String],
+                      measureCols: Seq[String]): Option[DataFrame] =
+    MultiAggJoinView.compensatedRead(spark, Seq(leftRoot, rightRoot),
+      viewRoot, Seq(Edge(0, leftKeys, rightKeys)), groupCols, measureCols)
 
-  /** Fold accumulated partials to one row per group (drops cnt=0
-    * retraction residue physically), published as a view compaction —
-    * bounds the merge cost of [[read]] after many refreshes; logical
-    * content and the cursor stamp are unchanged. */
+  /** See [[MultiAggJoinView.read]]. */
+  def read(spark: SparkSession, viewRoot: String): DataFrame =
+    MultiAggJoinView.read(spark, viewRoot)
+
+  /** See [[MultiAggJoinView.compact]]. */
   def compact(spark: SparkSession, viewRoot: String): Int =
-    SnapshotStore.compactWith(read(spark, viewRoot), viewRoot)
+    MultiAggJoinView.compact(spark, viewRoot)
 }

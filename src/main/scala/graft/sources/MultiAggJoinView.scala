@@ -4,8 +4,9 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Incrementally maintained AGGREGATE over an N-WAY JOIN TREE — the
-  * snowflake-schema materialized view ([[AggJoinView]] generalized from
-  * one fact × one dim to a fact plus any TREE of dims):
+  * star- and snowflake-schema materialized view, from one fact × one dim
+  * (N = 2, the one-edge tree [[AggJoinView]] forwards to) to a fact plus
+  * any TREE of dims:
   *
   * {{{ SELECT g…, count(*), sum(m…) FROM T0 JOIN T1 ON … JOIN T2 ON … … GROUP BY g… }}}
   *
@@ -16,9 +17,8 @@ import org.apache.spark.sql.functions._
   * off another dim, e.g. nation via supplier). Storage stays O(groups):
   * one signed partial row per group, never O(join rows).
   *
-  * Maintenance is ONE telescoping identity that subsumes both of the
-  * two-table view's paths. For any per-table change from `old_i` to
-  * `new_i`,
+  * Maintenance is ONE telescoping identity covering appends and churn.
+  * For any per-table change from `old_i` to `new_i`,
   *
   *   J(new…) − J(old…) = Σᵢ [ J(new_<i, new_i, old_>i) − J(new_<i, old_i, old_>i) ]
   *
@@ -30,13 +30,12 @@ import org.apache.spark.sql.functions._
   *
   *   - APPEND-ONLY gap: the single positive term `ΔTᵢ ⋈ (earlier tables
   *     at NEW, later at OLD)` — `new_i − old_i` IS the appended rows, so
-  *     no negative leg is needed (the two-table delta identity, table by
-  *     table);
+  *     no negative leg is needed (for N = 2 this is the delta-join
+  *     identity ΔL⋈R_new ∪ L_old⋈ΔR);
   *   - ROW-CHURN gap (delete/upsert): the dirty keys come from the
   *     table's O(churn) change feed; `old_i` restricted to them folds
-  *     NEGATIVE, `new_i` restricted to them folds POSITIVE (the
-  *     two-table arithmetic-churn path). No view rewrite, no dirty-group
-  *     upsert.
+  *     NEGATIVE, `new_i` restricted to them folds POSITIVE (retraction
+  *     by arithmetic). No view rewrite, no dirty-group upsert.
   *
   * All terms land in ONE epoch-stamped append (crash-idempotent). Every
   * standing side of every term is restricted by a semi-join CASCADE
@@ -48,9 +47,8 @@ import org.apache.spark.sql.functions._
   * can live in, never the corpus.
   *
   * A compaction (or vacuumed baseline) on ANY source breaks the manifest
-  * diff: one full rebuild, same as the parent views. `extents = true`
-  * (the two-table [[AggJoinView]] trade, lifted to N) additionally
-  * stores min/max partials: append legs stay on the O(Δ) telescoped
+  * diff: one full rebuild. `extents = true` additionally stores min/max
+  * partials: append legs stay on the O(Δ) telescoped
   * fold (min/max are insert-monotone), but churn pays the honest
   * dirty-GROUP recompute — dirty groups re-aggregate whole from the
   * current tree (group-band + semi restriction on the owning tables,
@@ -60,8 +58,9 @@ import org.apache.spark.sql.functions._
   * keeps churn pure arithmetic.
   *
   * Read merges partials per group, drops `cnt = 0` groups, and serves
-  * each sum NULL while its merged non-null count `nn_<m>` is zero (the
-  * [[AggJoinView]] NULL-exactness bookkeeping, verbatim). Decimal
+  * each sum NULL while its merged non-null count `nn_<m>` is zero
+  * (Spark's sum over an all-NULL group is NULL; signed partials that
+  * retracted to zero would otherwise serve 0). Decimal
   * partials keep the merge exact in any order — the view is bit-equal
   * to a from-scratch GROUP BY over the N-way join, which is what the
   * oracle checks and [[graft.plans.MultiAggJoinRewriteRule]] serves.
@@ -237,10 +236,10 @@ object MultiAggJoinView {
     joined.select((groups ++ measures).map(col): _*)
   }
 
-  /** Fold join rows to one signed partial per group (the [[AggJoinView]]
-    * fold). `extents = true` adds min/max partials — insert-monotone
-    * only, so signed folding is forbidden there (the churn path replaces
-    * dirty groups whole instead). */
+  /** Fold join rows to one signed partial per group. `extents = true`
+    * adds min/max partials — insert-monotone only, so signed folding is
+    * forbidden there (the churn path replaces dirty groups whole
+    * instead). */
   private def fold(rows: DataFrame, groups: Seq[String],
                    measures: Seq[String], sign: Int,
                    extents: Boolean = false): DataFrame = {
@@ -350,6 +349,7 @@ object MultiAggJoinView {
               measureCols: Seq[String], extents: Boolean = false): Int = {
     val n = roots.size
     validateTree(roots, edges, groupCols)
+    refuseTwoTableLayout(viewRoot)
     // reserved partial names can't be group columns (duplicate output)
     locally {
       val reserved = "cnt" +: measureCols.flatMap(m =>
@@ -546,6 +546,20 @@ object MultiAggJoinView {
     vNew
   }
 
+  /** Refuse a store written by the earlier two-table AGG_JOIN / NDV_JOIN
+    * implementation: its spec file (`_aggspec` / `_ndvjspec`) is not
+    * this view's, and its base-10⁶ cursor would decode under this view's
+    * packing as a wrong version vector (and refresh would then fail
+    * with a misleading "source went backwards"). Shared with
+    * [[MultiNdvJoinView]]. */
+  private[sources] def refuseTwoTableLayout(viewRoot: String): Unit =
+    Seq("_aggspec", "_ndvjspec")
+      .find(f => java.nio.file.Files.exists(java.nio.file.Paths.get(viewRoot, f)))
+      .foreach(f => throw new IllegalArgumentException(
+        s"view at $viewRoot is in the old two-table layout ($f spec file, " +
+          "base-10^6 cursor), which this build no longer maintains — " +
+          "rebuild the view into a fresh store"))
+
   /** The join-graph contract shared by every N-way view flavor: n ≥ 2
     * tables, n−1 edges each attaching to an earlier table, distinct
     * store roots, non-empty groups, and every edge's parent keys
@@ -615,7 +629,7 @@ object MultiAggJoinView {
     * column band+semi-restricts by the dirty groups' values, then the
     * cascade prunes the rest of the tree outward from the restricted
     * owners (superset-sound); the closing group-semi refines exactly
-    * (the AggJoinView extents-churn technique, lifted to N). Ownership
+    * (the [[RollupView]] dirty-group technique, lifted to N). Ownership
     * excludes edge CHILD keys exactly like the bootstrap resolution — a
     * group column sharing a name with another table's child key must
     * restrict the OWNER, not the key column (restricting a join key by
@@ -674,10 +688,9 @@ object MultiAggJoinView {
       .join(broadcast(dirtyG), groupCols, "left_semi")
   }
 
-  /** Merge signed partials to the materialized aggregate — the
-    * [[AggJoinView]] merge (NULL-exact sums via the nn counts; min/max
-    * skip null tombstones natively), shared by [[read]] and
-    * [[compensatedRead]]. */
+  /** Merge signed partials to the materialized aggregate (NULL-exact
+    * sums via the nn counts; min/max skip null tombstones natively),
+    * shared by [[read]] and [[compensatedRead]]. */
   private def merged(partials: DataFrame, groups: Seq[String],
                      measures: Seq[String],
                      extents: Boolean = false): DataFrame = {
@@ -726,7 +739,7 @@ object MultiAggJoinView {
   /** DELTA-COMPENSATED content of a STALE view: when every moved
     * source's gap is an APPEND, the current aggregate is the stored
     * partials merged with the telescoped delta terms folded on the fly
-    * (the [[AggJoinView.compensatedRead]] posture, N-way). None when
+    * (count/decimal-sum and min/max are insert-monotone). None when
     * unsound — a churned/compacted gap, a vacuumed baseline, no cursor,
     * or a spec mismatch; an already-fresh view returns the plain read. */
   def compensatedRead(spark: SparkSession, roots: Seq[String],

@@ -6,10 +6,11 @@ import org.apache.spark.sql.types.BinaryType
 
 import MultiAggJoinView.Edge
 
-/** Incrementally maintained DISTINCT-COUNT over an N-WAY JOIN TREE —
-  * the last cell of the MV matrix: [[NdvJoinView]]'s HLL sketch
-  * partials composed with [[MultiAggJoinView]]'s telescoping term
-  * machinery and semi-join cascade restriction. "Distinct customers per
+/** Incrementally maintained DISTINCT-COUNT over an N-WAY JOIN TREE
+  * (N ≥ 2; the one-edge tree is the two-table view [[NdvJoinView]]
+  * forwards to): [[NdvView]]'s HLL sketch partials composed with
+  * [[MultiAggJoinView]]'s telescoping term machinery and semi-join
+  * cascade restriction. "Distinct customers per
   * nation × priority" over a snowflake is the second-most-common
   * dashboard aggregate; this view serves it from O(groups × 4 KiB)
   * sketch rows, never O(join rows).
@@ -81,7 +82,7 @@ object MultiNdvJoinView {
       .map(_.drop(2)))
 
   /** Sketch join rows per group: cnt for tombstone liveness, the HLL
-    * partial for the estimate (the [[NdvJoinView]] fold). */
+    * partial for the estimate. */
   private def fold(rows: DataFrame, groups: Seq[String], x: String): DataFrame =
     rows.groupBy(groups.map(col): _*)
       .agg(count(lit(1)).as("cnt"),
@@ -100,6 +101,7 @@ object MultiNdvJoinView {
               distinctCol: String): Int = {
     val n = roots.size
     MultiAggJoinView.validateTree(roots, edges, groupCols)
+    MultiAggJoinView.refuseTwoTableLayout(viewRoot)
     groupCols.find(g => Seq("cnt", "sk").exists(_.equalsIgnoreCase(g)))
       .foreach(g => sys.error(s"group column '$g' collides with a partial column"))
 

@@ -1,301 +1,44 @@
 package graft.sources
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.BinaryType
 
-/** Incrementally maintained DISTINCT-COUNT over a JOIN — the second-most
-  * common dashboard aggregate ("unique users per dim attribute") as a
-  * maintained view: [[NdvView]]'s mergeable HLL sketches composed with
-  * [[AggJoinView]]'s join-delta machinery. Per group the view stores a
-  * DataSketches HLL sketch of the registered distinct column plus a row
-  * count; storage is O(groups × 4 KiB), never O(join rows), and the
-  * served estimate is `hll_sketch_estimate(hll_union_agg(partials))`.
+import MultiAggJoinView.Edge
+
+/** The two-table DISTINCT-COUNT-over-JOIN view (HLL sketch partials per
+  * group of `L JOIN R ON lk = rk`) — the one-edge [[MultiNdvJoinView]]
+  * tree (N = 2). Every entry point forwards `(left, right, leftKeys,
+  * rightKeys)` as the roots `Seq(left, right)` and the single edge
+  * `Edge(0, leftKeys, rightKeys)`; storage, maintenance, reads and
+  * serving are the N-way view's.
   *
-  * Maintenance composes the two parents' identities:
-  *
-  *   - append-only delta: Δ(L⋈R) = ΔL⋈R_new ∪ L_old⋈ΔR
-  *     ([[AggJoinView.deltaJoinRows]] verbatim — standing sides
-  *     bloom-prefiltered and file-pruned) sketched per group and
-  *     APPENDED: HLL register state is a per-item MAX, so the union of
-  *     per-delta sketches is bit-identical in estimate to a single-pass
-  *     sketch of the final join (the [[NdvView]] guarantee, lifted to
-  *     the join) — O(Δ + matching) per refresh.
-  *   - row churn (delete/upsert on either source): registers only grow —
-  *     a deleted user un-derives nothing — so churn takes the monotone
-  *     summary's dirty-GROUP path ([[NdvView]]'s, composed with the
-  *     extents-churn publish): every group that owned or gained a
-  *     dirty-key join row re-sketches WHOLE from the current join
-  *     (group-restricted per side, the [[AggJoinView]] extents-churn
-  *     restriction) and REPLACES by group key in ONE stamped publish
-  *     (`upsertEpoch` — replace and cursor advance atomic); emptied
-  *     groups tombstone (cnt = 0, null sketch).
-  *   - a source compaction / vacuumed baseline: one full rebuild.
-  *
-  * Read merges sketches per group (`hll_union_agg` skips null
-  * tombstones) and drops `cnt = 0` groups. The estimate is approximate,
-  * so registered queries follow the approx-surface contract: exact NDV
-  * rides beside the exported estimate and the band verdict re-derives in
-  * the oracle. Contract: inner equi-join; group columns and the distinct
-  * column resolve on exactly one side (right keys excluded); fixed
-  * lgK = [[NdvView.LgK]] so every version's sketches union.
+  * A store written by the earlier two-table implementation (an
+  * `_ndvjspec` spec file and a base-10⁶ cursor) is refused on refresh
+  * and declined by serving — rebuild it into a fresh store.
   */
 object NdvJoinView {
 
-  private def specLine(lks: Seq[String], rks: Seq[String],
-                       groups: Seq[String], distinctCol: String): String = {
-    def lc(xs: Seq[String]) = xs.map(_.toLowerCase(java.util.Locale.ROOT))
-    s"lk=${lc(lks).mkString(",")};rk=${lc(rks).mkString(",")};" +
-      s"g=${lc(groups).sorted.mkString(",")};" +
-      s"x=${distinctCol.toLowerCase(java.util.Locale.ROOT)};p=1"
-  }
-
-  private def recordedSpec(viewRoot: String): Option[String] = {
-    val p = java.nio.file.Paths.get(viewRoot, "_ndvjspec")
-    if (java.nio.file.Files.exists(p))
-      Some(new String(java.nio.file.Files.readAllBytes(p), "UTF-8").trim)
-    else None
-  }
-
-  private def recordSpec(viewRoot: String, line: String): Unit = {
-    java.nio.file.Files.createDirectories(java.nio.file.Paths.get(viewRoot))
-    java.nio.file.Files.write(
-      java.nio.file.Paths.get(viewRoot, "_ndvjspec"), line.getBytes("UTF-8"))
-  }
-
-  /** The view-shaped join projected to (groups, distinct column). */
-  private def joinedSlice(l: DataFrame, r: DataFrame,
-                          lks: Seq[String], rks: Seq[String],
-                          groups: Seq[String], x: String): DataFrame =
-    JoinView.joined(l, r, lks, rks).select((groups :+ x).map(col): _*)
-
-  /** Sketch join rows per group: cnt for tombstone liveness, the HLL
-    * partial for the estimate. */
-  private def fold(rows: DataFrame, groups: Seq[String], x: String): DataFrame =
-    rows.groupBy(groups.map(col): _*)
-      .agg(count(lit(1)).as("cnt"),
-        expr(s"hll_sketch_agg($x, ${NdvView.LgK})").as("sk"))
-
-  private def tombstones(gone: DataFrame): DataFrame = {
-    val cols = gone.columns.toSeq.map(col) :+
-      lit(0L).as("cnt") :+ lit(null).cast(BinaryType).as("sk")
-    gone.select(cols: _*)
-  }
-
-  /** Bring the view up to both sources' current versions. Spec arguments
-    * must repeat the bootstrap's verbatim. Returns the view version. */
+  /** Bring the view up to both sources' current versions (see
+    * [[MultiNdvJoinView.refresh]]). Returns the view version. */
   def refresh(spark: SparkSession, leftRoot: String, rightRoot: String,
               viewRoot: String, leftKeys: Seq[String], rightKeys: Seq[String],
-              groupCols: Seq[String], distinctCol: String): Int = {
-    require(leftKeys.nonEmpty && leftKeys.size == rightKeys.size,
-      s"key lists must be non-empty and pair up: $leftKeys vs $rightKeys")
-    require(groupCols.nonEmpty, "at least one group column")
-    groupCols.find(g => Seq("cnt", "sk").exists(_.equalsIgnoreCase(g)))
-      .foreach(g => sys.error(s"group column '$g' collides with a partial column"))
-    val lv = SnapshotStore.currentVersion(leftRoot)
-    val rv = SnapshotStore.currentVersion(rightRoot)
-    require(lv > 0 && rv > 0,
-      s"both sources must have a published version ($leftRoot=$lv, $rightRoot=$rv)")
-    val (plv, prv) = JoinView.cursors(viewRoot)
-    if (lv == plv && rv == prv) return SnapshotStore.currentVersion(viewRoot)
-    require(lv >= plv && rv >= prv,
-      s"source went backwards: ($plv,$prv) -> ($lv,$rv)")
-    val spec = specLine(leftKeys, rightKeys, groupCols, distinctCol)
-    if (plv != 0 || prv != 0) {
-      val rec = recordedSpec(viewRoot).getOrElse("")
-      require(rec == spec,
-        s"view at $viewRoot is maintained with spec '$rec', refresh asked '$spec'")
-    }
+              groupCols: Seq[String], distinctCol: String): Int =
+    MultiNdvJoinView.refresh(spark, Seq(leftRoot, rightRoot), viewRoot,
+      Seq(Edge(0, leftKeys, rightKeys)), groupCols, distinctCol)
 
-    val lNew = SnapshotStore.readEvolved(spark, leftRoot, lv)
-    val rNew = SnapshotStore.readEvolved(spark, rightRoot, rv)
-    leftKeys.zip(rightKeys).foreach { case (lk, rk) =>
-      val (lt, rt) = (lNew.schema(lk).dataType, rNew.schema(rk).dataType)
-      require(lt == rt,
-        s"paired join keys must share a dataType: $lk:$lt vs $rk:$rt")
-    }
-    locally {
-      def has(df: DataFrame, c: String) =
-        df.columns.exists(_.equalsIgnoreCase(c))
-      (groupCols :+ distinctCol).foreach { c =>
-        val inR = has(rNew, c) && !rightKeys.exists(_.equalsIgnoreCase(c))
-        require(has(lNew, c) != inR,
-          s"view column '$c' must resolve on exactly one join side " +
-            "(right keys are dropped — name their paired left key instead)")
-      }
-    }
-
-    def slice(l: DataFrame, r: DataFrame): DataFrame =
-      joinedSlice(l, r, leftKeys, rightKeys, groupCols, distinctCol)
-
-    val vNew = if (plv == 0 && prv == 0) {
-      recordSpec(viewRoot, spec)
-      SnapshotStore.appendEpoch(fold(slice(lNew, rNew), groupCols,
-        distinctCol), viewRoot, JoinView.pack(lv, rv))
-    } else if (JoinView.appendOnly(leftRoot, plv, lv) &&
-               JoinView.appendOnly(rightRoot, prv, rv)) {
-      // register-max union: appended per-delta sketches merge to the
-      // exact single-pass estimate
-      val adds = fold(AggJoinView.deltaJoinRows(spark, leftRoot, rightRoot,
-        leftKeys, rightKeys, groupCols, Seq(distinctCol),
-        plv, prv, lv, rv, lNew, rNew), groupCols, distinctCol)
-      SnapshotStore.appendEpoch(
-        if (adds.isEmpty) adds.repartition(1) else adds,
-        viewRoot, JoinView.pack(lv, rv))
-    } else if (JoinView.churnOnly(leftRoot, plv, lv) &&
-               JoinView.churnOnly(rightRoot, prv, rv)) {
-      // Monotone-summary churn: dirty join keys from both change feeds;
-      // dirty GROUPS re-sketch whole and REPLACE by group key in ONE
-      // stamped publish — the AggJoinView extents-churn restriction and
-      // publish (AggJoinView.refreshKeys' extents branch), with the
-      // sketch fold in place of min/max partials.
-      val dirty = JoinView.keyTuples(
-        SnapshotStore.changes(spark, leftRoot, plv, lv)
-          .select(leftKeys.map(col): _*)
-          .unionByName(SnapshotStore.changes(spark, rightRoot, prv, rv)
-            .select(rightKeys.zip(leftKeys).map { case (rk, lk) =>
-              col(rk).as(lk)
-            }: _*)),
-        leftKeys)
-      def dirtyJoinRows(lVer: Int, rVer: Int): DataFrame =
-        slice(
-          JoinView.prefiltered(
-            JoinView.standing(spark, leftRoot, lVer, leftKeys, dirty),
-            leftKeys, dirty),
-          JoinView.prefiltered(
-            JoinView.standing(spark, rightRoot, rVer, rightKeys, dirty),
-            rightKeys, dirty))
-      val dirtyG = dirtyJoinRows(plv, prv).select(groupCols.map(col): _*)
-        .unionByName(dirtyJoinRows(lv, rv).select(groupCols.map(col): _*))
-        .distinct().localCheckpoint(true)
-      val anyNull = groupCols.map(col(_).isNull).reduce(_ || _)
-      if (!dirtyG.where(anyNull).isEmpty) {
-        // NULL-keyed dirty groups would slip the null-unsafe keyed
-        // replace — one full rebuild handles them exactly
-        SnapshotStore.compactWith(fold(slice(lNew, rNew), groupCols,
-          distinctCol), viewRoot,
-          epochOverride = Some(JoinView.pack(lv, rv)))
-      } else if (dirtyG.isEmpty) {
-        val empty = fold(slice(lNew.limit(0), rNew.limit(0)),
-          groupCols, distinctCol)
-        SnapshotStore.appendEpoch(empty.repartition(1), viewRoot,
-          JoinView.pack(lv, rv))
-      } else {
-        // group-band + broadcast-semi restriction per side (the
-        // AggJoinView extents technique — see its restrict() comments)
-        val lG = groupCols.filter(c =>
-          lNew.columns.exists(_.equalsIgnoreCase(c)))
-        val rG = groupCols.filterNot(lG.contains)
-        def restrict(df: DataFrame, pairs: Seq[(String, String)]): DataFrame =
-          if (pairs.isEmpty) df
-          else {
-            val b = dirtyG.agg(lit(1).as("__one"),
-              pairs.flatMap { case (gc, _) =>
-                Seq(min(col(gc)).as(s"__lo_$gc"),
-                  max(col(gc)).as(s"__hi_$gc"))
-              }: _*).head()
-            val banded = pairs.foldLeft(df) { case (d, (gc, dc)) =>
-              val lo = b.getAs[Any](s"__lo_$gc")
-              val hi = b.getAs[Any](s"__hi_$gc")
-              if (lo == null || hi == null) d
-              else d.where(col(dc) >= lit(lo) && col(dc) <= lit(hi))
-            }
-            banded.join(
-              broadcast(dirtyG.select(pairs.map { case (gc, dc) =>
-                col(gc).as(dc)
-              }: _*).distinct()),
-              pairs.map(_._2), "left_semi")
-          }
-        val lPairs = lG.map(g => (g, g))
-        val rPairs = rG.map(g => (g, g)) ++ lG.flatMap(g =>
-          leftKeys.zip(rightKeys)
-            .find(_._1.equalsIgnoreCase(g)).map(p => (g, p._2)))
-        val cur = slice(restrict(lNew, lPairs), restrict(rNew, rPairs))
-          .join(broadcast(dirtyG), groupCols, "left_semi")
-        // checkpointed: group-sized, referenced twice (replace + gone)
-        val recomputed = fold(cur, groupCols, distinctCol)
-          .localCheckpoint(true)
-        val gone = dirtyG.join(
-          recomputed.select(groupCols.map(col): _*), groupCols, "left_anti")
-        SnapshotStore.upsertEpoch(spark,
-          recomputed.unionByName(tombstones(gone)),
-          viewRoot, groupCols, JoinView.pack(lv, rv))
-      }
-    } else {
-      SnapshotStore.compactWith(fold(slice(lNew, rNew), groupCols,
-        distinctCol), viewRoot, epochOverride = Some(JoinView.pack(lv, rv)))
-    }
-    SnapshotStore.recordViewBaseline(leftRoot, viewRoot, lv)
-    SnapshotStore.recordViewBaseline(rightRoot, viewRoot, rv)
-    vNew
-  }
-
-  /** Merge sketches per group WITHOUT estimating (compaction content —
-    * the store keeps its mergeability). */
-  private def mergedSketches(partials: DataFrame,
-                             groups: Seq[String]): DataFrame =
-    partials.groupBy(groups.map(col): _*)
-      .agg(sum(col("cnt")).as("cnt"),
-        expr("hll_union_agg(sk, false)").as("sk"))
-      .where(col("cnt") > 0)
-
-  private def groupsOf(partials: DataFrame): Seq[String] =
-    partials.columns.filterNot(c =>
-      c.equalsIgnoreCase("cnt") || c.equalsIgnoreCase("sk")).toSeq
-
-  /** The recorded distinct column (for the estimate's output name). */
-  private[graft] def recordedDistinct(viewRoot: String): Option[String] =
-    recordedSpec(viewRoot).flatMap(_.split(";").find(_.startsWith("x="))
-      .map(_.drop(2)))
-
-  /** The served answer: groups…, `cnt`, `approx_<distinctCol>` (the
-    * merged-sketch estimate — bit-equal to a single-pass
-    * `hll_sketch_estimate(hll_sketch_agg(x, lgK))` over the join). */
-  def read(spark: SparkSession, viewRoot: String): DataFrame = {
-    val partials = SnapshotStore.read(spark, viewRoot)
-    val x = recordedDistinct(viewRoot).getOrElse("x")
-    val groups = groupsOf(partials)
-    mergedSketches(partials, groups)
-      .select(groups.map(col) :+ col("cnt") :+
-        expr("hll_sketch_estimate(sk)").as(s"approx_$x"): _*)
-  }
-
-  /** DELTA-COMPENSATED estimates from a STALE view: an append-only gap
-    * serves stored sketches unioned with the gap's delta-join sketches
-    * on the fly — register-max union keeps even the compensated estimate
-    * bit-equal to refresh-then-read. Churned/compacted gaps decline (a
-    * monotone sketch cannot retract); spec mismatch declines. */
+  /** See [[MultiNdvJoinView.compensatedRead]]. */
   def compensatedRead(spark: SparkSession, leftRoot: String,
                       rightRoot: String, viewRoot: String,
                       leftKeys: Seq[String], rightKeys: Seq[String],
                       groupCols: Seq[String],
-                      distinctCol: String): Option[DataFrame] = {
-    val (plv, prv) = JoinView.cursors(viewRoot)
-    if (plv == 0 && prv == 0) return None
-    val lv = SnapshotStore.currentVersion(leftRoot)
-    val rv = SnapshotStore.currentVersion(rightRoot)
-    if (lv < plv || rv < prv) return None
-    if (lv == plv && rv == prv) return Some(read(spark, viewRoot))
-    if (!JoinView.appendOnly(leftRoot, plv, lv) ||
-        !JoinView.appendOnly(rightRoot, prv, rv)) return None
-    if (!recordedSpec(viewRoot).contains(
-        specLine(leftKeys, rightKeys, groupCols, distinctCol))) return None
-    val lNew = SnapshotStore.readEvolved(spark, leftRoot, lv)
-    val rNew = SnapshotStore.readEvolved(spark, rightRoot, rv)
-    val deltaPartials = fold(AggJoinView.deltaJoinRows(spark, leftRoot,
-      rightRoot, leftKeys, rightKeys, groupCols, Seq(distinctCol),
-      plv, prv, lv, rv, lNew, rNew), groupCols, distinctCol)
-    Some(mergedSketches(
-      SnapshotStore.read(spark, viewRoot).unionByName(deltaPartials),
-      groupCols)
-      .select(groupCols.map(col) :+ col("cnt") :+
-        expr("hll_sketch_estimate(sk)").as(s"approx_$distinctCol"): _*))
-  }
+                      distinctCol: String): Option[DataFrame] =
+    MultiNdvJoinView.compensatedRead(spark, Seq(leftRoot, rightRoot),
+      viewRoot, Seq(Edge(0, leftKeys, rightKeys)), groupCols, distinctCol)
 
-  /** Fold partials to one sketch row per group (view compaction). */
-  def compact(spark: SparkSession, viewRoot: String): Int = {
-    val partials = SnapshotStore.read(spark, viewRoot)
-    SnapshotStore.compactWith(
-      mergedSketches(partials, groupsOf(partials)), viewRoot)
-  }
+  /** See [[MultiNdvJoinView.read]]. */
+  def read(spark: SparkSession, viewRoot: String): DataFrame =
+    MultiNdvJoinView.read(spark, viewRoot)
+
+  /** See [[MultiNdvJoinView.compact]]. */
+  def compact(spark: SparkSession, viewRoot: String): Int =
+    MultiNdvJoinView.compact(spark, viewRoot)
 }

@@ -6,7 +6,7 @@ import org.apache.spark.sql.functions._
 /** Incrementally maintained APPROXIMATE-QUANTILE over a JOIN —
   * percentiles of a measure per dim attribute ("p90 order total per
   * market segment") as a maintained view: [[QuantileView]]'s
-  * deterministic fixed-bin histogram composed with [[AggJoinView]]'s
+  * deterministic fixed-bin histogram composed with [[JoinView]]'s
   * join-delta machinery. Per (group, bin) the view stores a SIGNED
   * count; the estimate is cumulative-count bin selection + linear
   * interpolation under frozen edges — bit-reproducible across engines,
@@ -25,7 +25,7 @@ import org.apache.spark.sql.functions._
   * group coarsens everyone's bins; the ≤ 2·w accuracy bound is global).
   *
   * Maintenance composes the parents' identities:
-  *   - append-only delta: Δ(L⋈R) ([[AggJoinView.deltaJoinRows]] —
+  *   - append-only delta: Δ(L⋈R) ([[deltaJoinRows]] —
   *     standing sides bloom-prefiltered and file-pruned) binned at +1;
   *   - row churn on either source: dirty key tuples from the change
   *     feeds; the OLD-version join restricted to them bins at −1, the
@@ -168,6 +168,44 @@ object QuantileJoinView {
                           groups: Seq[String], x: String): DataFrame =
     JoinView.joined(l, r, lks, rks).select((groups :+ x).map(col): _*)
 
+  /** The append-only gap's new join rows, sliced to (groups, value):
+    * Δ(L⋈R) = ΔL⋈R_new ∪ L_old⋈ΔR, each standing side file-pruned by
+    * the delta's key range and bloom-prefiltered by its key tuples —
+    * the [[JoinView]] delta machinery. Shared by [[refresh]]'s append
+    * path and [[compensatedQuantiles]]. At least one side must have
+    * moved. */
+  private def deltaJoinRows(spark: SparkSession,
+                            leftRoot: String, rightRoot: String,
+                            leftKeys: Seq[String], rightKeys: Seq[String],
+                            groupCols: Seq[String], valueCol: String,
+                            plv: Int, prv: Int, lv: Int, rv: Int,
+                            lNew: DataFrame, rNew: DataFrame): DataFrame = {
+    def slice(l: DataFrame, r: DataFrame): DataFrame =
+      joinedSlice(l, r, leftKeys, rightKeys, groupCols, valueCol)
+    val lPart =
+      if (lv > plv) {
+        val delta = SnapshotStore.incremental(spark, leftRoot, plv, lv,
+          Some(lNew.schema))
+        val dk = JoinView.keyTuples(delta, leftKeys)
+        Some(slice(delta,
+          JoinView.prefiltered(
+            JoinView.standing(spark, rightRoot, rv, rightKeys, dk),
+            rightKeys, dk)))
+      } else None
+    val rPart =
+      if (rv > prv) {
+        val delta = SnapshotStore.incremental(spark, rightRoot, prv, rv,
+          Some(rNew.schema))
+        val dk = JoinView.keyTuples(delta, rightKeys)
+        Some(slice(
+          JoinView.prefiltered(
+            JoinView.standing(spark, leftRoot, plv, leftKeys, dk),
+            leftKeys, dk),
+          delta))
+      } else None
+    (lPart.toSeq ++ rPart.toSeq).reduce(_ unionByName _)
+  }
+
   /** Bring the view up to both sources' current versions. Spec arguments
     * must repeat the bootstrap's verbatim. Returns the view version. */
   def refresh(spark: SparkSession, leftRoot: String, rightRoot: String,
@@ -252,8 +290,8 @@ object QuantileJoinView {
       rebuild(DefaultMargin)
     } else if (JoinView.appendOnly(leftRoot, plv, lv) &&
                JoinView.appendOnly(rightRoot, prv, rv)) {
-      val delta = AggJoinView.deltaJoinRows(spark, leftRoot, rightRoot,
-        leftKeys, rightKeys, groupCols, Seq(valueCol),
+      val delta = deltaJoinRows(spark, leftRoot, rightRoot,
+        leftKeys, rightKeys, groupCols, valueCol,
         plv, prv, lv, rv, lNew, rNew).localCheckpoint(true)
       val ed = edgesFor(spark, viewRoot)
       if (escapes(delta, ed, valueCol))
@@ -396,8 +434,8 @@ object QuantileJoinView {
     val deltaCounts =
       if (JoinView.appendOnly(leftRoot, plv, lv) &&
           JoinView.appendOnly(rightRoot, prv, rv)) {
-        val delta = AggJoinView.deltaJoinRows(spark, leftRoot, rightRoot,
-          leftKeys, rightKeys, groupCols, Seq(valueCol),
+        val delta = deltaJoinRows(spark, leftRoot, rightRoot,
+          leftKeys, rightKeys, groupCols, valueCol,
           plv, prv, lv, rv, lNew, rNew).localCheckpoint(true)
         if (escapes(delta, ed, valueCol)) return None
         binned(delta, ed, groupCols, valueCol, 1)

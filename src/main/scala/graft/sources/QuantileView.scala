@@ -80,7 +80,7 @@ object QuantileView {
   // freeze under EITHER keying, since both keyings grow monotonically)
   // are stamped in place; a key ABOVE the view version is ambiguous
   // (r-16 crash orphan vs legacy live freeze) and REFUSES loudly — the
-  // AggJoinView p=2 posture — with [[retighten]] as the documented
+  // agg-join views' spec-mismatch posture — with [[retighten]] as the documented
   // migration (its full refreeze obsoletes every older sidecar, and it
   // stamps the marker).
 

@@ -368,7 +368,7 @@ object StreamReplay {
   /** The drip skeleton behind [[joinViewIngestReplay]], with the
     * per-trigger view refresh abstracted: any maintained view whose
     * refresh is idempotent under its own cursor (JoinView's packed
-    * cursor, AggJoinView's identical stamp) composes with the
+    * cursor, the agg-join views' packed cursor vector) composes with the
     * epoch-idempotent store append to give crash-convergent streaming
     * maintenance. */
   def viewIngestReplay(rightRows: DataFrame, orderCol: String,

@@ -4,7 +4,7 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.plans.MaterializedAggJoins
-import graft.sources.{AggJoinView, SnapshotStore}
+import graft.sources.{AggJoinView, JoinView, SnapshotStore}
 
 /** Aggregate-over-join view contract: after ANY commit sequence on
   * either source, the merged partials equal the from-scratch GROUP BY
@@ -162,7 +162,7 @@ class AggJoinViewSpec extends SparkSpec {
         AggJoinView.refresh(spark, l, r, v, "c_id", "o_id",
           Seq("status"), Seq("total"))
       }
-      assert(e.getMessage.contains("exactly one join side"))
+      assert(e.getMessage.contains("exactly one join table"))
     }
   }
 
@@ -539,6 +539,54 @@ class AggJoinViewSpec extends SparkSpec {
         "the two-group query must land on the (seg, status) view")
       assert(graft.plans.PlanProbe.scansOnly(q("seg"), "/segonlyview"),
         "the one-group query must land on the (seg) view")
+    }
+  }
+
+  test("a store in the old two-table layout: refresh refuses naming it; serving declines to the base plan") {
+    withRoots { (l, r, v) =>
+      SnapshotStore.append(custDF(1L to 20L: _*), l)
+      SnapshotStore.append(ordersDF(1L to 15L: _*), r)
+      def joinAgg(): DataFrame = {
+        val lf = SnapshotStore.read(spark, l)
+        val rf = SnapshotStore.read(spark, r)
+        lf.join(rf, lf("c_id") === rf("o_id"))
+          .groupBy("seg", "status")
+          .agg(count(lit(1)).as("n"),
+            sum(col("total").cast("decimal(18,2)")).as("t"))
+      }
+      def rows(df: DataFrame) = df.collect().map(x =>
+        (x.getString(0), x.getString(1), x.getLong(2), x.getDecimal(3))).toSet
+      val want = rows(joinAgg())
+      // the layout an earlier build's two-table view wrote: an `_aggspec`
+      // spec file and partials stamped with the base-10^6 cursor
+      // lv * 10^6 + rv, here fresh at (1, 1)
+      java.nio.file.Files.createDirectories(java.nio.file.Paths.get(v))
+      java.nio.file.Files.write(java.nio.file.Paths.get(v, "_aggspec"),
+        "lk=c_id;rk=o_id;g=seg,status;m=total;p=2".getBytes("UTF-8"))
+      val partials = {
+        val lf = SnapshotStore.read(spark, l)
+        val rf = SnapshotStore.read(spark, r)
+        lf.join(rf, lf("c_id") === rf("o_id"))
+          .groupBy("seg", "status")
+          .agg(count(lit(1)).as("cnt"),
+            sum(col("total").cast("decimal(30,2)")).cast("decimal(30,2)")
+              .as("sum_total"),
+            count(col("total")).as("nn_total"))
+      }
+      SnapshotStore.appendEpoch(partials, v, JoinView.packedCursor(1, 1))
+
+      val e = intercept[IllegalArgumentException](refresh(l, r, v))
+      assert(e.getMessage.contains("old two-table layout") &&
+        e.getMessage.contains("_aggspec") && e.getMessage.contains("rebuild"),
+        e.getMessage)
+      // a registration over the old store, stale serving opted in, must
+      // decline to the base plan and answer its rows
+      MaterializedAggJoins.enable(l, r, v, "c_id", "o_id",
+        Seq("seg", "status"), Seq("total"), serveStale = true)
+      val q = joinAgg()
+      assert(!graft.plans.PlanProbe.scansAny(q, "/view"),
+        "an old-layout store must not serve")
+      assert(rows(q) == want && want.nonEmpty)
     }
   }
 }

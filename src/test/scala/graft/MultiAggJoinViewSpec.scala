@@ -581,4 +581,35 @@ class MultiAggJoinViewSpec extends SparkSpec {
       assert(graft.plans.PlanProbe.scansOnly(q(), "/view"))
     }
   }
+
+  test("N = 2: a one-edge registration serves the two-table count/sum/avg shape") {
+    withRoots { (roots, v) =>
+      val two = roots.take(2)
+      val edge = Seq(Edge(0, Seq("f_pk"), Seq("p_pk")))
+      SnapshotStore.append(factDF(1L to 40L: _*), two(0))
+      SnapshotStore.append(partDF(0L to 5L: _*), two(1)) // f_pk 6 unmatched
+      MultiAggJoinView.refresh(spark, two, v, edge, Seq("p_brand"), measures)
+      MaterializedMultiJoins.enable(two, v, edge, Seq("p_brand"), measures)
+      def q(): DataFrame = {
+        val f = SnapshotStore.read(spark, two(0))
+        val p = SnapshotStore.read(spark, two(1))
+        f.join(p, f("f_pk") === p("p_pk"))
+          .groupBy("p_brand")
+          .agg(count(lit(1)).as("n"),
+            sum(col("qty").cast("decimal(18,2)")).as("t"),
+            avg(col("qty").cast("decimal(18,2)")).as("a"))
+      }
+      def rows(df: DataFrame) = df.collect().map(x =>
+        (x.getString(0), x.getLong(1), x.getDecimal(2), x.getDecimal(3))).toSet
+      val served = q()
+      assert(graft.plans.PlanProbe.scansOnly(served, "/view"),
+        "the two-table shape did not serve from the one-edge view")
+      val got = rows(served)
+      MaterializedMultiJoins.disable(v)
+      val base = q()
+      assert(!graft.plans.PlanProbe.scansAny(base, "/view"))
+      assert(got == rows(base) && got.size == 3,
+        "served rows must equal the base plan's exactly")
+    }
+  }
 }

@@ -303,4 +303,37 @@ class MultiNdvJoinViewSpec extends SparkSpec {
       SnapshotStore.deleteTree(root)
     }
   }
+
+  test("N = 2: a one-edge ndv registration serves the two-table distinct-count shape") {
+    withRoots { (roots, v) =>
+      val two = roots.take(2)
+      val edge = Seq(Edge(0, Seq("f_ck"), Seq("c_ck")))
+      SnapshotStore.append(factDF(0L to 300L: _*), two(0))
+      SnapshotStore.append(custDF(0L to 24L: _*), two(1)) // f_ck 25..29 unmatched
+      MultiNdvJoinView.refresh(spark, two, v, edge, Seq("c_nk", "f_st"),
+        "user_id")
+      MaterializedMultiJoins.enableNdv(two, v, edge, Seq("c_nk", "f_st"),
+        "user_id")
+      def q(): DataFrame = {
+        val f = SnapshotStore.read(spark, two(0))
+        val c = SnapshotStore.read(spark, two(1))
+        f.join(c, f("f_ck") === c("c_ck"))
+          .groupBy("c_nk", "f_st")
+          .agg(expr(s"hll_sketch_estimate(hll_sketch_agg(user_id, " +
+            s"${NdvView.LgK}))").as("au"),
+            count(lit(1)).as("n"))
+      }
+      def rows(df: DataFrame) = df.collect().map(x =>
+        (x.getLong(0), x.getString(1), x.getLong(2), x.getLong(3))).toSet
+      val served = q()
+      assert(graft.plans.PlanProbe.scansOnly(served, "/view"),
+        "the two-table distinct-count shape did not serve")
+      val got = rows(served)
+      MaterializedMultiJoins.disable(v)
+      val base = q()
+      assert(!graft.plans.PlanProbe.scansAny(base, "/view"))
+      assert(got == rows(base) && got.size == 14,
+        "served estimates must equal the single-pass aggregate exactly")
+    }
+  }
 }
