@@ -59,10 +59,11 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     ext.injectPostHocResolutionRule(session =>
       new graft.plans.MultiAggJoinRewriteRule(session))
     // Quantile-serving rewrite (percentile_approx → the maintained
-    // quantile view's O(bins) read, per-view explicit opt-in) — BEFORE
-    // the plain join rewrite: a percentile over a registered join
-    // should serve from O(bins) quantile partials, not from the join
-    // view followed by a full GK re-aggregation.
+    // quantile view's O(bins) read, per-view explicit opt-in; arms for
+    // one table and for inner-join trees of N ≥ 2 tables) — BEFORE the
+    // plain join rewrite: a percentile over a registered join should
+    // serve from O(bins) quantile partials, not from the join view
+    // followed by a full GK re-aggregation.
     ext.injectPostHocResolutionRule(session =>
       new graft.plans.QuantileRewriteRule(session))
     // Materialized JOIN-view rewrite for registered JoinView triples —

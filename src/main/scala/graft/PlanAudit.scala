@@ -750,18 +750,21 @@ object PlanAudit {
       }),
       ("percentile-per-dim over a join serves join-free from the quantile-join view", {
         import org.apache.spark.sql.functions._
-        import graft.sources.{QuantileJoinView, SnapshotStore}
+        import graft.sources.{MultiQuantileJoinView, SnapshotStore}
+        import graft.sources.MultiAggJoinView.Edge
         val root = java.nio.file.Files.createTempDirectory("pa_qjv").toString
+        val roots = Seq(s"$root/L", s"$root/R")
+        val edges = Seq(Edge(0, Seq("c_id"), Seq("o_cust")))
         try {
           SnapshotStore.append(spark.range(0, 400)
             .selectExpr("id AS c_id", "concat('seg', id % 5) AS seg"), s"$root/L")
           SnapshotStore.append(spark.range(0, 3000)
             .selectExpr("id AS o_id", "id % 400 AS o_cust",
               "CAST((id * 37) % 1000 AS DOUBLE) AS total"), s"$root/R")
-          QuantileJoinView.refresh(spark, s"$root/L", s"$root/R",
-            s"$root/qjview", Seq("c_id"), Seq("o_cust"), Seq("seg"), "total")
-          graft.plans.MaterializedQuantiles.enableJoin(s"$root/L", s"$root/R",
-            s"$root/qjview", Seq("c_id"), Seq("o_cust"), Seq("seg"), "total")
+          MultiQuantileJoinView.refresh(spark, roots, s"$root/qjview", edges,
+            Seq("seg"), "total")
+          graft.plans.MaterializedMultiJoins.enableQuantile(roots,
+            s"$root/qjview", edges, Seq("seg"), "total")
           val lf = SnapshotStore.read(spark, s"$root/L")
           val rf = SnapshotStore.read(spark, s"$root/R")
           val p = lf.join(rf, lf("c_id") === rf("o_cust"))
@@ -776,7 +779,7 @@ object PlanAudit {
             !p.contains("SortMergeJoin") && !p.contains("ShuffledHashJoin") &&
             !p.contains("approx_percentile") && !p.contains("percentile_approx")
         } finally {
-          graft.plans.MaterializedQuantiles.disableView(s"$root/qjview")
+          graft.plans.MaterializedMultiJoins.disableView(s"$root/qjview")
           graft.sources.SnapshotStore.deleteTree(root)
         }
       }),

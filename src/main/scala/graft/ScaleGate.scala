@@ -432,15 +432,16 @@ object ScaleGate {
     // stamped append, no dirty-group recompute), so both maintenance
     // legs must stay flat; only the bootstrap is O(table).
     if (fams("qjoin")) withRoot { root =>
-      import graft.sources.QuantileJoinView
+      import graft.sources.MultiQuantileJoinView
+      import graft.sources.MultiAggJoinView.Edge
       val l = s"$root/L"; val r = s"$root/R"; val v = s"$root/V"
+      val edges = Seq(Edge(0, Seq("c_custkey"), Seq("o_custkey")))
       SnapshotStore.appendWithStats(
         clustered(customer, "c_custkey"), l, Seq("c_custkey"))
       SnapshotStore.appendWithStats(
         clustered(orders, "o_custkey"), r, Seq("o_custkey"))
-      def refresh(): Unit = QuantileJoinView.refresh(spark, l, r, v,
-        Seq("c_custkey"), Seq("o_custkey"), Seq("c_mktsegment"),
-        "o_totalprice")
+      def refresh(): Unit = MultiQuantileJoinView.refresh(spark, Seq(l, r),
+        v, edges, Seq("c_mktsegment"), "o_totalprice")
       time("qjoin bootstrap (freeze + bin)")(refresh())
       // monotone in-envelope ingest: a fresh custkey band with the
       // orders referencing it (values inside the frozen envelope)
@@ -465,14 +466,13 @@ object ScaleGate {
         .contains("append"),
         "quantile-join churn must stay a signed-count append")
       time("qjoin serve (p50/p99)")(
-        QuantileJoinView.quantiles(spark, v, Seq(0.5, 0.99)).count())
+        MultiQuantileJoinView.quantiles(spark, v, Seq(0.5, 0.99)).count())
       // the CATALYST serve (r19): percentile_approx over the registered
       // join answers from O(live bins) — the structural win is serve
       // cost independent of fact size; the declined twin re-runs the
       // full join + GK aggregate
-      graft.plans.MaterializedQuantiles.enableJoin(l, r, v,
-        Seq("c_custkey"), Seq("o_custkey"), Seq("c_mktsegment"),
-        "o_totalprice")
+      graft.plans.MaterializedMultiJoins.enableQuantile(Seq(l, r), v, edges,
+        Seq("c_mktsegment"), "o_totalprice")
       try {
         def userQ() = {
           val lf = SnapshotStore.read(spark, l)
@@ -486,9 +486,9 @@ object ScaleGate {
         assert(graft.plans.PlanProbe.scansOnly(served, "/V"),
           "the qjoin catalyst serve did not fire at scale")
         time("qjoin catalyst serve p90")(served.count())
-        graft.plans.MaterializedQuantiles.disableView(v)
+        graft.plans.MaterializedMultiJoins.disableView(v)
         time("qjoin DECLINED p90 (full join+GK)")(userQ().count())
-      } finally graft.plans.MaterializedQuantiles.disableView(v)
+      } finally graft.plans.MaterializedMultiJoins.disableView(v)
     }
 
     if (fams("mqjoin")) withRoot { root =>

@@ -3685,9 +3685,10 @@ object SparkEntry {
         val c = Tables.customer(s, dir).select("c_custkey", "c_mktsegment")
         val o = Tables.orders(s, dir)
           .select("o_orderkey", "o_custkey", "o_totalprice")
-        def refresh(): Unit = sources.QuantileJoinView.refresh(s, l, r, v,
-          Seq("c_custkey"), Seq("o_custkey"), Seq("c_mktsegment"),
-          "o_totalprice")
+        def refresh(): Unit = sources.MultiQuantileJoinView.refresh(s,
+          Seq(l, r), v,
+          Seq(sources.MultiAggJoinView.Edge(0, Seq("c_custkey"), Seq("o_custkey"))),
+          Seq("c_mktsegment"), "o_totalprice")
         sources.SnapshotStore.append(c, l)
         sources.SnapshotStore.append(o.where(col("o_orderkey") % 2 === 0), r)
         refresh() // bootstrap: freeze global edges, bin once
@@ -3698,10 +3699,10 @@ object SparkEntry {
           c.where(col("c_custkey") % 10 === 0)
             .withColumn("c_mktsegment", lit("MOVED")), l, Seq("c_custkey"))
         refresh() // churn: ± legs, group mass transfers, ONE append
-        sources.QuantileJoinView.compact(s, v)
-        exportForOracle(sources.QuantileJoinView.edgesFor(s, v)
+        sources.MultiQuantileJoinView.compact(s, v)
+        exportForOracle(sources.MultiQuantileJoinView.edgesFor(s, v)
           .select("lo", "w", "bins"), "qjview_edges", model = true)
-        sources.QuantileJoinView.quantiles(s, v, Seq(0.5, 0.9, 0.99))
+        sources.MultiQuantileJoinView.quantiles(s, v, Seq(0.5, 0.9, 0.99))
           .localCheckpoint(true)
       } finally sources.SnapshotStore.deleteTree(root)
     }),
@@ -3724,12 +3725,12 @@ object SparkEntry {
           Tables.orders(s, dir).where(col("o_orderkey") % 2 === 0)
             .select("o_orderkey", "o_custkey", "o_totalprice"),
           "o_orderkey", r,
-          sp => sources.QuantileJoinView.refresh(sp, l, r, v,
-            Seq("c_custkey"), Seq("o_custkey"), Seq("c_mktsegment"),
-            "o_totalprice"))
-        exportForOracle(sources.QuantileJoinView.edgesFor(s, v)
+          sp => sources.MultiQuantileJoinView.refresh(sp, Seq(l, r), v,
+            Seq(sources.MultiAggJoinView.Edge(0, Seq("c_custkey"), Seq("o_custkey"))),
+            Seq("c_mktsegment"), "o_totalprice"))
+        exportForOracle(sources.MultiQuantileJoinView.edgesFor(s, v)
           .select("lo", "w", "bins"), "sqjv_edges", model = true)
-        sources.QuantileJoinView.quantiles(s, v, Seq(0.5, 0.9))
+        sources.MultiQuantileJoinView.quantiles(s, v, Seq(0.5, 0.9))
           .localCheckpoint(true)
       } finally sources.SnapshotStore.deleteTree(root)
     }),
@@ -3802,7 +3803,7 @@ object SparkEntry {
     }),
 
     // The JOIN quantile serving arm: percentile-per-dim-attribute over a
-    // registered customer⋈orders is answered from the QuantileJoinView's
+    // registered customer⋈orders is answered from the quantile view's
     // O(bins) counts — the fact×dim join AND the GK aggregate leave the
     // plan. Same explicit-opt-in + exact-hash-replay contract as the
     // single-table serve.
@@ -3814,11 +3815,12 @@ object SparkEntry {
           Tables.customer(s, dir).select("c_custkey", "c_mktsegment"), l)
         sources.SnapshotStore.append(Tables.orders(s, dir)
           .select("o_orderkey", "o_custkey", "o_totalprice"), r)
-        sources.QuantileJoinView.refresh(s, l, r, v, Seq("c_custkey"),
-          Seq("o_custkey"), Seq("c_mktsegment"), "o_totalprice")
-        graft.plans.MaterializedQuantiles.enableJoin(l, r, v,
-          Seq("c_custkey"), Seq("o_custkey"), Seq("c_mktsegment"),
-          "o_totalprice")
+        val edges =
+          Seq(sources.MultiAggJoinView.Edge(0, Seq("c_custkey"), Seq("o_custkey")))
+        sources.MultiQuantileJoinView.refresh(s, Seq(l, r), v, edges,
+          Seq("c_mktsegment"), "o_totalprice")
+        graft.plans.MaterializedMultiJoins.enableQuantile(Seq(l, r), v, edges,
+          Seq("c_mktsegment"), "o_totalprice")
         try {
           val lf = sources.SnapshotStore.read(s, l)
           val rf = sources.SnapshotStore.read(s, r)
@@ -3829,10 +3831,10 @@ object SparkEntry {
               percentile_approx(col("o_totalprice"), lit(0.9), lit(1000))
                 .as("p90"))
           val usedView = graft.plans.PlanProbe.scansOnly(q, "/view")
-          exportForOracle(sources.QuantileJoinView.edgesFor(s, v)
+          exportForOracle(sources.MultiQuantileJoinView.edgesFor(s, v)
             .select("lo", "w", "bins"), "qjvs_edges", model = true)
           q.withColumn("used_view", lit(usedView)).localCheckpoint(true)
-        } finally graft.plans.MaterializedQuantiles.disableView(v)
+        } finally graft.plans.MaterializedMultiJoins.disableView(v)
       } finally sources.SnapshotStore.deleteTree(root)
     }),
 
@@ -3897,11 +3899,13 @@ object SparkEntry {
           .select("o_orderkey", "o_custkey", "o_totalprice")
         sources.SnapshotStore.append(c, l)
         sources.SnapshotStore.append(o, r)
-        sources.QuantileJoinView.refresh(s, l, r, v, Seq("c_custkey"),
-          Seq("o_custkey"), Seq("c_mktsegment"), "o_totalprice")
-        graft.plans.MaterializedQuantiles.enableJoin(l, r, v,
-          Seq("c_custkey"), Seq("o_custkey"), Seq("c_mktsegment"),
-          "o_totalprice", serveStale = true)
+        val edges =
+          Seq(sources.MultiAggJoinView.Edge(0, Seq("c_custkey"), Seq("o_custkey")))
+        sources.MultiQuantileJoinView.refresh(s, Seq(l, r), v, edges,
+          Seq("c_mktsegment"), "o_totalprice")
+        val stamp = sources.SnapshotStore.lastEpoch(v)
+        graft.plans.MaterializedMultiJoins.enableQuantile(Seq(l, r), v, edges,
+          Seq("c_mktsegment"), "o_totalprice", serveStale = true)
         try {
           // the gap, NO refresh: append shifted-key copies of the %3
           // orders (values repeat the observed set — cannot escape the
@@ -3921,13 +3925,12 @@ object SparkEntry {
               percentile_approx(col("o_totalprice"), lit(0.9), lit(1000))
                 .as("p90"))
           val usedView = graft.plans.PlanProbe.scansAny(q, "/view")
-          require(sources.SnapshotStore.lastEpoch(v)
-            .contains(sources.JoinView.packedCursor(1, 1)),
+          require(sources.SnapshotStore.lastEpoch(v) == stamp,
             "compensated serving must not move the view's cursor")
-          exportForOracle(sources.QuantileJoinView.edgesFor(s, v)
+          exportForOracle(sources.MultiQuantileJoinView.edgesFor(s, v)
             .select("lo", "w", "bins"), "qjvt_edges", model = true)
           q.withColumn("used_view", lit(usedView)).localCheckpoint(true)
-        } finally graft.plans.MaterializedQuantiles.disableView(v)
+        } finally graft.plans.MaterializedMultiJoins.disableView(v)
       } finally sources.SnapshotStore.deleteTree(root)
     }),
 

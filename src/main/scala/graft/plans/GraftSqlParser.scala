@@ -8,7 +8,7 @@ import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 import org.apache.spark.sql.execution.command.LeafRunnableCommand
 import org.apache.spark.sql.types.{DataType, IntegerType, StringType, StructType}
 
-import graft.sources.{JoinView, MultiAggJoinView, MultiNdvJoinView, MultiQuantileJoinView, NdvView, QuantileJoinView, QuantileView, RollupView}
+import graft.sources.{JoinView, MultiAggJoinView, MultiNdvJoinView, MultiQuantileJoinView, NdvView, QuantileView, RollupView}
 import graft.sources.MultiAggJoinView.Edge
 
 /** The SQL DDL surface for the engine's materialized views — the
@@ -55,22 +55,18 @@ import graft.sources.MultiAggJoinView.Edge
   *     [, STALE => …])` — distinct count over the join tree
   *   - `QUANTILE_JOIN(LEFT, RIGHT, LEFT_KEYS, RIGHT_KEYS, GROUPS,
   *     VALUE_COL => 'm' [, BINS => '64'] [, SERVE => 'true']
-  *     [, STALE => 'true'])` — percentiles per dim attribute; SERVE
-  *     opts the `percentile_approx`-over-the-join shape into the
-  *     O(bins) Catalyst serve (same explicit-approximation contract
-  *     as QUANTILE; STALE adds delta-compensated serving, sound over
-  *     churn gaps too — signed counts retract)
+  *     [, STALE => 'true'])` — the one-edge MULTI_QUANTILE_JOIN
   *   - `MULTI_QUANTILE_JOIN(ROOTS, EDGES, GROUPS, VALUE_COL => 'm'
   *     [, BINS => '64'] [, SERVE => 'true'] [, STALE => 'true'])` —
-  *     percentiles over the N-way join tree (QUANTILE_JOIN's contract
-  *     lifted to MULTI_AGG_JOIN's tree shape); SERVE opts the
+  *     percentiles per dim attribute over the join tree; SERVE opts the
   *     `percentile_approx`-over-the-tree shape into the O(bins)
-  *     Catalyst serve, STALE adds the telescoped delta-compensated
-  *     serving (sound over churn gaps — signed counts retract)
+  *     Catalyst serve (same explicit-approximation contract as
+  *     QUANTILE), STALE adds the telescoped delta-compensated serving
+  *     (sound over churn gaps too — signed counts retract)
   *
-  * Ten kinds over eight view implementations: AGG_JOIN and NDV_JOIN
-  * build the same spec as their MULTI_ twins, and SHOW still reports
-  * the kind the CREATE named.
+  * Ten kinds over seven view implementations: AGG_JOIN, NDV_JOIN and
+  * QUANTILE_JOIN build the same spec as their MULTI_ twins, and SHOW
+  * still reports the kind the CREATE named.
   *
   * CREATE registers AND materializes (the initial refresh runs — a
   * CREATE that didn't materialize would serve nothing); REFRESH brings
@@ -121,7 +117,8 @@ object GraftDdl {
       JoinView.refreshKeys(spark, l, r, view, lks, rks, how)
   }
   /** `kind`: the DDL kind SHOW reports — MULTI_AGG_JOIN, or AGG_JOIN
-    * for its one-edge spelling (likewise for [[MultiNdvSpec]]). */
+    * for its one-edge spelling (likewise for [[MultiNdvSpec]] and
+    * [[MultiQuantileJoinSpec]]). */
   private final case class MultiSpec(roots: Seq[String], edges: Seq[Edge],
                                      groups: Seq[String],
                                      measures: Seq[String],
@@ -139,20 +136,13 @@ object GraftDdl {
     def refresh(spark: SparkSession, view: String): Int =
       MultiNdvJoinView.refresh(spark, roots, view, edges, groups, x)
   }
-  private final case class QuantileJoinSpec(l: String, r: String,
-                                            lks: Seq[String], rks: Seq[String],
-                                            groups: Seq[String], x: String,
-                                            bins: Int, serve: Boolean,
-                                            stale: Boolean) extends Spec {
-    def refresh(spark: SparkSession, view: String): Int =
-      QuantileJoinView.refresh(spark, l, r, view, lks, rks, groups, x, bins)
-  }
   private final case class MultiQuantileJoinSpec(roots: Seq[String],
                                                  edges: Seq[Edge],
                                                  groups: Seq[String],
                                                  x: String, bins: Int,
                                                  serve: Boolean,
-                                                 stale: Boolean) extends Spec {
+                                                 stale: Boolean,
+                                                 kind: String) extends Spec {
     def refresh(spark: SparkSession, view: String): Int =
       MultiQuantileJoinView.refresh(spark, roots, view, edges, groups, x,
         bins)
@@ -288,8 +278,7 @@ object GraftDdl {
         case _: JoinSpec            => "JOIN"
         case m: MultiSpec           => m.kind
         case m: MultiNdvSpec        => m.kind
-        case _: QuantileJoinSpec    => "QUANTILE_JOIN"
-        case _: MultiQuantileJoinSpec => "MULTI_QUANTILE_JOIN"
+        case m: MultiQuantileJoinSpec => m.kind
       }
       (view, kind, spec.toString)
     }
@@ -365,22 +354,13 @@ object GraftDdl {
         val (roots, edges) = tree(args, kind)
         MultiNdvSpec(roots, edges, list(need(args, "GROUPS", kind)),
           need(args, "DISTINCT_COL", kind), flag(args, "STALE"), kind)
-      case "QUANTILE_JOIN" =>
-        QuantileJoinSpec(need(args, "LEFT", kind), need(args, "RIGHT", kind),
-          list(need(args, "LEFT_KEYS", kind)),
-          list(need(args, "RIGHT_KEYS", kind)),
-          list(need(args, "GROUPS", kind)),
-          need(args, "VALUE_COL", kind),
-          args.get("BINS").map(_.toInt)
-            .getOrElse(QuantileJoinView.DefaultBins),
-          flag(args, "SERVE"), flag(args, "STALE"))
-      case "MULTI_QUANTILE_JOIN" =>
+      case "QUANTILE_JOIN" | "MULTI_QUANTILE_JOIN" =>
         val (roots, edges) = tree(args, kind)
         MultiQuantileJoinSpec(roots, edges, list(need(args, "GROUPS", kind)),
           need(args, "VALUE_COL", kind),
           args.get("BINS").map(_.toInt)
-            .getOrElse(QuantileJoinView.DefaultBins),
-          flag(args, "SERVE"), flag(args, "STALE"))
+            .getOrElse(MultiQuantileJoinView.DefaultBins),
+          flag(args, "SERVE"), flag(args, "STALE"), kind)
       case other =>
         sys.error(s"unknown materialized-view kind '$other' (ROLLUP, NDV, " +
           "QUANTILE, JOIN, AGG_JOIN, NDV_JOIN, MULTI_AGG_JOIN, " +
@@ -403,11 +383,7 @@ object GraftDdl {
       MaterializedMultiJoins.enable(roots, view, edges, g, m, stale)
     case MultiNdvSpec(roots, edges, g, x, stale, _) =>
       MaterializedMultiJoins.enableNdv(roots, view, edges, g, x, stale)
-    case QuantileJoinSpec(l, r, lks, rks, g, x, bins, serve, stale) =>
-      if (serve)
-        MaterializedQuantiles.enableJoin(l, r, view, lks, rks, g, x, bins,
-          stale)
-    case MultiQuantileJoinSpec(roots, edges, g, x, bins, serve, stale) =>
+    case MultiQuantileJoinSpec(roots, edges, g, x, bins, serve, stale, _) =>
       if (serve)
         MaterializedMultiJoins.enableQuantile(roots, view, edges, g, x,
           bins, stale)
@@ -448,7 +424,6 @@ object GraftDdl {
       case _: JoinSpec     => MaterializedJoins.disableView(view)
       case _: MultiSpec        => MaterializedMultiJoins.disableView(view)
       case _: MultiNdvSpec     => MaterializedMultiJoins.disableView(view)
-      case _: QuantileJoinSpec => MaterializedQuantiles.disableView(view)
       case _: MultiQuantileJoinSpec => MaterializedMultiJoins.disableView(view)
     }
     java.nio.file.Files.deleteIfExists(entryFile(catalogDir(spark), view))

@@ -16,8 +16,9 @@ import graft.sources.MultiAggJoinView.Edge
 
 /** Registry of N-table (N ≥ 2) join-tree specs → maintained
   * [[MultiAggJoinView]] the [[MultiAggJoinRewriteRule]] may answer
-  * from. Explicit opt-in like every sibling registry; the two-table
-  * registrations ([[MaterializedAggJoins]]) are its one-edge trees. */
+  * from. Explicit opt-in like every sibling registry; two-table
+  * registrations are its one-edge trees ([[MaterializedAggJoins]]
+  * forwards the agg/ndv ones). */
 object MaterializedMultiJoins {
 
   /** A registration: ordered roots, the edge tree, spec columns, and the
@@ -79,7 +80,7 @@ object MaterializedMultiJoins {
     * serving, sound over churn gaps too (signed counts retract). */
   def enableQuantile(roots: Seq[String], viewRoot: String, edges: Seq[Edge],
                      groupCols: Seq[String], valueCol: String,
-                     bins: Int = graft.sources.QuantileJoinView.DefaultBins,
+                     bins: Int = graft.sources.MultiQuantileJoinView.DefaultBins,
                      serveStale: Boolean = false): Unit =
     regs.put(canon(viewRoot),
       MReg(roots, viewRoot, edges, groupCols, Seq(valueCol), serveStale,

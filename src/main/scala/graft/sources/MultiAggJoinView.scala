@@ -547,13 +547,14 @@ object MultiAggJoinView {
   }
 
   /** Refuse a store written by the earlier two-table AGG_JOIN / NDV_JOIN
-    * implementation: its spec file (`_aggspec` / `_ndvjspec`) is not
-    * this view's, and its base-10⁶ cursor would decode under this view's
-    * packing as a wrong version vector (and refresh would then fail
-    * with a misleading "source went backwards"). Shared with
-    * [[MultiNdvJoinView]]. */
+    * / QUANTILE_JOIN implementation: its spec file (`_aggspec` /
+    * `_ndvjspec` / `_qjspec`) is not this view's, and its base-10⁶
+    * cursor would decode under this view's packing as a wrong version
+    * vector (and refresh would then fail with a misleading "source went
+    * backwards"). Shared with [[MultiNdvJoinView]] and
+    * [[MultiQuantileJoinView]]. */
   private[sources] def refuseTwoTableLayout(viewRoot: String): Unit =
-    Seq("_aggspec", "_ndvjspec")
+    Seq("_aggspec", "_ndvjspec", "_qjspec")
       .find(f => java.nio.file.Files.exists(java.nio.file.Paths.get(viewRoot, f)))
       .foreach(f => throw new IllegalArgumentException(
         s"view at $viewRoot is in the old two-table layout ($f spec file, " +

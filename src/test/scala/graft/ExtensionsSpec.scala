@@ -657,7 +657,7 @@ class ExtensionsSpec extends SparkSpec {
         (qjv, "QUANTILE_JOIN")), s"got $shown")
       // the rehydrated quantile-join view refreshes and serves estimates
       // through its own API (no Catalyst rewrite for quantiles)
-      assert(graft.sources.QuantileJoinView.quantiles(spark, qjv, Seq(0.5))
+      assert(graft.sources.MultiQuantileJoinView.quantiles(spark, qjv, Seq(0.5))
         .collect().length == 3)
       spark.sql(s"DROP MATERIALIZED VIEW '$qjv'")
       // SERVING works in the fresh session — no re-CREATE, no bootstrap

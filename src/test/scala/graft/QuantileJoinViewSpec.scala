@@ -3,7 +3,8 @@ package graft
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-import graft.sources.{QuantileJoinView, SnapshotStore}
+import graft.sources.{JoinView, MultiQuantileJoinView, SnapshotStore}
+import graft.sources.MultiAggJoinView.Edge
 
 /** Quantile-over-join view contract: after ANY in-envelope commit
   * sequence the estimates equal the same fixed-bin interpolation
@@ -35,13 +36,15 @@ class QuantileJoinViewSpec extends SparkSpec {
   }
 
   private def refresh(l: String, r: String, v: String): Int =
-    QuantileJoinView.refresh(spark, l, r, v, Seq("c_id"), Seq("o_cust"),
-      Seq("seg"), "total")
+    MultiQuantileJoinView.refresh(spark, Seq(l, r), v, edges, Seq("seg"),
+      "total")
+
+  private val edges = Seq(Edge(0, Seq("c_id"), Seq("o_cust")))
 
   private val phis = Seq(0.5, 0.9)
 
   private def estimates(v: String): Set[(String, Double, Double)] =
-    QuantileJoinView.quantiles(spark, v, phis).collect()
+    MultiQuantileJoinView.quantiles(spark, v, phis).collect()
       .map(x => (x.getAs[String]("seg"), x.getAs[Double]("phi"),
         x.getAs[Double]("est"))).toSet
 
@@ -49,7 +52,7 @@ class QuantileJoinViewSpec extends SparkSpec {
     * CURRENT join under the view's CURRENT frozen edges. */
   private def truth(l: String, r: String, v: String): Set[(String, Double, Double)] = {
     import org.apache.spark.sql.expressions.Window
-    val ed = QuantileJoinView.edgesFor(spark, v).head()
+    val ed = MultiQuantileJoinView.edgesFor(spark, v).head()
     val (lo, w, bins) = (ed.getAs[Double]("lo"), ed.getAs[Double]("w"),
       ed.getAs[Int]("bins"))
     val lf = SnapshotStore.read(spark, l)
@@ -103,7 +106,7 @@ class QuantileJoinViewSpec extends SparkSpec {
       assert(estimates(v) == truth(l, r, v))
 
       // accuracy: every estimate within 2·w of the exact percentile
-      val ed = QuantileJoinView.edgesFor(spark, v).head()
+      val ed = MultiQuantileJoinView.edgesFor(spark, v).head()
       val w = ed.getAs[Double]("w")
       val lf = SnapshotStore.read(spark, l)
       val rf = SnapshotStore.read(spark, r)
@@ -121,7 +124,7 @@ class QuantileJoinViewSpec extends SparkSpec {
 
       // compact folds the signed residue; content unchanged; replay no-op
       val content = estimates(v)
-      QuantileJoinView.compact(spark, v)
+      MultiQuantileJoinView.compact(spark, v)
       assert(estimates(v) == content)
       val before = SnapshotStore.currentVersion(v)
       refresh(l, r, v)
@@ -135,8 +138,8 @@ class QuantileJoinViewSpec extends SparkSpec {
       SnapshotStore.append(ordersDF(0L to 300L: _*), r)
       refresh(l, r, v)
       def compensated(): Option[Set[(String, Double, Double)]] =
-        QuantileJoinView.compensatedQuantiles(spark, l, r, v,
-          Seq("c_id"), Seq("o_cust"), Seq("seg"), "total", phis)
+        MultiQuantileJoinView.compensatedQuantiles(spark, Seq(l, r), v,
+          edges, Seq("seg"), "total", phis)
           .map(_.collect().map(x => (x.getAs[String]("seg"),
             x.getAs[Double]("phi"), x.getAs[Double]("est"))).toSet)
 
@@ -172,9 +175,9 @@ class QuantileJoinViewSpec extends SparkSpec {
       SnapshotStore.append(custDF(0L to 39L: _*), l)
       SnapshotStore.append(ordersDF(0L to 200L: _*), r)
       refresh(l, r, v)
-      val m0 = QuantileJoinView.edgesFor(spark, v).head()
+      val m0 = MultiQuantileJoinView.edgesFor(spark, v).head()
         .getAs[Double]("margin")
-      assert(m0 == QuantileJoinView.DefaultMargin)
+      assert(m0 == MultiQuantileJoinView.DefaultMargin)
 
       // a delta far outside the frozen envelope (values ~1e6)
       val s = spark
@@ -185,9 +188,9 @@ class QuantileJoinViewSpec extends SparkSpec {
       refresh(l, r, v)
       assert(lastOp(v) == "compact",
         "an escaping delta must take the one-rebuild refreeze")
-      val m1 = QuantileJoinView.edgesFor(spark, v).head()
+      val m1 = MultiQuantileJoinView.edgesFor(spark, v).head()
         .getAs[Double]("margin")
-      assert(m1 == 2.0 * QuantileJoinView.DefaultMargin,
+      assert(m1 == 2.0 * MultiQuantileJoinView.DefaultMargin,
         s"escape must double the margin, got $m1")
       assert(estimates(v) == truth(l, r, v) && estimates(v).nonEmpty)
 
@@ -198,6 +201,59 @@ class QuantileJoinViewSpec extends SparkSpec {
       assert(lastOp(v) == "append",
         "the doubled envelope must absorb the next nearby delta O(Δ)")
       assert(estimates(v) == truth(l, r, v))
+    }
+  }
+
+  test("a store in the old two-table layout is refused on refresh and declined by serving") {
+    withRoots { (l, r, v) =>
+      SnapshotStore.append(custDF(0L to 39L: _*), l)
+      SnapshotStore.append(ordersDF(0L to 300L: _*), r)
+      def q(): DataFrame = {
+        val lf = SnapshotStore.read(spark, l)
+        val rf = SnapshotStore.read(spark, r)
+        lf.join(rf, lf("c_id") === rf("o_cust"))
+          .groupBy("seg")
+          .agg(percentile_approx(col("total"), lit(0.5), lit(1000)).as("p0"))
+      }
+      def rows(df: DataFrame): Set[(String, Double)] =
+        df.collect().map(x => (x.getString(0), x.getDouble(1))).toSet
+      val want = rows(q())
+
+      // the layout an earlier build's two-table view wrote: a `_qjspec`
+      // spec file, its `_jedges` sidecar, and signed bin counts stamped
+      // with the base-10^6 cursor lv * 10^6 + rv, here fresh at (1, 1)
+      java.nio.file.Files.createDirectories(java.nio.file.Paths.get(v))
+      java.nio.file.Files.write(java.nio.file.Paths.get(v, "_qjspec"),
+        "lk=c_id;rk=o_cust;g=seg;v=total;b=64;p=1".getBytes("UTF-8"))
+      val s = spark
+      import s.implicits._
+      Seq((0.0, 1000.0 / 64, 64, 0.25)).toDF("lo", "w", "bins", "margin")
+        .coalesce(1).write.parquet(s"$v/_jedges/v1")
+      val counts = {
+        val lf = SnapshotStore.read(spark, l)
+        val rf = SnapshotStore.read(spark, r)
+        lf.join(rf, lf("c_id") === rf("o_cust"))
+          .select(col("seg"),
+            least(lit(63), greatest(lit(0),
+              floor(col("total") / lit(1000.0 / 64)).cast("int"))).as("bin"))
+          .groupBy("seg", "bin").agg(count(lit(1)).as("cnt"))
+      }
+      SnapshotStore.appendEpoch(counts, v, JoinView.packedCursor(1, 1))
+
+      val e = intercept[IllegalArgumentException](refresh(l, r, v))
+      assert(e.getMessage.contains("old two-table layout") &&
+        e.getMessage.contains("_qjspec") && e.getMessage.contains("rebuild"),
+        e.getMessage)
+      // a registration over the old store, stale serving opted in, must
+      // decline to the base plan and answer its rows
+      graft.plans.MaterializedMultiJoins.enableQuantile(Seq(l, r), v, edges,
+        Seq("seg"), "total", serveStale = true)
+      try {
+        val served = q()
+        assert(!graft.plans.PlanProbe.scansAny(served, "/view"),
+          "an old-layout store must not serve")
+        assert(rows(served) == want && want.nonEmpty)
+      } finally graft.plans.MaterializedMultiJoins.disableView(v)
     }
   }
 }

@@ -3,8 +3,9 @@ package graft
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-import graft.plans.{MaterializedQuantiles, PlanProbe}
-import graft.sources.{QuantileJoinView, QuantileView, SnapshotStore}
+import graft.plans.{MaterializedMultiJoins, MaterializedQuantiles, PlanProbe}
+import graft.sources.{MultiQuantileJoinView, QuantileView, SnapshotStore}
+import graft.sources.MultiAggJoinView.Edge
 
 /** The quantile SERVING arm — the last view kind to rewrite through
   * Catalyst: a `percentile_approx`-shaped aggregate over a REGISTERED
@@ -198,24 +199,26 @@ class QuantileServeSpec extends SparkSpec {
     }.toSet
 
   private def jviewRows(v: String, phis: Seq[Double]): Set[(String, Double, Double)] =
-    QuantileJoinView.quantiles(spark, v, phis).collect().map(x =>
+    MultiQuantileJoinView.quantiles(spark, v, phis).collect().map(x =>
       (x.getAs[String]("seg"), x.getAs[Double]("phi"),
         x.getAs[Double]("est"))).toSet
 
   test("join: percentile-per-dim serves join-free; churn-gap stale serving compensates bit-equal") {
     val root = java.nio.file.Files.createTempDirectory("qjserve").toString
     val (l, r, v) = (s"$root/L", s"$root/R", s"$root/view")
+    val ckv = s"$root/ckview"
+    val edges = Seq(Edge(0, Seq("c_id"), Seq("o_cust")))
     try {
       SnapshotStore.append(custDF(0L to 39L: _*), l)
       SnapshotStore.append(ordersDF(0L to 300L: _*), r)
-      def refresh(): Unit = QuantileJoinView.refresh(spark, l, r, v,
-        Seq("c_id"), Seq("o_cust"), Seq("seg"), "total")
+      def refresh(): Unit = MultiQuantileJoinView.refresh(spark, Seq(l, r), v,
+        edges, Seq("seg"), "total")
       refresh()
       val phis = Seq(0.5, 0.9)
 
       assert(!PlanProbe.scansAny(joinQ(l, r, phis), "/view"),
         "no serve without the explicit opt-in")
-      MaterializedQuantiles.enableJoin(l, r, v, Seq("c_id"), Seq("o_cust"),
+      MaterializedMultiJoins.enableQuantile(Seq(l, r), v, edges,
         Seq("seg"), "total", serveStale = true)
       val served = joinQ(l, r, phis)
       assert(PlanProbe.scansOnly(served, "/view"),
@@ -223,10 +226,41 @@ class QuantileServeSpec extends SparkSpec {
       assert(jlongRows(served, phis) == jviewRows(v, phis) &&
         jlongRows(served, phis).nonEmpty)
 
-      // a non-registered measure declines (the o_id column exists but
-      // is not the view's value column)
       val lf = SnapshotStore.read(spark, l)
       val rf = SnapshotStore.read(spark, r)
+      def pcts(): Seq[org.apache.spark.sql.Column] =
+        phis.zipWithIndex.map { case (p, i) =>
+          percentile_approx(col("total"), lit(p), lit(1000)).as(s"p$i")
+        }
+      // the join written right-first serves from the same registration
+      val flipped = rf.join(lf, rf("o_cust") === lf("c_id"))
+        .groupBy("seg").agg(pcts().head, pcts().tail: _*)
+      assert(PlanProbe.scansOnly(flipped, "/view"),
+        "operands written right-first must serve from the view")
+      assert(jlongRows(flipped, phis) == jviewRows(v, phis))
+
+      // grouping on the right key serves from a registration grouped on
+      // its paired left key (value-identical under the inner equality)
+      MultiQuantileJoinView.refresh(spark, Seq(l, r), ckv, edges,
+        Seq("c_id"), "total")
+      MaterializedMultiJoins.enableQuantile(Seq(l, r), ckv, edges,
+        Seq("c_id"), "total")
+      val byRightKey = lf.join(rf, lf("c_id") === rf("o_cust"))
+        .groupBy("o_cust").agg(pcts().head, pcts().tail: _*)
+      assert(PlanProbe.scansOnly(byRightKey, "/ckview"),
+        "a right-key grouping must serve from the left-key registration")
+      val ckRows = MultiQuantileJoinView.quantiles(spark, ckv, phis).collect()
+        .map(x => (x.getAs[Long]("c_id"), x.getAs[Double]("phi"),
+          x.getAs[Double]("est"))).toSet
+      assert(byRightKey.collect().flatMap { x =>
+        phis.zipWithIndex.map { case (p, i) =>
+          (x.getAs[Long]("o_cust"), p, x.getAs[Double](s"p$i"))
+        }
+      }.toSet == ckRows && ckRows.nonEmpty)
+      MaterializedMultiJoins.disableView(ckv)
+
+      // a non-registered measure declines (the o_id column exists but
+      // is not the view's value column)
       val wrongMeasure = lf.join(rf, lf("c_id") === rf("o_cust"))
         .groupBy("seg")
         .agg(percentile_approx(col("o_id").cast("double"), lit(0.5),
@@ -248,7 +282,8 @@ class QuantileServeSpec extends SparkSpec {
         "compensated join serve must be bit-equal to refresh-then-serve")
       assert(PlanProbe.scansOnly(joinQ(l, r, phis), "/view"))
     } finally {
-      MaterializedQuantiles.disableView(v)
+      MaterializedMultiJoins.disableView(v)
+      MaterializedMultiJoins.disableView(ckv)
       SnapshotStore.deleteTree(root)
     }
   }
