@@ -40,7 +40,8 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
 
   override def apply(ext: SparkSessionExtensions): Unit = {
     // SQL DDL for materialized views — CREATE/REFRESH/DROP MATERIALIZED
-    // VIEW dispatching to the same registries the Scala API uses; every
+    // VIEW registering through the same facades the Scala API uses, into
+    // the one MaterializedViews registry the four rules below read; every
     // other statement delegates to Spark's parser untouched.
     ext.injectParser((session, delegate) =>
       new graft.plans.GraftSqlParser(session, delegate))

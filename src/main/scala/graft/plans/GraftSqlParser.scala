@@ -15,9 +15,10 @@ import graft.sources.MultiAggJoinView.Edge
   * missing piece for SQL-only sessions, which could SERVE from every
   * registered view (the rewrite rules run at analysis for any query
   * shape, `spark.sql` included) but had no way to REGISTER one without
-  * dropping to the Scala registries. Four statements, dispatched to the
-  * SAME registries and refresh functions the Scala API uses (one
-  * definition of each view's semantics):
+  * dropping to the Scala registry. Four statements, dispatched to the
+  * SAME registration facades, registry ([[MaterializedViews]]) and
+  * refresh functions the Scala API uses (one definition of each view's
+  * semantics):
   *
   * {{{
   * CREATE MATERIALIZED VIEW '<viewRoot>' AS <KIND>(NAME => 'value', …)
@@ -157,7 +158,7 @@ object GraftDdl {
   // One small entry file per CREATEd view — view root, kind, and the
   // CREATE's own args (URL-encoded, one per line) — under the catalog
   // directory. That is exactly enough to rebuild the Spec and re-register
-  // the rewrite registries in a fresh session WITHOUT re-running the
+  // the view in a fresh session WITHOUT re-running the
   // bootstrap: the view's store (content, cursors, spec sidecar) is
   // already on disk.
 
@@ -174,7 +175,7 @@ object GraftDdl {
   private def entryFile(dir: java.nio.file.Path,
                         view: String): java.nio.file.Path = {
     val h = java.security.MessageDigest.getInstance("SHA-1")
-      .digest(MaterializedRollups.canon(view).getBytes("UTF-8"))
+      .digest(MaterializedViews.canon(view).getBytes("UTF-8"))
       .map("%02x".format(_)).mkString
     dir.resolve(s"$h.mv")
   }
@@ -416,16 +417,9 @@ object GraftDdl {
     // same miss-triggered re-scan as refresh: a DROP racing another
     // session's same-tick CREATE must resolve the entry, not error
     lookup(spark, view)
-    val spec = Option(catalog.remove(view)).getOrElse(
-      sys.error(s"no materialized view registered at '$view'"))
-    spec match {
-      case _: RollupSpec   => MaterializedRollups.disableView(view)
-      case _: QuantileSpec => MaterializedQuantiles.disableView(view)
-      case _: JoinSpec     => MaterializedJoins.disableView(view)
-      case _: MultiSpec        => MaterializedMultiJoins.disableView(view)
-      case _: MultiNdvSpec     => MaterializedMultiJoins.disableView(view)
-      case _: MultiQuantileJoinSpec => MaterializedMultiJoins.disableView(view)
-    }
+    if (catalog.remove(view) == null)
+      sys.error(s"no materialized view registered at '$view'")
+    MaterializedViews.disableView(view)
     java.nio.file.Files.deleteIfExists(entryFile(catalogDir(spark), view))
   }
 

@@ -1,53 +1,21 @@
 package graft.plans
 
-import java.nio.file.Paths
-
-import scala.jdk.CollectionConverters._
-
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.expressions._
 import org.apache.spark.sql.catalyst.plans.{FullOuter, Inner, JoinType, LeftOuter, RightOuter}
-import org.apache.spark.sql.catalyst.plans.logical.{Filter, Join, LogicalPlan, Project, SubqueryAlias, View}
+import org.apache.spark.sql.catalyst.plans.logical.{Filter, Join, LogicalPlan, Project}
 import org.apache.spark.sql.catalyst.rules.Rule
-import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
 
-import graft.sources.{JoinView, SnapshotStore}
+import graft.sources.JoinView
+import MaterializedViews.{JoinKeys, Kind, Reg}
 
-/** Registry of (left store, right store, key pair) → maintained
-  * [[JoinView]] the [[JoinRewriteRule]] may answer from. Explicit opt-in
-  * like [[MaterializedRollups]] — the engine never guesses which parquet
-  * relations are maintained views. */
-object MaterializedJoins {
-
-  // key: (canonical left root, canonical right root, left key, right key,
-  // join type "inner" | "left_outer" | "full_outer") — the type is PART
-  // of the key: an inner and an outer view over the same pair coexist
-  // (one put per type), instead of the second registration silently
-  // evicting the first
-  /** A registration's payload: the view plus everything the STALE
-    * serving path needs to rebuild the compensation (original-case
-    * roots and key lists — the registry key only carries the
-    * lowercased sorted signature). */
-  private[plans] final case class JReg(viewRoot: String,
-                                       leftRoot: String, rightRoot: String,
-                                       leftKeys: Seq[String],
-                                       rightKeys: Seq[String],
-                                       serveStale: Boolean)
-
-  private val regs =
-    new java.util.concurrent.ConcurrentHashMap[(String, String, String, String, String), JReg]()
-
-  // path canonicalization, mtime probing, and version-pinning shared
-  // with MaterializedRollups — ONE definition of each invariant
-  private def canon(p: String): String = MaterializedRollups.canon(p)
-
-  /** Canonical form of a key-pair list: pairs sorted by left key name —
-    * a conjunction's equalities carry no order, so both the registration
-    * and the matched condition normalize the same way. */
-  private[plans] def keySig(lks: Seq[String], rks: Seq[String]): (String, String) = {
-    val pairs = lks.map(_.toLowerCase).zip(rks.map(_.toLowerCase)).sortBy(_._1)
-    (pairs.map(_._1).mkString(","), pairs.map(_._2).mkString(","))
-  }
+/** Facade over [[MaterializedViews]] for (left store, right store, key
+  * pairs, join type) → maintained [[JoinView]] registrations (kind
+  * `Join`) the [[JoinRewriteRule]] may answer from. The state lives in
+  * the one registry; `disable` (either side's source), `disableView` and
+  * `clear` touch only this kind. The join type is part of the slot: an
+  * inner and an outer view over the same pair coexist. */
+object MaterializedJoins extends MaterializedViews.Facade(_.kind == Kind.Join) {
 
   /** Declare `viewRoot` as [[JoinView]]-maintained over the two stores on
     * (leftKey = rightKey). From now on a user-shaped equi-join of the two
@@ -85,88 +53,11 @@ object MaterializedJoins {
         rightKeys, leftKeys, "left_outer", serveStale)
     require(how == "inner" || how == "left_outer" || how == "full_outer",
       s"registrable join types are inner, left_outer, full_outer, got '$how'")
-    val (lk, rk) = keySig(leftKeys, rightKeys)
-    regs.put((canon(leftRoot), canon(rightRoot), lk, rk, how),
-      JReg(viewRoot, leftRoot, rightRoot, leftKeys, rightKeys, serveStale))
+    MaterializedViews.register(Reg(Kind.Join, viewRoot, Seq(leftRoot, rightRoot),
+      serveStale, JoinKeys(leftKeys, rightKeys, how)))
   }
 
-  /** Unregister every pair mentioning `root` on either side (and evict
-    * probe cache entries — registry queries use never-reused temp roots). */
-  def disable(root: String): Unit = {
-    val c = canon(root)
-    regs.keySet().asScala.filter(k => k._1 == c || k._2 == c)
-      .toSeq.foreach(regs.remove)
-    probeCache.keySet().asScala.filter(_.contains(c + "|")).toSeq
-      .foreach(probeCache.remove)
-  }
-
-  /** Unregister exactly the registrations SERVING from `viewRoot` —
-    * sibling views sharing a source keep serving (the DDL DROP path). */
-  def disableView(viewRoot: String): Unit = {
-    val c = canon(viewRoot)
-    regs.entrySet().asScala.filter(e => canon(e.getValue.viewRoot) == c)
-      .map(_.getKey).toSeq.foreach(regs.remove)
-    probeCache.keySet().asScala.filter(_.endsWith("|" + viewRoot)).toSeq
-      .foreach(probeCache.remove)
-  }
-
-  def clear(): Unit = { regs.clear(); probeCache.clear() }
-
-  private[plans] def isEmpty: Boolean = regs.isEmpty
-
-  private[plans] def all: Map[(String, String, String, String, String), JReg] =
-    regs.asScala.toMap
-
-  // Freshness-probe cache, the MaterializedRollups posture for THREE
-  // stores: all state publishes write a `_manifests` file, so the three
-  // directories' nanosecond mtimes plus a hasManifest(v)/(v+1) pair per
-  // store are a sound invalidation key; the hit path is stats and
-  // existence checks, never a listing or manifest read.
-  private final case class JProbe(lM: Long, rM: Long, vM: Long,
-                                  lV: Int, rV: Int, vV: Int,
-                                  lDirs: Set[String], rDirs: Set[String],
-                                  fresh: Boolean)
-
-  private val probeCache =
-    new java.util.concurrent.ConcurrentHashMap[String, JProbe]()
-
-  private def mtime(root: String): Long =
-    MaterializedRollups.manifestDirMtime(root)
-
-  private def unmoved(root: String, v: Int): Boolean =
-    MaterializedRollups.storeUnmoved(root, v)
-
-  /** Both sources' current-snapshot dirs + view freshness, cached until
-    * any of the three stores' manifest directories change. */
-  private[plans] def probe(leftRoot: String, rightRoot: String,
-                           viewRoot: String): Option[(Set[String], Set[String], Boolean)] = {
-    val key = s"$leftRoot|$rightRoot|$viewRoot"
-    val (lM, rM, vM) = (mtime(leftRoot), mtime(rightRoot), mtime(viewRoot))
-    if (lM < 0 || rM < 0) return None
-    val cached = probeCache.get(key)
-    if (cached != null && cached.lM == lM && cached.rM == rM && cached.vM == vM &&
-        unmoved(leftRoot, cached.lV) && unmoved(rightRoot, cached.rV) &&
-        unmoved(viewRoot, cached.vV))
-      return Some((cached.lDirs, cached.rDirs, cached.fresh))
-    val lV = SnapshotStore.currentVersion(leftRoot)
-    val rV = SnapshotStore.currentVersion(rightRoot)
-    if (lV == 0 || rV == 0) return None
-    val vV = SnapshotStore.currentVersion(viewRoot)
-    val fresh = SnapshotStore.lastEpoch(viewRoot)
-      .contains(JoinView.packedCursor(lV, rV))
-    val next = JProbe(lM, rM, vM, lV, rV, vV,
-      SnapshotStore.manifestDirs(leftRoot, lV).map(canon).toSet,
-      SnapshotStore.manifestDirs(rightRoot, rV).map(canon).toSet, fresh)
-    probeCache.put(key, next)
-    Some((next.lDirs, next.rDirs, next.fresh))
-  }
-
-  private[plans] def canonPaths(rel: LogicalRelation): Option[Set[String]] =
-    rel.relation match {
-      case fs: HadoopFsRelation =>
-        Some(fs.location.rootPaths.map(p => canon(p.toString)).toSet)
-      case _ => None
-    }
+  private[plans] def all: Map[String, Reg] = owned
 }
 
 /** Materialized JOIN-view rewrite — transparent denormalization serving:
@@ -209,7 +100,7 @@ object MaterializedJoins {
 class JoinRewriteRule(spark: SparkSession) extends Rule[LogicalPlan] {
 
   override def apply(plan: LogicalPlan): LogicalPlan = {
-    if (MaterializedJoins.isEmpty) return plan
+    if (!MaterializedViews.serves(Kind.Join)) return plan
     plan.transformUp {
       case j @ Join(lchild, rchild, Inner, Some(cond), _) =>
         rewrite(j, lchild, rchild, cond, Inner).getOrElse(j)
@@ -227,33 +118,12 @@ class JoinRewriteRule(spark: SparkSession) extends Rule[LogicalPlan] {
     }
   }
 
-  /** Scan relation + any deterministic Filters between it and the join,
-    * through column-pruning Projects (plain attributes only). */
-  private def dissect(plan: LogicalPlan): Option[(LogicalRelation, Seq[Expression])] =
-    plan match {
-      case lr: LogicalRelation => Some((lr, Nil))
-      case SubqueryAlias(_, child) => dissect(child) // temp-view name
-      case v: View => dissect(v.child) // temp-view body wrapper
-      case Project(projList, child)
-          if projList.forall(_.isInstanceOf[AttributeReference]) =>
-        dissect(child)
-      case Filter(cond, child) if cond.deterministic =>
-        dissect(child).map { case (lr, fs) => (lr, cond +: fs) }
-      case _ => None
-    }
-
-  /** Flatten a conjunction. */
-  private def conjuncts(e: Expression): Seq[Expression] = e match {
-    case And(a, b) => conjuncts(a) ++ conjuncts(b)
-    case other     => Seq(other)
-  }
-
   private def rewrite(j: Join, lchild: LogicalPlan, rchild: LogicalPlan,
                       cond: Expression,
                       joinType: JoinType): Option[LogicalPlan] = {
     // the condition must be a pure conjunction of attr = attr equalities,
     // each orientable to (left side, right side)
-    val pairs = conjuncts(cond).map {
+    val pairs = MultiTreeMatch.conjuncts(cond).map {
       case EqualTo(a: AttributeReference, b: AttributeReference) =>
         if (lchild.outputSet.contains(a) && rchild.outputSet.contains(b)) (a, b)
         else if (lchild.outputSet.contains(b) && rchild.outputSet.contains(a)) (b, a)
@@ -261,8 +131,10 @@ class JoinRewriteRule(spark: SparkSession) extends Rule[LogicalPlan] {
       case _ => return None
     }
     val (las, ras) = pairs.unzip
-    val (lrel, lfilters) = dissect(lchild).getOrElse(return None)
-    val (rrel, rfilters) = dissect(rchild).getOrElse(return None)
+    // each side: one scan through column-pruning Projects and
+    // deterministic Filters
+    val (lrel, lfilters) = MultiTreeMatch.scan(lchild).getOrElse(return None)
+    val (rrel, rfilters) = MultiTreeMatch.scan(rchild).getOrElse(return None)
     // a left-outer join does NOT commute with right-side filters: a left
     // row matched only to filtered-out right rows null-extends in the
     // user's query, but the view materialized it matched. A FULL outer
@@ -271,10 +143,10 @@ class JoinRewriteRule(spark: SparkSession) extends Rule[LogicalPlan] {
     if (joinType == LeftOuter && rfilters.nonEmpty) return None
     if (joinType == FullOuter && (lfilters.nonEmpty || rfilters.nonEmpty))
       return None
-    val lpaths = MaterializedJoins.canonPaths(lrel).getOrElse(return None)
-    val rpaths = MaterializedJoins.canonPaths(rrel).getOrElse(return None)
-    val sig = MaterializedJoins.keySig(las.map(_.name), ras.map(_.name))
-    val flipped = MaterializedJoins.keySig(ras.map(_.name), las.map(_.name))
+    val lpaths = MaterializedViews.canonPaths(lrel).getOrElse(return None)
+    val rpaths = MaterializedViews.canonPaths(rrel).getOrElse(return None)
+    val sig = MaterializedViews.keySig(las.map(_.name), ras.map(_.name))
+    val flipped = MaterializedViews.keySig(ras.map(_.name), las.map(_.name))
     val wantHow = joinType match {
       case LeftOuter => "left_outer"
       case FullOuter => "full_outer"
@@ -289,24 +161,24 @@ class JoinRewriteRule(spark: SparkSession) extends Rule[LogicalPlan] {
     // from the SAME atomic probe result — a concurrent refresh between
     // two probe calls could pair version-N dirs with version-N+1
     // freshness and serve content newer than the query's pinned snapshot
-    val candidates = MaterializedJoins.all.iterator.flatMap {
-      case ((lr, rr, lk, rk, how), r) if how == wantHow &&
-          ((lk, rk) == sig || (symmetric && (lk, rk) == flipped)) =>
-        MaterializedJoins.probe(lr, rr, r.viewRoot).flatMap {
-          case (ld, rd, fresh) =>
-            if ((lk, rk) == sig && ld == lpaths && rd == rpaths)
-              Some((r, fresh))
-            else if (symmetric && (lk, rk) == flipped &&
-                ld == rpaths && rd == lpaths)
-              Some((r, fresh))
-            else None
+    val candidates = MaterializedViews.all.iterator.flatMap {
+      case reg @ Reg(Kind.Join, _, _, _, keys @ JoinKeys(lks, rks, `wantHow`)) =>
+        val regSig = MaterializedViews.keySig(lks, rks)
+        val direct = regSig == sig
+        val swapped = symmetric && regSig == flipped
+        if (!direct && !swapped) None
+        else MaterializedViews.probe(reg).collect {
+          case (Seq(ld, rd), fresh)
+              if (direct && ld == lpaths && rd == rpaths) ||
+                (swapped && ld == rpaths && rd == lpaths) =>
+            (reg, keys, fresh)
         }
       case _ => None
     }.toSeq
     // prefer a FRESH hit over a stale one (two registrations can match
     // the same query in opposite orientations — a stale non-opted first
     // hit must not shadow a fresh second)
-    val (reg, fresh) = candidates.find(_._2)
+    val (reg, keys, fresh) = candidates.find(_._3)
       .orElse(candidates.headOption).getOrElse(return None)
 
     // FRESH: serve the stored view. STALE + opted-in: serve the
@@ -318,8 +190,8 @@ class JoinRewriteRule(spark: SparkSession) extends Rule[LogicalPlan] {
     val baseDf =
       if (fresh) JoinView.read(spark, reg.viewRoot)
       else if (reg.serveStale)
-        JoinView.compensated(spark, reg.leftRoot, reg.rightRoot,
-          reg.viewRoot, reg.leftKeys, reg.rightKeys).getOrElse(return None)
+        JoinView.compensated(spark, reg.roots(0), reg.roots(1),
+          reg.viewRoot, keys.left, keys.right).getOrElse(return None)
       else return None
     val viewPlan = baseDf.queryExecution.analyzed
     val byName = viewPlan.output.map(a => a.name.toLowerCase -> a).toMap

@@ -1,15 +1,18 @@
 package graft.plans
 
 import graft.sources.MultiAggJoinView.Edge
+import MaterializedViews.Kind
 
-/** The two-table agg-join registrations — one-edge trees in
-  * [[MaterializedMultiJoins]], served by the [[MultiAggJoinRewriteRule]].
-  * Each call forwards `(left, right, leftKeys, rightKeys)` as the roots
+/** Facade over [[MaterializedViews]] for the two-table agg-join
+  * registrations — one-edge trees served by the
+  * [[MultiAggJoinRewriteRule]]. Each call forwards `(left, right,
+  * leftKeys, rightKeys)` to [[MaterializedMultiJoins]] as the roots
   * `Seq(left, right)` and the single edge `Edge(0, leftKeys, rightKeys)`:
-  * `enable*` registers the "agg" kind ([[graft.sources.AggJoinView]]),
-  * `enableNdv*` the "ndv" kind ([[graft.sources.NdvJoinView]]). The
+  * `enable*` registers the `MultiAgg` kind ([[graft.sources.AggJoinView]]),
+  * `enableNdv*` the `MultiNdv` kind ([[graft.sources.NdvJoinView]]). The
   * listing and removal calls see only those two-root registrations. */
-object MaterializedAggJoins {
+object MaterializedAggJoins extends MaterializedViews.Facade(r =>
+    r.roots.size == 2 && (r.kind == Kind.MultiAgg || r.kind == Kind.MultiNdv)) {
 
   def enableKeys(leftRoot: String, rightRoot: String, viewRoot: String,
                  leftKeys: Seq[String], rightKeys: Seq[String],
@@ -39,24 +42,5 @@ object MaterializedAggJoins {
     enableNdvKeys(leftRoot, rightRoot, viewRoot, Seq(leftKey), Seq(rightKey),
       groupCols, distinctCol, serveStale)
 
-  /** Unregister every two-table registration with `root` as a source. */
-  def disable(root: String): Unit = {
-    val c = MaterializedRollups.canon(root)
-    all.values.filter(_.roots.exists(MaterializedRollups.canon(_) == c))
-      .foreach(r => MaterializedMultiJoins.disableView(r.viewRoot))
-  }
-
-  /** Unregister the two-table registration serving from `viewRoot`. */
-  def disableView(viewRoot: String): Unit =
-    all.get(MaterializedRollups.canon(viewRoot))
-      .foreach(r => MaterializedMultiJoins.disableView(r.viewRoot))
-
-  def clear(): Unit =
-    all.values.foreach(r => MaterializedMultiJoins.disableView(r.viewRoot))
-
-  /** The two-root "agg"/"ndv" registrations, by canonical view root. */
-  private[plans] def all: Map[String, MaterializedMultiJoins.MReg] =
-    MaterializedMultiJoins.all
-      .filter(r => r.roots.size == 2 && r.kind != "quantile")
-      .map(r => MaterializedRollups.canon(r.viewRoot) -> r).toMap
+  private[plans] def all: Map[String, MaterializedViews.Reg] = owned
 }

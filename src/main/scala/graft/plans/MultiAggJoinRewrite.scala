@@ -1,7 +1,5 @@
 package graft.plans
 
-import scala.jdk.CollectionConverters._
-
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.expressions._
 import org.apache.spark.sql.catalyst.expressions.aggregate.{AggregateExpression, Average, Count, HllSketchAgg, Max, Min, Sum}
@@ -11,38 +9,21 @@ import org.apache.spark.sql.catalyst.rules.Rule
 import org.apache.spark.sql.execution.datasources.LogicalRelation
 import org.apache.spark.sql.types.DecimalType
 
-import graft.sources.{MultiAggJoinView, MultiNdvJoinView, SnapshotStore}
+import graft.sources.{MultiAggJoinView, MultiNdvJoinView}
 import graft.sources.MultiAggJoinView.Edge
+import MaterializedViews.{Kind, Reg, Tree}
 
-/** Registry of N-table (N ≥ 2) join-tree specs → maintained
-  * [[MultiAggJoinView]] the [[MultiAggJoinRewriteRule]] may answer
-  * from. Explicit opt-in like every sibling registry; two-table
-  * registrations are its one-edge trees ([[MaterializedAggJoins]]
-  * forwards the agg/ndv ones). */
-object MaterializedMultiJoins {
-
-  /** A registration: ordered roots, the edge tree, spec columns, and the
-    * stale opt-in — everything refresh-shaped so the rewrite can hand
-    * the stale path to [[MultiAggJoinView.compensatedRead]] verbatim.
-    * `kind`: "agg" (count/sum/avg[/extents] partials), "ndv" (HLL
-    * sketch of `measureCols.head` — the [[MultiNdvJoinView]] store,
-    * serving the `hll_sketch_estimate(hll_sketch_agg(x, lgK))` shape),
-    * or "quantile" (signed bin counts of `measureCols.head` — the
-    * [[graft.sources.MultiQuantileJoinView]] store, served by the
-    * [[QuantileRewriteRule]]'s multiway arm; `bins` is its freeze
-    * width, meaningful only there). */
-  private[plans] final case class MReg(roots: Seq[String], viewRoot: String,
-                                       edges: Seq[Edge],
-                                       groupCols: Seq[String],
-                                       measureCols: Seq[String],
-                                       serveStale: Boolean,
-                                       kind: String = "agg",
-                                       bins: Int = 0)
-
-  private val regs =
-    new java.util.concurrent.ConcurrentHashMap[String, MReg]()
-
-  private def canon(p: String): String = MaterializedRollups.canon(p)
+/** Facade over [[MaterializedViews]] for N-table (N ≥ 2) join-tree
+  * registrations the [[MultiAggJoinRewriteRule]] and the
+  * [[QuantileRewriteRule]]'s multiway arm may answer from: kinds
+  * `MultiAgg` (count/sum/avg[/extents] partials, [[MultiAggJoinView]]),
+  * `MultiNdv` (HLL sketch of the one distinct column,
+  * [[MultiNdvJoinView]]) and `MultiQuantile` (signed bin counts of the
+  * one value column, [[graft.sources.MultiQuantileJoinView]]). Two-table
+  * registrations are one-edge trees ([[MaterializedAggJoins]] forwards
+  * the agg/ndv ones). The state lives in the one registry; `disable`,
+  * `disableView` and `clear` touch only these three kinds. */
+object MaterializedMultiJoins extends MaterializedViews.Facade(_.shape.isInstanceOf[Tree]) {
 
   /** Declare `viewRoot` as [[MultiAggJoinView]]-maintained over the
     * join tree. A user-shaped chain of INNER equi-joins over the
@@ -53,8 +34,8 @@ object MaterializedMultiJoins {
   def enable(roots: Seq[String], viewRoot: String, edges: Seq[Edge],
              groupCols: Seq[String], measureCols: Seq[String],
              serveStale: Boolean = false): Unit =
-    regs.put(canon(viewRoot),
-      MReg(roots, viewRoot, edges, groupCols, measureCols, serveStale))
+    MaterializedViews.register(Reg(Kind.MultiAgg, viewRoot, roots, serveStale,
+      Tree(edges, groupCols, measureCols)))
 
   /** Declare `viewRoot` as [[MultiNdvJoinView]]-maintained: the
     * user-shaped distinct-count aggregate over the registered tree —
@@ -66,9 +47,8 @@ object MaterializedMultiJoins {
   def enableNdv(roots: Seq[String], viewRoot: String, edges: Seq[Edge],
                 groupCols: Seq[String], distinctCol: String,
                 serveStale: Boolean = false): Unit =
-    regs.put(canon(viewRoot),
-      MReg(roots, viewRoot, edges, groupCols, Seq(distinctCol), serveStale,
-        kind = "ndv"))
+    MaterializedViews.register(Reg(Kind.MultiNdv, viewRoot, roots, serveStale,
+      Tree(edges, groupCols, Seq(distinctCol))))
 
   /** Declare `viewRoot` as [[graft.sources.MultiQuantileJoinView]]-
     * maintained: `percentile_approx`-shaped aggregates of `valueCol`
@@ -82,76 +62,17 @@ object MaterializedMultiJoins {
                      groupCols: Seq[String], valueCol: String,
                      bins: Int = graft.sources.MultiQuantileJoinView.DefaultBins,
                      serveStale: Boolean = false): Unit =
-    regs.put(canon(viewRoot),
-      MReg(roots, viewRoot, edges, groupCols, Seq(valueCol), serveStale,
-        kind = "quantile", bins = bins))
+    MaterializedViews.register(Reg(Kind.MultiQuantile, viewRoot, roots, serveStale,
+      Tree(edges, groupCols, Seq(valueCol), bins)))
 
   /** Unregister every registration mentioning `root` as a source or as
     * the view. */
-  def disable(root: String): Unit = {
-    val c = canon(root)
-    regs.entrySet().asScala
-      .filter(e => e.getKey == c || e.getValue.roots.exists(canon(_) == c))
-      .map(_.getKey).toSeq.foreach { k =>
-        regs.remove(k); probeCache.remove(k)
-      }
+  override def disable(root: String): Unit = {
+    super.disable(root)
+    disableView(root)
   }
 
-  /** Unregister exactly the registration serving from `viewRoot` —
-    * registrations that read it as a source keep serving. */
-  def disableView(viewRoot: String): Unit = {
-    val c = canon(viewRoot)
-    regs.remove(c); probeCache.remove(c)
-  }
-
-  def clear(): Unit = { regs.clear(); probeCache.clear() }
-
-  private[plans] def isEmpty: Boolean = regs.isEmpty
-
-  private[plans] def all: Iterable[MReg] = regs.asScala.values
-
-  // ---- freshness probe (the sibling registries' mtime-keyed cache) ----
-
-  private final case class MProbe(srcM: Seq[Long], viewM: Long,
-                                  srcV: Seq[Int], viewV: Int,
-                                  dirs: Seq[Set[String]], fresh: Boolean)
-
-  private val probeCache =
-    new java.util.concurrent.ConcurrentHashMap[String, MProbe]()
-
-  /** Per-table current-snapshot dirs + view freshness, cached until any
-    * store's manifest directory moves (publishes create exactly version
-    * v+1 — the [[MaterializedRollups.storeUnmoved]] invariant). None
-    * when any source has no published version. */
-  private[plans] def probe(reg: MReg): Option[(Seq[Set[String]], Boolean)] = {
-    val key = canon(reg.viewRoot)
-    val srcM = reg.roots.map(MaterializedRollups.manifestDirMtime)
-    val viewM = MaterializedRollups.manifestDirMtime(reg.viewRoot)
-    if (srcM.exists(_ < 0)) return None
-    val cached = probeCache.get(key)
-    if (cached != null && cached.srcM == srcM && cached.viewM == viewM &&
-        reg.roots.indices.forall(i =>
-          MaterializedRollups.storeUnmoved(reg.roots(i), cached.srcV(i))) &&
-        MaterializedRollups.storeUnmoved(reg.viewRoot, cached.viewV))
-      return Some((cached.dirs, cached.fresh))
-    val srcV = reg.roots.map(SnapshotStore.currentVersion)
-    if (srcV.exists(_ == 0)) return None
-    val viewV = SnapshotStore.currentVersion(reg.viewRoot)
-    // decode the stored stamp (packed or wide-sidecar) and compare the
-    // VECTORS — a view past its packed base keeps serving on the wide
-    // cursor; a surgically broken sidecar answers STALE, never throws
-    // (a Catalyst rule must not fail unrelated user queries)
-    val fresh = SnapshotStore.lastEpoch(reg.viewRoot).exists(e =>
-      scala.util.Try(
-        MultiAggJoinView.vecOf(reg.viewRoot, e, srcV.size) == srcV)
-        .getOrElse(false))
-    val next = MProbe(srcM, viewM, srcV, viewV,
-      reg.roots.zip(srcV).map { case (r, v) =>
-        SnapshotStore.manifestDirs(r, v).map(canon).toSet
-      }, fresh)
-    probeCache.put(key, next)
-    Some((next.dirs, next.fresh))
-  }
+  private[plans] def all: Iterable[Reg] = owned.values
 }
 
 /** The N-way join-TREE plan matcher shared by [[MultiAggJoinRewriteRule]]
@@ -171,11 +92,11 @@ private[plans] object MultiTreeMatch {
                        leafOf: Map[ExprId, Int])
 
   /** One registration whose tree equals the user's. */
-  final case class Hit(reg: MaterializedMultiJoins.MReg,
+  final case class Hit(reg: Reg, tree: Tree,
                        leafToTable: Map[Int, Int], fresh: Boolean) {
 
     val childToParent: Map[(Int, String), (Int, String)] =
-      reg.edges.zipWithIndex.flatMap { case (e, i) =>
+      tree.edges.zipWithIndex.flatMap { case (e, i) =>
         e.parentKeys.zip(e.childKeys).map { case (pk, ck) =>
           ((i + 1, ck.toLowerCase), (e.parent, pk.toLowerCase))
         }
@@ -189,7 +110,7 @@ private[plans] object MultiTreeMatch {
       }
 
     private val childKeyOfTable: Map[Int, Set[String]] =
-      reg.edges.zipWithIndex.map { case (e, i) =>
+      tree.edges.zipWithIndex.map { case (e, i) =>
         (i + 1) -> e.childKeys.map(_.toLowerCase).toSet
       }.toMap.withDefaultValue(Set.empty)
 
@@ -216,7 +137,7 @@ private[plans] object MultiTreeMatch {
       }
       if (entries.exists(_.isEmpty)) return None
       val m = entries.flatten.toMap
-      if (m.values.toSet == reg.groupCols.map(_.toLowerCase).toSet) Some(m)
+      if (m.values.toSet == tree.groupCols.map(_.toLowerCase).toSet) Some(m)
       else None
     }
 
@@ -257,14 +178,20 @@ private[plans] object MultiTreeMatch {
       case _ => None
     }
 
+  /** A single scan with the filter conjuncts above it — the one-leaf
+    * case of [[flatten]], which the single-table rules and each side of
+    * the join rule accept. */
+  def scan(plan: LogicalPlan): Option[(LogicalRelation, Seq[Expression])] =
+    flatten(plan).collect { case (Seq(leaf), _, filters) => (leaf, filters) }
+
   /** Flatten + match: every registration of `kind` whose tree equals the
     * user plan's. None when the plan isn't an N ≥ 2 inner-join tree of
     * plain scans or an equality isn't attr = attr across two leaves. */
-  def candidates(child: LogicalPlan, kind: String): Option[(Ctx, Seq[Hit])] = {
+  def candidates(child: LogicalPlan, kind: Kind): Option[(Ctx, Seq[Hit])] = {
     val (leaves, eqs, filters) = flatten(child).getOrElse(return None)
     if (leaves.size < 2) return None
     val leafPaths = leaves.map(l =>
-      MaterializedJoins.canonPaths(l).getOrElse(return None))
+      MaterializedViews.canonPaths(l).getOrElse(return None))
     val leafOf: Map[ExprId, Int] = leaves.zipWithIndex.flatMap {
       case (l, i) => l.output.map(a => a.exprId -> i)
     }.toMap
@@ -276,10 +203,9 @@ private[plans] object MultiTreeMatch {
         ((la, a.name.toLowerCase), (lb, b.name.toLowerCase))
       case _ => return None
     }
-    val hits = MaterializedMultiJoins.all.iterator
-      .filter(_.kind == kind).flatMap { reg =>
-        if (reg.roots.size != leaves.size) None
-        else MaterializedMultiJoins.probe(reg).flatMap { case (dirs, fresh) =>
+    val hits = MaterializedViews.all.iterator.flatMap {
+      case reg @ Reg(`kind`, _, roots, _, tree: Tree) if roots.size == leaves.size =>
+        MaterializedViews.probe(reg).flatMap { case (dirs, fresh) =>
           // leaf i ↦ the unique table whose dirs equal leaf i's paths;
           // a leaf matching no table of THIS registration skips it
           val pairs = leafPaths.zipWithIndex.flatMap { case (p, li) =>
@@ -292,7 +218,7 @@ private[plans] object MultiTreeMatch {
           if (pairs.size != leaves.size ||
               mapping.values.toSet.size != leaves.size) None
           else {
-            val regPairs: Set[Set[(Int, String)]] = reg.edges.zipWithIndex
+            val regPairs: Set[Set[(Int, String)]] = tree.edges.zipWithIndex
               .flatMap { case (e, i) =>
                 e.parentKeys.zip(e.childKeys).map { case (pk, ck) =>
                   Set((e.parent, pk.toLowerCase), (i + 1, ck.toLowerCase))
@@ -302,11 +228,12 @@ private[plans] object MultiTreeMatch {
               case ((la, an), (lb, bn)) =>
                 Set((mapping(la), an), (mapping(lb), bn))
             }.toSet
-            if (userPairs == regPairs) Some(Hit(reg, mapping, fresh))
+            if (userPairs == regPairs) Some(Hit(reg, tree, mapping, fresh))
             else None
           }
         }
-      }.toSeq
+      case _ => None
+    }.toSeq
     Some((Ctx(leaves, filters, leafOf), hits))
   }
 }
@@ -341,7 +268,7 @@ private[plans] object MultiTreeMatch {
   *     with 18 ≤ p ≤ 30 (the repo-wide precision-floor rationale), the
   *     matching `avg` served as stored sum ÷ the stored non-null count
   *     with Average's own decimal arithmetic, `min/max(m)` from an
-  *     EXTENTS view's stored extents, or — against an "ndv"-kind
+  *     EXTENTS view's stored extents, or — against a `MultiNdv`
   *     registration ([[MultiNdvJoinView]]) — the datasketches
   *     distinct-count shape at the engine's lgK. Measure and distinct
   *     attributes resolve through the tree onto the registered column's
@@ -355,7 +282,7 @@ private[plans] object MultiTreeMatch {
 class MultiAggJoinRewriteRule(spark: SparkSession) extends Rule[LogicalPlan] {
 
   override def apply(plan: LogicalPlan): LogicalPlan = {
-    if (MaterializedMultiJoins.isEmpty) return plan
+    if (!MaterializedViews.serves(Kind.MultiAgg, Kind.MultiNdv)) return plan
     plan.transformUp {
       case agg @ Aggregate(ge, ae, child, _) =>
         rewrite(agg, ge, ae, child).getOrElse(agg)
@@ -370,8 +297,8 @@ class MultiAggJoinRewriteRule(spark: SparkSession) extends Rule[LogicalPlan] {
       case _                     => return None
     }
     // the aggregate list picks the view KIND it needs: any datasketches
-    // distinct-count shape wants an ndv view, everything else the agg
-    // kind — "quantile"-kind registrations never serve here (their store
+    // distinct-count shape wants a MultiNdv view, everything else a
+    // MultiAgg one — MultiQuantile registrations never serve here (their store
     // holds bin partials; the QuantileRewriteRule owns them). Freshness
     // breaks ties among same-kind candidates.
     val wantsNdv = ae.exists {
@@ -379,7 +306,7 @@ class MultiAggJoinRewriteRule(spark: SparkSession) extends Rule[LogicalPlan] {
       case _                              => false
     }
     val (ctx, kinded) = MultiTreeMatch.candidates(child,
-      if (wantsNdv) "ndv" else "agg").getOrElse(return None)
+      if (wantsNdv) Kind.MultiNdv else Kind.MultiAgg).getOrElse(return None)
     val filters = ctx.filters
     // GROUPS participate in candidate SELECTION, not just validation:
     // two registrations can share the same join tree with different
@@ -395,7 +322,8 @@ class MultiAggJoinRewriteRule(spark: SparkSession) extends Rule[LogicalPlan] {
     val groupingSet = AttributeSet(groupAttrs)
     if (!filters.forall(_.references.subsetOf(groupingSet))) return None
 
-    val measures = hit.reg.measureCols.map(_.toLowerCase).toSet
+    val (reg, tree) = (hit.reg, hit.tree)
+    val measures = tree.measureCols.map(_.toLowerCase).toSet
     // measure/distinct attributes resolve THROUGH the join tree, exactly
     // like group attributes — ownership mirrors the refresh contract
     // (child keys excluded); a column on a DIFFERENT table merely
@@ -405,18 +333,17 @@ class MultiAggJoinRewriteRule(spark: SparkSession) extends Rule[LogicalPlan] {
       hit.measureNorm(ctx, measures)(v)
 
     val viewDf =
-      if (hit.fresh) hit.reg.kind match {
-        case "ndv" => MultiNdvJoinView.read(spark, hit.reg.viewRoot)
-        case _     => MultiAggJoinView.read(spark, hit.reg.viewRoot)
+      if (hit.fresh) reg.kind match {
+        case Kind.MultiNdv => MultiNdvJoinView.read(spark, reg.viewRoot)
+        case _             => MultiAggJoinView.read(spark, reg.viewRoot)
       }
-      else if (hit.reg.serveStale) {
-        hit.reg.kind match {
-          case "ndv" => MultiNdvJoinView.compensatedRead(spark,
-            hit.reg.roots, hit.reg.viewRoot, hit.reg.edges,
-            hit.reg.groupCols, hit.reg.measureCols.head)
-          case _ => MultiAggJoinView.compensatedRead(spark, hit.reg.roots,
-            hit.reg.viewRoot, hit.reg.edges, hit.reg.groupCols,
-            hit.reg.measureCols)
+      else if (reg.serveStale) {
+        reg.kind match {
+          case Kind.MultiNdv => MultiNdvJoinView.compensatedRead(spark,
+            reg.roots, reg.viewRoot, tree.edges, tree.groupCols,
+            tree.measureCols.head)
+          case _ => MultiAggJoinView.compensatedRead(spark, reg.roots,
+            reg.viewRoot, tree.edges, tree.groupCols, tree.measureCols)
         }
       }.getOrElse(return None)
       else return None
@@ -496,7 +423,7 @@ class MultiAggJoinRewriteRule(spark: SparkSession) extends Rule[LogicalPlan] {
       // over any edge-key spelling of it is value-identical)
       case al @ Alias(HllSketchEstimate(AggregateExpression(
           HllSketchAgg(u: AttributeReference, lgk, _, _), _, false, None, _)), _)
-          if hit.reg.kind == "ndv" && lgk.foldable &&
+          if reg.kind == Kind.MultiNdv && lgk.foldable &&
             lgk.eval() == graft.sources.NdvView.LgK &&
             measureNorm(u).isDefined =>
         val c = viewCol(s"approx_${measureNorm(u).get}")

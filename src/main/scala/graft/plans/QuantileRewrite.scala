@@ -1,26 +1,26 @@
 package graft.plans
 
-import scala.jdk.CollectionConverters._
-
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.expressions._
 import org.apache.spark.sql.catalyst.expressions.aggregate.{AggregateExpression, ApproximatePercentile}
-import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, Filter, LogicalPlan, Project, SubqueryAlias, View}
+import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, Filter, LogicalPlan, Project}
 import org.apache.spark.sql.catalyst.rules.Rule
-import org.apache.spark.sql.execution.datasources.LogicalRelation
 import org.apache.spark.sql.functions.{col, max, when}
 import org.apache.spark.sql.types.{Decimal, DoubleType, LongType}
 
 import graft.sources.{MultiQuantileJoinView, QuantileView}
+import MaterializedViews.{Grain, Kind, Reg}
 
-/** Registry of maintained single-table quantile views the
+/** Facade over [[MaterializedViews]] for maintained single-table
+  * quantile views (kind `Quantile`, one per (source, grain)) the
   * [[QuantileRewriteRule]] may answer `percentile_approx`-shaped
-  * aggregates from. Quantile views over join trees (N ≥ 2, two tables
-  * being the one-edge tree) register in [[MaterializedMultiJoins]]
-  * (`enableQuantile`, kind "quantile") so the rule's multiway arm shares
-  * the tree matcher.
+  * aggregates from. The state lives in the one registry; `disable`,
+  * `disableView` and `clear` touch only this kind. Quantile views over
+  * join trees (N ≥ 2, two tables being the one-edge tree) register
+  * through [[MaterializedMultiJoins]] (`enableQuantile`, kind
+  * `MultiQuantile`) so the rule's multiway arm shares the tree matcher.
   *
-  * UNLIKE the sibling registries, enabling here changes the VALUE a
+  * UNLIKE the sibling facades, enabling here changes the VALUE a
   * query returns, not just its cost: the maintained views' estimate is
   * deterministic fixed-bin interpolation (error ≤ 2·w of the exact
   * percentile, w = the frozen bin width), while Spark's own
@@ -50,17 +50,7 @@ import graft.sources.{MultiQuantileJoinView, QuantileView}
   *     the one view family whose stale path covers deletes); an
   *     envelope-escaping gap declines.
   */
-object MaterializedQuantiles {
-
-  /** Single-table registration: the [[QuantileView]] maintained over a
-    * (metric, e, value) series store at `grainSec`. */
-  private[plans] final case class QReg(viewRoot: String, srcRoot: String,
-                                       grainSec: Long, serveStale: Boolean)
-
-  private val regs =
-    new java.util.concurrent.ConcurrentHashMap[(String, Long), QReg]()
-
-  private def canon(p: String): String = MaterializedRollups.canon(p)
+object MaterializedQuantiles extends MaterializedViews.Facade(_.kind == Kind.Quantile) {
 
   /** Opt `viewRoot` (a maintained [[QuantileView]] over `srcRoot`) into
     * serving `percentile_approx`-shaped aggregates — the EXPLICIT
@@ -68,37 +58,19 @@ object MaterializedQuantiles {
     * the view's, not GK's). */
   def enable(srcRoot: String, viewRoot: String, grainSec: Long = 86400L,
              serveStale: Boolean = false): Unit =
-    regs.put((canon(srcRoot), grainSec),
-      QReg(viewRoot, srcRoot, grainSec, serveStale))
+    MaterializedViews.register(
+      Reg(Kind.Quantile, viewRoot, Seq(srcRoot), serveStale, Grain(grainSec)))
 
-  /** Unregister every registration mentioning `root` as a source. */
-  def disable(root: String): Unit = {
-    val c = canon(root)
-    regs.keySet().asScala.filter(_._1 == c).toSeq.foreach(regs.remove)
-  }
+  private[plans] def all: Map[String, Reg] = owned
 
-  /** Unregister exactly the registrations SERVING from `viewRoot`
-    * (the DDL DROP path — siblings keep serving). */
-  def disableView(viewRoot: String): Unit = {
-    val c = canon(viewRoot)
-    regs.entrySet().asScala.filter(e => canon(e.getValue.viewRoot) == c)
-      .map(_.getKey).toSeq.foreach(regs.remove)
-  }
-
-  def clear(): Unit = regs.clear()
-
-  private[plans] def isEmpty: Boolean = regs.isEmpty
-
-  private[plans] def all: Map[(String, Long), QReg] = regs.asScala.toMap
-
-  /** The two-root "quantile" registrations of [[MaterializedMultiJoins]],
-    * by canonical view root. Kept only for the benchmark's registration
-    * listing; a benchmark change can read [[MaterializedMultiJoins.all]]
-    * instead and drop this. */
-  private[plans] def allJoin: Map[String, MaterializedMultiJoins.MReg] =
-    MaterializedMultiJoins.all
-      .filter(r => r.roots.size == 2 && r.kind == "quantile")
-      .map(r => canon(r.viewRoot) -> r).toMap
+  /** The two-root `MultiQuantile` registrations, by canonical view root.
+    * Kept only for the benchmark's registration listing; a benchmark
+    * change can read [[MaterializedMultiJoins.all]] instead and drop
+    * this. */
+  private[plans] def allJoin: Map[String, Reg] =
+    MaterializedMultiJoins.owned.filter { case (_, r) =>
+      r.roots.size == 2 && r.kind == Kind.MultiQuantile
+    }
 }
 
 /** Quantile-serving rewrite: a `percentile_approx`-shaped aggregate over
@@ -121,11 +93,7 @@ object MaterializedQuantiles {
 class QuantileRewriteRule(spark: SparkSession) extends Rule[LogicalPlan] {
 
   override def apply(plan: LogicalPlan): LogicalPlan = {
-    // join-tree quantile registrations live in MaterializedMultiJoins
-    // (kind = "quantile") so the tree matcher is shared; either registry
-    // holding a quantile registration means this rule may have work
-    if (MaterializedQuantiles.isEmpty &&
-        !MaterializedMultiJoins.all.exists(_.kind == "quantile")) return plan
+    if (!MaterializedViews.serves(Kind.Quantile, Kind.MultiQuantile)) return plan
     plan.transformUp {
       case agg @ Aggregate(ge, ae, child, _) =>
         rewriteSingle(ge, ae, child)
@@ -134,20 +102,7 @@ class QuantileRewriteRule(spark: SparkSession) extends Rule[LogicalPlan] {
     }
   }
 
-  // ---- dissection (the sibling rules' peel) and shared helpers ----------
-
-  private def dissect(plan: LogicalPlan): Option[(LogicalRelation, Seq[Expression])] =
-    plan match {
-      case lr: LogicalRelation => Some((lr, Nil))
-      case SubqueryAlias(_, child) => dissect(child)
-      case v: View => dissect(v.child)
-      case Project(projList, child)
-          if projList.forall(_.isInstanceOf[AttributeReference]) =>
-        dissect(child)
-      case Filter(cond, child) if cond.deterministic =>
-        dissect(child).map { case (lr, fs) => (lr, cond +: fs) }
-      case _ => None
-    }
+  // ---- shared helpers ----------------------------------------------------
 
   /** `percentile_approx(v, phi [, acc])` with a scalar foldable phi and
     * a DOUBLE result (the view's `est` type — an INT-typed percentile
@@ -185,9 +140,8 @@ class QuantileRewriteRule(spark: SparkSession) extends Rule[LogicalPlan] {
 
   private def rewriteSingle(ge: Seq[Expression], ae: Seq[NamedExpression],
                             child: LogicalPlan): Option[LogicalPlan] = {
-    if (MaterializedQuantiles.all.isEmpty) return None
-    val (rel, filters) = dissect(child).getOrElse(return None)
-    val paths = MaterializedJoins.canonPaths(rel).getOrElse(return None)
+    val (rel, filters) = MultiTreeMatch.scan(child).getOrElse(return None)
+    val paths = MaterializedViews.canonPaths(rel).getOrElse(return None)
     // grouping must be exactly (metric, e div G) for a registered G
     val (metricAttr, bucketExpr, grainSec) = ge match {
       case Seq(m: AttributeReference, d) if m.name.equalsIgnoreCase("metric") =>
@@ -206,10 +160,10 @@ class QuantileRewriteRule(spark: SparkSession) extends Rule[LogicalPlan] {
         }
       case _ => return None
     }
-    val (reg, fresh) = MaterializedQuantiles.all.iterator.flatMap {
-      case ((_, g), r) if g == grainSec =>
-        MaterializedRollups.probe(r.srcRoot, r.viewRoot).collect {
-          case (dirs, f) if dirs == paths => (r, f)
+    val (reg, fresh) = MaterializedViews.all.iterator.flatMap {
+      case reg @ Reg(Kind.Quantile, _, _, _, Grain(`grainSec`)) =>
+        MaterializedViews.probe(reg).collect {
+          case (Seq(dirs), f) if dirs == paths => (reg, f)
         }
       case _ => None
     }.nextOption().getOrElse(return None)
@@ -226,8 +180,8 @@ class QuantileRewriteRule(spark: SparkSession) extends Rule[LogicalPlan] {
     val longDf =
       if (fresh) QuantileView.quantiles(spark, reg.viewRoot, phis)
       else if (reg.serveStale)
-        QuantileView.compensatedQuantiles(spark, reg.srcRoot, reg.viewRoot,
-          phis, reg.grainSec).getOrElse(return None)
+        QuantileView.compensatedQuantiles(spark, reg.roots.head, reg.viewRoot,
+          phis, grainSec).getOrElse(return None)
       else return None
     val viewPlan =
       widen(longDf, Seq("metric", "bucket"), phis).queryExecution.analyzed
@@ -259,10 +213,9 @@ class QuantileRewriteRule(spark: SparkSession) extends Rule[LogicalPlan] {
   // ---- multiway arm --------------------------------------------------------
 
   /** `percentile_approx` over an N ≥ 2 INNER join tree (two tables are
-    * the one-edge tree), answered from a
-    * registered [[MultiQuantileJoinView]] (a "quantile"-kind
-    * [[MaterializedMultiJoins]] registration): the whole TREE leaves the
-    * plan for the view's O(live bins) read. Matching is the
+    * the one-edge tree), answered from a registered
+    * [[MultiQuantileJoinView]] (a `MultiQuantile` registration): the
+    * whole TREE leaves the plan for the view's O(live bins) read. Matching is the
     * [[MultiAggJoinRewriteRule]]'s via the shared [[MultiTreeMatch]] —
     * leaf↔table bijection on current-snapshot dirs, exact edge-set
     * equality, group attrs normalizing onto the registered groups,
@@ -273,19 +226,19 @@ class QuantileRewriteRule(spark: SparkSession) extends Rule[LogicalPlan] {
     * retract); anything else declines, never a silent partial serve. */
   private def rewriteMulti(ge: Seq[Expression], ae: Seq[NamedExpression],
                            child: LogicalPlan): Option[LogicalPlan] = {
-    if (!MaterializedMultiJoins.all.exists(_.kind == "quantile")) return None
     val groupAttrs = ge.map {
       case a: AttributeReference => a
       case _                     => return None
     }
-    val (ctx, hits) = MultiTreeMatch.candidates(child, "quantile")
+    val (ctx, hits) = MultiTreeMatch.candidates(child, Kind.MultiQuantile)
       .getOrElse(return None)
     val matched = hits.flatMap(h => h.groupNorm(ctx, groupAttrs).map(h -> _))
     val (hit, normed) = matched.find(_._1.fresh)
       .orElse(matched.headOption).getOrElse(return None)
     val groupingSet = AttributeSet(groupAttrs)
     if (!ctx.filters.forall(_.references.subsetOf(groupingSet))) return None
-    val valueSet = Set(hit.reg.measureCols.head
+    val (reg, tree) = (hit.reg, hit.tree)
+    val valueSet = Set(tree.measureCols.head
       .toLowerCase(java.util.Locale.ROOT))
     def valueOk(v: AttributeReference): Boolean =
       hit.measureNorm(ctx, valueSet)(v).isDefined
@@ -296,15 +249,15 @@ class QuantileRewriteRule(spark: SparkSession) extends Rule[LogicalPlan] {
     if (phis.isEmpty) return None
     val longDf =
       if (hit.fresh)
-        MultiQuantileJoinView.quantiles(spark, hit.reg.viewRoot, phis)
-      else if (hit.reg.serveStale)
-        MultiQuantileJoinView.compensatedQuantiles(spark, hit.reg.roots,
-          hit.reg.viewRoot, hit.reg.edges, hit.reg.groupCols,
-          hit.reg.measureCols.head, phis, hit.reg.bins)
+        MultiQuantileJoinView.quantiles(spark, reg.viewRoot, phis)
+      else if (reg.serveStale)
+        MultiQuantileJoinView.compensatedQuantiles(spark, reg.roots,
+          reg.viewRoot, tree.edges, tree.groupCols,
+          tree.measureCols.head, phis, tree.bins)
           .getOrElse(return None)
       else return None
     val viewPlan =
-      widen(longDf, hit.reg.groupCols, phis).queryExecution.analyzed
+      widen(longDf, tree.groupCols, phis).queryExecution.analyzed
     def viewCol(n: String): Option[Attribute] =
       viewPlan.output.find(_.name.equalsIgnoreCase(n))
     def groupViewCol(a: AttributeReference): Option[Attribute] =

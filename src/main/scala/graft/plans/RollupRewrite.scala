@@ -1,35 +1,24 @@
 package graft.plans
 
-import java.nio.file.Paths
-
-import scala.jdk.CollectionConverters._
-
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.expressions._
 import org.apache.spark.sql.catalyst.expressions.aggregate.{AggregateExpression, Average, Count, HllSketchAgg, Max, Min, Sum}
-import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, Filter, LogicalPlan, Project, SubqueryAlias, View}
+import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, Filter, LogicalPlan, Project}
 import org.apache.spark.sql.catalyst.rules.Rule
-import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
+import org.apache.spark.sql.execution.datasources.LogicalRelation
 import org.apache.spark.sql.types.{DecimalType, LongType}
 
 import graft.sources.{RollupView, SnapshotStore}
+import MaterializedViews.{Grain, Kind, Reg}
 
-/** Registry of source-store → rollup-view pairs the
-  * [[RollupRewriteRule]] may answer from. Explicit opt-in
-  * ([[enable]]) — a rewrite that silently serves stale or
-  * differently-scoped data would be a correctness bug, so the engine
-  * never guesses which parquet relations are maintained views. */
-object MaterializedRollups {
-
-  // key: (canonical source root, grain seconds, view kind) — one
-  // maintained view per (grain, kind) per source (day 86400 / hour 3600
-  // are the served grains; "classic" count/sum/min/max and "ndv" HLL
-  // sketch views are the served kinds)
-  private val regs =
-    new java.util.concurrent.ConcurrentHashMap[(String, Long, String), String]()
-
-  private[plans] def canon(p: String): String =
-    Paths.get(p.replaceFirst("^file:/+", "/")).normalize().toAbsolutePath.toString
+/** Facade over [[MaterializedViews]] for source-store → rollup-view
+  * registrations (kinds `Rollup` and `RollupNdv`) the
+  * [[RollupRewriteRule]] may answer from. The state lives in the one
+  * registry; `disable`, `disableView` and `clear` touch only these two
+  * kinds. One view per (source, grain, kind): day 86400 / hour 3600 are
+  * the served grains. */
+object MaterializedRollups extends MaterializedViews.Facade(r =>
+    r.kind == Kind.Rollup || r.kind == Kind.RollupNdv) {
 
   /** Declare that `viewRoot` is [[RollupView]]-maintained over the
     * snapshot store at `srcRoot`. From now on, canonical day-rollup
@@ -49,16 +38,17 @@ object MaterializedRollups {
     * (the default) answers `e div 86400` groupings, [[RollupView.Hour]]
     * answers `e div 3600`. Register each maintained grain separately;
     * hour partials are NOT re-derived into day answers (the rewrite
-    * serves only the exact stored shape). */
+    * serves only the exact stored shape).
+    *
+    * `serveStale = true` opts into DELTA-COMPENSATED serving: when the
+    * view's stamp lags an append-only source gap, the rewrite serves
+    * `partials ∪ Δ-partials` ([[RollupView.compensatedRead]], bit-equal
+    * to refresh-then-read) instead of declining. */
   def enable(srcRoot: String, viewRoot: String,
              grain: RollupView.Grain = RollupView.Day,
-             serveStale: Boolean = false): Unit = {
-    // a re-registration under a DIFFERENT view must not leave the old
-    // view's stale opt-in behind
-    Option(regs.put((canon(srcRoot), grain.seconds, "classic"), viewRoot))
-      .filter(_ != viewRoot).foreach(staleOk.remove)
-    if (serveStale) staleOk.add(viewRoot) else staleOk.remove(viewRoot)
-  }
+             serveStale: Boolean = false): Unit =
+    MaterializedViews.register(
+      Reg(Kind.Rollup, viewRoot, Seq(srcRoot), serveStale, Grain(grain.seconds)))
 
   /** Declare that `viewRoot` is [[graft.sources.NdvView]]-maintained over
     * the snapshot store at `srcRoot`: distinct-count aggregates of the
@@ -76,128 +66,12 @@ object MaterializedRollups {
     * a churned gap declines, a deleted user un-derives nothing). */
   def enableNdv(srcRoot: String, viewRoot: String,
                 grain: RollupView.Grain = RollupView.Day,
-                serveStale: Boolean = false): Unit = {
-    Option(regs.put((canon(srcRoot), grain.seconds, "ndv"), viewRoot))
-      .filter(_ != viewRoot).foreach(staleOk.remove)
-    if (serveStale) staleOk.add(viewRoot) else staleOk.remove(viewRoot)
-  }
+                serveStale: Boolean = false): Unit =
+    MaterializedViews.register(
+      Reg(Kind.RollupNdv, viewRoot, Seq(srcRoot), serveStale, Grain(grain.seconds)))
 
-  /** Unregister every grain's view for `srcRoot` (and evict its probe
-    * cache entries — registry queries register temp-rooted stores per
-    * run, and a session-lifetime map keyed by never-reused temp paths
-    * would otherwise grow without bound). */
-  def disable(srcRoot: String): Unit = {
-    val c = canon(srcRoot)
-    regs.keySet().asScala.filter(_._1 == c).toSeq
-      .foreach(k => Option(regs.remove(k)).foreach(staleOk.remove))
-    probeCache.keySet().asScala.filter(_.startsWith(c + "|")).toSeq
-      .foreach(probeCache.remove)
-  }
-
-  /** Unregister exactly the registrations SERVING from `viewRoot` —
-    * sibling views over the same source (the other grain, the ndv twin)
-    * keep serving. The DDL's DROP path: dropping one view must not
-    * silently unplug its siblings. */
-  def disableView(viewRoot: String): Unit = {
-    val c = canon(viewRoot)
-    regs.entrySet().asScala.filter(e => canon(e.getValue) == c)
-      .map(_.getKey).toSeq
-      .foreach(k => Option(regs.remove(k)).foreach(staleOk.remove))
-    probeCache.keySet().asScala.filter(_.endsWith("|" + viewRoot)).toSeq
-      .foreach(probeCache.remove)
-  }
-
-  def clear(): Unit = { regs.clear(); probeCache.clear(); staleOk.clear() }
-
-  /** Views opted into DELTA-COMPENSATED serving: when the view's stamp
-    * lags an append-only source gap, the rewrite serves
-    * `partials ∪ Δ-partials` ([[RollupView.compensatedRead]] for the
-    * classic kind, [[graft.sources.NdvView.compensatedRead]]'s sketch
-    * union for NDV — bit-equal to refresh-then-read in both) instead of
-    * declining. */
-  private[plans] val staleOk =
-    java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
-
-  private[plans] def isEmpty: Boolean = regs.isEmpty
-
-  private[plans] def all: Map[(String, Long, String), String] = regs.asScala.toMap
-
-  // ---- freshness-probe cache -----------------------------------------
-  //
-  // registrationFor runs during analysis of EVERY Aggregate in every
-  // query once any rollup is registered; uncached it would re-list the
-  // source's manifest directory, re-read its current manifest, and
-  // re-scan the view's O(versions) epoch chain each time. Both stores
-  // publish state only by writing a new manifest file into their
-  // `_manifests` directories, so (directory mtime, current version) is
-  // a sound invalidation key: a publish strictly increases the version
-  // even when two commits land inside one filesystem-clock tick (Linux
-  // stamps mtimes at coarse-clock granularity, so mtime alone can alias
-  // under back-to-back test commits), and a vacuum — which removes
-  // manifests without changing the version — moves the mtime. The
-  // version half is checked as hasManifest(cached+1) — a publish always
-  // creates exactly the next version file — so the hit path costs two
-  // stats + two existence checks, never a directory listing, far from
-  // the manifest read + O(versions) epoch scan it replaces.
-
-  private final case class Probe(srcM: Long, viewM: Long,
-                                 srcV: Int, viewV: Int,
-                                 dirs: Set[String], fresh: Boolean)
-
-  private val probeCache =
-    new java.util.concurrent.ConcurrentHashMap[String, Probe]()
-
-  // shared with MaterializedJoins — both registries' probe caches key on
-  // the same publish-site invariant
-  private[plans] def manifestDirMtime(root: String): Long = {
-    val p = Paths.get(root, "_manifests")
-    // nanosecond key: back-to-back commits land within the same
-    // millisecond under test loads, and a stale "fresh" verdict must not
-    // survive a publish
-    try java.nio.file.Files.getLastModifiedTime(p)
-      .to(java.util.concurrent.TimeUnit.NANOSECONDS)
-    catch { case _: java.io.IOException => -1L }
-  }
-
-  /** Is the cached `v` still this store's current version? (v present ∧
-    * v+1 absent — a publish always creates exactly the next version
-    * file; see the cache-soundness comment above.) Shared with
-    * MaterializedJoins. */
-  private[plans] def storeUnmoved(root: String, v: Int): Boolean =
-    (v == 0 || SnapshotStore.hasManifest(root, v)) &&
-      !SnapshotStore.hasManifest(root, v + 1)
-
-  /** Current-snapshot dirs + view freshness for a registration, cached
-    * until either store's manifest directory changes. None when the
-    * source has no published version yet. Keyed per (src, view) pair —
-    * a source serving two grains has two independent probes. */
-  private[plans] def probe(srcRoot: String, viewRoot: String): Option[(Set[String], Boolean)] = {
-    val cacheKey = s"$srcRoot|$viewRoot"
-    val srcM = manifestDirMtime(srcRoot)
-    val viewM = manifestDirMtime(viewRoot)
-    if (srcM < 0) return None
-    val cached = probeCache.get(cacheKey)
-    // hit path: two stats + four existence checks. A publish always
-    // creates exactly version current+1, so hasManifest(v+1) catches a
-    // commit that landed inside the cached mtime's clock tick without
-    // paying currentVersion's full directory listing per Aggregate.
-    // The cached version itself must ALSO still exist: a vacuum that
-    // aliased into the same tick removes manifests bottom-up, so any
-    // vacuum that could have erased evidence of newer commits (v+1
-    // absent despite commits) necessarily erased v too — checking both
-    // makes the pair airtight (v present ∧ v+1 absent ⇒ v is current).
-    if (cached != null && cached.srcM == srcM && cached.viewM == viewM &&
-        storeUnmoved(srcRoot, cached.srcV) && storeUnmoved(viewRoot, cached.viewV))
-      return Some((cached.dirs, cached.fresh))
-    val srcV = SnapshotStore.currentVersion(srcRoot)
-    if (srcV == 0) return None
-    val viewV = SnapshotStore.currentVersion(viewRoot)
-    val fresh = SnapshotStore.lastEpoch(viewRoot).contains(srcV.toLong)
-    val next = Probe(srcM, viewM, srcV, viewV,
-      SnapshotStore.manifestDirs(srcRoot, srcV).map(canon).toSet, fresh)
-    probeCache.put(cacheKey, next)
-    Some((next.dirs, next.fresh))
-  }
+  /** The served view roots by canonical view root. */
+  private[plans] def all: Map[String, String] = owned.map { case (k, r) => k -> r.viewRoot }
 }
 
 /** Materialized-view REWRITE for the engine's maintained rollups — the
@@ -242,52 +116,30 @@ object MaterializedRollups {
 class RollupRewriteRule(spark: SparkSession) extends Rule[LogicalPlan] {
 
   override def apply(plan: LogicalPlan): LogicalPlan = {
-    if (MaterializedRollups.isEmpty) return plan
+    if (!MaterializedViews.serves(Kind.Rollup, Kind.RollupNdv)) return plan
+    // Filters between scan and aggregate are kept, not rejected: a
+    // predicate over GROUPING columns commutes with the aggregation (rows
+    // with the same key share the predicate's verdict), so [[rewrite]]
+    // can apply it to the view's groups — anything referencing a
+    // non-grouping column declines there
     plan.transformUp {
       case agg @ Aggregate(ge, ae, child, _) =>
-        dissect(child)
+        MultiTreeMatch.scan(child)
           .flatMap { case (rel, filters) => rewrite(agg, ge, ae, filters, rel) }
           .getOrElse(agg)
     }
   }
 
-  /** The scanned parquet relation plus any Filter conditions between
-    * aggregate and scan, allowing column-pruning Projects (plain
-    * attributes only). Filters are returned, not rejected: a predicate
-    * over GROUPING columns commutes with the aggregation (rows with the
-    * same key share the predicate's verdict), so [[rewrite]] can apply
-    * it to the view's groups — anything referencing a non-grouping
-    * column declines there. */
-  private def dissect(plan: LogicalPlan): Option[(LogicalRelation, Seq[Expression])] =
-    plan match {
-      case lr: LogicalRelation => Some((lr, Nil))
-      case SubqueryAlias(_, child) => dissect(child) // temp-view name
-      case v: View => dissect(v.child) // temp-view body wrapper
-      case Project(projList, child)
-          if projList.forall(_.isInstanceOf[AttributeReference]) =>
-        dissect(child)
-      case Filter(cond, child) if cond.deterministic =>
-        dissect(child).map { case (lr, fs) => (lr, cond +: fs) }
-      case _ => None
-    }
-
-  /** A registered, CURRENT view of `kind` at `grain` for this
-    * relation's exact paths, with its source root and freshness — the
-    * caller decides whether a stale hit may serve compensated. */
+  /** A registered view of `kind` at `grain` for this relation's exact
+    * paths, with its freshness — the caller decides whether a stale hit
+    * may serve compensated. */
   private def registrationFor(rel: LogicalRelation, grain: RollupView.Grain,
-                              kind: String): Option[(String, String, Boolean)] = {
-    val paths = rel.relation match {
-      case fs: HadoopFsRelation =>
-        fs.location.rootPaths.map(p => MaterializedRollups.canon(p.toString)).toSet
-      case _ => return None
-    }
-    // ONE probe call: dirs-match and freshness from the same atomic
-    // result (a concurrent refresh between two calls could pair old dirs
-    // with new freshness and serve past the query's pinned snapshot)
-    MaterializedRollups.all.iterator.flatMap {
-      case ((srcRoot, g, k), viewRoot) if g == grain.seconds && k == kind =>
-        MaterializedRollups.probe(srcRoot, viewRoot).collect {
-          case (dirs, fresh) if dirs == paths => (srcRoot, viewRoot, fresh)
+                              kind: Kind): Option[(Reg, Boolean)] = {
+    val paths = MaterializedViews.canonPaths(rel).getOrElse(return None)
+    MaterializedViews.all.iterator.flatMap {
+      case reg @ Reg(`kind`, _, _, _, Grain(g)) if g == grain.seconds =>
+        MaterializedViews.probe(reg).collect {
+          case (Seq(dirs), fresh) if dirs == paths => (reg, fresh)
         }
       case _ => None
     }.nextOption()
@@ -326,8 +178,8 @@ class RollupRewriteRule(spark: SparkSession) extends Rule[LogicalPlan] {
       return None
     // each view KIND serves its own aggregate shapes; a query mixing
     // kinds (e.g. sum(value) next to a sketch estimate) declines both
-    serve(ae, metricAttr, dayOf, grain, filters, rel, "classic")
-      .orElse(serve(ae, metricAttr, dayOf, grain, filters, rel, "ndv"))
+    serve(ae, metricAttr, dayOf, grain, filters, rel, Kind.Rollup)
+      .orElse(serve(ae, metricAttr, dayOf, grain, filters, rel, Kind.RollupNdv))
   }
 
   /** Classic-view aggregate shapes → view column (None = not this kind's
@@ -396,20 +248,20 @@ class RollupRewriteRule(spark: SparkSession) extends Rule[LogicalPlan] {
   private def serve(ae: Seq[NamedExpression], metricAttr: AttributeReference,
                     dayOf: Expression, grain: RollupView.Grain,
                     filters: Seq[Expression], rel: LogicalRelation,
-                    kind: String): Option[LogicalPlan] = {
-    val (srcRoot, viewRoot, fresh) =
-      registrationFor(rel, grain, kind).getOrElse(return None)
+                    kind: Kind): Option[LogicalPlan] = {
+    val (reg, fresh) = registrationFor(rel, grain, kind).getOrElse(return None)
+    val (srcRoot, viewRoot) = (reg.roots.head, reg.viewRoot)
     // FRESH: serve the stored partials. STALE + opted-in + append-only
     // gap: serve the delta-compensated merge (either kind — both are
     // bit-equal to refresh-then-read). Anything else declines.
     val viewDf =
       if (fresh) kind match {
-        case "classic" => RollupView.read(spark, viewRoot, grain)
-        case _         => graft.sources.NdvView.read(spark, viewRoot, grain)
+        case Kind.Rollup => RollupView.read(spark, viewRoot, grain)
+        case _           => graft.sources.NdvView.read(spark, viewRoot, grain)
       }
-      else if (MaterializedRollups.staleOk.contains(viewRoot)) {
+      else if (reg.serveStale) {
         kind match {
-          case "classic" => RollupView.compensatedRead(spark, srcRoot, viewRoot, grain)
+          case Kind.Rollup => RollupView.compensatedRead(spark, srcRoot, viewRoot, grain)
           case _ => graft.sources.NdvView.compensatedRead(spark, srcRoot, viewRoot, grain)
         }
       }.getOrElse(return None)
@@ -425,7 +277,7 @@ class RollupRewriteRule(spark: SparkSession) extends Rule[LogicalPlan] {
       case al @ Alias(d, _) if d.semanticEquals(dayOf) =>
         Alias(viewCol(grain.col), al.name)(exprId = al.exprId)
       case al: Alias =>
-        (if (kind == "classic") classicAgg(al, viewCol, viewColOpt)
+        (if (kind == Kind.Rollup) classicAgg(al, viewCol, viewColOpt)
          else ndvAgg(al, viewCol))
           .getOrElse(return None) // any other shape: decline, never approximate
       case _ => return None
