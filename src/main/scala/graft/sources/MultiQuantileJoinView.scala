@@ -1,21 +1,22 @@
 package graft.sources
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Incrementally maintained APPROXIMATE-QUANTILE over an inner-join TREE
   * of N ≥ 2 tables (two tables are the one-edge tree) — percentiles of a
   * measure per dim attribute ("p90 order total per market segment") as a
-  * maintained view: [[QuantileView]]'s deterministic fixed-bin histogram
-  * composed with [[MultiAggJoinView]]'s telescoped tree-delta machinery.
+  * maintained view: the [[FixedBinHistogram]] under ONE global freeze
+  * (empty partition set) composed with [[MultiAggJoinView]]'s
+  * telescoped tree-delta machinery.
   *
   * {{{ SELECT g…, approx_quantile(x, φ…) FROM T0 JOIN T1 ON … JOIN T2 … GROUP BY g… }}}
   *
   * Storage: one SIGNED count per (group, bin) under ONE globally frozen
-  * edge set (`_jedges/v<viewV>` sidecar); estimates by cumulative-bin
-  * selection + linear interpolation ([[estimatesFrom]]) — bit-reproducible
-  * across engines, so the correctness gate hashes the ESTIMATES directly
-  * (the `quantile_view_answer` technique, lifted to the join).
+  * edge set (`_jedges/v<viewV>` sidecar); estimates by the histogram's
+  * one estimator — bit-reproducible across engines, so the correctness
+  * gate hashes the ESTIMATES directly (the `quantile_view_answer`
+  * technique, lifted to the join).
   *
   * One deliberate difference from the single-table view: edges freeze
   * GLOBALLY for the one value column (observed join-wide range ± a
@@ -46,7 +47,8 @@ import org.apache.spark.sql.functions._
   * Envelope discipline:
   *   - any POSITIVE leg (append delta or churn new-leg) ESCAPING the
   *     frozen envelope → one full rebuild that REFREEZES with the margin
-  *     doubled (capped) — the [[QuantileView]] amortization;
+  *     doubled (capped) — the histogram's margin growth for the one
+  *     global partition;
   *   - a freeze over zero non-null values is REFUSED loudly (NULL edges
   *     would silently poison every later bin);
   *   - a source compaction / vacuumed baseline → full rebuild at the
@@ -57,8 +59,8 @@ import org.apache.spark.sql.functions._
   * variable-width sidecar past that), so a crashed refresh replays as an
   * epoch no-op, and the rebuild's refrozen edges stay keyed by the view
   * version their publish creates (a crash between sidecar write and
-  * publish leaves an orphan nothing reads; the next non-rebuild publish
-  * drops it — the [[QuantileView]] protocol).
+  * publish leaves an orphan nothing reads; the next non-rebuild publish,
+  * compaction included, drops it — the histogram's sidecar protocol).
   *
   * NULL measure values never bin on any path, including the oracle
   * replay (`quantile_cont` semantics). Contract: inner equi-joins over a
@@ -69,9 +71,11 @@ import org.apache.spark.sql.functions._
 object MultiQuantileJoinView {
   import MultiAggJoinView.Edge
 
-  val DefaultBins = 64
-  val DefaultMargin = 0.25
-  val MaxMargin = 8.0
+  val DefaultBins = FixedBinHistogram.DefaultBins
+  val DefaultMargin = FixedBinHistogram.DefaultMargin
+  val MaxMargin = FixedBinHistogram.MaxMargin
+
+  private val hist = new FixedBinHistogram(Nil, "_jedges")
 
   /** Leg-sign column of the fused churn fold (see [[gapTerms]]). */
   private val SignCol = "__mqj_sign"
@@ -99,92 +103,15 @@ object MultiQuantileJoinView {
       java.nio.file.Paths.get(viewRoot, "_mqjspec"), line.getBytes("UTF-8"))
   }
 
-  // ---- edges sidecar (view-version keyed, the QuantileView protocol) ----
-
-  private def edgesDir(viewRoot: String, viewV: Int): String =
-    s"$viewRoot/_jedges/v$viewV"
-
-  private def edgeKeys(viewRoot: String): Seq[Int] = {
-    val d = java.nio.file.Paths.get(viewRoot, "_jedges")
-    if (!java.nio.file.Files.isDirectory(d)) Seq.empty
-    else {
-      val s = java.nio.file.Files.list(d)
-      try {
-        import scala.jdk.CollectionConverters._
-        s.iterator().asScala.map(_.getFileName.toString)
-          .filter(_.startsWith("v"))
-          .flatMap(n => scala.util.Try(n.drop(1).toInt).toOption).toSeq
-      } finally s.close()
-    }
-  }
-
-  private def dropOrphanEdges(viewRoot: String): Unit = {
-    val cap = SnapshotStore.currentVersion(viewRoot)
-    edgeKeys(viewRoot).filter(_ > cap).foreach(v =>
-      SnapshotStore.deleteTree(edgesDir(viewRoot, v)))
-  }
-
   /** The newest frozen edges at or below the view's current version —
     * ONE row: (lo, w, bins, margin). */
-  def edgesFor(spark: SparkSession, viewRoot: String): DataFrame = {
-    require(SnapshotStore.lastEpoch(viewRoot).nonEmpty,
-      s"no refreshed quantile-join view at $viewRoot")
-    val cap = SnapshotStore.currentVersion(viewRoot)
-    val versions = edgeKeys(viewRoot).filter(_ <= cap)
-    require(versions.nonEmpty, s"no frozen edges at or below view v$cap")
-    spark.read.parquet(edgesDir(viewRoot, versions.max))
-  }
+  def edgesFor(spark: SparkSession, viewRoot: String): DataFrame =
+    hist.edgesFor(spark, viewRoot)
 
-  /** Freeze global edges from the join's non-null values (observed range
-    * ± margin of the range each side; degenerate single-value data gets
-    * unit width). One row. */
-  private def freezeEdges(rows: DataFrame, x: String, bins: Int,
-                          margin: Double): DataFrame =
-    rows.where(col(x).isNotNull)
-      .agg(min(col(x).cast("double")).as("mn"),
-        max(col(x).cast("double")).as("mx"))
-      .select(
-        (col("mn") - greatest(col("mx") - col("mn"), lit(1.0)) * lit(margin))
-          .as("lo"),
-        (greatest(col("mx") - col("mn"), lit(1.0)) *
-          (lit(1.0) + lit(2.0) * lit(margin)) / lit(bins)).as("w"),
-        lit(bins).as("bins"),
-        lit(margin).as("margin"))
-
-  /** The shared binning expression — ONE definition for every refresh
-    * path and the SQL oracle replay: clamped integer bin of a value
-    * under (lo, w, bins). */
-  private def binCol(x: String, lo: Column, w: Column, bins: Column): Column =
-    least(bins - lit(1),
-      greatest(lit(0), floor((col(x).cast("double") - lo) / w).cast("int")))
-
-  /** Fold join rows to signed (groups…, bin, cnt) partials under the
-    * frozen edges; NULL values never bin. */
-  private def binned(rows: DataFrame, ed: DataFrame, groups: Seq[String],
-                     x: String, sign: Int): DataFrame =
-    binnedBy(rows, ed, groups, x, lit(sign.toLong))
-
-  /** [[binned]] with a PER-ROW sign — the fused two-leg churn fold: one
-    * partial row per (group, bin) equal to the SUM of the separate ±
-    * leg rows, identical after the read's merge, at half the execution. */
-  private def binnedBy(rows: DataFrame, ed: DataFrame, groups: Seq[String],
-                       x: String, sign: Column): DataFrame =
-    rows.where(col(x).isNotNull)
-      .join(broadcast(ed.select("lo", "w", "bins")))
-      .select(groups.map(col) :+
-        binCol(x, col("lo"), col("w"), col("bins")).as("bin") :+
-        sign.cast("long").as("sign"): _*)
-      .groupBy((groups :+ "bin").map(col): _*)
-      .agg(sum(col("sign")).as("cnt"))
-
-  /** Do any non-null values of `rows` escape the frozen envelope? */
-  private def escapes(rows: DataFrame, ed: DataFrame, x: String): Boolean = {
-    val v = col(x).cast("double")
-    !rows.where(col(x).isNotNull)
-      .join(broadcast(ed.select("lo", "w", "bins")))
-      .where(v < col("lo") || v > col("lo") + col("w") * col("bins"))
-      .isEmpty
-  }
+  /** Do any non-null values of `rows` escape the frozen envelope? (NULL
+    * values never bin here, so they cannot escape.) */
+  private def escapes(rows: DataFrame, ed: DataFrame, x: String): Boolean =
+    !hist.escapeRows(rows.where(col(x).isNotNull), ed, x).isEmpty
 
   // ---- the gap's telescoped terms --------------------------------------
 
@@ -202,8 +129,9 @@ object MultiQuantileJoinView {
 
     /** Signed (groups…, bin, cnt) partials of every term. */
     def counts(ed: DataFrame, groups: Seq[String], x: String): DataFrame =
-      (legs.map { case (rows, sign) => binned(rows, ed, groups, x, sign) } ++
-        fused.map(rows => binnedBy(rows, ed, groups, x, col(SignCol))))
+      (legs.map { case (rows, sign) => (rows, lit(sign.toLong)) } ++
+        fused.map(rows => (rows, col(SignCol))))
+        .map { case (rows, sign) => hist.binned(rows, ed, groups.map(col), x, sign) }
         .reduce(_ unionByName _)
   }
 
@@ -314,50 +242,38 @@ object MultiQuantileJoinView {
     // vector sidecar here, BEFORE any publish)
     val stamp = MultiAggJoinView.stampFor(viewRoot, curVs)
 
-    /** One full rebuild at `margin`: refreeze edges keyed by the view
-      * version the publish creates, then publish the full binned tree. */
-    def rebuild(margin: Double): Int = {
+    /** One full rebuild under `margins` (the one global partition's key
+      * is the empty tuple): refreeze, then publish the full binned tree. */
+    def rebuild(margins: Map[Seq[Any], Double]): Int = {
       val full = MultiAggJoinView.joinedSlice(newFrames, edges, groupCols,
         Seq(valueCol)).localCheckpoint(true)
-      val ed = freezeEdges(full, valueCol, bins, margin).localCheckpoint(true)
+      val ed = hist.freezeEdges(full, valueCol, bins, margins).localCheckpoint(true)
       require(ed.where(col("lo").isNull || col("w").isNull).isEmpty,
         s"cannot freeze quantile-join edges at $viewRoot: the join " +
           s"tree has no non-null '$valueCol' values — refresh again once " +
           "the sources carry at least one binnable row")
-      val nextV = SnapshotStore.currentVersion(viewRoot) + 1
-      ed.coalesce(1).write.mode("overwrite").parquet(edgesDir(viewRoot, nextV))
-      if (SnapshotStore.currentVersion(viewRoot) == 0) {
-        recordSpec(viewRoot, spec)
-        SnapshotStore.appendEpoch(binned(full, ed, groupCols, valueCol, 1),
-          viewRoot, stamp)
-      } else
-        SnapshotStore.compactWith(binned(full, ed, groupCols, valueCol, 1),
-          viewRoot, epochOverride = Some(stamp))
-    }
-    def currentMargin(): Double = {
-      val ed = edgesFor(spark, viewRoot)
-      if (ed.columns.contains("margin"))
-        ed.select("margin").head().getDouble(0)
-      else DefaultMargin
+      if (SnapshotStore.currentVersion(viewRoot) == 0) recordSpec(viewRoot, spec)
+      hist.publishFreeze(ed, hist.binned(full, ed, groupCols.map(col), valueCol,
+        lit(1L)), viewRoot, stamp)
     }
 
     val vNew = if (prevVs.forall(_ == 0)) {
-      rebuild(DefaultMargin)
+      rebuild(Map.empty)
     } else if (diffable(rootsV, prevVs, curVs)) {
       val ed = edgesFor(spark, viewRoot)
       val terms = gapTerms(spark, rootsV, edges, groupCols, valueCol,
         prevVs, curVs, newFrames)
       if (terms.escape(ed, valueCol))
-        rebuild(math.min(currentMargin() * 2.0, MaxMargin))
+        rebuild(hist.grownMargins(ed, Set(Nil)))
       else {
-        dropOrphanEdges(viewRoot)
+        hist.dropOrphanEdges(viewRoot)
         val counts = terms.counts(ed, groupCols, valueCol)
         SnapshotStore.appendEpoch(
           if (counts.isEmpty) counts.repartition(1) else counts,
           viewRoot, stamp)
       }
     } else {
-      rebuild(DefaultMargin) // compaction / vacuumed baseline broke the diff
+      rebuild(Map.empty) // compaction / vacuumed baseline broke the diff
     }
     rootsV.indices.foreach(i =>
       SnapshotStore.recordViewBaseline(rootsV(i), viewRoot, curVs(i)))
@@ -366,55 +282,17 @@ object MultiQuantileJoinView {
 
   // ---- serving ----------------------------------------------------------
 
-  /** Live merged (groups…, bin, cnt) counts — retraction residue folded,
-    * fully-retracted bins dropped. */
-  private def mergedCounts(spark: SparkSession, viewRoot: String,
-                           groups: Seq[String]): DataFrame =
-    SnapshotStore.read(spark, viewRoot)
-      .groupBy((groups :+ "bin").map(col): _*)
-      .agg(sum(col("cnt")).as("cnt"))
-      .where(col("cnt") > 0)
-
   private def groupsOf(spark: SparkSession, viewRoot: String): Seq[String] = {
     val cols = SnapshotStore.readEvolved(spark, viewRoot).columns
     cols.filterNot(c =>
       c.equalsIgnoreCase("bin") || c.equalsIgnoreCase("cnt")).toSeq
   }
 
-  /** The ONE estimator every read serves through: cumulative-bin
-    * selection + linear interpolation over merged signed counts under
-    * the frozen edges (the [[QuantileView]] arithmetic, partitioned by
-    * the view's groups) → groups…, `phi`, `est`. The bin holding rank t
-    * satisfies cumBefore < t <= cum; phi = 0 serves the first live bin
-    * explicitly (the QuantileView boundary contract). */
-  private def estimatesFrom(counts: DataFrame, ed: DataFrame,
-                            groups: Seq[String],
-                            phis: Seq[Double]): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val wSpec = Window.partitionBy(groups.map(col): _*).orderBy("bin")
-    val cum = counts
-      .withColumn("cum", sum("cnt").over(wSpec))
-      .withColumn("n", sum("cnt").over(
-        Window.partitionBy(groups.map(col): _*)))
-    val withPhi = cum.select(col("*"),
-      explode(array(phis.map(p => lit(p)): _*)).as("phi"))
-      .withColumn("t", col("phi") * col("n").cast("double"))
-    withPhi
-      .where((col("cum").cast("double") >= col("t") &&
-          (col("cum") - col("cnt")).cast("double") < col("t")) ||
-        (col("t") === 0.0 && col("cum") === col("cnt")))
-      .join(broadcast(ed.select("lo", "w")))
-      .select(groups.map(col) :+ col("phi") :+
-        (col("lo") + col("w") * col("bin") +
-          col("w") * ((col("t") - (col("cum") - col("cnt")).cast("double")) /
-            col("cnt").cast("double"))).as("est"): _*)
-  }
-
   /** Quantile estimates per group: groups…, `phi`, `est`. */
   def quantiles(spark: SparkSession, viewRoot: String,
                 phis: Seq[Double]): DataFrame = {
     val groups = groupsOf(spark, viewRoot)
-    estimatesFrom(mergedCounts(spark, viewRoot, groups),
+    hist.estimates(hist.merged(SnapshotStore.read(spark, viewRoot), groups),
       edgesFor(spark, viewRoot), groups, phis)
   }
 
@@ -446,18 +324,15 @@ object MultiQuantileJoinView {
     val terms = gapTerms(spark, rootsV, edges, groupCols, valueCol,
       prevVs, curVs, newFrames)
     if (terms.escape(ed, valueCol)) return None
-    val counts = SnapshotStore.read(spark, viewRoot)
-      .unionByName(terms.counts(ed, groupCols, valueCol))
-      .groupBy((groupCols :+ "bin").map(col): _*)
-      .agg(sum(col("cnt")).as("cnt"))
-      .where(col("cnt") > 0)
-    Some(estimatesFrom(counts, ed, groupCols, phis))
+    val counts = hist.merged(SnapshotStore.read(spark, viewRoot)
+      .unionByName(terms.counts(ed, groupCols, valueCol)), groupCols)
+    Some(hist.estimates(counts, ed, groupCols, phis))
   }
 
   /** Fold signed partials to one live row per (group, bin) — drops the
-    * retraction residue physically; content and cursor unchanged. */
-  def compact(spark: SparkSession, viewRoot: String): Int = {
-    val groups = groupsOf(spark, viewRoot)
-    SnapshotStore.compactWith(mergedCounts(spark, viewRoot, groups), viewRoot)
-  }
+    * retraction residue physically; content and cursor unchanged. A
+    * crashed rebuild's orphan freeze is dropped first, so the compaction
+    * cannot make it visible beside counts binned under the old edges. */
+  def compact(spark: SparkSession, viewRoot: String): Int =
+    hist.compact(spark, viewRoot, groupsOf(spark, viewRoot))
 }

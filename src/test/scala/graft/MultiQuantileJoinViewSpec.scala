@@ -226,6 +226,28 @@ class MultiQuantileJoinViewSpec extends SparkSpec {
     }
   }
 
+  test("compact drops a crashed rebuild's orphan edges instead of publishing them") {
+    withRoots { (roots, v) =>
+      SnapshotStore.append(factDF(0L to 300L: _*), roots(0))
+      SnapshotStore.append(custDF(0L to 39L: _*), roots(1))
+      SnapshotStore.append(nationDF(0L to 4L: _*), roots(2))
+      refresh(roots, v)
+      val before = estimates(v)
+      // a rebuild that crashed between its sidecar write and its publish:
+      // a different freeze keyed by the version the publish would create
+      val orphan = s"$v/_jedges/v${SnapshotStore.currentVersion(v) + 1}"
+      MultiQuantileJoinView.edgesFor(spark, v)
+        .withColumn("lo", col("lo") - lit(123.0))
+        .withColumn("w", col("w") * lit(3.0))
+        .coalesce(1).write.parquet(orphan)
+      MultiQuantileJoinView.compact(spark, v)
+      assert(lastOp(v) == "compact")
+      assert(!java.nio.file.Files.exists(java.nio.file.Paths.get(orphan)),
+        "compact must drop the orphan freeze before it publishes")
+      assert(estimates(v) == before)
+    }
+  }
+
   test("the refreshed multiway stamp advances the packed N-way cursor (replay no-op per source)") {
     withRoots { (roots, v) =>
       SnapshotStore.append(factDF(0L to 100L: _*), roots(0))
