@@ -9,7 +9,9 @@ import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkList
   * Bench reports — the decomposition §1 of the optimization guide asks
   * for before touching anything. Driver-side time (planning, manifest
   * I/O, bloom sizing decisions) is the gap between the query wall time
-  * and the sum of job wall times.
+  * and the time at least one job was running — the union of the job
+  * intervals, not their sum: jobs overlapped by [[graft.sources.Overlap]]
+  * would otherwise be counted twice and push the gap negative.
   *
   * Usage: runMain graft.JobProfile <query> [<query>...]
   */
@@ -25,7 +27,9 @@ object JobProfile {
     graft.streaming.StreamReplay.defaultSlices = 2
     spark.range(1000000).selectExpr("sum(id)").collect()
     val jobs = new java.util.concurrent.ConcurrentHashMap[Int, (String, Long)]()
-    val done = new java.util.concurrent.ConcurrentLinkedQueue[(Int, String, Double, Int)]()
+    // (job id, label, start, end, tasks); start and end in seconds on
+    // the System.nanoTime clock
+    val done = new java.util.concurrent.ConcurrentLinkedQueue[(Int, String, Double, Double, Int)]()
     val taskCounts = new java.util.concurrent.ConcurrentHashMap[Int, Int]()
     val stageToJob = new java.util.concurrent.ConcurrentHashMap[Int, Int]()
     val sites = new java.util.concurrent.ConcurrentHashMap[Int, String]()
@@ -51,8 +55,7 @@ object JobProfile {
       }
       override def onJobEnd(je: SparkListenerJobEnd): Unit = {
         Option(jobs.remove(je.jobId)).foreach { case (desc, t0) =>
-          done.add((je.jobId, desc,
-            (System.nanoTime() - t0) / 1e9,
+          done.add((je.jobId, desc, t0 / 1e9, System.nanoTime() / 1e9,
             taskCounts.getOrDefault(je.jobId, 0)))
         }
       }
@@ -67,12 +70,13 @@ object JobProfile {
       Thread.sleep(500) // let listener drain
       import scala.jdk.CollectionConverters._
       val rows = done.asScala.toSeq.sortBy(_._1)
-      val jobSum = rows.map(_._3).sum
+      val jobSum = rows.map(r => r._4 - r._3).sum
+      val busy = busySeconds(rows.map(r => (r._3, r._4)))
       println(f"[jobprofile] $name wall=$wall%.2f s, jobs=${rows.size}, " +
-        f"job-wall-sum=$jobSum%.2f s, driver-gap=${wall - jobSum}%.2f s")
+        f"job-wall-sum=$jobSum%.2f s, driver-gap=${wall - busy}%.2f s")
       rows.groupBy(r =>
           if (r._2.nonEmpty) r._2 else sites.getOrDefault(r._1, "?"))
-        .map { case (site, rs) => (rs.map(_._3).sum, rs.size, site) }
+        .map { case (site, rs) => (rs.map(r => r._4 - r._3).sum, rs.size, site) }
         .toSeq.sortBy(-_._1)
         .foreach { case (secs, n, site) =>
           println(f"[jobprofile]   $secs%7.3f s  n=$n%4d  $site")
@@ -80,4 +84,13 @@ object JobProfile {
     }
     spark.stop()
   }
+
+  /** Length of the union of `[start, end]` intervals: the time at least
+    * one of them was running. */
+  private[graft] def busySeconds(intervals: Seq[(Double, Double)]): Double =
+    intervals.sortBy(_._1).foldLeft((0.0, Double.NegativeInfinity)) {
+      case ((total, reach), (s, e)) =>
+        if (e <= reach) (total, reach)
+        else (total + e - math.max(s, reach), e)
+    }._1
 }

@@ -399,16 +399,14 @@ object RollupView {
             recomputed, g)
           // ONE atomic epoch-stamped publish: dirty groups replace, the
           // insert-only delta partials append, the cursor advances —
-          // all in a single manifest swap (repartition(1) keeps an empty
-          // append side schema-bearing; a fileless dir would not read)
+          // all in a single manifest swap (the store keeps an empty
+          // append side schema-bearing)
           SnapshotStore.upsertAndAppendEpoch(spark,
-            recomputed.unionByName(tombstones),
-            if (ins.isEmpty) ins.repartition(1) else ins,
+            recomputed.unionByName(tombstones), ins,
             viewRoot, Seq("metric", g.col), srcCur)
         } else {
           // nothing dirty: the delta partials alone own the stamp
-          SnapshotStore.appendEpoch(
-            if (ins.isEmpty) ins.repartition(1) else ins, viewRoot, srcCur)
+          SnapshotStore.appendEpoch(ins, viewRoot, srcCur)
         }
       } finally dirty.unpersist()
     } finally ch.unpersist()

@@ -549,7 +549,7 @@ object SnapshotStore {
     if (epochSeen(root, epochId)) currentVersion(root)
     else {
       val dir = newDataDir(root, "v", currentVersion(root) + 1)
-      df.write.mode("overwrite").parquet(dir)
+      writeReadable(df, dir)
       enforceConstraints(df.sparkSession, root, dir)
       commitAppend(root, dir, Some(epochId), df.columns.toSeq)
     }
@@ -882,8 +882,7 @@ object SnapshotStore {
       // bootstrap: every batch row is an insert; the commit is an
       // ordinary (commutative, retry-safe) append
       val dir = newDataDir(root, "v", 1)
-      alsoAppend.map(df.unionByName(_)).getOrElse(df)
-        .write.mode("overwrite").parquet(dir)
+      writeReadable(alsoAppend.map(df.unionByName(_)).getOrElse(df), dir)
       enforceConstraints(spark, root, dir)
       return commitAppend(root, dir, epoch, df.columns.toSeq)
     }
@@ -898,12 +897,7 @@ object SnapshotStore {
     // directory no reader ever plans (the crashed-append posture;
     // vacuum removes it) — nothing is published.
     val ins = newDataDir(root, "v", parent + 1)
-    df.write.mode("overwrite").parquet(ins)
-    // an empty batch can write a FILELESS directory, which would not
-    // read back — rewrite schema-bearing (tiny: the batch was empty)
-    if (!Option(new java.io.File(ins).listFiles()).toSeq.flatten
-        .exists(_.getName.endsWith(".parquet")))
-      df.repartition(1).write.mode("overwrite").parquet(ins)
+    writeReadable(df, ins)
     val written = spark.read.parquet(ins)
     // Replace-by-key is only well-defined for unique batch keys — a
     // duplicate would silently publish two rows per key (the Delta/
@@ -946,11 +940,10 @@ object SnapshotStore {
     // that passed enforcement when they first landed
     enforceConstraints(spark, root, ins)
     // the combined publish's append side lands as its own directory in
-    // the SAME commit (repartition(1) on an empty frame is the caller's
-    // job when the stamp must publish schema-bearing)
+    // the SAME commit (schema-bearing even when empty)
     val ins2 = alsoAppend.map { a =>
       val d = newDataDir(root, "va", parent + 1)
-      a.write.mode("overwrite").parquet(d)
+      writeReadable(a, d)
       enforceConstraints(spark, root, d)
       d
     }
@@ -959,6 +952,18 @@ object SnapshotStore {
     inheritStats(spark, root, parent, v, (rewritten :+ ins) ++ ins2.toSeq,
       df.columns.toSeq)
     v
+  }
+
+  /** Write `df` as the parquet directory `dir`, readable even when `df`
+    * is empty: one write, and a schema-bearing rewrite only when that
+    * write left no parquet file (an empty plan can write a FILELESS
+    * directory, which does not read back; the rewrite is tiny — the
+    * frame was empty). No emptiness probe runs before the write. */
+  private def writeReadable(df: DataFrame, dir: String): Unit = {
+    df.write.mode("overwrite").parquet(dir)
+    if (!Option(new java.io.File(dir).listFiles()).toSeq.flatten
+        .exists(_.getName.endsWith(".parquet")))
+      df.repartition(1).write.mode("overwrite").parquet(dir)
   }
 
   /** Carry file-skipping stats across a CoW rewrite: if the store tracks

@@ -498,6 +498,48 @@ class MultiAggJoinViewSpec extends SparkSpec {
     }
   }
 
+  test("extents: a mixed gap with ZERO dirty groups still lands the append terms") {
+    // a churned supplier key that joins no fact row at either version
+    // leaves no dirty group; the fact's concurrent append must still
+    // publish (unrestricted), in one version
+    withRoots { (roots, v) =>
+      def refreshX(): Int = MultiAggJoinView.refresh(spark, roots, v,
+        edges, groups, measures, extents = true)
+      def rows(df: DataFrame): Set[String] = df
+        .select(col("p_brand"), col("n_name"), col("cnt"), col("sum_qty"),
+          col("min_qty"), col("max_qty"))
+        .collect().map(_.toString).toSet
+      def truthX(): Set[String] = {
+        val Seq(f, p, s, n) = roots.map(SnapshotStore.read(spark, _))
+        rows(f.join(p, f("f_pk") === p("p_pk"))
+          .join(s, f("f_sk") === s("s_sk"))
+          .join(n, s("s_nk") === n("n_nk"))
+          .groupBy("p_brand", "n_name")
+          .agg(count(lit(1)).as("cnt"),
+            sum(col("qty").cast("decimal(30,2)")).cast("decimal(30,2)").as("sum_qty"),
+            min(col("qty")).as("min_qty"), max(col("qty")).as("max_qty")))
+      }
+      SnapshotStore.append(factDF(1L to 40L: _*), roots(0))
+      SnapshotStore.append(partDF(0L to 6L: _*), roots(1))
+      SnapshotStore.append(suppDF(0L to 4L: _*), roots(2))
+      SnapshotStore.append(nationDF(0L, 1L, 2L), roots(3))
+      refreshX()
+      assert(rows(MultiAggJoinView.read(spark, v)) == truthX())
+
+      // churn an ORPHAN supplier (s_sk 9: factDF keys are i % 5) while
+      // the fact APPENDS matching rows
+      SnapshotStore.upsert(spark, suppDF(9L), roots(2), Seq("s_sk"))
+      SnapshotStore.append(factDF(41L to 60L: _*), roots(0))
+      val before = SnapshotStore.currentVersion(v)
+      refreshX()
+      assert(SnapshotStore.currentVersion(v) == before + 1)
+      assert(lastOp(v) == "append",
+        "zero dirty groups + an append gap must publish the append terms")
+      assert(rows(MultiAggJoinView.read(spark, v)) == truthX(),
+        "the append-moved table's delta partials must not be dropped")
+    }
+  }
+
   test("extents churn: a group column sharing a name with another table's CHILD KEY restricts the owner") {
     // t1's child key is literally named like t2's group column — the
     // recompute's band+semi must restrict the OWNING table (t2), never

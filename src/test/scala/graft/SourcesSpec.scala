@@ -305,6 +305,32 @@ class SourcesSpec extends SparkSpec {
     } finally SnapshotStore.deleteTree(root)
   }
 
+  test("an empty frame publishes a schema-bearing version through appendEpoch and upsertAndAppendEpoch") {
+    import graft.sources.SnapshotStore
+    val s = spark
+    import s.implicits._
+    val root = Files.createTempDirectory("snapempty").toString
+    try {
+      // an aggregate over zero rows: no emptiness probe guards the write
+      val agg = Seq((1L, "a", 2.0)).toDF("id", "g", "x").where(col("id") < 0)
+        .groupBy("g").agg(count(lit(1)).as("cnt"), sum(col("x")).as("sx"))
+      assert(SnapshotStore.appendEpoch(agg, root, 3L) == 1)
+      assert(SnapshotStore.read(spark, root).columns.toSeq == Seq("g", "cnt", "sx"))
+      assert(SnapshotStore.read(spark, root).count() == 0)
+
+      val rows = Seq(("a", 1L, 2.0)).toDF("g", "cnt", "sx")
+      SnapshotStore.appendEpoch(rows, root, 4L)
+      // a keyed replace beside an EMPTY append side: one version, and it
+      // reads back with the frame's columns
+      assert(SnapshotStore.upsertAndAppendEpoch(spark,
+        Seq(("a", 5L, 7.0)).toDF("g", "cnt", "sx"), agg, root, Seq("g"), 5L) == 3)
+      val back = SnapshotStore.read(spark, root)
+      assert(back.columns.toSeq == Seq("g", "cnt", "sx"))
+      assert(back.collect().map(r => (r.getString(0), r.getLong(1))).toSeq ==
+        Seq(("a", 5L)))
+    } finally SnapshotStore.deleteTree(root)
+  }
+
   test("vacuum keeps a re-stacked version's live stats (ownership from manifests, not names)") {
     import graft.sources.SnapshotStore
     val s = spark
