@@ -325,6 +325,13 @@ object RollupView {
     import org.apache.spark.storage.StorageLevel
     val ch = feed.persist(StorageLevel.MEMORY_AND_DISK)
     try {
+      // ONE probe over the delete rows answers every branch question:
+      // any null key, how many deletes, and the dirty bucket band.
+      val deletes = ch.where(col("_change_type") === "delete")
+      val bucket = expr(s"e div ${g.seconds}")
+      val probe = deletes.agg(
+        count(when(col("metric").isNull || col("e").isNull, 1)).as("nulls"),
+        count(lit(1)).as("n"), min(bucket).as("lo"), max(bucket).as("hi")).head()
       // NULL-keyed groups (null metric or null e — outside the series
       // contract, but a delete can still target them) would slip every
       // null-unsafe equi-join below: the dirty semi-join, the tombstone
@@ -332,82 +339,73 @@ object RollupView {
       // null, so the old partial would silently survive next to a
       // tombstone and the merged view would diverge from a from-scratch
       // rollup forever. One full rebuild handles them exactly.
-      val nullKeyDeletes = !ch.where(col("_change_type") === "delete" &&
-        (col("metric").isNull || col("e").isNull)).isEmpty
-      if (nullKeyDeletes) {
+      if (probe.getAs[Long]("nulls") > 0) {
         // the enclosing finally unpersists ch
         return SnapshotStore.compactWith(
           spec.fold(
             spec.bucketed(SnapshotStore.read(spark, srcRoot, srcCur), g), g),
           viewRoot, epochOverride = Some(srcCur.toLong))
       }
-      val dirty = ch.where(col("_change_type") === "delete")
-        .select(col("metric"), expr(s"e div ${g.seconds}").as(g.col))
+      val inserts = spec.bucketed(ch.where(col("_change_type") === "insert"), g)
+      // nothing dirty: the delta partials alone own the stamp
+      if (probe.getAs[Long]("n") == 0)
+        return SnapshotStore.appendEpoch(spec.fold(inserts, g), viewRoot, srcCur)
+      val dirty = deletes.select(col("metric"), bucket.as(g.col))
         .distinct().persist(StorageLevel.MEMORY_AND_DISK)
       try {
         // insert-only groups' delta partials (dirty groups re-aggregate
         // whole in the replace below). Computed up front: both legs
         // publish in ONE atomic commit.
         val ins = spec.fold(
-          spec.bucketed(ch.where(col("_change_type") === "insert"), g)
-            .join(dirty, Seq("metric", g.col), "left_anti"), g)
-        if (!dirty.isEmpty) {
-          // Conservative day-range pre-filter: the semi-join alone gives
-          // the parquet scan nothing to push down, so the re-aggregate
-          // would read the whole standing table. A plain range predicate
-          // on e (spanning the dirty days) reaches the scan as a
-          // PushedFilter — a day-keyed or z-ordered source prunes
-          // files/row-groups before the semi-join refines to the exact
-          // dirty keys. Sound for the non-negative epochs the day
-          // contract (e div 86400 == e // 86400) already assumes; a
-          // negative bound skips the pre-filter rather than guess at
-          // truncation-vs-floor semantics.
-          val b = dirty.agg(min(col(g.col)).as("lo"), max(col(g.col)).as("hi")).head()
-          val srcRows = SnapshotStore.read(spark, srcRoot, srcCur)
-          // Spark's `div` TRUNCATES toward zero, so bucket 0 spans
-          // e ∈ [-(sec-1), sec-1] — the bucket-0 lower bound must include
-          // the negative tail or a surviving negative-e row would be
-          // dropped from the recompute and its group falsely tombstoned.
-          // Negative dirty buckets skip the pre-filter (their truncation
-          // bands are not worth encoding for out-of-contract data);
-          // null-key groups never reach here (rebuild branch above).
-          val pre =
-            if (b.isNullAt(0)) srcRows
-            else {
-              val (dlo, dhi) = (b.getLong(0), b.getLong(1))
-              if (dlo >= 0) {
-                val lo = if (dlo == 0) -(g.seconds - 1) else dlo * g.seconds
-                srcRows.where(col("e") >= lo &&
-                  col("e") <= dhi * g.seconds + (g.seconds - 1))
-              } else srcRows
-            }
-          val recomputedLazy = spec.fold(
-            spec.bucketed(pre, g)
-              .join(dirty, Seq("metric", g.col), "left_semi"), g)
-          // Plan-audit hook: the registered queries return checkpointed
-          // frames (their stores are temp-rooted), so the recompute's
-          // scan-prune/broadcast posture is only visible here — captured
-          // BEFORE the checkpoint below hides the scan. One extra
-          // planning pass, model-free and ms-scale next to the refresh.
-          lastRecomputePlan = recomputedLazy.queryExecution.executedPlan.toString
-          // checkpointed: group-sized, referenced twice (replace +
-          // tombstones' anti-join) — one execution, not two
-          val recomputed = recomputedLazy.localCheckpoint(true)
-          val tombstones = spec.tombstones(
-            dirty.join(recomputed.select("metric", g.col),
-              Seq("metric", g.col), "left_anti"),
-            recomputed, g)
-          // ONE atomic epoch-stamped publish: dirty groups replace, the
-          // insert-only delta partials append, the cursor advances —
-          // all in a single manifest swap (the store keeps an empty
-          // append side schema-bearing)
-          SnapshotStore.upsertAndAppendEpoch(spark,
-            recomputed.unionByName(tombstones), ins,
-            viewRoot, Seq("metric", g.col), srcCur)
-        } else {
-          // nothing dirty: the delta partials alone own the stamp
-          SnapshotStore.appendEpoch(ins, viewRoot, srcCur)
-        }
+          inserts.join(dirty, Seq("metric", g.col), "left_anti"), g)
+        // Conservative day-range pre-filter: the semi-join alone gives
+        // the parquet scan nothing to push down, so the re-aggregate
+        // would read the whole standing table. A plain range predicate
+        // on e (spanning the dirty days) reaches the scan as a
+        // PushedFilter — a day-keyed or z-ordered source prunes
+        // files/row-groups before the semi-join refines to the exact
+        // dirty keys. Sound for the non-negative epochs the day
+        // contract (e div 86400 == e // 86400) already assumes; a
+        // negative bound skips the pre-filter rather than guess at
+        // truncation-vs-floor semantics.
+        val srcRows = SnapshotStore.read(spark, srcRoot, srcCur)
+        // Spark's `div` TRUNCATES toward zero, so bucket 0 spans
+        // e ∈ [-(sec-1), sec-1] — the bucket-0 lower bound must include
+        // the negative tail or a surviving negative-e row would be
+        // dropped from the recompute and its group falsely tombstoned.
+        // Negative dirty buckets skip the pre-filter (their truncation
+        // bands are not worth encoding for out-of-contract data);
+        // null-key groups never reach here (rebuild branch above).
+        val (dlo, dhi) = (probe.getAs[Long]("lo"), probe.getAs[Long]("hi"))
+        val pre =
+          if (dlo >= 0) {
+            val lo = if (dlo == 0) -(g.seconds - 1) else dlo * g.seconds
+            srcRows.where(col("e") >= lo &&
+              col("e") <= dhi * g.seconds + (g.seconds - 1))
+          } else srcRows
+        val recomputedLazy = spec.fold(
+          spec.bucketed(pre, g)
+            .join(dirty, Seq("metric", g.col), "left_semi"), g)
+        // Plan-audit hook: the registered queries return checkpointed
+        // frames (their stores are temp-rooted), so the recompute's
+        // scan-prune/broadcast posture is only visible here — captured
+        // BEFORE the checkpoint below hides the scan. One extra
+        // planning pass, model-free and ms-scale next to the refresh.
+        lastRecomputePlan = recomputedLazy.queryExecution.executedPlan.toString
+        // checkpointed: group-sized, referenced twice (replace +
+        // tombstones' anti-join) — one execution, not two
+        val recomputed = recomputedLazy.localCheckpoint(true)
+        val tombstones = spec.tombstones(
+          dirty.join(recomputed.select("metric", g.col),
+            Seq("metric", g.col), "left_anti"),
+          recomputed, g)
+        // ONE atomic epoch-stamped publish: dirty groups replace, the
+        // insert-only delta partials append, the cursor advances —
+        // all in a single manifest swap (the store keeps an empty
+        // append side schema-bearing)
+        SnapshotStore.upsertAndAppendEpoch(spark,
+          recomputed.unionByName(tombstones), ins,
+          viewRoot, Seq("metric", g.col), srcCur)
       } finally dirty.unpersist()
     } finally ch.unpersist()
   }

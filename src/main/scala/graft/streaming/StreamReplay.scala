@@ -1,36 +1,50 @@
 package graft.streaming
 
-import java.nio.file.Files
+import java.io.File
+import java.nio.file.{Files, Path}
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.streaming.DataStreamWriter
+import org.apache.spark.sql.types.StructType
 
 /** Batch-parity replay harness: runs a *real* Structured Streaming query —
   * file source, micro-batch triggers, watermark, update-mode state store,
-  * checkpointed progress — over a bounded fixture and hands back the final
-  * sink contents as a batch DataFrame, so the streaming subsystem's output
-  * can face the same DuckDB oracle as the batch operators
-  * (the reference's pub/sub path and its recompute loop must agree on the
-  * same retained history — trend-o-meter:316-333,418).
+  * checkpointed progress — over a bounded fixture so the streaming
+  * subsystem's output can face the same DuckDB oracle as the batch
+  * operators (the reference's pub/sub path and its recompute loop must
+  * agree on the same retained history — trend-o-meter:316-333,418).
   *
-  * Replay mechanics, and why each choice is what it is:
+  * Every public replay is a thin caller of ONE driver, whose private
+  * pieces are each defined once:
   *
-  *  - The fixture is cut into `slices` time-ordered single-file chunks,
-  *    written to the source directory oldest-first, and consumed with
-  *    `maxFilesPerTrigger=1` — so the query genuinely runs `slices`
-  *    micro-batches that must merge partial aggregation state across
-  *    triggers (one batch would prove nothing about incremental merge).
-  *  - The watermark horizon must cover the fixture's whole event-time span:
-  *    a replay compresses months of event time into seconds of processing
-  *    time, so any narrower horizon would drop rows that a live stream
-  *    would have accepted on time, and the batch oracle (which has no
-  *    lateness concept) could never match. Lateness/drop semantics are
-  *    exercised separately in StreamingSpec with the production default.
-  *  - The sink appends every update-mode emission tagged with its batch id;
-  *    the final table keeps the LAST emission per key — exactly the keyed
-  *    upsert contract of [[Sinks.lastValueSink]], but distributed (no
-  *    driver-side state), so the harness itself stays 100 TB-shaped.
+  *  - [[stageOrdered]] stages the fixture as ordered single-file slices in
+  *    a flat source dir, consumed with `maxFilesPerTrigger=1` — so the
+  *    query genuinely runs one micro-batch per slice and must merge
+  *    partial state across triggers (one batch would prove nothing about
+  *    incremental merge). Time cuts ([[writeSliceFiles]]: equal event-time
+  *    ranges, plus an optional watermark-flush sentinel) and the CDC
+  *    replay's caller-given batch cut both stage through it.
+  *  - [[run]] starts a `DataStreamWriter` on the replay's own checkpoint,
+  *    drains it and stops it, with the replay's session settings applied
+  *    under a process-wide lock.
+  *  - [[capture]] is the sink of the operator replays: every emission is
+  *    appended tagged with its `batch_id`, and read back as one
+  *    checkpointed frame. Update-mode callers keep the LAST emission per
+  *    key ([[lastEmission]]) — the keyed upsert contract of
+  *    [[Sinks.lastValueSink]], but distributed (no driver-side state).
+  *  - [[drip]] is the sink of the maintenance replays: each trigger hands
+  *    `(batch, id)` to a closure that lands it in a store and refreshes a
+  *    view, so the surface under test is the view, not the emissions.
+  *
+  * The watermark horizon of the operator replays covers the fixture's
+  * whole event-time span: a replay compresses months of event time into
+  * seconds of processing time, so any narrower horizon would drop rows
+  * that a live stream would have accepted on time, and the batch oracle
+  * (which has no lateness concept) could never match. Lateness/drop
+  * semantics are exercised separately in StreamingSpec with the production
+  * default.
   */
 object StreamReplay {
 
@@ -52,29 +66,66 @@ object StreamReplay {
     * fixtures are bounded verification inputs, so memory-backed durability
     * is exactly right; falls back to the system temp dir when /dev/shm is
     * absent. */
-  private lazy val tmpBase: Option[java.nio.file.Path] = {
+  private lazy val tmpBase: Option[Path] = {
     val shm = java.nio.file.Paths.get("/dev/shm")
     if (Files.isDirectory(shm) && Files.isWritable(shm)) Some(shm) else None
   }
 
-  private def newReplayRoot(): java.nio.file.Path = tmpBase match {
-    case Some(base) => Files.createTempDirectory(base, "graft_replay_")
-    case None       => Files.createTempDirectory("graft_replay_")
+  /** Runs `body` on a fresh replay root (`in/` source, `ck/` checkpoint,
+    * `out/` capture, `stage/` scratch) and deletes the root afterwards —
+    * leaking them grew unboundedly across runs (round-6 ADVICE). */
+  private def withRoot[T](body: Path => T): T = {
+    val root = tmpBase match {
+      case Some(base) => Files.createTempDirectory(base, "graft_replay_")
+      case None       => Files.createTempDirectory("graft_replay_")
+    }
+    try body(root) finally deleteRecursively(root.toFile)
   }
 
-  /** Shared replay plumbing: cut `src` (any relation with a `ts`
-    * timestamp column) into `slices` time-ordered single-file chunks,
-    * run `build(stream)` over them as a checkpointed `maxFilesPerTrigger=1`
-    * file stream, and return every sink emission tagged with its
-    * `batch_id`, eagerly localCheckpointed so the temp root can be
-    * deleted before returning. `None` on an empty fixture.
+  private def deleteRecursively(f: File): Unit = {
+    if (f.isDirectory) Option(f.listFiles()).foreach(_.foreach(deleteRecursively))
+    f.delete()
+  }
+
+  /** The one staging function: ONE partitioned write cuts `rows` into the
+    * slices `0 until n` of its int column `sliceCol` (repartition by the
+    * slice id puts each slice in a single task, so each slice is a single
+    * file), then each slice's file moves into the flat source dir `in/`.
     *
-    * Slice boundaries come from the fixture's own span: equal event-time
-    * ranges, written oldest-first so the replay presents data the way a
-    * live transport would. Boundaries land on whole seconds, so rows
-    * sharing an epoch second can never straddle two slices. Empty slices
-    * (skewed fixtures) simply contribute no file and one fewer
-    * micro-batch.
+    * FileStreamSource consumes files in MODIFICATION-TIME order with an
+    * arbitrary tie-break — an out-of-order replay would silently break
+    * every order-dependent stateful twin (derivative/cusum/ewma/decimate
+    * fold later-slice events first) and apply CDC updates before their
+    * inserts. So slice k is stamped k seconds after slice 0: the replay
+    * order is the slice order by construction, not by write-latency luck,
+    * and a failed stamp fails loudly. A partitioned write emits only the
+    * slice values present, so every staged file is non-empty. */
+  private def stageOrdered(rows: DataFrame, sliceCol: String, n: Int,
+                           root: Path): Unit = {
+    val stageDir = root.resolve("stage").toString
+    rows.repartition(n, col(sliceCol)).write.partitionBy(sliceCol).parquet(stageDir)
+    val inDir = Files.createDirectories(root.resolve("in")).toFile
+    val stampBase = System.currentTimeMillis()
+    for {
+      k <- 0 until n
+      (f, i) <- Option(new File(s"$stageDir/$sliceCol=$k").listFiles()).toSeq.flatten
+        .filter(_.getName.endsWith(".parquet")).zipWithIndex
+    } {
+      val dest = new File(inDir, s"slice-$k-$i.parquet")
+      Files.move(f.toPath, dest.toPath)
+      if (!dest.setLastModified(stampBase + k * 1000L))
+        throw new IllegalStateException(
+          s"setLastModified failed for ${dest.getPath}; replay order " +
+            "would fall back to nondeterministic write-latency order")
+    }
+  }
+
+  /** Time cut: `src` (any relation with a `ts` timestamp column) in
+    * `slices` equal event-time ranges of the fixture's own span, staged
+    * oldest-first. Boundaries land on whole seconds, so rows sharing an
+    * epoch second never straddle two slices; empty slices (skewed
+    * fixtures) contribute no file and one fewer micro-batch. False on an
+    * empty fixture (nothing staged).
     *
     * `flush`: optional watermark-pusher for APPEND-mode windowed
     * aggregations — given the fixture's max epoch second, returns a
@@ -86,71 +137,8 @@ object StreamReplay {
     * caller needs no keyed-upsert dedup, and state drains instead of
     * accumulating. The sentinel's own window never closes; callers
     * filter its key out. */
-  private def sliceAndReplay(src: DataFrame, schema: String, slices: Int,
-                             outputMode: String,
-                             build: DataFrame => DataFrame,
-                             flush: Option[Long => DataFrame] = None): Option[DataFrame] = {
-    val spark = src.sparkSession
-    val root = newReplayRoot()
-    val inDir = root.resolve("in").toString
-    val outDir = root.resolve("out").toString
-    val ckDir = root.resolve("ck").toString
-    try {
-      if (!writeSliceFiles(src, slices, root, inDir, flush)) return None
-
-      val stream = spark.readStream
-        .schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(inDir)
-
-      // The replay's state is fixture-sized, but every stateful stage
-      // opens, updates, and commits ONE state store per shuffle partition
-      // per micro-batch — at the session's production setting (32) that is
-      // ~32 × slices × stages near-empty store commits of pure fixed
-      // overhead. The partition count is a physical knob (keyed semantics
-      // and per-key ordering are partition-count-independent), so the
-      // harness pins a small one for the stream's lifetime; a fresh
-      // checkpoint per replay means no stored-partitioning conflict.
-      val prevShuffle = spark.conf.get("spark.sql.shuffle.partitions")
-      spark.conf.set("spark.sql.shuffle.partitions", "8")
-      // the sink schema is in-hand at the first emission — capturing it
-      // saves the read-back's footer-sample schema-inference job (one
-      // whole Spark job per replay, guide §1.2: fewer passes)
-      @volatile var sinkSchema: org.apache.spark.sql.types.StructType = null
-      try {
-        val query = build(stream)
-          .writeStream
-          .outputMode(outputMode)
-          .option("checkpointLocation", ckDir)
-          .foreachBatch { (batch: DataFrame, id: Long) =>
-            val tagged = batch.withColumn("batch_id", lit(id))
-            if (sinkSchema == null) sinkSchema = tagged.schema
-            tagged.write.mode("append").parquet(outDir)
-          }
-          .start()
-        try query.processAllAvailable()
-        finally query.stop()
-      } finally spark.conf.set("spark.sql.shuffle.partitions", prevShuffle)
-
-      // Eager localCheckpoint detaches the result from the temp parquet
-      // files so the whole replay root can be deleted in the finally —
-      // block-manager durability is plenty for a bounded replay harness.
-      val reader =
-        if (sinkSchema != null) spark.read.schema(sinkSchema)
-        else spark.read
-      Some(reader.parquet(outDir).localCheckpoint(true))
-    } finally deleteRecursively(root.toFile)
-  }
-
-  /** The slice-staging half of [[sliceAndReplay]], reusable by replays
-    * whose SINK is the surface under test (so foreachBatch capture doesn't
-    * apply): cut `src` (any relation with a `ts` timestamp column) into
-    * `slices` time-ordered single-file chunks under `inDir`, modification-
-    * time-stamped so FileStreamSource replays them in slice order. Returns
-    * false when the fixture is empty (nothing staged). */
-  private def writeSliceFiles(src: DataFrame, slices: Int,
-                              root: java.nio.file.Path, inDir: String,
-                              flush: Option[Long => DataFrame]): Boolean = {
+  private def writeSliceFiles(src: DataFrame, slices: Int, root: Path,
+                              flush: Option[Long => DataFrame] = None): Boolean = {
     // The source pipeline can itself be expensive (the tie-free slice
     // is a full window over the series) and is needed by BOTH the
     // bounds probe and the slice write — pin it once instead of
@@ -159,63 +147,152 @@ object StreamReplay {
     val pinned = src.localCheckpoint(true)
     val bounds = pinned.agg(min(col("ts").cast("long")).as("lo"),
       max(col("ts").cast("long")).as("hi")).head()
-    // Empty fixture: nothing to replay — the caller builds its empty
-    // result with the exact output schema instead of NPE-ing on the
-    // null bounds.
+    // Empty fixture: the caller builds its empty result with the exact
+    // output schema instead of NPE-ing on the null bounds.
     if (bounds.isNullAt(0)) return false
     val (lo, hi) = (bounds.getLong(0), bounds.getLong(1))
     val span = math.max(1L, hi - lo + 1)
-    // ONE partitioned write job cuts all slices (vs the original one
-    // scan+write per slice — at 3 slices that tripled the fixture
-    // scans): repartition by the slice id puts each slice in a single
-    // task, partitionBy writes it as a single file under __slice=k/.
-    val stageDir = root.resolve("stage").toString
-    val sliceExpr = least(lit(slices - 1),
+    val sliced = pinned.withColumn("__slice", least(lit(slices - 1),
       floor((col("ts").cast("long") - lit(lo)) * lit(slices.toLong) / lit(span)))
-      .cast("int")
-    pinned.withColumn("__slice", sliceExpr)
-      .repartition(slices, col("__slice"))
-      .write.partitionBy("__slice").parquet(stageDir)
-    // FileStreamSource consumes files in MODIFICATION-TIME order with an
-    // arbitrary tie-break — an out-of-order replay would silently break
-    // every order-dependent stateful twin (derivative/cusum/ewma/
-    // decimate fold later-slice events first). Move each slice's file
-    // into the flat source dir with a strictly increasing modTime so
-    // the replay order is the slice order by construction, not by
-    // write-latency luck.
-    val stampBase = System.currentTimeMillis()
-    Files.createDirectories(java.nio.file.Paths.get(inDir))
-    (0 until slices).foreach { k =>
-      val sliceDir = new java.io.File(s"$stageDir/__slice=$k")
-      Option(sliceDir.listFiles()).toSeq.flatten
-        .filter(_.getName.endsWith(".parquet")).zipWithIndex.foreach {
-          case (f, i) =>
-            val dest = new java.io.File(inDir, s"slice-$k-$i.parquet")
-            Files.move(f.toPath, dest.toPath)
-            // A failed stamp silently re-introduces write-latency-ordered
-            // pickup — the exact nondeterminism the stamping kills. Fail
-            // loudly instead of letting an out-of-order replay corrupt an
-            // order-dependent stateful parity row downstream.
-            if (!dest.setLastModified(stampBase + k * 1000L))
-              throw new IllegalStateException(
-                s"setLastModified failed for ${dest.getPath}; replay order " +
-                  "would fall back to nondeterministic write-latency order")
-        }
-    }
-    flush.foreach { mk =>
-      val flushStage = root.resolve("flush").toString
-      mk(hi).coalesce(1).write.parquet(flushStage)
-      val f = Option(new java.io.File(flushStage).listFiles()).toSeq.flatten
-        .filter(_.getName.endsWith(".parquet")).head
-      val dest = new java.io.File(inDir, s"slice-$slices-flush.parquet")
-      Files.move(f.toPath, dest.toPath)
-      if (!dest.setLastModified(stampBase + slices * 1000L))
-        throw new IllegalStateException(
-          s"setLastModified failed for ${dest.getPath}; the flush sentinel " +
-            "must be the LAST file or append-mode windows close early")
-    }
+      .cast("int"))
+    stageOrdered(flush.fold(sliced)(mk =>
+        sliced.unionByName(mk(hi).withColumn("__slice", lit(slices)))),
+      "__slice", slices + flush.size, root)
     true
   }
+
+  private def fileStream(spark: SparkSession, schema: StructType,
+                         root: Path): DataFrame =
+    spark.readStream.schema(schema).option("maxFilesPerTrigger", 1)
+      .parquet(root.resolve("in").toString)
+
+  private val ShufflePartitions = "spark.sql.shuffle.partitions"
+  private val StateStoreProvider = "spark.sql.streaming.stateStore.providerClass"
+  private val RocksDbProvider =
+    "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
+
+  /** Guards [[run]]'s save→restore of the caller's session settings. */
+  private object SessionSettingsLock
+
+  /** The one run step: start `writer` on the replay's own checkpoint,
+    * drain it, stop it — with the replay's session settings applied and
+    * then restored to the caller's values.
+    *
+    * The settings: shuffle partitions = 8, because the replay's state is
+    * fixture-sized but every stateful stage opens, updates and commits
+    * ONE state store per shuffle partition per micro-batch (at the
+    * session's production setting that is ~32 × slices × stages
+    * near-empty commits of pure fixed overhead; the count is a physical
+    * knob, and a fresh checkpoint per replay means no stored-partitioning
+    * conflict); plus the RocksDB state-store provider when `rocksDb` asks
+    * for it (required by `transformWithState` processors).
+    *
+    * The settings span start→stop. Spark's `StreamExecution` clones the
+    * caller's session when the query is constructed
+    * (`sparkSessionForStream`), so the stream's own partitions and
+    * provider are fixed at `start()`; the rest of the span exists only
+    * for the per-trigger closures, which refresh views on the CALLER's
+    * session. Narrowing the span would change those refresh plans.
+    *
+    * One process-wide lock spans save→restore: two overlapping replays
+    * would otherwise interleave their saves and restores and could leave
+    * the caller's session at 8 for good. Replays never nest — a
+    * per-trigger closure runs on the stream's thread while the caller
+    * holds the lock, so a closure that started a replay would deadlock. */
+  private def run(spark: SparkSession, writer: DataStreamWriter[Row],
+                  root: Path, rocksDb: Boolean = false): Unit =
+    SessionSettingsLock.synchronized {
+      val conf = spark.conf
+      val settings = (ShufflePartitions -> "8") +:
+        (if (rocksDb) Seq(StateStoreProvider -> RocksDbProvider) else Nil)
+      val saved = settings.map { case (k, _) => k -> conf.getOption(k) }
+      settings.foreach { case (k, v) => conf.set(k, v) }
+      try {
+        val query = writer
+          .option("checkpointLocation", root.resolve("ck").toString).start()
+        try query.processAllAvailable()
+        finally query.stop()
+      } finally saved.foreach {
+        case (k, Some(v)) => conf.set(k, v)
+        case (k, None)    => conf.unset(k)
+      }
+    }
+
+  /** The one tagged capture: run `stream` in `outputMode`, appending every
+    * emission tagged with its `batch_id`, and read them back eagerly
+    * localCheckpointed so the replay root can be deleted before returning
+    * (block-manager durability is plenty for a bounded replay). The sink
+    * schema is captured at the first emission, which saves the read-back's
+    * schema-inference job. `None` when nothing was emitted: there is no
+    * schema and no directory to read. */
+  private def capture(stream: DataFrame, outputMode: String, root: Path,
+                      rocksDb: Boolean = false): Option[DataFrame] = {
+    val spark = stream.sparkSession
+    val outDir = root.resolve("out").toString
+    @volatile var sinkSchema: StructType = null
+    run(spark, stream.writeStream.outputMode(outputMode)
+      .foreachBatch { (batch: DataFrame, id: Long) =>
+        val tagged = batch.withColumn("batch_id", lit(id))
+        if (sinkSchema == null) sinkSchema = tagged.schema
+        tagged.write.mode("append").parquet(outDir)
+      }, root, rocksDb)
+    Option(sinkSchema).map(spark.read.schema(_).parquet(outDir).localCheckpoint(true))
+  }
+
+  /** Operator replay: time-cut `src` (staged with the stream schema
+    * `schema`), run `build(stream)` into the [[capture]] and `finish` the
+    * tagged emissions. An empty fixture, or one that emitted nothing,
+    * finishes `build` over the empty input instead — the exact output
+    * schema, no read of a directory that was never written. */
+  private def sliceAndReplay(src: DataFrame, schema: String, slices: Int,
+                             outputMode: String,
+                             build: DataFrame => DataFrame,
+                             flush: Option[Long => DataFrame] = None,
+                             rocksDb: Boolean = false)
+                            (finish: DataFrame => DataFrame): DataFrame = {
+    val appended = withRoot { root =>
+      if (!writeSliceFiles(src, slices, root, flush)) None
+      else capture(build(fileStream(src.sparkSession, StructType.fromDDL(schema), root)),
+        outputMode, root, rocksDb)
+    }
+    finish(appended.getOrElse(build(src.limit(0)).withColumn("batch_id", lit(0L))))
+  }
+
+  /** Update-mode finish: the row for a key is its last emission. Within
+    * one batch an aggregation emits at most one row per key, so batch_id
+    * alone is a total order per key. */
+  private def lastEmission(keys: String*)(appended: DataFrame): DataFrame =
+    appended
+      .withColumn("rn", row_number().over(
+        Window.partitionBy(keys.map(col): _*).orderBy(col("batch_id").desc)))
+      .where(col("rn") === 1)
+      .drop("rn", "batch_id")
+
+  /** Append-mode finish: emissions are final, so the sink rows minus the
+    * batch tag ARE the result. */
+  private def emissions(appended: DataFrame): DataFrame = appended.drop("batch_id")
+
+  /** The one drip: `stage` files whose rows read back as `rows`' schema
+    * (false: empty fixture, nothing to do), then each trigger hands
+    * `(batch, id)` to `perTrigger`. A stateless file stream runs no
+    * no-data micro-batch and every staged file is non-empty, so every
+    * batch carries rows. */
+  private def drip(rows: DataFrame, stage: Path => Boolean)
+                  (perTrigger: (DataFrame, Long) => Unit): Unit =
+    withRoot { root =>
+      if (stage(root)) {
+        val spark = rows.sparkSession
+        run(spark, fileStream(spark, rows.schema, root).writeStream
+          .foreachBatch(perTrigger), root)
+      }
+    }
+
+  /** A drip of `rows` cut by time, event time taken from the epoch-second
+    * column `orderCol`. */
+  private def timeDrip(rows: DataFrame, orderCol: String, slices: Int)
+                      (perTrigger: (DataFrame, Long) => Unit): Unit =
+    drip(rows, writeSliceFiles(
+      rows.withColumn("ts", timestamp_seconds(col(orderCol))), slices, _))(perTrigger)
 
   /** PUBLISH-side replay: drive `msgs` (`ts TIMESTAMP, channel STRING,
     * value STRING`) through a real checkpointed micro-batched streaming
@@ -225,32 +302,14 @@ object StreamReplay {
     * the offset/admission read path. The caller reads `logRoot` back with
     * the batch `topiclog` source to face its oracle. */
   def topicPublishReplay(msgs: DataFrame, logRoot: String,
-                         slices: Int = defaultSlices): Unit = {
-    val spark = msgs.sparkSession
-    val root = newReplayRoot()
-    val inDir = root.resolve("in").toString
-    val ckDir = root.resolve("ck").toString
-    try {
-      if (!writeSliceFiles(msgs, slices, root, inDir, None)) return
-      // Same physical-knob pinning rationale as sliceAndReplay: fewer
-      // shuffle partitions = fewer near-empty staged segments per epoch.
-      val prevShuffle = spark.conf.get("spark.sql.shuffle.partitions")
-      spark.conf.set("spark.sql.shuffle.partitions", "8")
-      try {
-        val query = spark.readStream
-          .schema("ts TIMESTAMP, channel STRING, value STRING")
-          .option("maxFilesPerTrigger", 1)
-          .parquet(inDir)
-          .select("channel", "value")
-          .writeStream.format("topiclog")
-          .option("path", logRoot)
-          .option("checkpointLocation", ckDir)
-          .outputMode("append")
-          .start()
-        try query.processAllAvailable()
-        finally query.stop()
-      } finally spark.conf.set("spark.sql.shuffle.partitions", prevShuffle)
-    } finally deleteRecursively(root.toFile)
+                         slices: Int = defaultSlices): Unit = withRoot { root =>
+    if (writeSliceFiles(msgs, slices, root)) {
+      val spark = msgs.sparkSession
+      run(spark, fileStream(spark, StructType.fromDDL("channel STRING, value STRING"), root)
+        .writeStream.format("topiclog")
+        .option("path", logRoot)
+        .outputMode("append"), root)
+    }
   }
 
   /** STREAMING-IVM replay: drive the series `(metric, e, value)` through
@@ -266,41 +325,9 @@ object StreamReplay {
     * is a view no-op. */
   def snapshotIngestReplay(series: DataFrame, srcRoot: String,
                            viewRoot: String,
-                           slices: Int = defaultSlices): Unit = {
-    val spark = series.sparkSession
-    val src = series.select(timestamp_seconds(col("e")).as("ts"),
-      col("metric"), col("e"), col("value"))
-    val root = newReplayRoot()
-    val inDir = root.resolve("in").toString
-    val ckDir = root.resolve("ck").toString
-    try {
-      if (!writeSliceFiles(src, slices, root, inDir, None)) return
-      val prevShuffle = spark.conf.get("spark.sql.shuffle.partitions")
-      spark.conf.set("spark.sql.shuffle.partitions", "8")
-      try {
-        val query = spark.readStream
-          .schema("ts TIMESTAMP, metric STRING, e BIGINT, value DOUBLE")
-          .option("maxFilesPerTrigger", 1)
-          .parquet(inDir)
-          .select("metric", "e", "value")
-          .writeStream
-          .option("checkpointLocation", ckDir)
-          .foreachBatch { (batch: DataFrame, id: Long) =>
-            // no-data triggers publish nothing (an empty version would be
-            // harmless but noisy); a skipped epoch id is fine — ids need
-            // only be replay-stable, not dense
-            if (!batch.isEmpty) {
-              graft.sources.SnapshotStore.appendEpoch(batch, srcRoot, id)
-              graft.sources.RollupView.refresh(spark, srcRoot, viewRoot)
-            }
-            ()
-          }
-          .start()
-        try query.processAllAvailable()
-        finally query.stop()
-      } finally spark.conf.set("spark.sql.shuffle.partitions", prevShuffle)
-    } finally deleteRecursively(root.toFile)
-  }
+                           slices: Int = defaultSlices): Unit =
+    viewIngestReplay(series.select("metric", "e", "value"), "e", srcRoot,
+      graft.sources.RollupView.refresh(_, srcRoot, viewRoot), slices)
 
   /** Streaming maintenance of the inverted SEARCH index: documents
     * arrive through a real checkpointed file stream and every micro-batch
@@ -310,37 +337,10 @@ object StreamReplay {
     * the one-shot build. The caller serves queries from `idxRoot` after
     * the drain; parity against the full-scan oracle is the registry's. */
   def searchIndexIngestReplay(docs: DataFrame, idxRoot: String,
-                              slices: Int = defaultSlices): Unit = {
-    val spark = docs.sparkSession
-    val src = docs.select(timestamp_seconds(col("doc_id")).as("ts"),
-      col("doc_id"), col("text"))
-    val root = newReplayRoot()
-    val inDir = root.resolve("in").toString
-    val ckDir = root.resolve("ck").toString
-    try {
-      if (!writeSliceFiles(src, slices, root, inDir, None)) return
-      val prevShuffle = spark.conf.get("spark.sql.shuffle.partitions")
-      spark.conf.set("spark.sql.shuffle.partitions", "8")
-      try {
-        val query = spark.readStream
-          .schema("ts TIMESTAMP, doc_id BIGINT, text STRING")
-          .option("maxFilesPerTrigger", 1)
-          .parquet(inDir)
-          .select("doc_id", "text")
-          .writeStream
-          .option("checkpointLocation", ckDir)
-          .foreachBatch { (batch: DataFrame, id: Long) =>
-            if (!batch.isEmpty) {
-              graft.sources.SearchIndex.indexEpoch(spark, batch, idxRoot, id)
-            }
-            ()
-          }
-          .start()
-        try query.processAllAvailable()
-        finally query.stop()
-      } finally spark.conf.set("spark.sql.shuffle.partitions", prevShuffle)
-    } finally deleteRecursively(root.toFile)
-  }
+                              slices: Int = defaultSlices): Unit =
+    timeDrip(docs.select("doc_id", "text"), "doc_id", slices) { (batch, id) =>
+      graft.sources.SearchIndex.indexEpoch(docs.sparkSession, batch, idxRoot, id)
+    }
 
   /** Streaming maintenance of a JOIN view: the right side arrives
     * through a real checkpointed file stream (the left stands — the
@@ -365,50 +365,20 @@ object StreamReplay {
         viewRoot, leftKey, rightKey, how),
       slices)
 
-  /** The drip skeleton behind [[joinViewIngestReplay]], with the
-    * per-trigger view refresh abstracted: any maintained view whose
-    * refresh is idempotent under its own cursor (JoinView's packed
-    * cursor, the agg-join views' packed cursor vector) composes with the
-    * epoch-idempotent store append to give crash-convergent streaming
-    * maintenance. */
+  /** The store-and-refresh drip behind [[joinViewIngestReplay]] and
+    * [[snapshotIngestReplay]], with the per-trigger view refresh
+    * abstracted: any maintained view whose refresh is idempotent under
+    * its own cursor (JoinView's packed cursor, the agg-join views' packed
+    * cursor vector) composes with the epoch-idempotent store append to
+    * give crash-convergent streaming maintenance. */
   def viewIngestReplay(rightRows: DataFrame, orderCol: String,
                        rightRoot: String,
-                       refreshView: org.apache.spark.sql.SparkSession => Unit,
-                       slices: Int = defaultSlices): Unit = {
-    val spark = rightRows.sparkSession
-    val cols = rightRows.columns
-    val src = rightRows.withColumn("ts", timestamp_seconds(col(orderCol)))
-    val root = newReplayRoot()
-    val inDir = root.resolve("in").toString
-    val ckDir = root.resolve("ck").toString
-    try {
-      if (!writeSliceFiles(src, slices, root, inDir, None)) return
-      // the staged slice files carry exactly src's columns (written from
-      // src minus the __slice partition key): no inference job needed
-      val schema = src.schema
-      val prevShuffle = spark.conf.get("spark.sql.shuffle.partitions")
-      spark.conf.set("spark.sql.shuffle.partitions", "8")
-      try {
-        val query = spark.readStream
-          .schema(schema)
-          .option("maxFilesPerTrigger", 1)
-          .parquet(inDir)
-          .select(cols.head, cols.tail: _*)
-          .writeStream
-          .option("checkpointLocation", ckDir)
-          .foreachBatch { (batch: DataFrame, id: Long) =>
-            if (!batch.isEmpty) {
-              graft.sources.SnapshotStore.appendEpoch(batch, rightRoot, id)
-              refreshView(spark)
-            }
-            ()
-          }
-          .start()
-        try query.processAllAvailable()
-        finally query.stop()
-      } finally spark.conf.set("spark.sql.shuffle.partitions", prevShuffle)
-    } finally deleteRecursively(root.toFile)
-  }
+                       refreshView: SparkSession => Unit,
+                       slices: Int = defaultSlices): Unit =
+    timeDrip(rightRows, orderCol, slices) { (batch, id) =>
+      graft.sources.SnapshotStore.appendEpoch(batch, rightRoot, id)
+      refreshView(rightRows.sparkSession)
+    }
 
   /** CDC-APPLY replay: drive `batches` — a relation carrying an explicit
     * `__batch` column that partitions it into change batches (inserts AND
@@ -425,65 +395,18 @@ object StreamReplay {
     * produces. */
   def cdcUpsertReplay(rawBatches: DataFrame, keyCols: Seq[String],
                       srcRoot: String, viewRoot: String,
-                      refreshView: (org.apache.spark.sql.SparkSession, String, String) => Int =
+                      refreshView: (SparkSession, String, String) => Int =
                         graft.sources.RollupView.refresh(_, _, _)): Unit = {
     val batches = rawBatches.withColumn("__batch", col("__batch").cast("int"))
-    val spark = batches.sparkSession
-    val root = newReplayRoot()
-    val inDir = root.resolve("in").toString
-    val ckDir = root.resolve("ck").toString
-    try {
-      val nBatches = batches.agg(max(col("__batch"))).head() match {
-        case r if r.isNullAt(0) => return // empty fixture: nothing to apply
-        case r                  => r.getInt(0) + 1
-      }
-      // one partitioned write cuts every batch into a single file; files
-      // move into the flat source dir with strictly increasing modTimes
-      // so the pickup order IS the batch order (same mechanics as
-      // writeSliceFiles, same loud failure if stamping breaks)
-      val stageDir = root.resolve("stage").toString
-      val dataSchema = batches.drop("__batch").schema
-      batches.repartition(nBatches, col("__batch"))
-        .write.partitionBy("__batch").parquet(stageDir)
-      val stampBase = System.currentTimeMillis()
-      Files.createDirectories(java.nio.file.Paths.get(inDir))
-      (0 until nBatches).foreach { k =>
-        val sliceDir = new java.io.File(s"$stageDir/__batch=$k")
-        Option(sliceDir.listFiles()).toSeq.flatten
-          .filter(_.getName.endsWith(".parquet")).zipWithIndex.foreach {
-            case (f, i) =>
-              val dest = new java.io.File(inDir, s"batch-$k-$i.parquet")
-              Files.move(f.toPath, dest.toPath)
-              if (!dest.setLastModified(stampBase + k * 1000L))
-                throw new IllegalStateException(
-                  s"setLastModified failed for ${dest.getPath}; replay " +
-                    "order would fall back to nondeterministic " +
-                    "write-latency order and updates could apply before " +
-                    "their inserts")
-          }
-      }
-      val prevShuffle = spark.conf.get("spark.sql.shuffle.partitions")
-      spark.conf.set("spark.sql.shuffle.partitions", "8")
-      try {
-        val query = spark.readStream
-          .schema(dataSchema)
-          .option("maxFilesPerTrigger", 1)
-          .parquet(inDir)
-          .writeStream
-          .option("checkpointLocation", ckDir)
-          .foreachBatch { (batch: DataFrame, id: Long) =>
-            if (!batch.isEmpty) {
-              graft.sources.SnapshotStore.upsertEpoch(
-                batch.sparkSession, batch, srcRoot, keyCols, id)
-              refreshView(spark, srcRoot, viewRoot)
-            }
-            ()
-          }
-          .start()
-        try query.processAllAvailable()
-        finally query.stop()
-      } finally spark.conf.set("spark.sql.shuffle.partitions", prevShuffle)
-    } finally deleteRecursively(root.toFile)
+    drip(batches.drop("__batch"), root =>
+      batches.agg(max(col("__batch"))).head() match {
+        case r if r.isNullAt(0) => false // empty fixture: nothing to apply
+        case r => stageOrdered(batches, "__batch", r.getInt(0) + 1, root); true
+      }) { (batch, id) =>
+      graft.sources.SnapshotStore.upsertEpoch(
+        batch.sparkSession, batch, srcRoot, keyCols, id)
+      refreshView(batches.sparkSession, srcRoot, viewRoot)
+    }
   }
 
   /** series `(metric, e, value)` → the `(ts, source, metric, value)`
@@ -497,26 +420,12 @@ object StreamReplay {
     * `(metric, minute_start, n, sv, mn, mx)` — the table a batch
     * re-aggregation composes into coarser tiers (the a24 contract). */
   def minuteTierReplay(series: DataFrame, slices: Int = defaultSlices,
-                       watermark: String = "3650 days"): DataFrame = {
-    val src = series.select(col("metric"),
-      timestamp_seconds(col("e")).as("ts"), col("value"))
-    // The watermark horizon must cover the fixture's whole event-time span
-    // (see the object doc); lateness semantics are exercised separately.
-    sliceAndReplay(src, "metric STRING, ts TIMESTAMP, value DOUBLE", slices,
-        "update", StreamOps.minuteTierStream(_, watermark)) match {
-      case None => StreamOps.minuteTierStream(src.limit(0), watermark)
-      case Some(appended) =>
-        // Keyed upsert: the tier row for a (metric, minute) is its last
-        // emission. Within one batch the aggregation emits at most one row
-        // per key, so batch_id alone is a total order per key.
-        val w = Window.partitionBy("metric", "minute_start")
-          .orderBy(col("batch_id").desc)
-        appended
-          .withColumn("rn", row_number().over(w))
-          .where(col("rn") === 1)
-          .drop("rn", "batch_id")
-    }
-  }
+                       watermark: String = "3650 days"): DataFrame =
+    sliceAndReplay(series.select(col("metric"),
+        timestamp_seconds(col("e")).as("ts"), col("value")),
+      "metric STRING, ts TIMESTAMP, value DOUBLE", slices,
+      "update", StreamOps.minuteTierStream(_, watermark))(
+      lastEmission("metric", "minute_start"))
 
   /** Typed view used by the stateful-twin replay wrappers below. */
   private def asStreamSamples(df: DataFrame) =
@@ -545,21 +454,12 @@ object StreamReplay {
     * as [[derivativeReplay]]: open/close pick by min/max(struct(ts, _)),
     * which has no event_id tie-break. */
   def ohlcReplay(series: DataFrame, slices: Int = defaultSlices, width: String = "1 day",
-                 watermark: String = "3650 days"): DataFrame = {
-    val src = series.select(col("metric"),
-      timestamp_seconds(col("e")).as("ts"), col("value"))
-    sliceAndReplay(src, "metric STRING, ts TIMESTAMP, value DOUBLE", slices,
-        "update", StreamOps.ohlcStream(_, width, watermark)) match {
-      case None => StreamOps.ohlcStream(src.limit(0), width, watermark)
-      case Some(appended) =>
-        val w = Window.partitionBy("metric", "bar_start")
-          .orderBy(col("batch_id").desc)
-        appended
-          .withColumn("rn", row_number().over(w))
-          .where(col("rn") === 1)
-          .drop("rn", "batch_id")
-    }
-  }
+                 watermark: String = "3650 days"): DataFrame =
+    sliceAndReplay(series.select(col("metric"),
+        timestamp_seconds(col("e")).as("ts"), col("value")),
+      "metric STRING, ts TIMESTAMP, value DOUBLE", slices,
+      "update", StreamOps.ohlcStream(_, width, watermark))(
+      lastEmission("metric", "bar_start"))
 
   /** Replays a documents relation `(doc_id, text)` through
     * [[StreamOps.nearDupCandidatesStream]] and returns the DISTINCT
@@ -572,17 +472,13 @@ object StreamReplay {
     * only defined when nothing evicts (the TTL-eviction behavior is
     * pinned separately in StreamingSpec). */
   def nearDupCandidatesReplay(docs: DataFrame, k: Int = 64, bands: Int = 16,
-                              slices: Int = defaultSlices): DataFrame = {
-    val src = docs.select(timestamp_seconds(col("doc_id")).as("ts"),
-      col("doc_id"), col("text"))
-    val build = (df: DataFrame) =>
-      StreamOps.nearDupCandidatesStream(df, k, bands,
-        ttl = "36500 days", watermark = "0 seconds").toDF()
-    sliceAndReplay(src, "ts TIMESTAMP, doc_id BIGINT, text STRING", slices,
-        "append", build)
-      .map(_.select("doc_a", "doc_b").distinct())
-      .getOrElse(build(src.limit(0)).select("doc_a", "doc_b"))
-  }
+                              slices: Int = defaultSlices): DataFrame =
+    sliceAndReplay(docs.select(timestamp_seconds(col("doc_id")).as("ts"),
+        col("doc_id"), col("text")),
+      "ts TIMESTAMP, doc_id BIGINT, text STRING", slices, "append",
+      StreamOps.nearDupCandidatesStream(_, k, bands,
+        ttl = "36500 days", watermark = "0 seconds").toDF())(
+      _.select("doc_a", "doc_b").distinct())
 
   /** Replays a new-batch documents relation `(doc_id, text)` through
     * [[StreamOps.incrementalDedupStream]] against a static corpus and
@@ -595,17 +491,12 @@ object StreamReplay {
     * winners flip). Winner-by-first-arrival == min-id is still pinned,
     * by StreamingSpec under controlled cross-batch arrival. */
   def incrementalDedupReplay(batchDocs: DataFrame, corpus: DataFrame,
-                             slices: Int = defaultSlices): DataFrame = {
-    val src = batchDocs.select(timestamp_seconds(col("doc_id")).as("ts"),
-      col("doc_id"), col("text"))
-    val build = (df: DataFrame) =>
-      StreamOps.incrementalDedupStream(df, corpus, watermark = "36500 days")
-    val key = md5(graft.operators.TextOps.normalized(col("text")))
-    sliceAndReplay(src, "ts TIMESTAMP, doc_id BIGINT, text STRING", slices,
-        "append", build)
-      .map(_.select(key.as("dup_key")))
-      .getOrElse(build(src.limit(0)).select(key.as("dup_key")))
-  }
+                             slices: Int = defaultSlices): DataFrame =
+    sliceAndReplay(batchDocs.select(timestamp_seconds(col("doc_id")).as("ts"),
+        col("doc_id"), col("text")),
+      "ts TIMESTAMP, doc_id BIGINT, text STRING", slices, "append",
+      StreamOps.incrementalDedupStream(_, corpus, watermark = "36500 days"))(
+      _.select(md5(graft.operators.TextOps.normalized(col("text"))).as("dup_key")))
 
   /** Replays the events relation `(metric, e, user_id)` through
     * [[StreamOps.funnelStream]] and returns the final per-user funnel
@@ -614,19 +505,13 @@ object StreamReplay {
     * standing — no batch-id dedup needed. Users that never reach step 1
     * emit nothing and are correctly absent. */
   def funnelReplay(series: DataFrame, steps: Seq[String], windowSeconds: Long,
-                   slices: Int = defaultSlices): DataFrame = {
-    val src = series.select(timestamp_seconds(col("e")).as("ts"),
-      col("user_id"), col("metric"))
-    val build = (df: DataFrame) =>
-      StreamOps.funnelStream(df, steps, windowSeconds,
-        ttl = "36500 days", watermark = "0 seconds").toDF()
-    sliceAndReplay(src, "ts TIMESTAMP, user_id BIGINT, metric STRING", slices,
-        "update", build) match {
-      case None => build(src.limit(0))
-      case Some(appended) =>
-        appended.groupBy("user_id").agg(max(col("level")).as("level"))
-    }
-  }
+                   slices: Int = defaultSlices): DataFrame =
+    sliceAndReplay(series.select(timestamp_seconds(col("e")).as("ts"),
+        col("user_id"), col("metric")),
+      "ts TIMESTAMP, user_id BIGINT, metric STRING", slices, "update",
+      StreamOps.funnelStream(_, steps, windowSeconds,
+        ttl = "36500 days", watermark = "0 seconds").toDF())(
+      _.groupBy("user_id").agg(max(col("level")).as("level")))
 
   /** Replays a documents relation through the streaming quality gate —
     * [[graft.operators.QualityModel.score]] over a checkpointed stream
@@ -638,16 +523,12 @@ object StreamReplay {
     * plumbing, and its parity row faces the SAME oracle as the batch
     * scorer. */
   def qualityScoreReplay(docs: DataFrame, weights: Array[Double],
-                         slices: Int = defaultSlices): DataFrame = {
-    val src = docs.select(timestamp_seconds(col("doc_id")).as("ts"),
-      col("doc_id"), col("text"))
-    val build = (df: DataFrame) =>
-      graft.operators.QualityModel.score(df.select("doc_id", "text"), weights)
-    sliceAndReplay(src, "ts TIMESTAMP, doc_id BIGINT, text STRING", slices,
-        "append", build)
-      .map(_.drop("batch_id"))
-      .getOrElse(build(src.limit(0)))
-  }
+                         slices: Int = defaultSlices): DataFrame =
+    sliceAndReplay(docs.select(timestamp_seconds(col("doc_id")).as("ts"),
+        col("doc_id"), col("text")),
+      "ts TIMESTAMP, doc_id BIGINT, text STRING", slices, "append",
+      df => graft.operators.QualityModel.score(df.select("doc_id", "text"), weights))(
+      emissions)
 
   /** Replays the documents relation through the streaming audio feature
     * gate — [[graft.operators.AudioOps.windowEnergy]] over a checkpointed
@@ -656,67 +537,49 @@ object StreamReplay {
     * equal the batch features row-for-row, and the parity row faces the
     * SAME oracle as the batch leg. Proves the ingest-side plumbing for a
     * media stream whose feature extraction runs at the edge of arrival. */
-  def audioFeaturesReplay(docs: DataFrame, slices: Int = defaultSlices): DataFrame = {
-    val src = docs.select(timestamp_seconds(col("doc_id")).as("ts"),
-      col("doc_id"))
-    val build = (df: DataFrame) =>
-      graft.operators.AudioOps.windowEnergy(
-        graft.operators.AudioOps.withAudioPayload(df.select("doc_id"))).toDF()
-    sliceAndReplay(src, "ts TIMESTAMP, doc_id BIGINT", slices,
-        "append", build)
-      .map(_.drop("batch_id"))
-      .getOrElse(build(src.limit(0)))
-  }
+  def audioFeaturesReplay(docs: DataFrame, slices: Int = defaultSlices): DataFrame =
+    sliceAndReplay(docs.select(timestamp_seconds(col("doc_id")).as("ts"), col("doc_id")),
+      "ts TIMESTAMP, doc_id BIGINT", slices, "append",
+      df => graft.operators.AudioOps.windowEnergy(
+        graft.operators.AudioOps.withAudioPayload(df.select("doc_id"))).toDF())(
+      emissions)
 
   /** [[audioFeaturesReplay]]'s video sibling: render → real AVI container
     * walk → stride-sampled frame features per micro-batch (stateless
     * append, the quality-gate posture); faces video_frame_sample's
     * oracle verbatim. */
   def videoFeaturesReplay(docs: DataFrame, stride: Int = 2,
-                          slices: Int = defaultSlices): DataFrame = {
-    val src = docs.select(timestamp_seconds(col("doc_id")).as("ts"),
-      col("doc_id"))
-    val build = (df: DataFrame) =>
-      graft.operators.VideoOps.frameSample(
+                          slices: Int = defaultSlices): DataFrame =
+    sliceAndReplay(docs.select(timestamp_seconds(col("doc_id")).as("ts"), col("doc_id")),
+      "ts TIMESTAMP, doc_id BIGINT", slices, "append",
+      df => graft.operators.VideoOps.frameSample(
         graft.operators.VideoOps.withVideoPayload(df.select("doc_id")),
-        stride).toDF()
-    sliceAndReplay(src, "ts TIMESTAMP, doc_id BIGINT", slices,
-        "append", build)
-      .map(_.drop("batch_id"))
-      .getOrElse(build(src.limit(0)))
-  }
+        stride).toDF())(
+      emissions)
 
   /** [[nearDupCandidatesReplay]]'s SimHash sibling: replays
     * [[StreamOps.simHashPairsStream]] and returns the DISTINCT matched
     * pair set (same synthetic-time / retain-everything posture). */
   def simHashPairsReplay(docs: DataFrame, maxHamming: Int = 3,
-                         slices: Int = defaultSlices): DataFrame = {
-    val src = docs.select(timestamp_seconds(col("doc_id")).as("ts"),
-      col("doc_id"), col("text"))
-    val build = (df: DataFrame) =>
-      StreamOps.simHashPairsStream(df, maxHamming,
-        ttl = "36500 days", watermark = "0 seconds").toDF()
-    sliceAndReplay(src, "ts TIMESTAMP, doc_id BIGINT, text STRING", slices,
-        "append", build)
-      .map(_.select("doc_a", "doc_b").distinct())
-      .getOrElse(build(src.limit(0)).select("doc_a", "doc_b"))
-  }
+                         slices: Int = defaultSlices): DataFrame =
+    sliceAndReplay(docs.select(timestamp_seconds(col("doc_id")).as("ts"),
+        col("doc_id"), col("text")),
+      "ts TIMESTAMP, doc_id BIGINT, text STRING", slices, "append",
+      StreamOps.simHashPairsStream(_, maxHamming,
+        ttl = "36500 days", watermark = "0 seconds").toDF())(
+      _.select("doc_a", "doc_b").distinct())
 
   /** [[nearDupCandidatesReplay]]'s embedding sibling: replays
     * [[StreamOps.embeddingNearDupStream]] over a `(vec_id, embedding)`
     * relation and returns the DISTINCT candidate pair set (synthetic time
     * from vec_id, retain-everything TTL). */
-  def embeddingNearDupReplay(vectors: DataFrame, slices: Int = defaultSlices): DataFrame = {
-    val src = vectors.select(timestamp_seconds(col("vec_id")).as("ts"),
-      col("vec_id"), col("embedding"))
-    val build = (df: DataFrame) =>
-      StreamOps.embeddingNearDupStream(df,
-        ttl = "36500 days", watermark = "0 seconds").toDF()
-    sliceAndReplay(src, "ts TIMESTAMP, vec_id BIGINT, embedding ARRAY<FLOAT>",
-        slices, "append", build)
-      .map(_.select("vec_a", "vec_b").distinct())
-      .getOrElse(build(src.limit(0)).select("vec_a", "vec_b"))
-  }
+  def embeddingNearDupReplay(vectors: DataFrame, slices: Int = defaultSlices): DataFrame =
+    sliceAndReplay(vectors.select(timestamp_seconds(col("vec_id")).as("ts"),
+        col("vec_id"), col("embedding")),
+      "ts TIMESTAMP, vec_id BIGINT, embedding ARRAY<FLOAT>", slices, "append",
+      StreamOps.embeddingNearDupStream(_,
+        ttl = "36500 days", watermark = "0 seconds").toDF())(
+      _.select("vec_a", "vec_b").distinct())
 
   /** Replays the canonical series relation `(metric, e, value)` through
     * [[StreamOps.quantileTierStream]] and returns the final per-minute GK
@@ -739,8 +602,6 @@ object StreamReplay {
   def quantileTierReplay(series: DataFrame, eps: Double,
                          slices: Int = defaultSlices): DataFrame = {
     val spark = series.sparkSession
-    val src = series.select(col("metric"),
-      timestamp_seconds(col("e")).as("ts"), col("value"))
     // Delay covers slice-boundary stragglers (boundaries land on whole
     // seconds; 2 minutes is the production default and orders of
     // magnitude more than a boundary can misorder). The sentinel sits
@@ -753,13 +614,12 @@ object StreamReplay {
       lit(sentinel).as("metric"),
       timestamp_seconds(lit(hi + 600L)).as("ts"),
       lit(0.0).as("value"))
-    sliceAndReplay(src, "metric STRING, ts TIMESTAMP, value DOUBLE", slices,
-        "append", StreamOps.quantileTierStream(_, eps, wmDelay),
-        flush = Some(mkFlush)) match {
-      case None => StreamOps.quantileTierStream(src.limit(0), eps, wmDelay)
-      case Some(appended) =>
-        appended.where(col("metric") =!= sentinel).drop("batch_id")
-    }
+    sliceAndReplay(series.select(col("metric"),
+        timestamp_seconds(col("e")).as("ts"), col("value")),
+      "metric STRING, ts TIMESTAMP, value DOUBLE", slices,
+      "append", StreamOps.quantileTierStream(_, eps, wmDelay),
+      flush = Some(mkFlush))(
+      _.where(col("metric") =!= sentinel).drop("batch_id"))
   }
 
   /** Replays the series relation `(metric, e, user_id)` through
@@ -767,21 +627,12 @@ object StreamReplay {
     * sketch tier `(metric, minute_start, sk)` — same keyed-upsert contract
     * as [[minuteTierReplay]]. */
   def hllTierReplay(series: DataFrame, slices: Int = defaultSlices,
-                    watermark: String = "3650 days"): DataFrame = {
-    val src = series.select(col("metric"),
-      timestamp_seconds(col("e")).as("ts"), col("user_id"))
-    sliceAndReplay(src, "metric STRING, ts TIMESTAMP, user_id BIGINT", slices,
-        "update", StreamOps.hllTierStream(_, watermark)) match {
-      case None => StreamOps.hllTierStream(src.limit(0), watermark)
-      case Some(appended) =>
-        val w = Window.partitionBy("metric", "minute_start")
-          .orderBy(col("batch_id").desc)
-        appended
-          .withColumn("rn", row_number().over(w))
-          .where(col("rn") === 1)
-          .drop("rn", "batch_id")
-    }
-  }
+                    watermark: String = "3650 days"): DataFrame =
+    sliceAndReplay(series.select(col("metric"),
+        timestamp_seconds(col("e")).as("ts"), col("user_id")),
+      "metric STRING, ts TIMESTAMP, user_id BIGINT", slices,
+      "update", StreamOps.hllTierStream(_, watermark))(
+      lastEmission("metric", "minute_start"))
 
   /** Replays a documents relation `(doc_id, lang, text)` through
     * [[StreamOps.topTermsStream]] and returns the FINAL per-lang MG
@@ -790,21 +641,12 @@ object StreamReplay {
     * Synthetic event time from doc_id (as the other document replays), so
     * summaries genuinely accumulate across micro-batch boundaries. */
   def topTermsReplay(docs: DataFrame, cap: Int = 256,
-                     slices: Int = defaultSlices): DataFrame = {
-    val src = docs.select(timestamp_seconds(col("doc_id")).as("ts"),
-      col("doc_id"), col("lang"), col("text"))
-    val build = (df: DataFrame) => StreamOps.topTermsStream(df, cap)
-    sliceAndReplay(src, "ts TIMESTAMP, doc_id BIGINT, lang STRING, text STRING",
-        slices, "update", build) match {
-      case None => build(src.limit(0))
-      case Some(appended) =>
-        val w = Window.partitionBy("lang").orderBy(col("batch_id").desc)
-        appended
-          .withColumn("rn", row_number().over(w))
-          .where(col("rn") === 1)
-          .drop("rn", "batch_id")
-    }
-  }
+                     slices: Int = defaultSlices): DataFrame =
+    sliceAndReplay(docs.select(timestamp_seconds(col("doc_id")).as("ts"),
+        col("doc_id"), col("lang"), col("text")),
+      "ts TIMESTAMP, doc_id BIGINT, lang STRING, text STRING", slices, "update",
+      StreamOps.topTermsStream(_, cap))(
+      lastEmission("lang"))
 
   /** Replays the series through [[StreamOps.decimateStream]] (tie-free
     * input contract as [[derivativeReplay]]; the stream's oldest→newest
@@ -820,27 +662,14 @@ object StreamReplay {
     * hand the stream transformation as a closure (typed ops can
     * `.as[StreamSample]` inside it). Emissions are final (append mode),
     * so the sink rows minus the batch tag ARE the result.
-    * `rocksDb = true` pins the RocksDB state store provider for the
-    * replay (required by `transformWithState` processors) and restores
-    * the previous session setting afterwards. */
+    * `rocksDb = true` runs the replay on the RocksDB state store provider
+    * (required by `transformWithState` processors); the caller's session
+    * setting is restored afterwards. */
   def samplesReplay(series: DataFrame, slices: Int = defaultSlices,
                     rocksDb: Boolean = false)
-                   (build: DataFrame => DataFrame): DataFrame = {
-    val src = asSamples(series)
-    val conf = series.sparkSession.conf
-    val key = "spark.sql.streaming.stateStore.providerClass"
-    val prev = conf.getOption(key)
-    if (rocksDb) conf.set(key,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try
-      sliceAndReplay(src, SAMPLE_SCHEMA, slices, "append", build)
-        .map(_.drop("batch_id"))
-        .getOrElse(build(src.limit(0)))
-    finally if (rocksDb) prev match {
-      case Some(v) => conf.set(key, v)
-      case None    => conf.unset(key)
-    }
-  }
+                   (build: DataFrame => DataFrame): DataFrame =
+    sliceAndReplay(asSamples(series), SAMPLE_SCHEMA, slices, "append", build,
+      rocksDb = rocksDb)(emissions)
 
   /** Replays the series through [[StreamOps.gapTriggeredMean]] (tie-free
     * input contract as [[derivativeReplay]]; the raw-double sum replays
@@ -859,18 +688,15 @@ object StreamReplay {
     * range-join oracle. */
   def intervalJoinReplay(events: DataFrame, leftMetric: String,
                          rightMetric: String, windowSeconds: Long,
-                         slices: Int = defaultSlices): DataFrame = {
-    val src = events.select(timestamp_seconds(col("e")).as("ts"),
-      col("user_id").cast("string").as("source"), col("metric"), col("value"))
-    val build = (df: DataFrame) =>
-      StreamOps.intervalJoin(
+                         slices: Int = defaultSlices): DataFrame =
+    sliceAndReplay(events.select(timestamp_seconds(col("e")).as("ts"),
+        col("user_id").cast("string").as("source"), col("metric"), col("value")),
+      SAMPLE_SCHEMA, slices, "append",
+      df => StreamOps.intervalJoin(
         df.where(col("metric") === leftMetric),
         df.where(col("metric") === rightMetric),
-        windowSeconds, watermark = "3650 days")
-    sliceAndReplay(src, SAMPLE_SCHEMA, slices, "append", build)
-      .map(_.drop("batch_id"))
-      .getOrElse(build(src.limit(0)))
-  }
+        windowSeconds, watermark = "3650 days"))(
+      emissions)
 
   /** S3 pub/sub STREAMING parity: consume an already-materialized channel
     * log through the DSv2 `topiclog` source as a genuine micro-batched
@@ -879,41 +705,23 @@ object StreamReplay {
     * mode — and decode the wire JSON with the exact expressions the batch
     * roundtrip uses ([[graft.sources.TopicLogFixture.decodeEvents]]).
     * Stateless passthrough, so the final table is the union of emissions
-    * and the oracle is identical to `s3_pubsub_roundtrip`'s. */
-  def pubsubReplay(spark: org.apache.spark.sql.SparkSession, logRoot: String,
+    * and the oracle is identical to `s3_pubsub_roundtrip`'s. An empty log
+    * (or one that emitted nothing) reads back through the batch source. */
+  def pubsubReplay(spark: SparkSession, logRoot: String,
                    triggers: Int = defaultSlices): DataFrame = {
-    val root = newReplayRoot()
-    val outDir = root.resolve("out").toString
-    val ckDir = root.resolve("ck").toString
-    try {
-      val totalBytes =
-        graft.sources.TopicLog.channelSizes(logRoot, "*").values.sum
-      if (totalBytes == 0L)
-        return graft.sources.TopicLogFixture.decodeEvents(
-          spark.read.format("topiclog").option("path", logRoot).load())
-      val cap = math.max(1L, totalBytes / triggers)
-      @volatile var sinkSchema: org.apache.spark.sql.types.StructType = null
-      val query = graft.sources.TopicLogFixture.decodeEvents(
+    val totalBytes =
+      graft.sources.TopicLog.channelSizes(logRoot, "*").values.sum
+    val replayed =
+      if (totalBytes == 0L) None
+      else withRoot { root =>
+        capture(graft.sources.TopicLogFixture.decodeEvents(
           spark.readStream.format("topiclog")
             .option("path", logRoot)
-            .option("maxBytesPerTrigger", cap.toString)
-            .load())
-        .writeStream
-        .outputMode("append")
-        .option("checkpointLocation", ckDir)
-        .foreachBatch { (batch: DataFrame, id: Long) =>
-          val tagged = batch.withColumn("batch_id", lit(id))
-          if (sinkSchema == null) sinkSchema = tagged.schema
-          tagged.write.mode("append").parquet(outDir)
-        }
-        .start()
-      try query.processAllAvailable()
-      finally query.stop()
-      val reader =
-        if (sinkSchema != null) spark.read.schema(sinkSchema)
-        else spark.read
-      reader.parquet(outDir).localCheckpoint(true).drop("batch_id")
-    } finally deleteRecursively(root.toFile)
+            .option("maxBytesPerTrigger", math.max(1L, totalBytes / triggers).toString)
+            .load()), "append", root)
+      }
+    replayed.map(emissions).getOrElse(graft.sources.TopicLogFixture.decodeEvents(
+      spark.read.format("topiclog").option("path", logRoot).load()))
   }
 
   /** Replays the series through [[StreamOps.ewmaStream]] (same tie-free
@@ -921,11 +729,4 @@ object StreamReplay {
   def ewmaReplay(series: DataFrame, alpha: Double, slices: Int = defaultSlices): DataFrame =
     samplesReplay(series, slices)(df =>
       StreamOps.ewmaStream(asStreamSamples(df), alpha).toDF())
-
-  /** The replay's in/out/checkpoint dirs are per-invocation temp state —
-    * leaking them grew unboundedly across runs (round-6 ADVICE). */
-  private def deleteRecursively(f: java.io.File): Unit = {
-    if (f.isDirectory) Option(f.listFiles()).foreach(_.foreach(deleteRecursively))
-    f.delete()
-  }
 }

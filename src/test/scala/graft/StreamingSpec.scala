@@ -1033,4 +1033,73 @@ class StreamingSpec extends SparkSpec {
       SnapshotStore.deleteTree(ck)
     }
   }
+
+  test("replay run step: an overlapping replay leaves the caller's settings as they were, and the caller's listeners see the replay") {
+    import java.util.concurrent.{CountDownLatch, TimeUnit}
+    import java.util.concurrent.atomic.AtomicInteger
+    import org.apache.spark.sql.streaming.StreamingQueryListener
+    import org.apache.spark.sql.streaming.StreamingQueryListener._
+    import graft.sources.SnapshotStore
+    import graft.streaming.StreamReplay
+    val key = "spark.sql.shuffle.partitions"
+    val before = spark.conf.get(key)
+    val root = java.nio.file.Files.createTempDirectory("replaypin").toString
+    val starts = new AtomicInteger
+    val progressed = new CountDownLatch(1)
+    val listener = new StreamingQueryListener {
+      override def onQueryStarted(e: QueryStartedEvent): Unit = starts.incrementAndGet()
+      override def onQueryProgress(e: QueryProgressEvent): Unit = progressed.countDown()
+      override def onQueryTerminated(e: QueryTerminatedEvent): Unit = ()
+    }
+    val rows = seriesDF(("m", 0L, 1.0), ("m", 60L, 2.0)).select("metric", "e", "value")
+    val bRunning = new CountDownLatch(1)
+    val aDone = new CountDownLatch(1)
+    @volatile var b: Thread = null
+    @volatile var bFailure: Throwable = null
+    spark.streams.addListener(listener)
+    spark.conf.set(key, "13")
+    try {
+      // replay A's per-trigger closure starts replay B on another thread;
+      // B's own closure holds it open until A has returned, so B ends last
+      StreamReplay.viewIngestReplay(rows, "e", s"$root/a", _ => if (b == null) {
+        b = new Thread(() =>
+          try StreamReplay.viewIngestReplay(rows, "e", s"$root/b", _ => {
+            bRunning.countDown()
+            aDone.await(60, TimeUnit.SECONDS): Unit
+          }, slices = 1)
+          catch { case t: Throwable => bFailure = t })
+        b.start()
+        bRunning.await(3, TimeUnit.SECONDS): Unit
+      }, slices = 1)
+      aDone.countDown()
+      b.join(120000)
+      assert(!b.isAlive && bFailure == null, s"replay B failed: $bFailure")
+      assert(spark.conf.get(key) == "13")
+      assert(starts.get() >= 2)
+      assert(progressed.await(30, TimeUnit.SECONDS), "no progress event reached the caller")
+      assert(spark.streams.active.isEmpty)
+    } finally {
+      aDone.countDown()
+      spark.streams.removeListener(listener)
+      spark.conf.set(key, before)
+      SnapshotStore.deleteTree(root)
+    }
+  }
+
+  test("snapshot ingest drip: k non-empty slices publish exactly k source versions; the view equals a from-scratch rollup") {
+    import graft.sources.{RollupView, SnapshotStore}
+    import graft.streaming.StreamReplay
+    val root = java.nio.file.Files.createTempDirectory("dripk").toString
+    try {
+      // three equal event-time thirds of [10, 200000], none empty
+      val rows = seriesDF(("m", 10L, 1.0), ("m", 20L, 2.0), ("n", 100000L, 3.0),
+        ("m", 100010L, 4.0), ("n", 200000L, 5.0))
+      StreamReplay.snapshotIngestReplay(rows, s"$root/src", s"$root/view", slices = 3)
+      assert(SnapshotStore.currentVersion(s"$root/src") == 3)
+      SnapshotStore.append(rows.select("metric", "e", "value"), s"$root/once")
+      RollupView.refresh(spark, s"$root/once", s"$root/onceview")
+      def rollup(view: String) = RollupView.read(spark, s"$root/$view").collect().toSet
+      assert(rollup("view") == rollup("onceview"))
+    } finally SnapshotStore.deleteTree(root)
+  }
 }
