@@ -36,11 +36,16 @@ import MultiAggJoinView.Edge
   *     When the gap evolved the table's schema the union cannot form and
   *     the two legs stay separate.
   *
-  * Every standing side of a term is restricted by the semi-join
-  * [[cascade]] outward from the pinned table, so at 100 TB a dim delta
-  * touches only the fact files its keys can live in. This module never
-  * checkpoints a term; a view that reads one twice does (the quantile
-  * view's escape probe and binning).
+  * The standing sides of a term come from the semi-join [[cascade]]
+  * outward from the pinned table. A side too big to broadcast, or one
+  * the cascade must pass through to reach such a side, is restricted by
+  * its neighbour's key tuples, so at 100 TB a dim delta touches only the
+  * fact files its keys can live in. Every other side is a store the
+  * planner would broadcast anyway: it reads whole, and the inner join
+  * with the pinned frame restricts it exactly as a probe would
+  * (restriction is pure pruning) without the probe's Spark jobs. This
+  * module never checkpoints a term; a view that reads one twice does
+  * (the quantile view's escape probe and binning).
   */
 private[sources] object JoinTreeGap {
 
@@ -195,32 +200,66 @@ private[sources] object JoinTreeGap {
       .withDefaultValue(Seq.empty)
 
   /** The semi-join CASCADE: `seeds` pin their tables' frames; every other
-    * table j reads its store at `vers(j)`, restricted by the key tuples
-    * of the neighbour that reaches it first, breadth-first outward along
-    * the tree. Each hop is file-pruned and bloom-prefiltered
-    * ([[JoinView.standing]]/[[JoinView.prefiltered]]) and exact for
-    * trees: each join row reaches a seed through its unique tree path. */
+    * table v reads its store at `vers(v)`, reached from the neighbour u
+    * that gets to it first, breadth-first outward along the tree.
+    *
+    * The hop u→v PROBES — v restricted by u's key tuples, file-pruned
+    * and bloom-prefiltered ([[JoinView.standing]]/[[JoinView.prefiltered]])
+    * — only when v, or any table the cascade reaches through v, is larger
+    * on disk ([[SnapshotStore.versionBytes]]) than the session's
+    * `spark.sql.autoBroadcastJoinThreshold`, the planner's own "small
+    * enough to join without pruning" line. Otherwise v reads whole at
+    * `vers(v)` and the inner join with u's frame restricts it. A small
+    * table with a big one beyond it still probes, so the big one is
+    * restricted in turn (a nation churn prunes lineitem through
+    * supplier). A threshold ≤ 0 (broadcast off) probes every hop.
+    *
+    * Exact either way for trees: restriction is pure pruning, and each
+    * join row reaches a seed through its unique tree path. Whole reads
+    * resolve on the calling thread; only probing hops overlap. */
   private def cascade(spark: SparkSession, roots: IndexedSeq[String],
                       edges: Seq[Edge], seeds: Map[Int, DataFrame],
                       vers: IndexedSeq[Int]): IndexedSeq[DataFrame] = {
     val adj = adjacency(edges)
-    val frames = new Array[DataFrame](roots.size)
-    seeds.foreach { case (i, df) => frames(i) = df }
+    // the BFS forest from the seeds, ring by ring: hops within one ring
+    // are independent (a tree reaches each node once)
+    val rings = scala.collection.mutable.ArrayBuffer
+      .empty[List[(Int, Int, Seq[String], Seq[String])]]
+    val seen = scala.collection.mutable.Set(seeds.keys.toSeq: _*)
     var ring = seeds.keys.toList
-    val seen = scala.collection.mutable.Set(ring: _*)
     while (ring.nonEmpty) {
-      // hops within one ring are independent (a tree reaches each node
-      // once): overlap their probe jobs (guide §2.6) — a star's
-      // fact→all-dims ring runs its keyTuples probes concurrently
       val hops = for {
         u <- ring; (v, ku, kv) <- adj(u) if seen.add(v)
       } yield (u, v, ku, kv)
-      Overlap.map(hops) { case (u, v, ku, kv) =>
-        val kt = JoinView.keyTuples(frames(u), ku)
-        v -> JoinView.prefiltered(
-          JoinView.standing(spark, roots(v), vers(v), kv, kt), kv, kt)
-      }.foreach { case (v, df) => frames(v) = df }
+      rings += hops
       ring = hops.map(_._2)
+    }
+    // probe(v): v or a table beyond it is too big to broadcast — leaves
+    // first, so a probing child marks its parent before the parent's size
+    // is ever listed
+    val limit = spark.sessionState.conf.autoBroadcastJoinThreshold
+    val probe = new Array[Boolean](roots.size)
+    for (hops <- rings.reverseIterator; (u, v, _, _) <- hops) {
+      probe(v) = limit <= 0 || probe(v) ||
+        SnapshotStore.versionBytes(roots(v), vers(v)) > limit
+      if (probe(v)) probe(u) = true
+    }
+    val frames = new Array[DataFrame](roots.size)
+    seeds.foreach { case (i, df) => frames(i) = df }
+    rings.foreach { hops =>
+      val (probed, whole) = hops.partition(h => probe(h._2))
+      whole.foreach { case (_, v, _, _) =>
+        frames(v) = SnapshotStore.readEvolved(spark, roots(v), vers(v))
+      }
+      // overlap the probe jobs (guide §2.6) — a star's fact→all-dims ring
+      // runs its keyTuples probes concurrently
+      Overlap.map(probed) { case (u, v, ku, kv) =>
+        SnapshotStore.labeled(spark, s"hop $u>$v") {
+          val kt = JoinView.keyTuples(frames(u), ku)
+          v -> JoinView.prefiltered(
+            JoinView.standing(spark, roots(v), vers(v), kv, kt), kv, kt)
+        }
+      }.foreach { case (v, df) => frames(v) = df }
     }
     frames.toIndexedSeq
   }

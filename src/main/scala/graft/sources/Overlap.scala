@@ -22,6 +22,16 @@ package graft.sources
   * and the first failure cancels the remaining builders' results from
   * being awaited (they may still run to completion; they are pure
   * reads).
+  *
+  * Pools NEST and the cap is per call, not global: a tree view's
+  * refresh overlaps its per-table term builds (`JoinTreeGap.Gap.terms`),
+  * and each build's cascade overlaps its probing hops, so up to
+  * parallelism² concurrent builds (each with its `localCheckpoint`
+  * probe) can be in flight at once. A traced `perfbench` `view_maintain`
+  * run saw 11 jobs in flight; since hops into stores small enough to
+  * broadcast stop probing it sees 8, but the bound is still the product.
+  * ROADMAP item 4 change 3 replaces the per-call pools with one global
+  * semaphore.
   */
 private[graft] object Overlap {
 

@@ -385,13 +385,38 @@ object SnapshotStore {
     * mergeSchema reads never come here (their schema is the file-set
     * union, not the sample). Bounded LRU; [[deleteTree]] invalidates its
     * root (tests rebuild stores at a reused path). */
-  private val schemaCache = java.util.Collections.synchronizedMap(
-    new java.util.LinkedHashMap[String, org.apache.spark.sql.types.StructType](
-      64, 0.75f, true) {
-      override def removeEldestEntry(
-          e: java.util.Map.Entry[String, org.apache.spark.sql.types.StructType]) =
+  private val schemaCache = versionCache[org.apache.spark.sql.types.StructType]()
+
+  /** Parquet bytes per published (root, version) — see [[versionBytes]]. */
+  private val bytesCache = versionCache[java.lang.Long]()
+
+  /** A bounded LRU keyed `root#version`, for facts about a published
+    * version's immutable file set. */
+  private def versionCache[V]() = java.util.Collections.synchronizedMap(
+    new java.util.LinkedHashMap[String, V](64, 0.75f, true) {
+      override def removeEldestEntry(e: java.util.Map.Entry[String, V]) =
         size() > 256
     })
+
+  /** On-disk bytes of the parquet files in data directory `d`. */
+  private def dirBytes(d: String): Long =
+    Option(new java.io.File(d).listFiles()).toSeq.flatten
+      .filter(_.getName.endsWith(".parquet")).map(_.length()).sum
+
+  /** On-disk parquet bytes of version `v`: the file lengths of its
+    * manifest directories, summed locally (no Spark job). Listed
+    * once per (root, version) — the file set is immutable once published
+    * — in the same bounded LRU as the schema samples. */
+  private[graft] def versionBytes(root: String, v: Int): Long = {
+    val key = root + "#" + v
+    val cached = bytesCache.get(key)
+    if (cached != null) cached
+    else {
+      val b = manifestDirs(root, v).map(dirBytes).sum
+      bytesCache.put(key, b)
+      b
+    }
+  }
 
   def read(spark: SparkSession, root: String, version: Int = -1,
            mergeSchema: Boolean = false): DataFrame = {
@@ -2218,12 +2243,14 @@ object SnapshotStore {
     }
     rm(new java.io.File(root))
     // a rebuilt store at the same path may publish the same version
-    // numbers with a different schema — drop its cached samples
-    schemaCache.synchronized {
-      val it = schemaCache.keySet().iterator()
-      while (it.hasNext) {
-        val k = it.next() // the root itself, and any branch root under it
-        if (k.startsWith(root + "#") || k.startsWith(root + "/")) it.remove()
+    // numbers with a different schema and size — drop its cached facts
+    Seq[java.util.Map[String, _]](schemaCache, bytesCache).foreach { cache =>
+      cache.synchronized {
+        val it = cache.keySet().iterator()
+        while (it.hasNext) {
+          val k = it.next() // the root itself, and any branch root under it
+          if (k.startsWith(root + "#") || k.startsWith(root + "/")) it.remove()
+        }
       }
     }
   }
@@ -2246,10 +2273,6 @@ object SnapshotStore {
     val parent = currentVersion(root)
     require(parent > 0, s"nothing to compact at $root")
     val dirs = manifestDirs(root, parent)
-    def dirBytes(d: String): Long = {
-      val fs = Option(new java.io.File(d).listFiles()).toSeq.flatten
-      fs.filter(_.getName.endsWith(".parquet")).map(_.length()).sum
-    }
     val small = dirs.filter(dirBytes(_) < smallBytes)
     if (small.size < 2) return parent // nothing to pack
     val keep = dirs.filterNot(small.toSet)

@@ -65,20 +65,19 @@ object StreamReplay {
     * every micro-batch pays checkpoint-log and state-store fsyncs, and the
     * fixtures are bounded verification inputs, so memory-backed durability
     * is exactly right; falls back to the system temp dir when /dev/shm is
-    * absent. */
-  private lazy val tmpBase: Option[Path] = {
+    * absent. Every replay root is a `graft_replay_` directory directly
+    * under it. */
+  private[graft] lazy val replayBase: Path = {
     val shm = java.nio.file.Paths.get("/dev/shm")
-    if (Files.isDirectory(shm) && Files.isWritable(shm)) Some(shm) else None
+    if (Files.isDirectory(shm) && Files.isWritable(shm)) shm
+    else java.nio.file.Paths.get(System.getProperty("java.io.tmpdir"))
   }
 
   /** Runs `body` on a fresh replay root (`in/` source, `ck/` checkpoint,
     * `out/` capture, `stage/` scratch) and deletes the root afterwards —
     * leaking them grew unboundedly across runs (round-6 ADVICE). */
   private def withRoot[T](body: Path => T): T = {
-    val root = tmpBase match {
-      case Some(base) => Files.createTempDirectory(base, "graft_replay_")
-      case None       => Files.createTempDirectory("graft_replay_")
-    }
+    val root = Files.createTempDirectory(replayBase, "graft_replay_")
     try body(root) finally deleteRecursively(root.toFile)
   }
 

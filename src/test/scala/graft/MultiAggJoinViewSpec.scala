@@ -81,6 +81,51 @@ class MultiAggJoinViewSpec extends SparkSpec {
       .toSet
   }
 
+  /** The view's or a frame's (p_brand, n_name, cnt, sum_qty) rows. */
+  private def aggRows(df: DataFrame): Set[(String, String, Long, String)] =
+    df.collect()
+      .map(x => (x.getAs[String]("p_brand"), x.getAs[String]("n_name"),
+        x.getAs[Long]("cnt"),
+        Option(x.getAs[java.math.BigDecimal]("sum_qty"))
+          .map(_.stripTrailingZeros.toPlainString).orNull))
+      .toSet
+
+  /** Refresh `v` as the (p_brand, n_name) view of [[JoinTreeFixture]]. */
+  private def refreshTree(roots: Seq[String], v: String): Int =
+    MultiAggJoinView.refresh(spark, roots, v, JoinTreeFixture.edges, groups, measures)
+
+  private def treeTruth(roots: IndexedSeq[String]): Set[(String, String, Long, String)] =
+    aggRows(JoinTreeFixture.joined(spark, roots).groupBy("p_brand", "n_name")
+      .agg(count(lit(1)).as("cnt"),
+        sum(col("qty").cast("decimal(30,2)")).cast("decimal(30,2)").as("sum_qty")))
+
+  test("cascade: broadcastable hops read whole, threshold -1 probes each; both == re-aggregation") {
+    JoinTreeFixture.bothPaths(spark, "majv_paths")((roots, v) => refreshTree(roots, v)) {
+      (roots, v) => assert(aggRows(MultiAggJoinView.read(spark, v)) == treeTruth(roots))
+    }
+  }
+
+  test("cascade subtree rule: a nation churn probes supplier and the big fact; leaf dims read whole") {
+    import JoinTreeFixture._
+    withStores("majv_subtree") { (roots, dir) =>
+      val v = s"$dir/view"
+      load(spark, roots, factIds = 1L to 3000L)
+      refreshTree(roots, v)
+      val bytes = roots.map(r => SnapshotStore.versionBytes(r, SnapshotStore.currentVersion(r)))
+      // the threshold: every dim (supplier included) fits, the fact does not
+      val threshold = bytes.drop(1).max
+      assert(bytes(2) <= threshold && threshold < bytes(0), s"store bytes $bytes")
+      val s = spark
+      import s.implicits._
+      SnapshotStore.upsert(spark, Seq((1L, "renamed")).toDF("n_nk", "n_name"),
+        roots(3), Seq("n_nk"))
+      val p = withThreshold(spark, threshold.toString)(
+        probes(spark)(refreshTree(roots, v)))
+      assert(p.hops == Set((3, 2), (2, 0)), s"probed hops ${p.hops}")
+      assert(aggRows(MultiAggJoinView.read(spark, v)) == treeTruth(roots))
+    }
+  }
+
   private def lastOp(v: String): String =
     SnapshotStore.manifestOp(v, SnapshotStore.currentVersion(v)).getOrElse("?")
 

@@ -69,6 +69,21 @@ class MultiNdvJoinViewSpec extends SparkSpec {
         x.getAs[Long]("approx_user_id"))).toSet
   }
 
+  test("cascade: broadcastable hops read whole, threshold -1 probes each; both == single-pass estimate") {
+    val treeGroups = Seq("n_name", "c_seg")
+    def rows(df: DataFrame): Set[(String, String, Long)] = df.collect()
+      .map(x => (x.getAs[String]("n_name"), x.getAs[String]("c_seg"),
+        x.getAs[Long]("approx_user_id"))).toSet
+    JoinTreeFixture.bothPaths(spark, "mndvj_paths") { (roots, v) =>
+      MultiNdvJoinView.refresh(spark, roots, v, JoinTreeFixture.edges, treeGroups, "user_id")
+    } { (roots, v) =>
+      assert(rows(MultiNdvJoinView.read(spark, v)) == rows(
+        JoinTreeFixture.joined(spark, roots).groupBy(treeGroups.map(col): _*)
+          .agg(expr(s"hll_sketch_estimate(hll_sketch_agg(user_id, " +
+            s"${NdvView.LgK}))").as("approx_user_id"))))
+    }
+  }
+
   private def lastOp(v: String): String =
     SnapshotStore.manifestOp(v, SnapshotStore.currentVersion(v)).getOrElse("?")
 

@@ -99,6 +99,29 @@ class MultiQuantileJoinViewSpec extends SparkSpec {
       .join(n, c("nat") === n("n_id"))
   }
 
+  test("cascade: broadcastable hops read whole, threshold -1 probes each; both == from-scratch binning") {
+    // net (n_name, bin, cnt) counts: the stored signed partials summed,
+    // against the current five-way join binned under the view's edges
+    def stored(v: String): Set[(String, Int, Long)] =
+      SnapshotStore.read(spark, v).groupBy("n_name", "bin")
+        .agg(sum("cnt").as("cnt")).where(col("cnt") =!= 0).collect()
+        .map(x => (x.getString(0), x.getInt(1), x.getLong(2))).toSet
+    def binned(roots: IndexedSeq[String], v: String): Set[(String, Int, Long)] = {
+      val ed = MultiQuantileJoinView.edgesFor(spark, v).head()
+      val (lo, w, bins) = (ed.getAs[Double]("lo"), ed.getAs[Double]("w"),
+        ed.getAs[Int]("bins"))
+      JoinTreeFixture.joined(spark, roots).where(col("qty").isNotNull)
+        .select(col("n_name"), least(lit(bins - 1), greatest(lit(0),
+          floor((col("qty") - lit(lo)) / lit(w)).cast("int"))).as("bin"))
+        .groupBy("n_name", "bin").agg(count(lit(1)).as("cnt")).collect()
+        .map(x => (x.getString(0), x.getInt(1), x.getLong(2))).toSet
+    }
+    JoinTreeFixture.bothPaths(spark, "mqjv_paths") { (roots, v) =>
+      MultiQuantileJoinView.refresh(spark, roots, v, JoinTreeFixture.edges,
+        Seq("n_name"), "qty")
+    } { (roots, v) => assert(stored(v) == binned(roots, v) && stored(v).nonEmpty) }
+  }
+
   private def lastOp(v: String): String =
     SnapshotStore.manifestOp(v, SnapshotStore.currentVersion(v)).getOrElse("?")
 

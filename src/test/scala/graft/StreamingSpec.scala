@@ -701,7 +701,7 @@ class StreamingSpec extends SparkSpec {
   }
 
   private def tmpReplayDirs(): Set[String] = {
-    val tmp = new java.io.File(System.getProperty("java.io.tmpdir"))
+    val tmp = graft.streaming.StreamReplay.replayBase.toFile
     Option(tmp.listFiles()).getOrElse(Array.empty)
       .collect { case f if f.getName.startsWith("graft_replay_") => f.getName }
       .toSet
