@@ -1,12 +1,14 @@
 package graft
 
+import org.apache.spark.ListenerBusDrain
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart, SparkListenerStageCompleted}
 
-/** Job-level profile of one registered query: runs it once (steady JVM —
-  * a warmup iteration first), recording every Spark job's wall time, task
-  * count and description. Separates "how many jobs does this operator
-  * launch" and "where do they spend time" from the noop-sink total that
-  * Bench reports — the decomposition §1 of the optimization guide asks
+/** Job-level profile of one registered query: runs it once cold (the
+  * warm-up: codegen, JIT, scan setup), then once steady, and records every
+  * steady-run Spark job's wall time, task count and description. The cold
+  * run's wall time prints as `cold=` beside the steady `wall=`. Separates
+  * "how many jobs does this operator launch" and "where do they spend
+  * time" from the noop-sink total that Bench reports — the decomposition §1 of the optimization guide asks
   * for before touching anything. Driver-side time (planning, manifest
   * I/O, bloom sizing decisions) is the gap between the query wall time
   * and the time at least one job was running — the union of the job
@@ -60,19 +62,25 @@ object JobProfile {
         }
       }
     })
+    def timed(f: => Unit): Double = {
+      val t0 = System.nanoTime()
+      f
+      (System.nanoTime() - t0) / 1e9
+    }
     for (name <- args.toSeq) {
       val fn = SparkEntry.queries(name)
-      fn(spark, sfDir).write.format("noop").mode("overwrite").save() // warm
+      val cold = timed(fn(spark, sfDir).write.format("noop").mode("overwrite").save())
+      // every warm-up job has ended before the count starts, and every
+      // measured job before it is read
+      ListenerBusDrain(spark.sparkContext)
       done.clear()
-      val t0 = System.nanoTime()
-      fn(spark, sfDir).write.format("noop").mode("overwrite").save()
-      val wall = (System.nanoTime() - t0) / 1e9
-      Thread.sleep(500) // let listener drain
+      val wall = timed(fn(spark, sfDir).write.format("noop").mode("overwrite").save())
+      ListenerBusDrain(spark.sparkContext)
       import scala.jdk.CollectionConverters._
       val rows = done.asScala.toSeq.sortBy(_._1)
       val jobSum = rows.map(r => r._4 - r._3).sum
       val busy = busySeconds(rows.map(r => (r._3, r._4)))
-      println(f"[jobprofile] $name wall=$wall%.2f s, jobs=${rows.size}, " +
+      println(f"[jobprofile] $name wall=$wall%.2f s, cold=$cold%.2f s, jobs=${rows.size}, " +
         f"job-wall-sum=$jobSum%.2f s, driver-gap=${wall - busy}%.2f s")
       rows.groupBy(r =>
           if (r._2.nonEmpty) r._2 else sites.getOrDefault(r._1, "?"))

@@ -6,10 +6,10 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Materialize a larger scale-factor directory from an existing one, for
-  * on-disk scaling evidence (round-9 VERDICT item 6): unlike [[ScaleProbe]]'s
-  * in-memory self-unions, the output here goes through real parquet files, so
-  * a scaled run exercises the scan path (file listing, row-group pruning,
-  * multi-file parallelism) that a cluster run would.
+  * on-disk scaling evidence: the fixtures [[ScaleGate]] runs at. The output
+  * goes through real parquet files, so a scaled run exercises the scan path
+  * (file listing, row-group pruning, multi-file parallelism) that a cluster
+  * run would, unlike an in-memory self-union.
   *
   * Scaling model ("dims fixed, facts grow" — the 100 TB posture):
   *   - `region nation customer supplier part embeddings` copy through
@@ -19,16 +19,16 @@ import org.apache.spark.sql.functions._
   *     `o_orderkey`/`l_orderkey` offset: the order→lineitem relationship is
   *     preserved inside each replica, and each customer simply owns
   *     factor× more orders.
-  *   - `events` replicate with `event_id`/`user_id` offsets (same scheme as
-  *     ScaleProbe); metric names and timestamps stay — 10× data at fixed
-  *     metric cardinality is how a production metric store grows.
+  *   - `events` replicate with `event_id`/`user_id` offsets; metric names
+  *     and timestamps stay — 10× data at fixed metric cardinality is how a
+  *     production metric store grows.
   *   - `documents` replicate with a `doc_id` offset AND every token suffixed
   *     with a per-replica tag: tokens split on whitespace, so suffixing
   *     keeps token/shingle counts intact and within-replica similarity
   *     structure identical, while making replicas pairwise DISSIMILAR —
   *     a pure-duplicate corpus would grow near-dup candidate pairs
   *     quadratically by construction and measure the dup blowup, not plan
-  *     scaling (same reasoning as ScaleProbe's doc replicas).
+  *     scaling.
   *
   * Each scaled fact writes as a DIRECTORY `<name>.parquet/` with multiple
   * files so the scan parallelizes (tools/check.py globs directories).

@@ -1582,8 +1582,8 @@ object SparkEntry {
     // collapses ~90% of orders onto one hot value, the dim is one row per
     // key, and the join runs through RelationalOps.saltedJoin. The oracle
     // is the PLAIN join SQL — salting must be a pure physical rewrite
-    // (result == plain inner equi-join, row for row); ScaleProbe carries
-    // the salt-vs-plain timing on the same skewed fixture.
+    // (result == plain inner equi-join, row for row); ScaleGate's
+    // `skew_join` row times salted vs plain on the same skewed fixture.
     "q_skew_join" -> ((s, dir) => {
       def sk(c: Column) = when(pmod(c, lit(100L)) < 90, lit(0L))
         .otherwise(pmod(c, lit(100L))).as("sk")
@@ -3953,7 +3953,7 @@ object SparkEntry {
           sources.MultiAggJoinView.Edge(1, Seq("c_nationkey"), Seq("n_nationkey")))
         // HALF the orders universe and 3 refreshes (the family-budget
         // sizing rationale: per-refresh fixed stage overhead dominates
-        // at sf0.1; the scalable posture is ScaleGate's mqjoin family,
+        // at sf0.1; the scalable posture is ScaleGate's `mqjoin` row,
         // and the spec drives every path on small data)
         val o = Tables.orders(s, dir)
           .select("o_orderkey", "o_custkey", "o_totalprice")
@@ -4400,7 +4400,7 @@ object SparkEntry {
         // dirty most groups, so the recompute is honestly O(join x dirty
         // fraction) — halving the facts keeps every lifecycle path at
         // half the bench cost (the scalable key-grouped posture is
-        // ScaleGate's aggjoinx family)
+        // ScaleGate's `aggjoinx` row)
         val o = Tables.orders(s, dir)
           .select("o_orderkey", "o_custkey", "o_orderstatus", "o_totalprice")
           .where(col("o_orderkey") % 2 === 0)
@@ -4539,7 +4539,7 @@ object SparkEntry {
         // quarter the fact universe (the extents-MV sizing rationale):
         // the 5-way lifecycle runs every maintenance path — six
         // refreshes over a five-table tree — and the scalable posture is
-        // ScaleGate's maggjoin family (flat at 100x on the full fixture)
+        // ScaleGate's `maggjoin` row (flat at 10x on the full fixture)
         val f = Tables.lineitem(s, dir).where(col("l_orderkey") % 4 === 0)
           .select("l_orderkey", "l_partkey", "l_suppkey", "l_quantity",
             "l_extendedprice")
@@ -4602,8 +4602,8 @@ object SparkEntry {
         def refresh(): Unit = sources.MultiAggJoinView.refresh(
           s, roots, v, edges, groups, Seq("l_extendedprice"), extents = true)
         // eighth of the fact universe: the extents churn recomputes the
-        // dirty groups whole — honest O(dirty rows); ScaleGate maggjoin
-        // carries the scale posture
+        // dirty groups whole — honest O(dirty rows); ScaleGate's
+        // `maggjoinx` row carries the scale posture
         val f = Tables.lineitem(s, dir).where(col("l_orderkey") % 8 === 0)
           .select("l_orderkey", "l_partkey", "l_suppkey", "l_extendedprice")
         sources.SnapshotStore.append(f.where(col("l_orderkey") % 3 === 0), fr)
@@ -4714,7 +4714,7 @@ object SparkEntry {
           sources.MultiAggJoinView.Edge(0, Seq("l_orderkey"), Seq("o_orderkey")))
         // quarter the fact universe — the sibling lifecycle's sizing
         // (family budget): the compensated-read semantics are
-        // data-size-blind and ScaleGate maggjoin owns the scale posture
+        // data-size-blind and ScaleGate's `maggjoin` row owns the scale posture
         val f = Tables.lineitem(s, dir)
           .select("l_orderkey", "l_partkey", "l_suppkey", "l_extendedprice")
           .where(col("l_orderkey") % 4 === 0)
@@ -4894,7 +4894,7 @@ object SparkEntry {
           s, roots, v, edges, groups, "o_custkey")
         // quarter the fact universe (the lifecycle-lane budget,
         // BENCH_LOCAL.md): the coarse-group churn honestly re-sketches
-        // every dirty group; ScaleGate mndvjoin carries the flat-at-scale
+        // every dirty group; ScaleGate's `mndvjoin` row carries the flat-at-scale
         // posture on banded groups
         val o = Tables.orders(s, dir).where(col("o_orderkey") % 4 === 0)
           .select("o_orderkey", "o_custkey", "o_orderstatus")
@@ -5871,7 +5871,7 @@ object SparkEntry {
     // partial sketches, union-merged to a global summary, top-20 out.
     // Each task ships one O(cap) summary, so at 100 TB the shuffle is
     // O(partitions × cap), not O(distinct terms) like exact text_top_terms
-    // (ScaleProbe carries the shuffle-bytes comparison). The oracle is the
+    // (ScaleGate's `topk_shuffle` row bounds the shuffle bytes). The oracle is the
     // EXACT count SQL: the fixture vocabulary (31 terms) is far below
     // cap=256, so no eviction fires anywhere and MG counts are exact by
     // construction; eviction and merge bounds are pinned by

@@ -528,8 +528,8 @@ object SimilarityOps {
     * O(n²/2^bitsPerTable) — bucket occupancy grows with n at fixed
     * granularity, pairs per bucket quadratically. `bitsPerTable` must grow
     * with the corpus (+2 bits per 4×, keeping occupancy constant) exactly
-    * as IVF grows `nlist`; ScaleProbe measures both the fixed-granularity
-    * blowup and the retuned-knob linear path. */
+    * as IVF grows `nlist`. No ScaleGate row times it: ScaleUp keeps the
+    * embeddings table fixed, so there is no corpus growth to measure. */
   def embeddingCandidatePairs(vectors: DataFrame,
                               dim: Int = 64, tables: Int = 8, bitsPerTable: Int = 8,
                               seed: Long = 42L): DataFrame = {

@@ -223,9 +223,9 @@ object TrendOps {
     * SKEW CONTRACT: because the anchored-gap recurrence cannot split a
     * metric's timeline (each kept/dropped decision depends on the
     * previous KEPT sample), max parallelism equals metric cardinality —
-    * one dominant metric at 100 TB means one long task (probed by
-    * ScaleProbe's `decimate_faithful_hot`, which collapses the input to a
-    * single metric). That is intrinsic to the semantics, not the plan.
+    * one dominant metric at 100 TB means one long task (timed by the
+    * `decimate_faithful` leg of ScaleGate's `hot_metric` row, which
+    * collapses the input to a single metric). That is intrinsic to the semantics, not the plan.
     * The scale paths when exact anchored-gap is not required: the
     * bucketized [[decimateBucketized]] (embarrassingly parallel, the
     * oracle form) or the incremental [[graft.streaming.StreamOps
@@ -337,10 +337,10 @@ object TrendOps {
     *
     * SKEW CONTRACT: same as [[decimateFaithful]] — the recurrence cannot
     * split a metric's timeline, so max parallelism equals metric
-    * cardinality and one hot metric means one long task (probed by
-    * ScaleProbe's `ewma_hot`). The 100 TB paths for a hot metric are the
-    * batch [[ewmaChunked]] (parallel-in-time carry composition, probed by
-    * `ewma_chunked_hot`, hard-oracled by `a14_ewma_chunked`) and the
+    * cardinality and one hot metric means one long task (the `ewma` leg of
+    * ScaleGate's `hot_metric` row). The 100 TB paths for a hot metric are
+    * the batch [[ewmaChunked]] (parallel-in-time carry composition, the
+    * `ewma_chunked` leg, hard-oracled by `a14_ewma_chunked`) and the
     * incremental [[graft.streaming.StreamOps.ewmaStream]] twin: O(1)
     * state per metric, cost amortized over arrival instead of one
     * monolithic sort+scan (hard-oracled by `stream_ewma_parity`). */

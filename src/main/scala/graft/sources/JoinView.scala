@@ -250,10 +250,10 @@ object JoinView {
     }
   }
 
-  /** Evidence hook ([[graft.PlanDump]]): the standing side of `root`
-    * restricted to `delta`'s key tuples — the probe → range-prune →
-    * exact-restriction pipeline every view refresh funnels through, as
-    * one inspectable frame. */
+  /** Evidence hook (the `restriction` row of [[graft.ScaleGate]]): the
+    * standing side of `root` restricted to `delta`'s key tuples — the
+    * probe → range-prune → exact-restriction pipeline every view refresh
+    * funnels through, as one inspectable frame. */
   private[graft] def restrictionPlan(spark: SparkSession, root: String,
                                      ver: Int, keys: Seq[String],
                                      delta: DataFrame): DataFrame = {
