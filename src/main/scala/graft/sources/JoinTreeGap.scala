@@ -22,19 +22,20 @@ import MultiAggJoinView.Edge
   * and the i-th difference only involves join rows whose table-i row
   * changed. So each moved table contributes terms ([[Gap.termsOf]]):
   *
-  *   - APPEND-ONLY since its cursor: the single positive term
+  *   - APPENDED since its cursor ([[SnapshotStore.gap]]: no directory
+  *     went missing): the single positive term
   *     `ΔTᵢ ⋈ (earlier tables at NEW, later at OLD)` — `new_i − old_i`
   *     IS the appended rows;
-  *   - ROW CHURN (delete/upsert): both legs restricted to the table's
-  *     dirty key tuples from its O(churn) change feed, old at −1 and new
-  *     at +1 (unchanged rows in the dirty set appear in both and cancel
-  *     for retractable partials). The legs share the dirty keys, so they
-  *     pin ONE union whose rows carry their sign in [[SignCol]]: one
-  *     cascade, one join tree and one fold where two legs paid each twice
-  *     (the cascade restriction by the union's keys is a superset of
-  *     each leg's; restriction is pure pruning, so the join stays exact).
-  *     When the gap evolved the table's schema the union cannot form and
-  *     the two legs stay separate.
+  *   - CHURNED (a delete or upsert rewrote directories): both legs
+  *     restricted to the table's dirty key tuples from its O(churn)
+  *     change feed, old at −1 and new at +1 (unchanged rows in the dirty
+  *     set appear in both and cancel for retractable partials). The legs
+  *     share the dirty keys, so they pin ONE union whose rows carry their
+  *     sign in [[SignCol]]: one cascade, one join tree and one fold where
+  *     two legs paid each twice (the cascade restriction by the union's
+  *     keys is a superset of each leg's; restriction is pure pruning, so
+  *     the join stays exact). When the gap evolved the table's schema the
+  *     union cannot form and the two legs stay separate.
   *
   * The standing sides of a term come from the semi-join [[cascade]]
   * outward from the pinned table. A side too big to broadcast, or one
@@ -360,20 +361,28 @@ private[sources] object JoinTreeGap {
     def bootstrap: Boolean = prevVs.forall(_ == 0)
 
     private val moved = roots.indices.filter(i => curVs(i) > prevVs(i))
-    private lazy val appended: Set[Int] = moved
-      .filter(i => JoinView.appendOnly(roots(i), prevVs(i), curVs(i))).toSet
 
-    /** Every moved table only appended since its cursor. */
+    /** Each table's own version gap since its cursor. */
+    private lazy val storeGaps: IndexedSeq[SnapshotStore.Gap] = roots.indices
+      .map(i => SnapshotStore.gap(spark, roots(i), prevVs(i), curVs(i)))
+
+    private def appended(i: Int): Boolean =
+      storeGaps(i).isInstanceOf[SnapshotStore.Gap.Appended]
+
+    /** Every moved table's gap is appended since its cursor. */
     def allAppend: Boolean = moved.forall(appended)
 
-    /** The moved tables that deleted or upserted since their cursor. */
+    /** The moved tables whose gap churned rows since their cursor. */
     private def churned: Seq[Int] = moved.filterNot(appended)
 
-    /** Every moved table only appended, deleted or upserted since its
-      * cursor — the gap has a sound row diff (a compaction or a vacuumed
-      * baseline breaks it). */
-    def diffable: Boolean = moved.forall(i =>
-      appended(i) || JoinView.churnOnly(roots(i), prevVs(i), curVs(i)))
+    /** Every moved table's gap is appended or churned — the gap has a
+      * sound row diff (a compaction or a vacuumed baseline breaks it; a
+      * recorded feed is a view-row diff, not the per-table one the terms
+      * need). */
+    def diffable: Boolean = moved.forall(i => storeGaps(i) match {
+      case _: SnapshotStore.Gap.Appended | _: SnapshotStore.Gap.Churned => true
+      case _ => false
+    })
 
     /** Join `frames` along the tree to groups ++ values ++ `extra`. */
     private def slice(frames: IndexedSeq[DataFrame], extra: Seq[String] = Nil): DataFrame =
@@ -388,19 +397,15 @@ private[sources] object JoinTreeGap {
       slice(cascade(spark, roots, edges, Map(i -> pinned),
         roots.indices.map(j => if (j < i) curVs(j) else prevVs(j))), extra)
 
-    /** Moved table `i`'s terms: the positive delta term when it only
-      * appended, else its fused ± churn term (two legs when the gap
-      * evolved its schema). */
-    def termsOf(i: Int): Seq[Term] =
-      if (appended(i)) {
-        val delta = SnapshotStore.incremental(spark, roots(i),
-          prevVs(i), curVs(i), Some(newFrames(i).schema))
-        Seq(Term(term(i, delta), Some(1)))
-      } else {
+    /** Moved table `i`'s terms: the positive delta term when its gap is
+      * appended, its fused ± churn term when churned (two legs when the
+      * gap evolved its schema). */
+    def termsOf(i: Int): Seq[Term] = storeGaps(i) match {
+      case ap: SnapshotStore.Gap.Appended =>
+        Seq(Term(term(i, ap.rows(Some(newFrames(i).schema))), Some(1)))
+      case ch: SnapshotStore.Gap.Churned =>
         val keys = if (i == 0) edges.head.parentKeys else edges(i - 1).childKeys
-        val dirty = JoinView.keyTuples(
-          SnapshotStore.changes(spark, roots(i), prevVs(i), curVs(i))
-            .select(keys.map(col): _*), keys)
+        val dirty = JoinView.keyTuples(ch.changes.select(keys.map(col): _*), keys)
         def restricted(ver: Int): DataFrame = JoinView.prefiltered(
           JoinView.standing(spark, roots(i), ver, keys, dirty), keys, dirty)
         val old = restricted(prevVs(i)); val nw = restricted(curVs(i))
@@ -409,7 +414,8 @@ private[sources] object JoinTreeGap {
         else Seq(Term(term(i,
           old.withColumn(SignCol, lit(-1L)).unionByName(nw.withColumn(SignCol, lit(1L))),
           Seq(SignCol)), None))
-      }
+      case other => sys.error(s"table $i's $other gap has no terms")
+    }
 
     /** The terms of `tables` (every moved table by default), each mapped
       * by `f` inside its table's build. Builds overlap (guide §2.6) — each

@@ -5,6 +5,8 @@ import org.apache.spark.sql.functions._
 
 import graft.operators.RelationalOps
 
+import SnapshotStore.Gap
+
 /** Incrementally maintained equi-JOIN view between two [[SnapshotStore]]
   * tables — the denormalization half of IVM ([[RollupView]] owns the
   * aggregate half). The view materializes `L ⋈ R` on an equi-key pair
@@ -289,20 +291,13 @@ object JoinView {
     SnapshotStore.writeStatsSidecar(spark, viewRoot, v, newDirs, cols)
   }
 
-  /** Append/no-op commits only in (from, cur], with both endpoint
-    * manifests alive (the manifest diff and the old-version read both
-    * need them)? */
-  private[sources] def appendOnly(root: String, from: Int, cur: Int): Boolean =
-    SnapshotStore.hasManifest(root, from) &&
-      SnapshotStore.hasManifest(root, cur) &&
-      SnapshotStore.opsAll(root, from, cur, Set("append"))
-
-  /** Row-churn commits only (append/delete/upsert) — the change feed is
-    * the row delta; a compaction or legacy manifest answers false. */
-  private[sources] def churnOnly(root: String, from: Int, cur: Int): Boolean =
-    SnapshotStore.hasManifest(root, from) &&
-      SnapshotStore.hasManifest(root, cur) &&
-      SnapshotStore.opsAll(root, from, cur, SnapshotStore.RowChurnOps)
+  /** The rows whose join keys a source gap dirties: an appended gap's
+    * rows, a churned gap's change feed (both signs); none when unmoved. */
+  private def touched(gap: Gap): Option[DataFrame] = gap match {
+    case a: Gap.Appended => Some(a.rows())
+    case c: Gap.Churned  => Some(c.changes)
+    case _               => None
+  }
 
   /** The standing side of a delta join, FILE-pruned by the delta's key
     * range when the standing store carries min/max stats on the join key
@@ -333,6 +328,69 @@ object JoinView {
         SnapshotStore.readWhere(spark, root, keys.head, lo, hi, ver)
       case _ => full.limit(0) // every head key null: nothing can equi-match
     }
+  }
+
+  /** The delta identity's legs over appended (or unmoved) source gaps,
+    * each with its delta's key tuples: Δ(L⋈R) = ΔL⋈R_new ∪ L_old⋈ΔR, the
+    * standing sides bloom-prefiltered by the in-hand delta's keys so only
+    * possibly-matching rows join. Outer adds: ΔL null-extends itself
+    * (ΔL ⟕ R_new) and the ΔR leg stays an inner join (old left rows that
+    * STILL don't match keep their null rows). Full-outer adds one term:
+    * ΔR rows unmatched against L_NEW null-extend as unmatched-RIGHT view
+    * rows (see [[refreshKeys]]). The legs are independent builds, each
+    * blocking on its keyTuples probe, so they overlap (guide §2.6); the
+    * result keeps the fixed L-then-R order. One definition for
+    * [[refreshKeys]] and [[compensated]], so a compensated read serves the
+    * rows a refresh would append. */
+  private def deltaLegs(spark: SparkSession, leftRoot: String, rightRoot: String,
+                        leftKeys: Seq[String], rightKeys: Seq[String], how: String,
+                        lGap: Gap, rGap: Gap, plv: Int, lv: Int, rv: Int,
+                        lNew: => DataFrame, rNew: => DataFrame)
+      : Seq[(Option[DataFrame], Option[DeltaKeys])] = {
+    val outer = how != "inner"
+    val full = how == "full_outer"
+    def buildL(): (Option[DataFrame], Option[DeltaKeys]) = lGap match {
+      case ap: Gap.Appended =>
+        // explicit schema: a narrow post-evolution append still
+        // reads the full shape
+        val delta = ap.rows(Some(lNew.schema))
+        val dk = keyTuples(delta, leftKeys)
+        (Some(joined(delta,
+          prefiltered(standing(spark, rightRoot, rv, rightKeys, dk),
+            rightKeys, dk),
+          leftKeys, rightKeys,
+          if (outer) "left_outer" else "inner", outer)), Some(dk))
+      case _ => (None, None)
+    }
+    def buildR(): (Option[DataFrame], Option[DeltaKeys]) = rGap match {
+      case ap: Gap.Appended =>
+        val delta = ap.rows(Some(rNew.schema))
+        val dk = keyTuples(delta, rightKeys)
+        val matched = joined(
+          prefiltered(standing(spark, leftRoot, plv, leftKeys, dk),
+            leftKeys, dk),
+          delta, leftKeys, rightKeys, "inner", outer)
+        val part = if (!full) matched else {
+          // anti against the PRUNED current left side is exact: the
+          // prefilter is an equi-join against the delta's own distinct
+          // key tuples (no false negatives), so every left row that
+          // could match a ΔR key survives into the anti's build side
+          val lStand = prefiltered(
+            standing(spark, leftRoot, lv, leftKeys, dk), leftKeys, dk)
+          val unmatched = delta.join(lStand,
+            leftKeys.zip(rightKeys).map { case (a, b) =>
+              lStand(a) === delta(b)
+            }.reduce(_ && _), "left_anti")
+          // null-extend to the view's exact l.* ++ r.* shape via a
+          // right-outer join against the EMPTY left relation (types,
+          // names, and column set all come from the source itself)
+          matched.unionByName(joined(lNew.limit(0), unmatched,
+            leftKeys, rightKeys, "right_outer", keepRightKeys = true))
+        }
+        (Some(part), Some(dk))
+      case _ => (None, None)
+    }
+    Overlap.map(Seq(true, false))(isL => if (isL) buildL() else buildR())
   }
 
   /** Single-key [[refreshKeys]]. */
@@ -474,180 +532,133 @@ object JoinView {
         clustered(joined(lNew, rNew, leftKeys, rightKeys, how, outer),
           leftKeys.head, outer && keyIntegral),
         viewRoot, pack(lv, rv))
-    } else if (appendOnly(leftRoot, plv, lv) && appendOnly(rightRoot, prv, rv)) {
-      // Δ(L⋈R) = ΔL⋈R_new ∪ L_old⋈ΔR; standing sides bloom-prefiltered
-      // by the in-hand delta's keys so only possibly-matching rows join.
-      // Outer adds: ΔL null-extends itself (ΔL ⟕ R_new), the ΔR leg
-      // stays an inner join (old left rows that STILL don't match keep
-      // their null rows), and match arrival retracts converted null rows.
-      // Full-outer adds one term: ΔR rows unmatched against L_NEW
-      // null-extend as unmatched-RIGHT view rows (see the scaladoc).
-      // the two delta legs are independent term builds, each blocking on
-      // its keyTuples probe — overlap them (guide §2.6); the union below
-      // keeps the fixed L-then-R order, so the published plan is unchanged
-      def buildL(): (Option[DataFrame], Option[DeltaKeys]) =
-        if (lv > plv) {
-          val delta = SnapshotStore.incremental(spark, leftRoot, plv, lv,
-            Some(lNew.schema)) // explicit schema: a narrow post-evolution
-                               // append still reads the full shape
-          val dk = keyTuples(delta, leftKeys)
-          (Some(joined(delta,
-            prefiltered(standing(spark, rightRoot, rv, rightKeys, dk),
-              rightKeys, dk),
-            leftKeys, rightKeys,
-            if (outer) "left_outer" else "inner", outer)), Some(dk))
-        } else (None, None)
-      def buildR(): (Option[DataFrame], Option[DeltaKeys]) =
-        if (rv > prv) {
-          val delta = SnapshotStore.incremental(spark, rightRoot, prv, rv,
-            Some(rNew.schema))
-          val dk = keyTuples(delta, rightKeys)
-          val matched = joined(
-            prefiltered(standing(spark, leftRoot, plv, leftKeys, dk),
-              leftKeys, dk),
-            delta, leftKeys, rightKeys, "inner", outer)
-          val part = if (!full) matched else {
-            // anti against the PRUNED current left side is exact: the
-            // prefilter is an equi-join against the delta's own distinct
-            // key tuples (no false negatives), so every left row that
-            // could match a ΔR key survives into the anti's build side
-            val lStand = prefiltered(
-              standing(spark, leftRoot, lv, leftKeys, dk), leftKeys, dk)
-            val unmatched = delta.join(lStand,
-              leftKeys.zip(rightKeys).map { case (a, b) =>
-                lStand(a) === delta(b)
-              }.reduce(_ && _), "left_anti")
-            // null-extend to the view's exact l.* ++ r.* shape via a
-            // right-outer join against the EMPTY left relation (types,
-            // names, and column set all come from the source itself)
-            matched.unionByName(joined(lNew.limit(0), unmatched,
-              leftKeys, rightKeys, "right_outer", keepRightKeys = true))
+    } else (SnapshotStore.gap(spark, leftRoot, plv, lv),
+        SnapshotStore.gap(spark, rightRoot, prv, rv)) match {
+      case (lGap @ (Gap.Unmoved | _: Gap.Appended),
+            rGap @ (Gap.Unmoved | _: Gap.Appended)) =>
+        val Seq((lPart, lDeltaKeys), (rPart, rDeltaKeys)) = deltaLegs(spark,
+          leftRoot, rightRoot, leftKeys, rightKeys, how, lGap, rGap, plv, lv, rv,
+          lNew, rNew)
+        val adds = (lPart.toSeq ++ rPart.toSeq).reduce(_ unionByName _)
+        lazy val view = SnapshotStore.readEvolved(spark, viewRoot)
+        // MATCH ARRIVAL (outer only): does ΔR hit any key that currently
+        // has null-extended view rows? The probe reads the VIEW as a
+        // standing side — file-pruned by the delta's key range (outer
+        // commits stamp key stats below) and bloom-prefiltered by the
+        // delta's key tuples — O(view rows that might match), no collect.
+        // Full-outer runs the symmetric probe too: ΔL against the view's
+        // null-LEFT rows by right key.
+        val viewVer = SnapshotStore.currentVersion(viewRoot)
+        // the two match-arrival probes are independent isEmpty actions —
+        // overlap them too (full-outer pays both; inner pays neither)
+        val Seq(convertingR, convertingL) = Overlap.map(Seq(true, false)) {
+          case true => outer && rDeltaKeys.exists { dk =>
+            !prefiltered(
+              standing(spark, viewRoot, viewVer, leftKeys, dk)
+                .where(col(rightKeys.head).isNull)
+                .select(leftKeys.map(col): _*),
+              leftKeys, dk).isEmpty
           }
-          (Some(part), Some(dk))
-        } else (None, None)
-      val Seq((lPart, lDeltaKeys), (rPart, rDeltaKeys)) =
-        Overlap.map(Seq(true, false))(isL => if (isL) buildL() else buildR())
-      val adds = (lPart.toSeq ++ rPart.toSeq).reduce(_ unionByName _)
-      lazy val view = SnapshotStore.readEvolved(spark, viewRoot)
-      // MATCH ARRIVAL (outer only): does ΔR hit any key that currently
-      // has null-extended view rows? The probe reads the VIEW as a
-      // standing side — file-pruned by the delta's key range (outer
-      // commits stamp key stats below) and bloom-prefiltered by the
-      // delta's key tuples — O(view rows that might match), no collect.
-      // Full-outer runs the symmetric probe too: ΔL against the view's
-      // null-LEFT rows by right key.
-      val viewVer = SnapshotStore.currentVersion(viewRoot)
-      // the two match-arrival probes are independent isEmpty actions —
-      // overlap them too (full-outer pays both; inner pays neither)
-      val Seq(convertingR, convertingL) = Overlap.map(Seq(true, false)) {
-        case true => outer && rDeltaKeys.exists { dk =>
-          !prefiltered(
-            standing(spark, viewRoot, viewVer, leftKeys, dk)
-              .where(col(rightKeys.head).isNull)
-              .select(leftKeys.map(col): _*),
-            leftKeys, dk).isEmpty
+          case false => full && lDeltaKeys.exists { dk =>
+            !prefiltered(
+              standing(spark, viewRoot, viewVer, rightKeys, dk)
+                .where(col(leftKeys.head).isNull)
+                .select(rightKeys.map(col): _*),
+              rightKeys, dk).isEmpty
+          }
         }
-        case false => full && lDeltaKeys.exists { dk =>
-          !prefiltered(
-            standing(spark, viewRoot, viewVer, rightKeys, dk)
-              .where(col(leftKeys.head).isNull)
-              .select(rightKeys.map(col): _*),
-            rightKeys, dk).isEmpty
+        if (!convertingR && !convertingL) {
+          SnapshotStore.appendEpoch(adds, viewRoot, pack(lv, rv))
+        } else {
+          // converted keys' null rows retract; everything else survives.
+          // Published as the view's own compaction (non-commutative commit)
+          var keep = view
+          if (convertingR) {
+            val dk = rDeltaKeys.get
+            keep = keep.join(broadcast(dk.df),
+              leftKeys.zipWithIndex.map { case (k, i) =>
+                keep(k) === dk.df(s"__bk$i")
+              }.reduce(_ && _) && keep(rightKeys.head).isNull, "left_anti")
+          }
+          if (convertingL) {
+            val dk = lDeltaKeys.get
+            keep = keep.join(broadcast(dk.df),
+              rightKeys.zipWithIndex.map { case (k, i) =>
+                keep(k) === dk.df(s"__bk$i")
+              }.reduce(_ && _) && keep(leftKeys.head).isNull, "left_anti")
+          }
+          SnapshotStore.compactWith(
+            clustered(keep.unionByName(adds), leftKeys.head, keyIntegral),
+            viewRoot, epochOverride = Some(pack(lv, rv)))
         }
-      }
-      if (!convertingR && !convertingL) {
-        SnapshotStore.appendEpoch(adds, viewRoot, pack(lv, rv))
-      } else {
-        // converted keys' null rows retract; everything else survives.
-        // Published as the view's own compaction (non-commutative commit)
-        var keep = view
-        if (convertingR) {
-          val dk = rDeltaKeys.get
-          keep = keep.join(broadcast(dk.df),
-            leftKeys.zipWithIndex.map { case (k, i) =>
-              keep(k) === dk.df(s"__bk$i")
-            }.reduce(_ && _) && keep(rightKeys.head).isNull, "left_anti")
-        }
-        if (convertingL) {
-          val dk = lDeltaKeys.get
-          keep = keep.join(broadcast(dk.df),
-            rightKeys.zipWithIndex.map { case (k, i) =>
-              keep(k) === dk.df(s"__bk$i")
-            }.reduce(_ && _) && keep(leftKeys.head).isNull, "left_anti")
-        }
-        SnapshotStore.compactWith(
-          clustered(keep.unionByName(adds), leftKeys.head, keyIntegral),
-          viewRoot, epochOverride = Some(pack(lv, rv)))
-      }
-    } else if (churnOnly(leftRoot, plv, lv) && churnOnly(rightRoot, prv, rv)) {
-      // retraction: dirty key tuples from both change feeds, join work
-      // bounded by them; the view rewrites once (anti survivors +
-      // recompute — the recompute replays the VIEW's join type, so a
-      // right-side delete that un-matches a left row re-null-extends it)
-      val dirty = keyTuples(
-        SnapshotStore.changes(spark, leftRoot, plv, lv)
-          .select(leftKeys.map(col): _*)
-          .unionByName(SnapshotStore.changes(spark, rightRoot, prv, rv)
-            .select(rightKeys.zip(leftKeys).map { case (rk, lk) =>
-              col(rk).as(lk)
-            }: _*)),
-        leftKeys)
-      // NULL-SAFE key equality (<=>): an OUTER view legitimately carries
-      // null-key left rows (they null-extend at bootstrap and in ΔL), so
-      // the retraction machinery must be able to target them — `===`
-      // never matches null, which would strand a deleted null-key row in
-      // the view forever and drop a churn-range-inserted one. Inner
-      // views carry no null-key rows, so <=> is equivalence there.
-      def dirtyJoin(df: DataFrame, keys: Seq[String], jt: String) =
-        df.join(broadcast(dirty.df),
-          keys.zipWithIndex.map { case (k, i) =>
-            df(k) <=> dirty.df(s"__bk$i")
-          }.reduce(_ && _), jt)
-      // a FULL-outer view row's effective key is coalesce(lk, rk): an
-      // unmatched-RIGHT row carries its key only on the right side, so a
-      // survivors anti-join on the left key alone would strand it when
-      // its right row churns (matched rows have lk == rk; both-null rows
-      // coalesce to null, which <=> targets)
-      val viewDf = SnapshotStore.readEvolved(spark, viewRoot)
-      val survivors =
-        if (!full) dirtyJoin(viewDf, leftKeys, "left_anti")
-        else viewDf.join(broadcast(dirty.df),
-          leftKeys.zip(rightKeys).zipWithIndex.map { case ((lk, rk), i) =>
-            coalesce(viewDf(lk), viewDf(rk)) <=> dirty.df(s"__bk$i")
-          }.reduce(_ && _), "left_anti")
-      val recomputed = joined(
-        dirtyJoin(lNew, leftKeys, "left_semi"),
-        dirtyJoin(rNew, rightKeys, "left_semi"),
-        leftKeys, rightKeys, how, outer)
-      // COMPOSITION sidecar: this publish is a full-content swap whose
-      // manifest diff is not the row diff — record the O(Δ) feed
-      // (replaced view rows → deletes, the dirty recompute → inserts) so
-      // a DOWNSTREAM maintained view (rollup-over-join-view) absorbs
-      // this churn through its retraction path instead of rebuilding.
-      // Unchanged rows inside the dirty set ride as cancelling pairs
-      // (documented at SnapshotStore.recordChangeFeed).
-      locally {
-        val replaced =
-          if (!full) dirtyJoin(viewDf, leftKeys, "left_semi")
+      case (lGap @ (Gap.Unmoved | _: Gap.Appended | _: Gap.Churned),
+            rGap @ (Gap.Unmoved | _: Gap.Appended | _: Gap.Churned)) =>
+        // retraction: dirty key tuples from both change feeds, join work
+        // bounded by them; the view rewrites once (anti survivors +
+        // recompute — the recompute replays the VIEW's join type, so a
+        // right-side delete that un-matches a left row re-null-extends it)
+        val dirty = keyTuples(
+          (touched(lGap).map(_.select(leftKeys.map(col): _*)).toSeq ++
+            touched(rGap).map(_.select(rightKeys.zip(leftKeys).map {
+              case (rk, lk) => col(rk).as(lk)
+            }: _*))).reduce(_ unionByName _),
+          leftKeys)
+        // NULL-SAFE key equality (<=>): an OUTER view legitimately carries
+        // null-key left rows (they null-extend at bootstrap and in ΔL), so
+        // the retraction machinery must be able to target them — `===`
+        // never matches null, which would strand a deleted null-key row in
+        // the view forever and drop a churn-range-inserted one. Inner
+        // views carry no null-key rows, so <=> is equivalence there.
+        def dirtyJoin(df: DataFrame, keys: Seq[String], jt: String) =
+          df.join(broadcast(dirty.df),
+            keys.zipWithIndex.map { case (k, i) =>
+              df(k) <=> dirty.df(s"__bk$i")
+            }.reduce(_ && _), jt)
+        // a FULL-outer view row's effective key is coalesce(lk, rk): an
+        // unmatched-RIGHT row carries its key only on the right side, so a
+        // survivors anti-join on the left key alone would strand it when
+        // its right row churns (matched rows have lk == rk; both-null rows
+        // coalesce to null, which <=> targets)
+        val viewDf = SnapshotStore.readEvolved(spark, viewRoot)
+        val survivors =
+          if (!full) dirtyJoin(viewDf, leftKeys, "left_anti")
           else viewDf.join(broadcast(dirty.df),
             leftKeys.zip(rightKeys).zipWithIndex.map { case ((lk, rk), i) =>
               coalesce(viewDf(lk), viewDf(rk)) <=> dirty.df(s"__bk$i")
-            }.reduce(_ && _), "left_semi")
-        SnapshotStore.recordChangeFeed(
-          replaced.withColumn("_change_type", lit("delete"))
-            .unionByName(recomputed.withColumn("_change_type", lit("insert"))),
-          viewRoot, pack(lv, rv))
-      }
-      SnapshotStore.compactWith(
-        clustered(survivors.unionByName(recomputed), leftKeys.head,
-          outer && keyIntegral),
-        viewRoot, epochOverride = Some(pack(lv, rv)))
-    } else {
-      // a source compaction (or vacuumed baseline) broke the diff: rebuild
-      SnapshotStore.compactWith(
-        clustered(joined(lNew, rNew, leftKeys, rightKeys, how, outer),
-          leftKeys.head, outer && keyIntegral),
-        viewRoot, epochOverride = Some(pack(lv, rv)))
+            }.reduce(_ && _), "left_anti")
+        val recomputed = joined(
+          dirtyJoin(lNew, leftKeys, "left_semi"),
+          dirtyJoin(rNew, rightKeys, "left_semi"),
+          leftKeys, rightKeys, how, outer)
+        // COMPOSITION sidecar: this publish is a full-content swap whose
+        // manifest diff is not the row diff — record the O(Δ) feed
+        // (replaced view rows → deletes, the dirty recompute → inserts) so
+        // a DOWNSTREAM maintained view (rollup-over-join-view) absorbs
+        // this churn through its retraction path instead of rebuilding.
+        // Unchanged rows inside the dirty set ride as cancelling pairs
+        // (documented at SnapshotStore.recordChangeFeed).
+        locally {
+          val replaced =
+            if (!full) dirtyJoin(viewDf, leftKeys, "left_semi")
+            else viewDf.join(broadcast(dirty.df),
+              leftKeys.zip(rightKeys).zipWithIndex.map { case ((lk, rk), i) =>
+                coalesce(viewDf(lk), viewDf(rk)) <=> dirty.df(s"__bk$i")
+              }.reduce(_ && _), "left_semi")
+          SnapshotStore.recordChangeFeed(
+            replaced.withColumn("_change_type", lit("delete"))
+              .unionByName(recomputed.withColumn("_change_type", lit("insert"))),
+            viewRoot, pack(lv, rv))
+        }
+        SnapshotStore.compactWith(
+          clustered(survivors.unionByName(recomputed), leftKeys.head,
+            outer && keyIntegral),
+          viewRoot, epochOverride = Some(pack(lv, rv)))
+      case _ =>
+        // a source compaction (or vacuumed baseline) broke the diff: rebuild
+        SnapshotStore.compactWith(
+          clustered(joined(lNew, rNew, leftKeys, rightKeys, how, outer),
+            leftKeys.head, outer && keyIntegral),
+          viewRoot, epochOverride = Some(pack(lv, rv)))
     }
     // outer views carry key file stats so the NEXT match-arrival probe
     // prunes; inner views never scan themselves on the delta path.
@@ -671,8 +682,8 @@ object JoinView {
 
   /** DELTA-COMPENSATED content of a STALE inner view — the
     * lambda-architecture read path: when the view's cursor (plv, prv)
-    * lags the sources' current versions and every gap commit is an
-    * APPEND, the current join is exactly
+    * lags the sources' current versions and both gaps are appended or
+    * unmoved ([[SnapshotStore.gap]]), the current join is exactly
     *
     *   view  ∪  (ΔL ⋈ R_new)  ∪  (L_old ⋈ ΔR)
     *
@@ -689,9 +700,9 @@ object JoinView {
     * (a ΔR arrival CONVERTS standing unmatched-left rows, and
     * conversion is not a union), and a FULL-OUTER view always declines
     * (either side's delta can convert the other side's unmatched rows).
-    * None otherwise when compensation is unsound: a gap commit churned
-    * rows, a baseline manifest was vacuumed, or the view has no cursor
-    * yet. Already-fresh views return the plain view read.
+    * None otherwise when compensation is unsound: a gap churned rows, a
+    * baseline manifest was vacuumed, or the view has no cursor yet.
+    * Already-fresh views return the plain view read.
     *
     * Building the compensation runs small driver jobs (the delta's key
     * tuples and range) — the price of file-pruned standing reads; the
@@ -709,54 +720,25 @@ object JoinView {
     if (lv < plv || rv < prv) return None
     val view = read(spark, viewRoot)
     if (lv == plv && rv == prv) return Some(view)
-    if (how == "left_outer") {
-      // one-sided union: sound ONLY while R is unchanged
-      if (rv != prv || !appendOnly(leftRoot, plv, lv)) return None
-      val lNew = SnapshotStore.readEvolved(spark, leftRoot, lv)
-      val delta = SnapshotStore.incremental(spark, leftRoot, plv, lv,
-        Some(lNew.schema))
-      val dk = keyTuples(delta, leftKeys)
-      return Some(view.unionByName(
-        joined(delta,
-          prefiltered(standing(spark, rightRoot, rv, rightKeys, dk),
-            rightKeys, dk),
-          leftKeys, rightKeys, "left_outer", keepRightKeys = true),
-        allowMissingColumns = true))
+    (SnapshotStore.gap(spark, leftRoot, plv, lv),
+        SnapshotStore.gap(spark, rightRoot, prv, rv)) match {
+      // left-outer: a one-sided union, sound ONLY while R is unchanged
+      case (lGap @ (Gap.Unmoved | _: Gap.Appended),
+            rGap @ (Gap.Unmoved | _: Gap.Appended))
+          if how == "inner" || rGap == Gap.Unmoved =>
+        lazy val lNew = SnapshotStore.readEvolved(spark, leftRoot, lv)
+        lazy val rNew = SnapshotStore.readEvolved(spark, rightRoot, rv)
+        val legs = deltaLegs(spark, leftRoot, rightRoot, leftKeys, rightKeys,
+          how, lGap, rGap, plv, lv, rv, lNew, rNew)
+        // allowMissingColumns: an appended gap can WIDEN a source (the
+        // store's additive-evolution contract), so the delta legs may
+        // carry a column the view predates, or vice versa. Null-filling
+        // is EXACT here: the view's rows joined under the old schema, and
+        // the user's own current-snapshot join reads those same
+        // pre-evolution rows' new column as null through the merged footer.
+        Some((view +: legs.flatMap(_._1))
+          .reduce(_.unionByName(_, allowMissingColumns = true)))
+      case _ => None
     }
-    if (!appendOnly(leftRoot, plv, lv) || !appendOnly(rightRoot, prv, rv))
-      return None
-    val lNew = SnapshotStore.readEvolved(spark, leftRoot, lv)
-    val rNew = SnapshotStore.readEvolved(spark, rightRoot, rv)
-    // the two compensation legs overlap exactly like the refresh legs
-    val Seq(lPart, rPart) = Overlap.map(Seq(true, false)) {
-      case true =>
-        if (lv > plv) {
-          val delta = SnapshotStore.incremental(spark, leftRoot, plv, lv,
-            Some(lNew.schema))
-          val dk = keyTuples(delta, leftKeys)
-          Some(joined(delta,
-            prefiltered(standing(spark, rightRoot, rv, rightKeys, dk),
-              rightKeys, dk),
-            leftKeys, rightKeys))
-        } else None
-      case false =>
-        if (rv > prv) {
-          val delta = SnapshotStore.incremental(spark, rightRoot, prv, rv,
-            Some(rNew.schema))
-          val dk = keyTuples(delta, rightKeys)
-          Some(joined(
-            prefiltered(standing(spark, leftRoot, plv, leftKeys, dk),
-              leftKeys, dk),
-            delta, leftKeys, rightKeys))
-        } else None
-    }
-    // allowMissingColumns: an append-only gap can WIDEN a source (the
-    // store's additive-evolution contract — op stays "append"), so the
-    // delta legs may carry a column the view predates, or vice versa.
-    // Null-filling is EXACT here: the view's rows joined under the old
-    // schema, and the user's own current-snapshot join reads those same
-    // pre-evolution rows' new column as null through the merged footer.
-    Some((Seq(view) ++ lPart ++ rPart)
-      .reduce(_.unionByName(_, allowMissingColumns = true)))
   }
 }

@@ -101,9 +101,10 @@ object NdvView {
   }
 
   /** DELTA-COMPENSATED content of a STALE NDV view: when the view's
-    * stamp lags the source's current version and every gap commit is an
-    * APPEND, the current estimate is the stored sketches unioned with
-    * the GAP rows' sketches folded on the fly — and because HLL register
+    * stamp lags the source's current version over an appended gap
+    * ([[SnapshotStore.Gap.Appended]]), the current estimate is the
+    * stored sketches unioned with the GAP rows' sketches folded on the
+    * fly — and because HLL register
     * state is a per-item MAX, that union is BIT-EQUAL in estimate to a
     * refresh-then-read (not merely within the error band; the same
     * associativity the refresh itself relies on). Retraction is the one
@@ -112,19 +113,14 @@ object NdvView {
     * caller falls back to the base plan; an already-fresh view returns
     * the plain read. Cost: O(partials + Δ). */
   def compensatedRead(spark: SparkSession, srcRoot: String,
-                      viewRoot: String, grain: Grain = Day): Option[DataFrame] = {
-    RollupView.requireGrain(viewRoot, grain, "compensatedRead")
-    val from = SnapshotStore.lastEpoch(viewRoot).map(_.toInt).getOrElse(return None)
-    val srcCur = SnapshotStore.currentVersion(srcRoot)
-    if (srcCur < from) return None
-    if (srcCur == from) return Some(read(spark, viewRoot, grain))
-    if (!JoinView.appendOnly(srcRoot, from, srcCur)) return None
-    val delta = SnapshotStore.incremental(spark, srcRoot, from, srcCur)
-    Some(estimated(mergedOf(
-      SnapshotStore.read(spark, viewRoot)
-        .unionByName(NdvSpec.fold(NdvSpec.bucketed(delta, grain), grain)),
-      grain), grain))
-  }
+                      viewRoot: String, grain: Grain = Day): Option[DataFrame] =
+    RollupView.compensatedWith(spark, srcRoot, viewRoot, grain)(
+        read(spark, viewRoot, grain)) { delta =>
+      estimated(mergedOf(
+        SnapshotStore.read(spark, viewRoot)
+          .unionByName(NdvSpec.fold(NdvSpec.bucketed(delta, grain), grain)),
+        grain), grain)
+    }
 
   /** Fold accumulated partial rows to one sketch row per key (published
     * as a view compaction; tombstones fold away physically). */

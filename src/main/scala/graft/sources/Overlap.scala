@@ -30,7 +30,7 @@ package graft.sources
   * probe) can be in flight at once. A traced `perfbench` `view_maintain`
   * run saw 11 jobs in flight; since hops into stores small enough to
   * broadcast stop probing it sees 8, but the bound is still the product.
-  * ROADMAP item 4 change 3 replaces the per-call pools with one global
+  * ROADMAP item 3 replaces the per-call pools with one global
   * semaphore.
   */
 private[graft] object Overlap {

@@ -3,6 +3,8 @@ package graft.sources
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import SnapshotStore.Gap
+
 /** Incrementally-maintained APPROXIMATE-QUANTILE view — the maintained
   * counterpart of the a35 serving trick, closing the one documented IVM
   * decline (COVERAGE.md: KLL nondeterminism, GK merge order-sensitivity).
@@ -177,29 +179,25 @@ object QuantileView {
     v
   }
 
-  private def rowChurnOnly(root: String, from: Int, cur: Int): Boolean =
-    SnapshotStore.opsAll(root, from, cur, SnapshotStore.RowChurnOps)
-
-  /** The gap (from, srcCur]'s signed bin counts under the frozen edges
-    * `ed` — an append-only gap bins its delta at +1, a churn gap its row
-    * change feed at ±1 — or, when a positive row escapes the envelope
+  /** The source gap's signed bin counts under the frozen edges `ed` —
+    * an appended gap bins its rows at +1, a churned gap its row change
+    * feed at ±1 — or, when a positive row escapes the envelope
     * (or carries a new/NULL metric or a NULL value), the escaping
     * metrics: [[refresh]] refreezes, [[compensatedQuantiles]] declines.
     * Delete-side NULL rows were never binned, so skipping them IS their
     * retraction. One definition for both, so compensated serving is
     * bit-equal to refresh-then-serve. */
-  private def gapCounts(spark: SparkSession, srcRoot: String, from: Int,
-                        srcCur: Int, ed: DataFrame,
+  private def gapCounts(gap: Gap, ed: DataFrame,
                         grainSec: Long): Either[Set[Seq[Any]], DataFrame] = {
-    val (rows, positive, sign) =
-      if (SnapshotStore.opsAll(srcRoot, from, srcCur, Set("append"))) {
-        val delta = SnapshotStore.incremental(spark, srcRoot, from, srcCur)
+    val (rows, positive, sign) = gap match {
+      case a: Gap.Appended =>
+        val delta = a.rows()
         (delta, delta, lit(1L))
-      } else {
-        val ch = SnapshotStore.changes(spark, srcRoot, from, srcCur)
+      case c: Gap.Churned =>
         val insert = col("_change_type") === "insert"
-        (ch, ch.where(insert), when(insert, 1L).otherwise(-1L))
-      }
+        (c.changes, c.changes.where(insert), when(insert, 1L).otherwise(-1L))
+      case other => sys.error(s"no bin counts over a $other gap")
+    }
     val esc = hist.escaping(positive, ed, "value")
     if (esc.nonEmpty) Left(esc)
     else Right(hist.binned(rows, ed, grouping(grainSec), "value", sign))
@@ -232,16 +230,20 @@ object QuantileView {
     def rebuild(margins: Map[Seq[Any], Double]): Int =
       recorded(rebuildAt(spark, srcRoot, viewRoot, grainSec, bins, srcCur, margins))
 
-    val baselineGone = from > 0 && !SnapshotStore.hasManifest(srcRoot, from)
-    if (from == 0 || baselineGone || !rowChurnOnly(srcRoot, from, srcCur))
-      return rebuild(Map.empty)
-    val ed = edgesFor(spark, viewRoot).localCheckpoint(true)
-    // an escape (a null row too — the rebuild's gate refuses it)
-    // refreezes with the ESCAPING metrics' margins doubled
-    gapCounts(spark, srcRoot, from, srcCur, ed, grainSec) match {
-      case Left(esc) => rebuild(hist.grownMargins(ed, esc))
-      case Right(counts) =>
-        recorded(SnapshotStore.appendEpoch(counts, viewRoot, srcCur))
+    if (from == 0) return rebuild(Map.empty)
+    SnapshotStore.gap(spark, srcRoot, from, srcCur) match {
+      case g @ (_: Gap.Appended | _: Gap.Churned) =>
+        val ed = edgesFor(spark, viewRoot).localCheckpoint(true)
+        // an escape (a null row too — the rebuild's gate refuses it)
+        // refreezes with the ESCAPING metrics' margins doubled
+        gapCounts(g, ed, grainSec) match {
+          case Left(esc) => rebuild(hist.grownMargins(ed, esc))
+          case Right(counts) =>
+            recorded(SnapshotStore.appendEpoch(counts, viewRoot, srcCur))
+        }
+      // a compaction or a vacuumed baseline broke the diff (a recorded
+      // feed rebuilds too: only the rollup engine reads one)
+      case _ => rebuild(Map.empty)
     }
   }
 
@@ -289,13 +291,15 @@ object QuantileView {
     val from = SnapshotStore.lastEpoch(viewRoot).map(_.toInt).getOrElse(return None)
     val srcCur = SnapshotStore.currentVersion(srcRoot)
     if (srcCur < from) return None
-    if (srcCur == from) return Some(quantiles(spark, viewRoot, phis))
-    if (!SnapshotStore.hasManifest(srcRoot, from)) return None // vacuumed baseline
-    if (!rowChurnOnly(srcRoot, from, srcCur)) return None      // compaction
-    val ed = edgesFor(spark, viewRoot).localCheckpoint(true)
-    gapCounts(spark, srcRoot, from, srcCur, ed, grainSec).toOption.map(gap =>
-      hist.estimates(
-        hist.merged(SnapshotStore.read(spark, viewRoot).unionByName(gap), Keys),
-        ed, Keys, phis))
+    SnapshotStore.gap(spark, srcRoot, from, srcCur) match {
+      case Gap.Unmoved => Some(quantiles(spark, viewRoot, phis))
+      case g @ (_: Gap.Appended | _: Gap.Churned) =>
+        val ed = edgesFor(spark, viewRoot).localCheckpoint(true)
+        gapCounts(g, ed, grainSec).toOption.map(counts =>
+          hist.estimates(
+            hist.merged(SnapshotStore.read(spark, viewRoot).unionByName(counts), Keys),
+            ed, Keys, phis))
+      case _ => None // a compaction or a vacuumed baseline
+    }
   }
 }

@@ -3,6 +3,8 @@ package graft.sources
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import SnapshotStore.Gap
+
 /** Incrementally-maintained materialized rollup over a [[SnapshotStore]]
   * series table — incremental view maintenance (IVM) reduced to its
   * mergeable-aggregate core, the reference's re-aggregate-on-append loop
@@ -33,14 +35,14 @@ import org.apache.spark.sql.functions._
   *
   * Source DELETES and UPSERTS ([[SnapshotStore.deleteWhere]]/
   * [[SnapshotStore.upsert]]) maintain incrementally too: refresh reads
-  * the net row diff ([[SnapshotStore.changes]]), re-aggregates only the
+  * the gap's row feed ([[SnapshotStore.gap]]), re-aggregates only the
   * (metric, day) groups that LOST rows (min/max are not retractable
   * monoids — recompute-the-dirty-group is the standard IVM answer) and
   * replaces their partials via the view store's own keyed upsert;
-  * insert-only groups keep the O(delta) append path. Only a source
-  * COMPACTION (or pre-kind legacy history, per [[SnapshotStore.manifestOp]])
-  * still falls back to one full rebuild, because a content-preserving
-  * directory swap has no row diff to follow.
+  * insert-only groups keep the O(delta) append path. Only an opaque gap
+  * (a source COMPACTION, or pre-kind legacy history) still falls back to
+  * one full rebuild, because a content-preserving directory swap has no
+  * row diff to follow.
   *
   * Resume position: each refresh stamps the processed SOURCE version into
   * the view's manifest as the epoch id ([[SnapshotStore.appendEpoch]]),
@@ -227,16 +229,6 @@ object RollupView {
     require(srcCur > 0, s"no published source version at $srcRoot")
     val from = SnapshotStore.lastEpoch(viewRoot).map(_.toInt).getOrElse(0)
     if (srcCur <= from) return SnapshotStore.currentVersion(viewRoot)
-    val curDirs = SnapshotStore.manifestDirs(srcRoot, srcCur).toSet
-    // A vacuumed from-manifest means the counted baseline is gone — the
-    // manifest diff cannot be computed, so take the same full-rebuild
-    // branch a compaction takes (instead of crashing on every retry and
-    // wedging the view until manual repair).
-    val baselineGone = from > 0 && !SnapshotStore.hasManifest(srcRoot, from)
-    val beforeDirs =
-      if (from == 0 || baselineGone) Set.empty[String]
-      else SnapshotStore.manifestDirs(srcRoot, from).toSet
-    val removed = beforeDirs.exists(d => !curDirs.contains(d))
     // a standing store in the spec's PRE-CURRENT partial shape (e.g. a
     // pre-nn classic view) migrates through one full rebuild — appending
     // new-format partials would refuse on the store's schema contract
@@ -245,20 +237,9 @@ object RollupView {
       viewCur > 0 && spec.legacyFormat(
         SnapshotStore.manifestCols(viewRoot, viewCur).getOrElse(Seq.empty))
     }
-    // the COMPOSITION path: a non-row-churn gap (an upstream maintained
-    // view's churn publish is a full-content swap) may still carry a
-    // RECORDED change feed — then the retraction machinery absorbs it as
-    // O(Δ) exactly like native source churn, instead of rebuilding
-    lazy val recordedFeed: Option[DataFrame] =
-      if (baselineGone || legacy) None
-      else SnapshotStore.changeFeedFor(spark, srcRoot, from, srcCur)
-    val v = if (baselineGone || legacy ||
-        (removed && !rowChurnOnly(srcRoot, from, srcCur) &&
-          recordedFeed.isEmpty)) {
-      // a compaction (or unknown-kind legacy history) replaced directories
-      // we already counted: the manifest diff is no longer the row delta —
-      // rebuild once, publish as the view's own compaction (sole content),
-      // stamp the new position
+    // rebuild once, publish as the view's own compaction (sole content),
+    // stamp the new position
+    def rebuild(): Int = {
       val full = spec.fold(
         spec.bucketed(SnapshotStore.read(spark, srcRoot, srcCur), grain), grain)
       if (SnapshotStore.currentVersion(viewRoot) == 0)
@@ -266,30 +247,28 @@ object RollupView {
       else
         SnapshotStore.compactWith(full, viewRoot,
           epochOverride = Some(srcCur.toLong))
-    } else if (!removed) {
-      val delta = SnapshotStore.incremental(spark, srcRoot, from, srcCur)
-      SnapshotStore.appendEpoch(
-        spec.fold(spec.bucketed(delta, grain), grain), viewRoot, srcCur)
-    } else if (!rowChurnOnly(srcRoot, from, srcCur)) {
-      // recorded-feed retraction (the composition path — recordedFeed is
-      // necessarily defined here, or the rebuild branch above took it)
-      refreshRetracting(spark, srcRoot, viewRoot, from, srcCur, grain, spec,
-        recordedFeed.get)
-    } else refreshRetracting(spark, srcRoot, viewRoot, from, srcCur, grain,
-      spec, SnapshotStore.changes(spark, srcRoot, from, srcCur))
+    }
+    val v = if (legacy) rebuild()
+    else SnapshotStore.gap(spark, srcRoot, from, srcCur) match {
+      case a: Gap.Appended =>
+        SnapshotStore.appendEpoch(
+          spec.fold(spec.bucketed(a.rows(), grain), grain), viewRoot, srcCur)
+      // native source churn, or the COMPOSITION path: an upstream
+      // maintained view's churn publish (a full-content swap) that
+      // recorded its feed — the retraction machinery absorbs either as O(Δ)
+      case f: Gap.Fed =>
+        refreshRetracting(spark, srcRoot, viewRoot, from, srcCur, grain, spec,
+          f.changes)
+      // a compaction, a vacuumed baseline or unknown-kind legacy history:
+      // the counted directories are gone and no diff follows them
+      case _ => rebuild()
+    }
     stampGrain(viewRoot, grain)
     // the refreshed cursor pins the source's vacuum (see the viewrefs
     // guard): recorded AFTER the publish, so a crash leaves no false pin
     SnapshotStore.recordViewBaseline(srcRoot, viewRoot, srcCur)
     v
   }
-
-  /** Are all commits in (from, cur] ROW-CHURN kinds (append/delete/
-    * upsert — the manifest's directory diff is the row diff)? A
-    * compaction, or a pre-kind legacy manifest, answers false and sends
-    * refresh down the rebuild branch. */
-  private def rowChurnOnly(root: String, from: Int, cur: Int): Boolean =
-    SnapshotStore.opsAll(root, from, cur, SnapshotStore.RowChurnOps)
 
   /** The RETRACTION refresh: the source lost rows since `from`
     * ([[SnapshotStore.deleteWhere]]/[[SnapshotStore.upsert]] rewrote
@@ -441,33 +420,45 @@ object RollupView {
 
   /** DELTA-COMPENSATED content of a STALE classic view — the
     * lambda-architecture read path: when the view's stamp lags the
-    * source's current version and every gap commit is an APPEND, the
-    * current rollup is exactly the stored partials merged with the
-    * GAP's delta partials (count/sum/min/max are all insert-monotone
-    * monoids — only retraction needs the refresh machinery), so a
-    * reader serves fresh answers at O(partials + Δ) without waiting for
-    * the refresh. None when compensation is unsound: a gap commit
-    * churned or compacted rows, the baseline manifest was vacuumed, or
-    * the view has no stamp yet; an already-fresh view returns the plain
-    * read. */
+    * source's current version over an appended gap (no directory of the
+    * stamped version went missing), the current rollup is exactly the
+    * stored partials merged with the GAP's delta partials
+    * (count/sum/min/max are all insert-monotone monoids — only
+    * retraction needs the refresh machinery), so a reader serves fresh
+    * answers at O(partials + Δ) without waiting for the refresh. None
+    * when compensation is unsound: the gap churned or compacted rows,
+    * the baseline manifest was vacuumed, or the view has no stamp yet;
+    * an already-fresh view returns the plain read. */
   def compensatedRead(spark: SparkSession, srcRoot: String,
-                      viewRoot: String, grain: Grain = Day): Option[DataFrame] = {
+                      viewRoot: String, grain: Grain = Day): Option[DataFrame] =
+    compensatedWith(spark, srcRoot, viewRoot, grain)(read(spark, viewRoot, grain)) {
+      delta =>
+        val stored = SnapshotStore.read(spark, viewRoot)
+        val deltaPartials = ClassicSpec.fold(ClassicSpec.bucketed(delta, grain), grain)
+        // a pre-nn legacy store compensates in ITS shape (avg declines
+        // there until a refresh migrates; every other monoid merges unchanged)
+        merged(
+          stored.unionByName(
+            if (stored.columns.exists(_.equalsIgnoreCase("nn"))) deltaPartials
+            else deltaPartials.drop("nn")),
+          grain)
+    }
+
+  /** The compensated read of a view this engine maintains: None without
+    * a stamp or unless the source gap since it is appended, `fresh` when
+    * the view is current, else `stale` over the gap's appended rows. */
+  private[sources] def compensatedWith(spark: SparkSession, srcRoot: String,
+                                       viewRoot: String, grain: Grain)(
+      fresh: => DataFrame)(stale: DataFrame => DataFrame): Option[DataFrame] = {
     requireGrain(viewRoot, grain, "compensatedRead")
     val from = SnapshotStore.lastEpoch(viewRoot).map(_.toInt).getOrElse(return None)
     val srcCur = SnapshotStore.currentVersion(srcRoot)
     if (srcCur < from) return None
-    if (srcCur == from) return Some(read(spark, viewRoot, grain))
-    if (!JoinView.appendOnly(srcRoot, from, srcCur)) return None
-    val delta = SnapshotStore.incremental(spark, srcRoot, from, srcCur)
-    val stored = SnapshotStore.read(spark, viewRoot)
-    val deltaPartials = ClassicSpec.fold(ClassicSpec.bucketed(delta, grain), grain)
-    // a pre-nn legacy store compensates in ITS shape (avg declines there
-    // until a refresh migrates; every other monoid merges unchanged)
-    Some(merged(
-      stored.unionByName(
-        if (stored.columns.exists(_.equalsIgnoreCase("nn"))) deltaPartials
-        else deltaPartials.drop("nn")),
-      grain))
+    SnapshotStore.gap(spark, srcRoot, from, srcCur) match {
+      case Gap.Unmoved     => Some(fresh)
+      case a: Gap.Appended => Some(stale(a.rows()))
+      case _               => None
+    }
   }
 
   /** Fold the accumulated partial rows down to one row per (metric,

@@ -2,6 +2,7 @@ package graft.sources
 
 import java.nio.file.{Files, Path, Paths, StandardCopyOption}
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.types.StructType
 
 /** Manifest-based versioned table store — the batch-pipeline state layer a
   * continuously-curated corpus needs: append-only snapshot versions, time
@@ -117,17 +118,10 @@ object SnapshotStore {
   def manifestOp(root: String, v: Int): Option[String] =
     manifestText(root, v).flatMap(OpRe.findFirstMatchIn(_).map(_.group(1)))
 
-  /** ONE definition of the "what counts as row churn" invariant the
-    * maintained views share: the manifest ops whose directory diff IS the
-    * row diff. A compaction (or pre-kind legacy manifest) is not in the
-    * set and sends every consumer down its rebuild branch. */
-  private[sources] val RowChurnOps: Set[String] = Set("append", "delete", "upsert")
-
-  /** Are ALL commits in (from, cur] of the given manifest-op kinds?
-    * (Pre-kind/vacuumed manifests answer false — conservative.) */
-  private[sources] def opsAll(root: String, from: Int, cur: Int,
-                              kinds: Set[String]): Boolean =
-    ((from + 1) to cur).forall(v => manifestOp(root, v).exists(kinds))
+  /** The manifest ops whose directory diff IS the row diff — [[gap]]'s
+    * [[Gap.Churned]] rule. A compaction (or pre-kind legacy manifest) is
+    * not in the set. */
+  private val RowChurnOps: Set[String] = Set("append", "delete", "upsert")
 
   /** Commit wall-clock of version `v` (epoch millis), None for pre-stamp
     * or vacuumed manifests. Recorded at publish time by the committing
@@ -337,14 +331,6 @@ object SnapshotStore {
     -1 // unreachable
   }
 
-  /** Append `df` as a new snapshot version (version 1 creates the table).
-    * Data lands under its own writer-unique directory; the manifest
-    * unions it with the parent's directories. Returns the new version.
-    * Safe under concurrent appenders: data directories are never shared,
-    * and the manifest commit is create-if-absent with a re-stack retry
-    * (see [[commitAppend]]) — contended writers serialize into
-    * sequential versions, neither losing files. A crashed append leaves
-    * an unreferenced directory no reader ever plans; vacuum removes it. */
   /** Run `body` under a Spark job description so multi-job operators
     * read attributably in the UI / JobProfile (optimization guide §1.5).
     * Nested labels compose with " > "; the previous description is
@@ -357,6 +343,14 @@ object SnapshotStore {
     try body finally sc.setJobDescription(prev)
   }
 
+  /** Append `df` as a new snapshot version (version 1 creates the table).
+    * Data lands under its own writer-unique directory; the manifest
+    * unions it with the parent's directories. Returns the new version.
+    * Safe under concurrent appenders: data directories are never shared,
+    * and the manifest commit is create-if-absent with a re-stack retry
+    * (see [[commitAppend]]) — contended writers serialize into
+    * sequential versions, neither losing files. A crashed append leaves
+    * an unreferenced directory no reader ever plans; vacuum removes it. */
   def append(df: DataFrame, root: String): Int =
     labeled(df.sparkSession, "store append") {
       appendReturningDir(df, root)._1
@@ -369,15 +363,6 @@ object SnapshotStore {
     (commitAppend(root, dir, None, df.columns.toSeq), dir)
   }
 
-  /** Read snapshot `version` (default: latest) — the union of exactly the
-    * manifest's directories.
-    *
-    * `mergeSchema = true` reconciles versions whose appends EVOLVED the
-    * schema (a column added later reads as null on older rows — the
-    * additive half of lakehouse schema evolution; drops/renames are the
-    * caller's migration, not a read option). It costs a footer read per
-    * file at planning, which is why it is opt-in: the default read plans
-    * from one footer, the right posture when the schema is stable. */
   /** Sampled-footer schema per published (root, version) — a version's
     * file set is immutable once its manifest exists, so the plain read's
     * schema inference (a footer-sample job per call) is paid ONCE and
@@ -385,7 +370,7 @@ object SnapshotStore {
     * mergeSchema reads never come here (their schema is the file-set
     * union, not the sample). Bounded LRU; [[deleteTree]] invalidates its
     * root (tests rebuild stores at a reused path). */
-  private val schemaCache = versionCache[org.apache.spark.sql.types.StructType]()
+  private val schemaCache = versionCache[StructType]()
 
   /** Parquet bytes per published (root, version) — see [[versionBytes]]. */
   private val bytesCache = versionCache[java.lang.Long]()
@@ -418,6 +403,15 @@ object SnapshotStore {
     }
   }
 
+  /** Read snapshot `version` (default: latest) — the union of exactly the
+    * manifest's directories.
+    *
+    * `mergeSchema = true` reconciles versions whose appends EVOLVED the
+    * schema (a column added later reads as null on older rows — the
+    * additive half of lakehouse schema evolution; drops/renames are the
+    * caller's migration, not a read option). It costs a footer read per
+    * file at planning, which is why it is opt-in: the default read plans
+    * from one footer, the right posture when the schema is stable. */
   def read(spark: SparkSession, root: String, version: Int = -1,
            mergeSchema: Boolean = false): DataFrame = {
     val v = if (version > 0) version else currentVersion(root)
@@ -468,12 +462,13 @@ object SnapshotStore {
 
   /** Rows added AFTER `fromExclusive` up to `to` (default: latest) — plans
     * only the directories the newer manifests introduced. This is the
-    * batch "what's new since my last run" read; with compactions in the
-    * range the caller should diff against logical content instead
-    * (compaction introduces directories without introducing rows). */
+    * batch "what's new since my last run" read, and it is the gap's rows
+    * only when no directory went missing: a consumer that must know
+    * whether it is asks [[gap]] (its [[Gap.Appended]] case reads these
+    * same directories). `schema` reads them under an explicit schema. */
   def incremental(spark: SparkSession, root: String,
                   fromExclusive: Int, to: Int = -1,
-                  schema: Option[org.apache.spark.sql.types.StructType] = None): DataFrame = {
+                  schema: Option[StructType] = None): DataFrame = {
     val v = if (to > 0) to else currentVersion(root)
     require(fromExclusive >= 0 && v >= fromExclusive,
       s"bad incremental range ($fromExclusive, $v]")
@@ -483,14 +478,8 @@ object SnapshotStore {
     val before =
       if (fromExclusive == 0) Set.empty[String]
       else manifestDirs(root, fromExclusive).toSet
-    val added = manifestDirs(root, v).filterNot(before)
-    // `schema`: read the added dirs under an EXPLICIT schema (columns a
-    // dir's files lack read as null) — the evolved-store posture for
-    // consumers that must see the full shape even when the range mixes
-    // pre- and post-evolution appends
-    if (added.isEmpty) read(spark, root, v).limit(0)
-    else schema.map(spark.read.schema(_)).getOrElse(spark.read)
-      .parquet(added: _*)
+    new Gap.Appended(spark, root, v, manifestDirs(root, v).filterNot(before))
+      .rows(schema)
   }
 
   /** Net row-level CHANGE FEED between two snapshot versions — every row
@@ -508,11 +497,11 @@ object SnapshotStore {
     * commit sequence; computed from only the directories the manifests
     * DISAGREE on, so its cost is O(churn) — the removed + added
     * directories' rows, two `EXCEPT ALL` shuffles — not O(table), except
-    * across a compaction (which replaces every directory; check
-    * [[manifestOp]] and cut change ranges at compactions to keep feeds
-    * cheap). Both sides read under one unified schema: schema-evolved
-    * columns compare as null on pre-evolution rows, exactly as [[read]]
-    * serves them. */
+    * across a compaction (which replaces every directory). Maintained
+    * consumers ask [[gap]] instead: it decides whether a gap needs this
+    * diff at all, and hands it out as [[Gap.Churned]]'s `changes`. Both
+    * sides read under one unified schema: schema-evolved columns compare
+    * as null on pre-evolution rows, exactly as [[read]] serves them. */
   def changes(spark: SparkSession, root: String,
               fromExclusive: Int, to: Int = -1): DataFrame = {
     import org.apache.spark.sql.functions._
@@ -580,6 +569,12 @@ object SnapshotStore {
     }
   }
 
+  /** [[epochSeen]] for sibling ingest layers (SearchIndex) that guard a
+    * multi-store trigger and want to skip the batch's recompute work
+    * entirely when every store already carries the stamp. */
+  private[sources] def epochStamped(root: String, epochId: Long): Boolean =
+    epochSeen(root, epochId)
+
   /** Is `epochId` already stamped in any surviving manifest? Vacuumed
     * versions have no manifest — skip, don't crash (their epoch stamps
     * are below any epoch a live stream can replay: Spark epoch ids are
@@ -587,12 +582,6 @@ object SnapshotStore {
     * by [[commitAppend]] on every contended retry: the winner of a lost
     * race may have published THIS epoch, and re-stacking on top would
     * double-ingest the micro-batch. */
-  /** [[epochSeen]] for sibling ingest layers (SearchIndex) that guard a
-    * multi-store trigger and want to skip the batch's recompute work
-    * entirely when every store already carries the stamp. */
-  private[sources] def epochStamped(root: String, epochId: Long): Boolean =
-    epochSeen(root, epochId)
-
   private def epochSeen(root: String, epochId: Long): Boolean =
     (1 to currentVersion(root)).exists { v =>
       val p = manifestPath(root, v)
@@ -675,49 +664,101 @@ object SnapshotStore {
     }
   }
 
-  /** Version `v`'s recorded feed, if one exists AND its recorded epoch
-    * matches the committed manifest's stamp (see the orphan contract in
-    * the section comment). */
-  private def feedFor(spark: SparkSession, root: String,
-                      v: Int): Option[DataFrame] = {
+  /** Does version `v` carry a recorded feed whose epoch matches the
+    * committed manifest's stamp (see the orphan contract in the section
+    * comment)? File reads only. */
+  private def feedRecorded(root: String, v: Int): Boolean = {
     val ep = feedEpochPath(root, v)
-    if (!Files.exists(ep) ||
-        !Files.isDirectory(Paths.get(root, "_vchanges", s"v$v"))) None
-    else scala.util.Try(
-      new String(Files.readAllBytes(ep), "UTF-8").trim.toLong).toOption
-      .filter(rec => epochOf(root, v).contains(rec))
-      .map(_ => spark.read.parquet(feedDir(root, v)))
+    Files.exists(ep) && Files.isDirectory(Paths.get(root, "_vchanges", s"v$v")) &&
+      scala.util.Try(new String(Files.readAllBytes(ep), "UTF-8").trim.toLong)
+        .toOption.exists(rec => epochOf(root, v).contains(rec))
   }
 
-  /** The row-level change feed across (`fromExclusive`, `cur`] when EVERY
-    * gap version is either a row-churn commit (its manifest diff IS the
-    * row diff) or a publish that RECORDED its feed — the composition
-    * contract a downstream view needs to absorb an upstream maintained
-    * view's churn as O(Δ). None otherwise (an unrecorded compaction, a
-    * vacuumed boundary): the consumer falls back to its rebuild. */
-  def changeFeedFor(spark: SparkSession, root: String,
-                    fromExclusive: Int, cur: Int): Option[DataFrame] =
-    scala.util.Try {
-      if (cur <= fromExclusive || fromExclusive == 0 ||
-          !hasManifest(root, fromExclusive)) return None
+  // ---- version gaps ------------------------------------------------------
+
+  /** How a consumer reads a store's version gap (from, to] — see [[gap]]. */
+  sealed trait Gap
+
+  object Gap {
+    /** `from == to`: nothing to read. */
+    case object Unmoved extends Gap
+
+    /** No directory of `from` is missing at `to`, so the added
+      * directories are exactly the inserted rows, whatever the op kinds
+      * (an append, an upsert that only inserted new keys, a merge that
+      * only added directories). */
+    final class Appended private[SnapshotStore] (spark: SparkSession,
+        root: String, to: Int, added: Seq[String]) extends Gap {
+      /** The inserted rows. `schema` reads them under an explicit schema
+        * (columns a directory's files lack read as null): the evolved-store
+        * posture for consumers that must see the full shape when the gap
+        * mixes pre- and post-evolution appends. */
+      def rows(schema: Option[StructType] = None): DataFrame =
+        if (added.isEmpty) read(spark, root, to).limit(0)
+        else schema.map(spark.read.schema(_)).getOrElse(spark.read).parquet(added: _*)
+    }
+
+    /** A gap with a signed row feed: `changes` is store schema plus
+      * `_change_type` ("insert" | "delete"), built on first use. */
+    sealed abstract class Fed(feed: => DataFrame) extends Gap {
+      lazy val changes: DataFrame = feed
+    }
+
+    /** Directories went missing, and every gap commit is an append,
+      * delete or upsert: the manifest diff is the row diff, and `changes`
+      * is [[SnapshotStore.changes]] over the gap. */
+    final class Churned private[SnapshotStore] (feed: => DataFrame) extends Fed(feed)
+
+    /** Some gap commit is a content swap that RECORDED its row feed (a
+      * maintained view's churn publish), every other one is row churn:
+      * `changes` unions the recorded feeds with the manifest diffs of the
+      * row-churn runs between them. The rollup engine absorbs it by
+      * recomputing dirty groups whole (a recorded feed may carry
+      * cancelling delete+insert pairs, which only widen the dirty set);
+      * every other consumer rebuilds. */
+    final class Recorded private[SnapshotStore] (feed: => DataFrame) extends Fed(feed)
+
+    /** No sound diff: a vacuumed `from`, or a compaction, merge or rebase
+      * that removed directories, or a manifest written before op kinds
+      * were recorded. The consumer rebuilds. */
+    case object Opaque extends Gap
+  }
+
+  /** THE version-gap reader every maintained view decides through: which
+    * of the five [[Gap]] cases (from, to] is. Classification reads
+    * manifests (and recorded-feed epoch files) only; each case builds its
+    * DataFrame when a consumer asks for rows, so classifying launches no
+    * Spark job. The cases are tried in order: [[Gap.Unmoved]],
+    * [[Gap.Appended]] (the directory rule), [[Gap.Churned]],
+    * [[Gap.Recorded]], else [[Gap.Opaque]]. */
+  def gap(spark: SparkSession, root: String, from: Int, to: Int): Gap = {
+    require(from >= 0 && to >= from, s"bad version gap ($from, $to] at $root")
+    if (from == to) return Gap.Unmoved
+    if (!hasManifest(root, to) || (from > 0 && !hasManifest(root, from)))
+      return Gap.Opaque
+    val before = if (from == 0) Set.empty[String] else manifestDirs(root, from).toSet
+    val after = manifestDirs(root, to)
+    if (before.subsetOf(after.toSet))
+      return new Gap.Appended(spark, root, to, after.filterNot(before))
+    // every commit that is not row churn must have recorded its feed
+    val swaps = ((from + 1) to to)
+      .filterNot(v => manifestOp(root, v).exists(RowChurnOps))
+    if (!swaps.forall(feedRecorded(root, _))) return Gap.Opaque
+    // each recorded version is its own leg; the row-churn runs between
+    // them diff through their manifests
+    def feed: DataFrame = {
       val legs = scala.collection.mutable.ListBuffer.empty[DataFrame]
-      var runStart = -1 // pending row-churn run baseline (exclusive)
-      def closeRun(endV: Int): Unit = if (runStart >= 0) {
-        legs += changes(spark, root, runStart, endV)
-        runStart = -1
+      var start = from // baseline (exclusive) of the pending row-churn run
+      swaps.foreach { v =>
+        if (v - 1 > start) legs += changes(spark, root, start, v - 1)
+        legs += spark.read.parquet(feedDir(root, v))
+        start = v
       }
-      for (v <- (fromExclusive + 1) to cur) {
-        feedFor(spark, root, v) match {
-          case Some(f) => closeRun(v - 1); legs += f
-          case None =>
-            if (manifestOp(root, v).exists(RowChurnOps)) {
-              if (runStart < 0) runStart = v - 1
-            } else return None
-        }
-      }
-      closeRun(cur)
-      Some(legs.reduce(_ unionByName _))
-    }.getOrElse(None) // a vacuumed interior boundary: decline, don't crash
+      if (to > start) legs += changes(spark, root, start, to)
+      legs.reduce(_ unionByName _)
+    }
+    if (swaps.isEmpty) new Gap.Churned(feed) else new Gap.Recorded(feed)
+  }
 
   /** Compaction that publishes `df`'s rows as the new version's SOLE
     * content (vs [[compact]], which rewrites the current content
@@ -1009,13 +1050,6 @@ object SnapshotStore {
     if (tracked.nonEmpty) writeStats(spark, root, v, newDirs, tracked.toSeq)
   }
 
-  /** Retention: drop every version below `keepFrom` — delete their
-    * manifests, then physically remove data directories no RETAINED
-    * manifest references (a directory shared with a newer version
-    * survives; only then is deletion safe). The policy half of
-    * [[compact]]'s note that old versions stay readable until vacuumed.
-    * Single-writer like the rest of the store: run it from the owner, not
-    * concurrently with an append. */
   // ---- branches --------------------------------------------------------
   //
   // Git-like BRANCHES on the snapshot store (the Iceberg/Nessie
@@ -1738,6 +1772,13 @@ object SnapshotStore {
     }
   }
 
+  /** Retention: drop every version below `keepFrom` — delete their
+    * manifests, then physically remove data directories no RETAINED
+    * manifest references (a directory shared with a newer version
+    * survives; only then is deletion safe). The policy half of
+    * [[compact]]'s note that old versions stay readable until vacuumed.
+    * Single-writer like the rest of the store: run it from the owner, not
+    * concurrently with an append. */
   def vacuum(root: String, keepFrom: Int,
              ignoreViewBaselines: Boolean = false,
              ignoreBranchAnchors: Boolean = false): Unit = {
@@ -2047,11 +2088,6 @@ object SnapshotStore {
     v
   }
 
-  /** Bloom sidecar for specific dirs of an ALREADY-committed version —
-    * the hook for epoch-stamped ingest paths ([[appendEpoch]] callers
-    * like SearchIndex.indexEpoch) that publish first and bloom after:
-    * the sidecar is pure acceleration, so a crash between commit and
-    * bloom leaves a correct, conservatively-read version. */
   /** Min/max-stats sidecar for specific dirs of an ALREADY-committed
     * version — the stats counterpart of [[writeBloomSidecar]], for
     * commit paths (epoch appends, compaction publishes) that stamp
@@ -2064,6 +2100,11 @@ object SnapshotStore {
     if (dirs.nonEmpty && statsCols.nonEmpty)
       writeStats(spark, root, v, dirs, statsCols)
 
+  /** Bloom sidecar for specific dirs of an ALREADY-committed version —
+    * the hook for epoch-stamped ingest paths ([[appendEpoch]] callers
+    * like SearchIndex.indexEpoch) that publish first and bloom after:
+    * the sidecar is pure acceleration, so a crash between commit and
+    * bloom leaves a correct, conservatively-read version. */
   private[sources] def writeBloomSidecar(spark: SparkSession, root: String,
                                          v: Int, dirs: Seq[String],
                                          bloomCol: String,

@@ -566,13 +566,14 @@ class MultiAggJoinViewSpec extends SparkSpec {
       }
       SnapshotStore.append(factDF(1L to 40L: _*), roots(0))
       SnapshotStore.append(partDF(0L to 6L: _*), roots(1))
-      SnapshotStore.append(suppDF(0L to 4L: _*), roots(2))
+      // s_sk 9 is an ORPHAN (factDF keys are i % 5), stored now so the
+      // upsert below rewrites its directory: a churned gap, not appended
+      SnapshotStore.append(suppDF((0L to 4L) :+ 9L: _*), roots(2))
       SnapshotStore.append(nationDF(0L, 1L, 2L), roots(3))
       refreshX()
       assert(rows(MultiAggJoinView.read(spark, v)) == truthX())
 
-      // churn an ORPHAN supplier (s_sk 9: factDF keys are i % 5) while
-      // the fact APPENDS matching rows
+      // churn the orphan supplier while the fact APPENDS matching rows
       SnapshotStore.upsert(spark, suppDF(9L), roots(2), Seq("s_sk"))
       SnapshotStore.append(factDF(41L to 60L: _*), roots(0))
       val before = SnapshotStore.currentVersion(v)

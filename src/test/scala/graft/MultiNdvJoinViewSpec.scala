@@ -160,13 +160,15 @@ class MultiNdvJoinViewSpec extends SparkSpec {
     withRoots { (roots, v) =>
       val Seq(fr, cr, nr) = roots
       SnapshotStore.append(factDF(0L to 200L: _*), fr)
-      SnapshotStore.append(custDF(0L to 29L: _*), cr)
+      // c_ck 40 is an ORPHAN (no fact carries f_ck = 40 — factDF keys are
+      // i % 30), stored now so the upsert below rewrites its directory:
+      // a churned gap, not appended
+      SnapshotStore.append(custDF((0L to 29L) :+ 40L: _*), cr)
       SnapshotStore.append(nationDF(0L to 6L: _*), nr)
       refresh(roots, v)
       assert(viewRows(v) == truth(roots))
 
-      // churn an ORPHAN customer (c_ck 40: no fact carries f_ck = 40 —
-      // factDF keys are i % 30) while the fact APPENDS matching rows
+      // churn the orphan customer while the fact APPENDS matching rows
       SnapshotStore.upsert(spark, custDF(40L), cr, Seq("c_ck"))
       SnapshotStore.append(factDF(201L to 320L: _*), fr)
       val before = SnapshotStore.currentVersion(v)

@@ -990,6 +990,106 @@ class SourcesSpec extends SparkSpec {
     } finally SnapshotStore.deleteTree(root)
   }
 
+  test("version gaps: one store's commit ranges classify without a Spark job") {
+    import graft.sources.SnapshotStore
+    import graft.sources.SnapshotStore.Gap
+    val s = spark
+    import s.implicits._
+    val root = Files.createTempDirectory("snapgap").toString
+    def ids(lo: Long, hi: Long) = (lo to hi).map(i => (i, s"p$i")).toDF("id", "payload")
+    def kind(g: Gap): String = g match {
+      case Gap.Unmoved     => "unmoved"
+      case _: Gap.Appended => "appended"
+      case _: Gap.Churned  => "churned"
+      case _: Gap.Recorded => "recorded"
+      case Gap.Opaque      => "opaque"
+    }
+    // Spark jobs launched inside `body` (the bus drained on both sides)
+    def jobsIn[T](body: => T): (T, Int) = {
+      val n = new java.util.concurrent.atomic.AtomicInteger()
+      val listener = new org.apache.spark.scheduler.SparkListener {
+        override def onJobStart(
+            js: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+          n.incrementAndGet()
+      }
+      val sc = spark.sparkContext
+      org.apache.spark.ListenerBusDrain(sc)
+      sc.addSparkListener(listener)
+      try {
+        val out = body
+        org.apache.spark.ListenerBusDrain(sc)
+        (out, n.get)
+      } finally sc.removeSparkListener(listener)
+    }
+    try {
+      SnapshotStore.append(ids(1, 4), root)                             // v1
+      SnapshotStore.append(ids(5, 6), root)                             // v2
+      SnapshotStore.deleteWhere(spark, root, col("id") === 1L)          // v3
+      SnapshotStore.upsert(spark, ids(20, 20), root, Seq("id"))         // v4
+      SnapshotStore.upsert(spark,
+        Seq((2L, "patched")).toDF("id", "payload"), root, Seq("id"))    // v5
+      SnapshotStore.compact(spark, root)                                // v6
+      SnapshotStore.append(ids(30, 30), root)                           // v7
+      SnapshotStore.compactSmall(spark, root)                           // v8
+      SnapshotStore.deleteWhere(spark, root, col("id") === 30L)         // v9
+      // a content swap that records its feed under its own epoch (v10),
+      // then one whose feed's epoch does not match the manifest (v11)
+      def swap(dropId: Long, feedEpoch: Long, epoch: Long): Int = {
+        val cur = SnapshotStore.read(spark, root).localCheckpoint(true)
+        SnapshotStore.recordChangeFeed(cur.where(col("id") === dropId)
+          .withColumn("_change_type", lit("delete")), root, feedEpoch)
+        SnapshotStore.compactWith(cur.where(col("id") =!= dropId), root,
+          epochOverride = Some(epoch))
+      }
+      swap(3L, 500L, 500L)                                              // v10
+      swap(4L, 600L, 601L)                                              // v11
+      SnapshotStore.createBranch(root, "b")
+      SnapshotStore.append(ids(40, 41), SnapshotStore.branchRoot(root, "b"))
+      SnapshotStore.mergeBranch(spark, root, "b")                       // v12
+      assert(SnapshotStore.currentVersion(root) == 12)
+      assert(SnapshotStore.manifestOp(root, 4).contains("upsert"))
+      assert(SnapshotStore.manifestOp(root, 8).contains("compact"))
+      assert(SnapshotStore.manifestOp(root, 12).contains("merge"))
+
+      val expected = Seq(
+        (1, 2) -> "appended",   // append only
+        (0, 2) -> "appended",   // from nothing: every directory
+        (2, 3) -> "churned",    // delete
+        (1, 3) -> "churned",    // append then delete
+        (3, 4) -> "appended",   // upsert of new keys only
+        (4, 5) -> "churned",    // upsert of an existing key
+        (5, 6) -> "opaque",     // compact
+        (4, 6) -> "opaque",
+        (7, 8) -> "opaque",     // compactSmall
+        (9, 10) -> "recorded",  // recorded feed, epoch matches
+        (8, 10) -> "recorded",  // a delete run, then the recorded swap
+        (10, 11) -> "opaque",   // orphan feed: epoch does not match
+        (11, 12) -> "appended", // branch merge that only added directories
+        (12, 12) -> "unmoved")
+      val (kinds, jobs) = jobsIn(expected.map { case ((f, t), _) =>
+        (f, t) -> SnapshotStore.gap(spark, root, f, t) })
+      assert(kinds.map { case (r, g) => r -> kind(g) } == expected)
+      assert(jobs == 0, s"classification launched $jobs Spark job(s)")
+
+      // each case's rows, built on first use
+      val g = kinds.toMap
+      assert(g((3, 4)).asInstanceOf[Gap.Appended].rows()
+        .as[(Long, String)].collect().toSet == Set((20L, "p20")))
+      assert(g((4, 5)).asInstanceOf[Gap.Churned].changes
+        .select("id", "payload", "_change_type").as[(Long, String, String)]
+        .collect().toSet == Set((2L, "p2", "delete"), (2L, "patched", "insert")))
+      assert(g((8, 10)).asInstanceOf[Gap.Recorded].changes
+        .select("id", "_change_type").as[(Long, String)]
+        .collect().toSet == Set((30L, "delete"), (3L, "delete")))
+
+      // a vacuumed baseline
+      SnapshotStore.vacuum(root, keepFrom = 12)
+      assert(!SnapshotStore.hasManifest(root, 11))
+      val (vac, vacJobs) = jobsIn(SnapshotStore.gap(spark, root, 11, 12))
+      assert(kind(vac) == "opaque" && vacJobs == 0)
+    } finally SnapshotStore.deleteTree(root)
+  }
+
   test("rollup view absorbs source deletes incrementally (dirty-group recompute + tombstones)") {
     import graft.sources.{RollupView, SnapshotStore}
     val s = spark
