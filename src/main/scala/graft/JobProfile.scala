@@ -21,8 +21,6 @@ object JobProfile {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val spark = GraftSession.local()
-    sys.env.get("GRAFT_KEYCAP").foreach(v =>
-      spark.conf.set(graft.sources.JoinView.SmallKeyCapConf, v))
     // measure under Bench's conditions: no oracle-export plumbing, the
     // bench's minimum stream-replay slicing
     SparkEntry.configureOracleExport("/tmp/graft_oracle_export", enabled = false)

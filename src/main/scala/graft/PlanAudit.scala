@@ -636,7 +636,8 @@ object PlanAudit {
       }),
       ("distinct-count over a join serves join-free from the ndv-join view", {
         import org.apache.spark.sql.functions._
-        import graft.sources.{NdvJoinView, NdvView, SnapshotStore}
+        import graft.sources.{MultiNdvJoinView, NdvView, SnapshotStore}
+        import graft.sources.MultiAggJoinView.Edge
         val root = java.nio.file.Files.createTempDirectory("pa_njv").toString
         try {
           SnapshotStore.append(spark.range(0, 500)
@@ -644,10 +645,10 @@ object PlanAudit {
           SnapshotStore.append(spark.range(0, 2000)
             .selectExpr("id % 500 AS o_id", "concat('u', id % 60) AS user_id"),
             s"$root/R")
-          NdvJoinView.refresh(spark, s"$root/L", s"$root/R", s"$root/njview",
-            Seq("c_id"), Seq("o_id"), Seq("seg"), "user_id")
-          graft.plans.MaterializedAggJoins.enableNdv(s"$root/L", s"$root/R",
-            s"$root/njview", "c_id", "o_id", Seq("seg"), "user_id")
+          MultiNdvJoinView.refresh(spark, Seq(s"$root/L", s"$root/R"), s"$root/njview",
+            Seq(Edge(0, Seq("c_id"), Seq("o_id"))), Seq("seg"), "user_id")
+          graft.plans.MaterializedMultiJoins.enableNdv(Seq(s"$root/L", s"$root/R"),
+            s"$root/njview", Seq(Edge(0, Seq("c_id"), Seq("o_id"))), Seq("seg"), "user_id")
           val lf = SnapshotStore.read(spark, s"$root/L")
           val rf = SnapshotStore.read(spark, s"$root/R")
           val p = lf.join(rf, lf("c_id") === rf("o_id"))

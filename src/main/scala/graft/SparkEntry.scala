@@ -181,11 +181,6 @@ object SparkEntry {
       df.sparkSession.read.parquet(path)
     }
 
-  /** Full-scan log-free BM25 (terms spark/join/vector, k=15) — ONE body,
-    * three registry keys: the scan leg (`text_bm25`), the inverted-index
-    * serving leg (`search_index_bm25`), and the post-delete serving leg
-    * (`search_index_delete`, whose corpus is the WHERE-surviving docs)
-    * must all reproduce it bit-exactly. */
   /** In-engine sanity floors for ann_recall's band verdict (re-derived in
     * the DuckDB oracle with the same constants), as INTEGER hit totals
     * per method over the 8 queries × 5 slots = 40 exact pairs. The
@@ -197,6 +192,11 @@ object SparkEntry {
   private val AnnLshMinHits = 1L
   private val AnnIvfMinHits = 20L
 
+  /** Full-scan log-free BM25 (terms spark/join/vector, k=15) — ONE body,
+    * three registry keys: the scan leg (`text_bm25`), the inverted-index
+    * serving leg (`search_index_bm25`), and the post-delete serving leg
+    * (`search_index_delete`, whose corpus is the WHERE-surviving docs)
+    * must all reproduce it bit-exactly. */
   private def bm25Oracle(where: String, textExpr: String = "text"): String =
     s"""WITH t AS (SELECT doc_id, string_split_regex($textExpr, '\\s+') AS w FROM documents$where),
       |d AS (SELECT doc_id,
@@ -343,10 +343,6 @@ object SparkEntry {
       |        row_number() OVER (ORDER BY approx_count DESC, term) AS rk FROM f)
       |SELECT rk, term, approx_count FROM r WHERE rk <= 20""".stripMargin
 
-  /** Exactness-regime quantile-tier oracle — ONE string, two keys (batch
-    * a35 + streaming twin): exact 1-based ceil(phi*n)-rank sample per
-    * (metric, hour), rank multiply forced through DOUBLE so both engines
-    * round phi*n with the same IEEE product. */
   /** Shared by audio_energy and its streaming twin: windows replayed
     * from the planted sample formula (exact BIGINT arithmetic). */
   private lazy val AUDIO_ENERGY_ORACLE =
@@ -415,6 +411,10 @@ object SparkEntry {
        |UNION ALL
        |SELECT 3, 'purchase', (SELECT count(*) FROM u3)""".stripMargin
 
+  /** Exactness-regime quantile-tier oracle — ONE string, two keys (batch
+    * a35 + streaming twin): exact 1-based ceil(phi*n)-rank sample per
+    * (metric, hour), rank multiply forced through DOUBLE so both engines
+    * round phi*n with the same IEEE product. */
   private lazy val A35_QUANTILE_ORACLE =
     s"""WITH $SERIES,
        |b AS (SELECT metric, CAST(FLOOR(e/3600.0) AS BIGINT)*3600 AS bucket_start, value FROM series),
@@ -4778,8 +4778,8 @@ object SparkEntry {
         // the distinct column is the join key itself — registered by its
         // LEFT spelling (right keys are dropped from the view shape); the
         // rewrite normalizes a user's hll(o_custkey) onto it
-        def refresh(): Unit = sources.NdvJoinView.refresh(
-          s, l, r, v, Seq("c_custkey"), Seq("o_custkey"),
+        def refresh(): Unit = sources.MultiNdvJoinView.refresh(
+          s, Seq(l, r), v, Seq(sources.MultiAggJoinView.Edge(0, Seq("c_custkey"), Seq("o_custkey"))),
           Seq("c_mktsegment", "o_orderstatus"), "c_custkey")
         sources.SnapshotStore.append(c.where(col("c_custkey") % 2 === 0), l)
         sources.SnapshotStore.append(o.where(col("o_custkey") % 3 === 0), r)
@@ -4790,13 +4790,13 @@ object SparkEntry {
         refresh() // right delta
         sources.SnapshotStore.deleteWhere(s, r, col("o_orderkey") % 7 === 0)
         refresh() // churn: dirty groups re-sketch + atomic replace
-        sources.NdvJoinView.compact(s, v)
+        sources.MultiNdvJoinView.compact(s, v)
         val lf = sources.SnapshotStore.read(s, l)
         val rf = sources.SnapshotStore.read(s, r)
         val exact = lf.join(rf, lf("c_custkey") === rf("o_custkey"))
           .groupBy("c_mktsegment", "o_orderstatus")
           .agg(countDistinct(col("o_custkey")).as("exact_users"))
-        val joined = sources.NdvJoinView.read(s, v)
+        val joined = sources.MultiNdvJoinView.read(s, v)
           .join(exact, Seq("c_mktsegment", "o_orderstatus"))
           .localCheckpoint(true)
         joined.collect().foreach { x =>
@@ -4830,11 +4830,11 @@ object SparkEntry {
           Tables.customer(s, dir).select("c_custkey", "c_mktsegment"), l)
         sources.SnapshotStore.append(Tables.orders(s, dir)
           .select("o_orderkey", "o_custkey", "o_orderstatus"), r)
-        sources.NdvJoinView.refresh(s, l, r, v,
-          Seq("c_custkey"), Seq("o_custkey"),
+        sources.MultiNdvJoinView.refresh(s, Seq(l, r), v,
+          Seq(sources.MultiAggJoinView.Edge(0, Seq("c_custkey"), Seq("o_custkey"))),
           Seq("c_mktsegment", "o_orderstatus"), "c_custkey")
-        graft.plans.MaterializedAggJoins.enableNdv(l, r, v,
-          "c_custkey", "o_custkey",
+        graft.plans.MaterializedMultiJoins.enableNdv(Seq(l, r), v,
+          Seq(sources.MultiAggJoinView.Edge(0, Seq("c_custkey"), Seq("o_custkey"))),
           Seq("c_mktsegment", "o_orderstatus"), "c_custkey")
         try {
           val lf = sources.SnapshotStore.read(s, l)
@@ -4869,7 +4869,7 @@ object SparkEntry {
     }),
 
     // DISTINCT-COUNT over the N-way join TREE, maintained — the MV
-    // matrix's last cell (NdvJoinView's HLL partials x MultiAggJoinView's
+    // matrix's last cell (the two-table ndv view's HLL partials x MultiAggJoinView's
     // telescoped terms): unique customers per (nation, status) across
     // orders⋈customer⋈nation through the full lifecycle — bootstrap,
     // fact delta, snowflake-leaf delta, a MIXED gap (fact append + a
@@ -5096,15 +5096,15 @@ object SparkEntry {
           Tables.orders(s, dir).where(col("o_orderkey") % 2 === 0)
             .select("o_orderkey", "o_custkey", "o_orderstatus"),
           "o_orderkey", r,
-          sp => sources.NdvJoinView.refresh(sp, l, r, v,
-            Seq("c_custkey"), Seq("o_custkey"),
+          sp => sources.MultiNdvJoinView.refresh(sp, Seq(l, r), v,
+            Seq(sources.MultiAggJoinView.Edge(0, Seq("c_custkey"), Seq("o_custkey"))),
             Seq("c_mktsegment", "o_orderstatus"), "c_custkey"))
         val lf = sources.SnapshotStore.read(s, l)
         val rf = sources.SnapshotStore.read(s, r)
         val exact = lf.join(rf, lf("c_custkey") === rf("o_custkey"))
           .groupBy("c_mktsegment", "o_orderstatus")
           .agg(countDistinct(col("o_custkey")).as("exact_users"))
-        val joined = sources.NdvJoinView.read(s, v)
+        val joined = sources.MultiNdvJoinView.read(s, v)
           .join(exact, Seq("c_mktsegment", "o_orderstatus"))
           .localCheckpoint(true)
         joined.collect().foreach { x =>
@@ -6134,11 +6134,11 @@ object SparkEntry {
   // surfaces outright — bm25/tfidf use log-free rational scoring for this
   // reason.
 
-  /** The fused-Aggregator flagship shares the built-ins flagship's oracle
-    * (identical output contract). */
   /** A `def`, not a `lazy val`: export-reading entries interpolate
     * [[oracleExportRoot]], which Verify repoints per run before dumping
-    * this map — caching would freeze the default path into every run. */
+    * this map — caching would freeze the default path into every run. The
+    * fused-Aggregator flagship shares the built-ins flagship's oracle
+    * (identical output contract). */
   def oracleSql: Map[String, String] =
     baseOracle + ("a2_banded_extents_fused" -> baseOracle("a2_banded_extents"))
 

@@ -77,15 +77,6 @@ object RelationalOps {
         Window.partitionBy(partition: _*).orderBy(order: _*)).cast("long"))
       .where(col("rk") <= n)
 
-  /** Serialized Bloom filter over `key` of `dim`, built DISTRIBUTED by
-    * Spark's own `BloomFilterAggregate` (the expression behind runtime
-    * row-level filtering): partial filters are built map-side per partition
-    * and OR-merged, so the only driver materialization is the final filter
-    * itself — model-sized (numBits/8 bytes), the same posture as the IVF
-    * centroid model. Returns null when `dim` is empty (no keys to admit).
-    *
-    * Keys are pre-hashed with xxhash64 (the aggregate's required input
-    * form), so any key type works and build/probe agree by construction. */
   /** `BloomFilterAggregate`'s analysis-time ceilings at Spark's default
     * session confs (`spark.sql.optimizer.runtime.bloomFilter.maxNumItems` /
     * `maxNumBits`): sizing requests are clamped here so a big build side
@@ -96,6 +87,15 @@ object RelationalOps {
   private val BLOOM_MAX_ITEMS = 4000000L
   private val BLOOM_MAX_BITS = 1L << 26
 
+  /** Serialized Bloom filter over `key` of `dim`, built DISTRIBUTED by
+    * Spark's own `BloomFilterAggregate` (the expression behind runtime
+    * row-level filtering): partial filters are built map-side per partition
+    * and OR-merged, so the only driver materialization is the final filter
+    * itself — model-sized (numBits/8 bytes), the same posture as the IVF
+    * centroid model. Returns null when `dim` is empty (no keys to admit).
+    *
+    * Keys are pre-hashed with xxhash64 (the aggregate's required input
+    * form), so any key type works and build/probe agree by construction. */
   def buildKeyBloom(
       dim: DataFrame,
       key: Column,

@@ -64,11 +64,6 @@ object SimilarityOps {
     Array.fill(tables, bitsPerTable, dim)(rng.nextGaussian())
   }
 
-  /** Approximate cosine top-k via multi-table random-hyperplane LSH:
-    * candidates = rows sharing a bucket with the query in ANY table
-    * (union-distinct over tables), then exact cosine rerank of candidates.
-    * The bucket join is an equi-join on (table, bucket) — the scale path:
-    * candidate count per query ≈ n / 2^bits × tables, not n. */
   /** Stage a relation's vectors with their norms and per-table LSH buckets.
     * All per-table bucket ids come from ONE custom-expression loop
     * ([[graft.functions.HashExpressions.HyperplaneBuckets]]) — the unrolled
@@ -146,6 +141,11 @@ object SimilarityOps {
       .write.mode("append").parquet(s"$dir/buckets")
   }
 
+  /** Approximate cosine top-k via multi-table random-hyperplane LSH:
+    * candidates = rows sharing a bucket with the query in ANY table
+    * (union-distinct over tables), then exact cosine rerank of candidates.
+    * The bucket join is an equi-join on (table, bucket) — the scale path:
+    * candidate count per query ≈ n / 2^bits × tables, not n. */
   def lshTopK(queries: DataFrame, candidates: DataFrame, k: Int,
               dim: Int = 64, tables: Int = 8, bitsPerTable: Int = 8,
               seed: Long = 42L): DataFrame =
@@ -173,21 +173,6 @@ object SimilarityOps {
       .distinct()
   }
 
-  /** Approximate cosine top-k via IVF (inverted-file) coarse quantization:
-    * `nlist` centroids — deterministic lowest-vec_id seeds, refined by
-    * `refineIters` Lloyd's update rounds ([[kmeansCentroids]]) when
-    * requested — every candidate assigned to its nearest centroid (one
-    * codegen'd dot per centroid), queries probe their `nprobe` nearest
-    * lists, exact rerank within probed lists only. Refinement changes ONLY
-    * the centroid model (a tiny driver-side array); the plan shape — list
-    * equi-join, broadcast probe side — is identical either way, so recall
-    * improves with zero cost on the data path.
-    *
-    * Scale shape: the centroid table is a tiny broadcast dimension (collected
-    * once — it is nlist×dim doubles, not a data path); candidate assignment
-    * is per-row work; the probe is an equi-join on list id. Candidate count
-    * per query ≈ n × nprobe / nlist.
-    */
   /** A fitted IVF index: the spherical centroid MODEL (model-sized — rows ~
     * nlist, lives on the driver like any quantizer model) plus the inverted
     * lists as a DataFrame `(cid, c_id, cv, cn)` — each vector staged with
@@ -478,6 +463,21 @@ object SimilarityOps {
     IvfIndex(cents, spark.read.parquet(s"$dir/lists"))
   }
 
+  /** Approximate cosine top-k via IVF (inverted-file) coarse quantization:
+    * `nlist` centroids — deterministic lowest-vec_id seeds, refined by
+    * `refineIters` Lloyd's update rounds ([[kmeansCentroids]]) when
+    * requested — every candidate assigned to its nearest centroid (one
+    * codegen'd dot per centroid), queries probe their `nprobe` nearest
+    * lists, exact rerank within probed lists only. Refinement changes ONLY
+    * the centroid model (a tiny driver-side array); the plan shape — list
+    * equi-join, broadcast probe side — is identical either way, so recall
+    * improves with zero cost on the data path.
+    *
+    * Scale shape: the centroid table is a tiny broadcast dimension (collected
+    * once — it is nlist×dim doubles, not a data path); candidate assignment
+    * is per-row work; the probe is an equi-join on list id. Candidate count
+    * per query ≈ n × nprobe / nlist.
+    */
   def ivfTopK(queries: DataFrame, candidates: DataFrame, k: Int,
               nlist: Int = 32, nprobe: Int = 4, refineIters: Int = 0): DataFrame =
     queryIvfIndex(buildIvfIndex(candidates, nlist, refineIters), queries, k, nprobe)

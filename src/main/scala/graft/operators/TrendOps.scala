@@ -640,6 +640,12 @@ object TrendOps {
       .limit(topK)
   }
 
+  /** The folded k·1.4826 threshold constant — computed ONCE in Scala double
+    * arithmetic and shared verbatim (via its round-trip decimal string) with
+    * the DuckDB oracle, so oracle parity is structural for ANY k, not a
+    * per-constant coincidence of the two engines' folding orders. */
+  def madThreshold(k: Double): Double = k * 1.4826
+
   /** Robust (median/MAD) outlier screen — the heavy-tail-safe twin of the
     * 3σ z-score (a16): a single wild point inflates mean and σ enough to
     * mask itself, but barely moves the median or the median absolute
@@ -654,12 +660,6 @@ object TrendOps {
     * class as the other per-metric windows); medians join back broadcast.
     * Groups with mad = 0 (over half the samples identical) have no robust
     * scale and are excluded before the comparison, like a25's guards. */
-  /** The folded k·1.4826 threshold constant — computed ONCE in Scala double
-    * arithmetic and shared verbatim (via its round-trip decimal string) with
-    * the DuckDB oracle, so oracle parity is structural for ANY k, not a
-    * per-constant coincidence of the two engines' folding orders. */
-  def madThreshold(k: Double): Double = k * 1.4826
-
   def madOutliers(series: DataFrame, k: Double = 3.0): DataFrame = {
     val vd = col("value").cast("decimal(18,2)")
     val byM = Window.partitionBy("metric")
@@ -893,17 +893,6 @@ object TrendOps {
       .select("metric", "bucket_start", "e", "value")
   }
 
-  /** CUSUM drift detection: per-metric cumulative sum of deviations from
-    * the metric's own mean, flagging points where |cusum| exceeds
-    * `threshold` (in value units) — the classic changepoint screen over a
-    * trend series.
-    *
-    * Determinism contract: the mean is never materialized as a rounded
-    * division. With n = per-metric count and T = exact decimal total,
-    * n·cusum_k = n·Σ_{i≤k} v_i − k·T — all integer/decimal arithmetic, so
-    * the breach flag (|n·cusum_k| > n·threshold) is EXACT, and the reported
-    * `cusum` double is one deterministic division at the end. Both windows
-    * partition by metric — no global sort anywhere. */
   /** Per-metric discrete derivative: Δvalue/Δt between consecutive samples
     * in (e, event_id) order — the rate-of-change signal behind slope
     * alerts and trend arrows. Δvalue computes in exact decimals and the
@@ -1013,6 +1002,17 @@ object TrendOps {
           (col("e") - col("__pe")).cast("double")).as("slope"))
   }
 
+  /** CUSUM drift detection: per-metric cumulative sum of deviations from
+    * the metric's own mean, flagging points where |cusum| exceeds
+    * `threshold` (in value units) — the classic changepoint screen over a
+    * trend series.
+    *
+    * Determinism contract: the mean is never materialized as a rounded
+    * division. With n = per-metric count and T = exact decimal total,
+    * n·cusum_k = n·Σ_{i≤k} v_i − k·T — all integer/decimal arithmetic, so
+    * the breach flag (|n·cusum_k| > n·threshold) is EXACT, and the reported
+    * `cusum` double is one deterministic division at the end. Both windows
+    * partition by metric — no global sort anywhere. */
   def cusum(series: DataFrame, threshold: Double = 50.0): DataFrame = {
     val byMetric = Window.partitionBy("metric")
     val wOrd = Window.partitionBy("metric").orderBy(col("e"), col("event_id"))

@@ -3,11 +3,12 @@ package graft.plans
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.expressions._
 import org.apache.spark.sql.catalyst.plans.{FullOuter, Inner, JoinType, LeftOuter, RightOuter}
-import org.apache.spark.sql.catalyst.plans.logical.{Filter, Join, LogicalPlan, Project}
+import org.apache.spark.sql.catalyst.plans.logical.{Join, LogicalPlan}
 import org.apache.spark.sql.catalyst.rules.Rule
 
 import graft.sources.JoinView
 import MaterializedViews.{JoinKeys, Kind, Reg}
+import Serving.Onto
 
 /** Facade over [[MaterializedViews]] for (left store, right store, key
   * pairs, join type) → maintained [[JoinView]] registrations (kind
@@ -175,26 +176,7 @@ class JoinRewriteRule(spark: SparkSession) extends Rule[LogicalPlan] {
         }
       case _ => None
     }.toSeq
-    // prefer a FRESH hit over a stale one (two registrations can match
-    // the same query in opposite orientations — a stale non-opted first
-    // hit must not shadow a fresh second)
-    val (reg, keys, fresh) = candidates.find(_._3)
-      .orElse(candidates.headOption).getOrElse(return None)
-
-    // FRESH: serve the stored view. STALE + opted-in: serve the
-    // delta-compensated union when [[JoinView.compensated]] deems it
-    // sound — inner views over append-only gaps on either side,
-    // left-outer views over a LEFT-side-only append gap (each leg keeps
-    // the view's own shape). Anything else declines inside compensated
-    // (today's answer off the base join stays correct).
-    val baseDf =
-      if (fresh) JoinView.read(spark, reg.viewRoot)
-      else if (reg.serveStale)
-        JoinView.compensated(spark, reg.roots(0), reg.roots(1),
-          reg.viewRoot, keys.left, keys.right).getOrElse(return None)
-      else return None
-    val viewPlan = baseDf.queryExecution.analyzed
-    val byName = viewPlan.output.map(a => a.name.toLowerCase -> a).toMap
+    val (reg, keys, fresh) = Serving.freshFirst(candidates)(_._3).getOrElse(return None)
     // INNER views dropped their right keys; each inner equality makes the
     // two key columns value-identical, so whichever key name the view
     // lacks is served from its PAIRED key's column (covers both join
@@ -205,29 +187,16 @@ class JoinRewriteRule(spark: SparkSession) extends Rule[LogicalPlan] {
       if (joinType != Inner) Map.empty
       else (las.map(_.name.toLowerCase).zip(ras.map(_.name.toLowerCase)) ++
         ras.map(_.name.toLowerCase).zip(las.map(_.name.toLowerCase))).toMap
-    def resolve(name: String): Option[Attribute] =
-      byName.get(name.toLowerCase)
-        .orElse(pairedName.get(name.toLowerCase).flatMap(byName.get))
-
-    val projections = j.output.map { attr =>
-      resolve(attr.name) match {
-        case Some(vc) if vc.dataType == attr.dataType =>
-          Alias(vc, attr.name)(exprId = attr.exprId)
-        case _ => return None
-      }
-    }
-    var mappable = true
-    val mapped = (lfilters ++ rfilters).map(_.transform {
-      case a: AttributeReference =>
-        resolve(a.name) match {
-          case Some(vc) if vc.dataType == a.dataType => vc
-          case _ => mappable = false; a
-        }
-    })
-    if (!mappable) return None
-    val base =
-      if (mapped.isEmpty) viewPlan
-      else Filter(mapped.reduce(And), viewPlan)
-    Some(Project(projections, base))
+    def onto(a: Attribute): Onto = cols =>
+      cols(a.name).orElse(pairedName.get(a.name.toLowerCase).flatMap(cols))
+        .filter(_.dataType == a.dataType)
+    // STALE + opted-in serves the delta-compensated union when
+    // [[JoinView.compensated]] deems it sound — inner views over
+    // append-only gaps on either side, left-outer views over a LEFT-side-
+    // only append gap (each leg keeps the view's own shape)
+    Serving.frame(reg, fresh)(JoinView.read(spark, reg.viewRoot))(
+      JoinView.compensated(spark, reg.roots(0), reg.roots(1), reg.viewRoot,
+        keys.left, keys.right))
+      .flatMap(Serving.plan(_, j.output.map(a => a -> onto(a)), lfilters ++ rfilters)(onto))
   }
 }

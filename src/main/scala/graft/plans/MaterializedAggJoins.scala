@@ -5,12 +5,13 @@ import MaterializedViews.Kind
 
 /** Facade over [[MaterializedViews]] for the two-table agg-join
   * registrations — one-edge trees served by the
-  * [[MultiAggJoinRewriteRule]]. Each call forwards `(left, right,
-  * leftKeys, rightKeys)` to [[MaterializedMultiJoins]] as the roots
-  * `Seq(left, right)` and the single edge `Edge(0, leftKeys, rightKeys)`:
-  * `enable*` registers the `MultiAgg` kind ([[graft.sources.AggJoinView]]),
-  * `enableNdv*` the `MultiNdv` kind ([[graft.sources.NdvJoinView]]). The
-  * listing and removal calls see only those two-root registrations. */
+  * [[MultiAggJoinRewriteRule]]. `enable*` forwards `(left, right,
+  * leftKeys, rightKeys)` to [[MaterializedMultiJoins.enable]] as the roots
+  * `Seq(left, right)` and the single edge `Edge(0, leftKeys, rightKeys)`,
+  * registering the `MultiAgg` kind ([[graft.sources.AggJoinView]]); a
+  * two-table distinct-count view registers through
+  * [[MaterializedMultiJoins.enableNdv]]. The listing and removal calls see
+  * the two-root `MultiAgg` and `MultiNdv` registrations. */
 object MaterializedAggJoins extends MaterializedViews.Facade(r =>
     r.roots.size == 2 && (r.kind == Kind.MultiAgg || r.kind == Kind.MultiNdv)) {
 
@@ -27,20 +28,6 @@ object MaterializedAggJoins extends MaterializedViews.Facade(r =>
              serveStale: Boolean = false): Unit =
     enableKeys(leftRoot, rightRoot, viewRoot, Seq(leftKey), Seq(rightKey),
       groupCols, measureCols, serveStale)
-
-  def enableNdvKeys(leftRoot: String, rightRoot: String, viewRoot: String,
-                    leftKeys: Seq[String], rightKeys: Seq[String],
-                    groupCols: Seq[String], distinctCol: String,
-                    serveStale: Boolean = false): Unit =
-    MaterializedMultiJoins.enableNdv(Seq(leftRoot, rightRoot), viewRoot,
-      Seq(Edge(0, leftKeys, rightKeys)), groupCols, distinctCol, serveStale)
-
-  def enableNdv(leftRoot: String, rightRoot: String, viewRoot: String,
-                leftKey: String, rightKey: String,
-                groupCols: Seq[String], distinctCol: String,
-                serveStale: Boolean = false): Unit =
-    enableNdvKeys(leftRoot, rightRoot, viewRoot, Seq(leftKey), Seq(rightKey),
-      groupCols, distinctCol, serveStale)
 
   private[plans] def all: Map[String, MaterializedViews.Reg] = owned
 }

@@ -1,17 +1,16 @@
 package graft.plans
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.expressions._
-import org.apache.spark.sql.catalyst.expressions.aggregate.{AggregateExpression, Average, Count, HllSketchAgg, Max, Min, Sum}
 import org.apache.spark.sql.catalyst.plans.Inner
 import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, Filter, Join, LogicalPlan, Project, SubqueryAlias, View}
 import org.apache.spark.sql.catalyst.rules.Rule
 import org.apache.spark.sql.execution.datasources.LogicalRelation
-import org.apache.spark.sql.types.DecimalType
 
 import graft.sources.{MultiAggJoinView, MultiNdvJoinView}
 import graft.sources.MultiAggJoinView.Edge
 import MaterializedViews.{Kind, Reg, Tree}
+import Serving.Onto
 
 /** Facade over [[MaterializedViews]] for N-table (N ≥ 2) join-tree
   * registrations the [[MultiAggJoinRewriteRule]] and the
@@ -21,7 +20,7 @@ import MaterializedViews.{Kind, Reg, Tree}
   * [[MultiNdvJoinView]]) and `MultiQuantile` (signed bin counts of the
   * one value column, [[graft.sources.MultiQuantileJoinView]]). Two-table
   * registrations are one-edge trees ([[MaterializedAggJoins]] forwards
-  * the agg/ndv ones). The state lives in the one registry; `disable`,
+  * the agg ones). The state lives in the one registry; `disable`,
   * `disableView` and `clear` touch only these three kinds. */
 object MaterializedMultiJoins extends MaterializedViews.Facade(_.shape.isInstanceOf[Tree]) {
 
@@ -153,6 +152,47 @@ private[plans] object MultiTreeMatch {
       }
   }
 
+  /** A hit with its grouping attributes normalized onto its groups. */
+  final case class Pick(hit: Hit, normed: Map[ExprId, String], filters: Seq[Expression]) {
+
+    /** A grouping attribute onto its normalized group column, of its own
+      * type. */
+    private def group(a: AttributeReference): Onto =
+      cols => normed.get(a.exprId).flatMap(cols).filter(_.dataType == a.dataType)
+
+    /** Grouping attributes, bare or aliased, onto their group columns;
+      * `agg` maps every other output. */
+    def outputs(ae: Seq[NamedExpression])(
+        agg: Alias => Option[Onto]): Option[Seq[(NamedExpression, Onto)]] =
+      Some(ae.map {
+        case a: AttributeReference if normed.contains(a.exprId) => a -> group(a)
+        case al @ Alias(a: AttributeReference, _) if normed.contains(a.exprId) => al -> group(a)
+        case al: Alias => al -> agg(al).getOrElse(return None)
+        case _ => return None
+      })
+
+    def plan(view: DataFrame, outs: Seq[(NamedExpression, Onto)]): Option[LogicalPlan] =
+      Serving.plan(view, outs, filters)(group)
+  }
+
+  /** The hit whose groups the grouping attributes normalize onto, fresh
+    * first. GROUPS take part in the SELECTION, not just the validation:
+    * two registrations can share one join tree with different group
+    * columns, and the query must land on the one whose groups its
+    * grouping attributes normalize onto (a grouped-on child-side key maps
+    * to its paired parent key, transitively — the inner equality makes
+    * them value-identical). None when a grouping expression is not a
+    * plain column or a filter reads a non-grouping attribute. */
+  def pick(ctx: Ctx, hits: Seq[Hit], ge: Seq[Expression]): Option[Pick] = {
+    val groupAttrs = ge.map {
+      case a: AttributeReference => a
+      case _                     => return None
+    }
+    if (!ctx.filters.forall(_.references.subsetOf(AttributeSet(groupAttrs)))) return None
+    Serving.freshFirst(hits.flatMap(h => h.groupNorm(ctx, groupAttrs).map(h -> _)))(_._1.fresh)
+      .map { case (hit, normed) => Pick(hit, normed, ctx.filters) }
+  }
+
   def conjuncts(e: Expression): Seq[Expression] = e match {
     case And(a, b) => conjuncts(a) ++ conjuncts(b)
     case other     => Seq(other)
@@ -264,16 +304,14 @@ private[plans] object MultiTreeMatch {
   *   - grouping attributes are plain columns that normalize (child-side
   *     edge keys map onto their paired parent keys, transitively) onto
   *     the registered group set;
-  *   - every aggregate is `count(1)`, `sum(CAST(m AS DECIMAL(p, 2)))`
-  *     with 18 ≤ p ≤ 30 (the repo-wide precision-floor rationale), the
-  *     matching `avg` served as stored sum ÷ the stored non-null count
-  *     with Average's own decimal arithmetic, `min/max(m)` from an
-  *     EXTENTS view's stored extents, or — against a `MultiNdv`
-  *     registration ([[MultiNdvJoinView]]) — the datasketches
-  *     distinct-count shape at the engine's lgK. Measure and distinct
-  *     attributes resolve through the tree onto the registered column's
-  *     OWNING table (a same-named column on another table declines).
-  *     Anything else declines.
+  *   - every aggregate is in the core's exact-aggregate table
+  *     ([[Serving.exactAgg]]): `count(1)`, `sum`/`avg` of
+  *     `CAST(m AS DECIMAL(18..30, 2))`, `min/max(m)` from an EXTENTS
+  *     view, or — against a `MultiNdv` registration
+  *     ([[MultiNdvJoinView]]) — the datasketches distinct-count shape at
+  *     the engine's lgK. Measure and distinct attributes resolve through
+  *     the tree onto the registered column's OWNING table (a same-named
+  *     column on another table declines). Anything else declines.
   *
   * Output attributes keep the original exprIds. Registered BEFORE
   * [[JoinRewriteRule]] in [[graft.GraftExtensions]]: both match a
@@ -285,164 +323,41 @@ class MultiAggJoinRewriteRule(spark: SparkSession) extends Rule[LogicalPlan] {
     if (!MaterializedViews.serves(Kind.MultiAgg, Kind.MultiNdv)) return plan
     plan.transformUp {
       case agg @ Aggregate(ge, ae, child, _) =>
-        rewrite(agg, ge, ae, child).getOrElse(agg)
+        rewrite(ge, ae, child).getOrElse(agg)
     }
   }
 
-  private def rewrite(agg: Aggregate, ge: Seq[Expression],
-                      ae: Seq[NamedExpression],
+  private def rewrite(ge: Seq[Expression], ae: Seq[NamedExpression],
                       child: LogicalPlan): Option[LogicalPlan] = {
-    val groupAttrs = ge.map {
-      case a: AttributeReference => a
-      case _                     => return None
-    }
     // the aggregate list picks the view KIND it needs: any datasketches
     // distinct-count shape wants a MultiNdv view, everything else a
-    // MultiAgg one — MultiQuantile registrations never serve here (their store
-    // holds bin partials; the QuantileRewriteRule owns them). Freshness
-    // breaks ties among same-kind candidates.
+    // MultiAgg one — MultiQuantile registrations never serve here (their
+    // store holds bin partials; the QuantileRewriteRule owns them)
     val wantsNdv = ae.exists {
       case Alias(HllSketchEstimate(_), _) => true
       case _                              => false
     }
-    val (ctx, kinded) = MultiTreeMatch.candidates(child,
+    val (ctx, hits) = MultiTreeMatch.candidates(child,
       if (wantsNdv) Kind.MultiNdv else Kind.MultiAgg).getOrElse(return None)
-    val filters = ctx.filters
-    // GROUPS participate in candidate SELECTION, not just validation:
-    // two registrations can share the same join tree with different
-    // group columns, and the query must land on the one whose groups its
-    // grouping attributes normalize onto (a grouped-on child-side key
-    // maps to its paired parent key, transitively — the inner equality
-    // makes them value-identical)
-    val matched = kinded.flatMap(h => h.groupNorm(ctx, groupAttrs).map(h -> _))
-    val (hit, normed) = matched.find(_._1.fresh)
-      .orElse(matched.headOption).getOrElse(return None)
-
-    // filters must reference only grouping attributes
-    val groupingSet = AttributeSet(groupAttrs)
-    if (!filters.forall(_.references.subsetOf(groupingSet))) return None
-
-    val (reg, tree) = (hit.reg, hit.tree)
-    val measures = tree.measureCols.map(_.toLowerCase).toSet
+    val pick = MultiTreeMatch.pick(ctx, hits, ge).getOrElse(return None)
+    val (hit, reg, tree) = (pick.hit, pick.hit.reg, pick.hit.tree)
     // measure/distinct attributes resolve THROUGH the join tree, exactly
-    // like group attributes — ownership mirrors the refresh contract
-    // (child keys excluded); a column on a DIFFERENT table merely
+    // like group attributes — a column on a DIFFERENT table merely
     // sharing the registered measure's name must not serve from the
     // owner's stored partials
-    def measureNorm(v: AttributeReference): Option[String] =
-      hit.measureNorm(ctx, measures)(v)
-
-    val viewDf =
-      if (hit.fresh) reg.kind match {
-        case Kind.MultiNdv => MultiNdvJoinView.read(spark, reg.viewRoot)
-        case _             => MultiAggJoinView.read(spark, reg.viewRoot)
-      }
-      else if (reg.serveStale) {
-        reg.kind match {
-          case Kind.MultiNdv => MultiNdvJoinView.compensatedRead(spark,
-            reg.roots, reg.viewRoot, tree.edges, tree.groupCols,
-            tree.measureCols.head)
-          case _ => MultiAggJoinView.compensatedRead(spark, reg.roots,
-            reg.viewRoot, tree.edges, tree.groupCols, tree.measureCols)
-        }
-      }.getOrElse(return None)
-      else return None
-    val viewPlan = viewDf.queryExecution.analyzed
-    def viewCol(n: String): Option[Attribute] =
-      viewPlan.output.find(_.name.equalsIgnoreCase(n))
-    def groupViewCol(a: AttributeReference): Option[Attribute] =
-      normed.get(a.exprId).flatMap(viewCol).filter(_.dataType == a.dataType)
-
-    val projections = ae.map {
-      case a: AttributeReference if normed.contains(a.exprId) =>
-        Alias(groupViewCol(a).getOrElse(return None), a.name)(exprId = a.exprId)
-      case al @ Alias(a: AttributeReference, _) if normed.contains(a.exprId) =>
-        Alias(groupViewCol(a).getOrElse(return None), al.name)(exprId = al.exprId)
-      case al @ Alias(ag @ AggregateExpression(
-          Count(Seq(Literal(1, _))), _, false, None, _), _) =>
-        val c = viewCol("cnt").filter(_.dataType == ag.dataType)
-          .getOrElse(return None)
-        Alias(c, al.name)(exprId = al.exprId)
-      // sum(CAST(m AS DECIMAL(p, 2))) serves the exact stored
-      // DECIMAL(30,2) partial: casting to scale 2 at any precision ≥ the
-      // values' magnitude rounds identically. Precision FLOOR 18 (the
-      // repo-wide decimal(18,2) convention): a sub-magnitude cast like
-      // DECIMAL(4,2) overflows per-VALUE to null in the base plan
-      // (non-ANSI cast) while the stored partial counted the value — the
-      // same query would answer differently served vs declined.
-      case al @ Alias(ag @ AggregateExpression(
-          Sum(Cast(v: AttributeReference, dt: DecimalType, _, _), _),
-          _, false, None, _), _)
-          if dt.scale == 2 && dt.precision <= 30 && dt.precision >= 18 &&
-            measureNorm(v).isDefined =>
-        val c = viewCol(s"sum_${measureNorm(v).get}").getOrElse(return None)
-        Alias(Cast(c, ag.dataType), al.name)(exprId = al.exprId)
-      // avg(CAST(m AS DECIMAL(p,2))) = stored sum ÷ the stored NON-NULL
-      // count `nn_<m>` (Average divides by the non-null inputs, not the
-      // row count — [2.00, NULL] averages to 2.00), with Average's OWN
-      // decimal arithmetic replicated: operands cast to Average's
-      // internal types (sum at DECIMAL(p+10,2), count at LongDecimal), so
-      // the Divide's result type — and hence its HALF_UP rounding — is
-      // the base plan's, then the same final cast. Served == declined to
-      // the last digit. An all-NULL group has a NULL stored sum and
-      // nn = 0; NULL ÷ 0 under LEGACY eval is NULL, the base plan's
-      // answer. A view without the nn column declines.
-      case al @ Alias(ag @ AggregateExpression(
-          Average(Cast(v: AttributeReference, dt: DecimalType, _, _), _),
-          _, false, None, _), _)
-          if dt.scale == 2 && dt.precision <= 30 && dt.precision >= 18 &&
-            measureNorm(v).isDefined =>
-        val sumC = viewCol(s"sum_${measureNorm(v).get}").getOrElse(return None)
-        val nnC = viewCol(s"nn_${measureNorm(v).get}").getOrElse(return None)
-        val sumDt = DecimalType(
-          math.min(dt.precision + 10, DecimalType.MAX_PRECISION), dt.scale)
-        Alias(Cast(
-          Divide(Cast(sumC, sumDt), Cast(nnC, DecimalType(20, 0)),
-            EvalMode.LEGACY),
-          ag.dataType), al.name)(exprId = al.exprId)
-      // min/max serve only from an EXTENTS view (the stored min_/max_
-      // column must exist with the measure's own dataType — a count/sum
-      // view lacks it and declines here)
-      case al @ Alias(ag @ AggregateExpression(
-          Min(v: AttributeReference), _, false, None, _), _)
-          if measureNorm(v).isDefined =>
-        val c = viewCol(s"min_${measureNorm(v).get}")
-          .filter(_.dataType == ag.dataType).getOrElse(return None)
-        Alias(c, al.name)(exprId = al.exprId)
-      case al @ Alias(ag @ AggregateExpression(
-          Max(v: AttributeReference), _, false, None, _), _)
-          if measureNorm(v).isDefined =>
-        val c = viewCol(s"max_${measureNorm(v).get}")
-          .filter(_.dataType == ag.dataType).getOrElse(return None)
-        Alias(c, al.name)(exprId = al.exprId)
-      // the datasketches distinct-count shape — served from an NDV-kind
-      // view's merged-sketch estimate (register-max union makes it
-      // bit-equal to the single-pass aggregate over the tree); the lgK
-      // must be the engine's own, and the distinct attribute normalizes
-      // through the tree onto the registered column (a distinct-count
-      // over any edge-key spelling of it is value-identical)
-      case al @ Alias(HllSketchEstimate(AggregateExpression(
-          HllSketchAgg(u: AttributeReference, lgk, _, _), _, false, None, _)), _)
-          if reg.kind == Kind.MultiNdv && lgk.foldable &&
-            lgk.eval() == graft.sources.NdvView.LgK &&
-            measureNorm(u).isDefined =>
-        val c = viewCol(s"approx_${measureNorm(u).get}")
-          .filter(_.dataType == al.dataType).getOrElse(return None)
-        Alias(c, al.name)(exprId = al.exprId)
-      case _ => return None // decline, never approximate
+    val measures = tree.measureCols.map(_.toLowerCase).toSet
+    val outs = pick.outputs(ae)(Serving.exactAgg(_, hit.measureNorm(ctx, measures),
+      Serving.TreePartials)).getOrElse(return None)
+    val viewDf = reg.kind match {
+      case Kind.MultiNdv => Serving.frame(reg, hit.fresh)(
+        MultiNdvJoinView.read(spark, reg.viewRoot))(
+        MultiNdvJoinView.compensatedRead(spark, reg.roots, reg.viewRoot, tree.edges,
+          tree.groupCols, tree.measureCols.head))
+      case _ => Serving.frame(reg, hit.fresh)(
+        MultiAggJoinView.read(spark, reg.viewRoot))(
+        MultiAggJoinView.compensatedRead(spark, reg.roots, reg.viewRoot, tree.edges,
+          tree.groupCols, tree.measureCols))
     }
-    var mappable = true
-    val mapped = filters.map(_.transform {
-      case a: AttributeReference =>
-        groupViewCol(a) match {
-          case Some(vc) => vc
-          case None     => mappable = false; a
-        }
-    })
-    if (!mappable) return None
-    val base =
-      if (mapped.isEmpty) viewPlan
-      else Filter(mapped.reduce(And), viewPlan)
-    Some(Project(projections, base))
+    viewDf.flatMap(pick.plan(_, outs))
   }
 }

@@ -3,13 +3,14 @@ package graft.plans
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.expressions._
 import org.apache.spark.sql.catalyst.expressions.aggregate.{AggregateExpression, ApproximatePercentile}
-import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, Filter, LogicalPlan, Project}
+import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, LogicalPlan}
 import org.apache.spark.sql.catalyst.rules.Rule
 import org.apache.spark.sql.functions.{col, max, when}
-import org.apache.spark.sql.types.{Decimal, DoubleType, LongType}
+import org.apache.spark.sql.types.{Decimal, DoubleType}
 
 import graft.sources.{MultiQuantileJoinView, QuantileView}
 import MaterializedViews.{Grain, Kind, Reg}
+import Serving.Onto
 
 /** Facade over [[MaterializedViews]] for maintained single-table
   * quantile views (kind `Quantile`, one per (source, grain)) the
@@ -123,6 +124,17 @@ class QuantileRewriteRule(spark: SparkSession) extends Rule[LogicalPlan] {
       case _ => None
     }
 
+  /** The distinct phis the outputs ask of a `valueOk` column, and each
+    * percentile output onto its widened `__q<i>` column (`i` = the phi's
+    * position). None when no output asks for a percentile. */
+  private def phis(ae: Seq[NamedExpression], valueOk: AttributeReference => Boolean):
+      Option[(Seq[Double], Alias => Option[Onto])] = {
+    def phi(al: Alias): Option[Double] = phiOf(al).filter(p => valueOk(p._1)).map(_._2)
+    val ps = ae.flatMap { case al: Alias => phi(al); case _ => None }.distinct
+    if (ps.isEmpty) None
+    else Some((ps, (al: Alias) => phi(al).map(p => Serving.column(s"__q${ps.indexOf(p)}"))))
+  }
+
   /** One est column per requested phi — `__q<i>` keyed by position in
     * `phis` — from the long (keys…, phi, est) serve frame. quantilesOf
     * emits exactly one row per (group, phi) (the rank-t bin is unique),
@@ -138,76 +150,17 @@ class QuantileRewriteRule(spark: SparkSession) extends Rule[LogicalPlan] {
 
   // ---- single-table arm --------------------------------------------------
 
+  /** The shared single-table grain match ([[Serving.grainMatch]]) over
+    * the view's `value` column. */
   private def rewriteSingle(ge: Seq[Expression], ae: Seq[NamedExpression],
                             child: LogicalPlan): Option[LogicalPlan] = {
-    val (rel, filters) = MultiTreeMatch.scan(child).getOrElse(return None)
-    val paths = MaterializedViews.canonPaths(rel).getOrElse(return None)
-    // grouping must be exactly (metric, e div G) for a registered G
-    val (metricAttr, bucketExpr, grainSec) = ge match {
-      case Seq(m: AttributeReference, d) if m.name.equalsIgnoreCase("metric") =>
-        d match {
-          case IntegralDivide(a: AttributeReference, g, _)
-              if g.foldable && a.dataType == LongType &&
-                a.name.equalsIgnoreCase("e") =>
-            val gs = g.eval() match {
-              case l: java.lang.Long    => l.longValue()
-              case i: java.lang.Integer => i.longValue()
-              case dec: Decimal         => dec.toLong
-              case _                    => return None
-            }
-            (m, d, gs)
-          case _ => return None
-        }
-      case _ => return None
-    }
-    val (reg, fresh) = MaterializedViews.all.iterator.flatMap {
-      case reg @ Reg(Kind.Quantile, _, _, _, Grain(`grainSec`)) =>
-        MaterializedViews.probe(reg).collect {
-          case (Seq(dirs), f) if dirs == paths => (reg, f)
-        }
-      case _ => None
-    }.nextOption().getOrElse(return None)
-    if (!filters.forall(_.references.subsetOf(AttributeSet(metricAttr))))
-      return None
-    // every aggregate output must be metric, the bucket, or a phi shape
-    // of the view's `value` column
-    val phis = ae.flatMap {
-      case al: Alias => phiOf(al).filter(_._1.name.equalsIgnoreCase("value"))
-        .map(_._2)
-      case _ => Seq.empty
-    }.distinct
-    if (phis.isEmpty) return None
-    val longDf =
-      if (fresh) QuantileView.quantiles(spark, reg.viewRoot, phis)
-      else if (reg.serveStale)
-        QuantileView.compensatedQuantiles(spark, reg.roots.head, reg.viewRoot,
-          phis, grainSec).getOrElse(return None)
-      else return None
-    val viewPlan =
-      widen(longDf, Seq("metric", "bucket"), phis).queryExecution.analyzed
-    def viewCol(n: String): Option[Attribute] =
-      viewPlan.output.find(_.name.equalsIgnoreCase(n))
-    val projections = ae.map {
-      case m: AttributeReference if m.exprId == metricAttr.exprId =>
-        Alias(viewCol("metric").getOrElse(return None), m.name)(exprId = m.exprId)
-      case al @ Alias(d, _) if d.semanticEquals(bucketExpr) =>
-        Alias(viewCol("bucket").getOrElse(return None), al.name)(exprId = al.exprId)
-      case al: Alias =>
-        phiOf(al).filter(_._1.name.equalsIgnoreCase("value")) match {
-          case Some((_, p)) =>
-            Alias(viewCol(s"__q${phis.indexOf(p)}").getOrElse(return None),
-              al.name)(exprId = al.exprId)
-          case None => return None
-        }
-      case _ => return None
-    }
-    val base =
-      if (filters.isEmpty) viewPlan
-      else Filter(filters.map(_.transform {
-        case a: AttributeReference if a.exprId == metricAttr.exprId =>
-          viewCol("metric").get
-      }).reduce(And), viewPlan)
-    Some(Project(projections, base))
+    val g = Serving.grainMatch(ge, child).getOrElse(return None)
+    val (reg, fresh) = g.hit(Kind.Quantile).getOrElse(return None)
+    val (ps, phiOut) = phis(ae, _.name.equalsIgnoreCase("value")).getOrElse(return None)
+    val outs = g.outputs(ae, "bucket")(phiOut).getOrElse(return None)
+    Serving.frame(reg, fresh)(QuantileView.quantiles(spark, reg.viewRoot, ps))(
+      QuantileView.compensatedQuantiles(spark, reg.roots.head, reg.viewRoot, ps, g.seconds))
+      .flatMap(df => g.plan(widen(df, Seq("metric", "bucket"), ps), outs))
   }
 
   // ---- multiway arm --------------------------------------------------------
@@ -220,74 +173,21 @@ class QuantileRewriteRule(spark: SparkSession) extends Rule[LogicalPlan] {
     * leaf↔table bijection on current-snapshot dirs, exact edge-set
     * equality, group attrs normalizing onto the registered groups,
     * filters over groups only — and the value attribute resolves through
-    * the tree onto the registered column's OWNING table. FRESH serves
-    * the stored counts; STALE + `serveStale` serves the telescoped
-    * delta-compensated merge (sound over churn gaps — signed counts
-    * retract); anything else declines, never a silent partial serve. */
+    * the tree onto the registered column's OWNING table. */
   private def rewriteMulti(ge: Seq[Expression], ae: Seq[NamedExpression],
                            child: LogicalPlan): Option[LogicalPlan] = {
-    val groupAttrs = ge.map {
-      case a: AttributeReference => a
-      case _                     => return None
-    }
     val (ctx, hits) = MultiTreeMatch.candidates(child, Kind.MultiQuantile)
       .getOrElse(return None)
-    val matched = hits.flatMap(h => h.groupNorm(ctx, groupAttrs).map(h -> _))
-    val (hit, normed) = matched.find(_._1.fresh)
-      .orElse(matched.headOption).getOrElse(return None)
-    val groupingSet = AttributeSet(groupAttrs)
-    if (!ctx.filters.forall(_.references.subsetOf(groupingSet))) return None
-    val (reg, tree) = (hit.reg, hit.tree)
-    val valueSet = Set(tree.measureCols.head
-      .toLowerCase(java.util.Locale.ROOT))
-    def valueOk(v: AttributeReference): Boolean =
-      hit.measureNorm(ctx, valueSet)(v).isDefined
-    val phis = ae.flatMap {
-      case al: Alias => phiOf(al).filter(p => valueOk(p._1)).map(_._2)
-      case _         => Seq.empty
-    }.distinct
-    if (phis.isEmpty) return None
-    val longDf =
-      if (hit.fresh)
-        MultiQuantileJoinView.quantiles(spark, reg.viewRoot, phis)
-      else if (reg.serveStale)
-        MultiQuantileJoinView.compensatedQuantiles(spark, reg.roots,
-          reg.viewRoot, tree.edges, tree.groupCols,
-          tree.measureCols.head, phis, tree.bins)
-          .getOrElse(return None)
-      else return None
-    val viewPlan =
-      widen(longDf, tree.groupCols, phis).queryExecution.analyzed
-    def viewCol(n: String): Option[Attribute] =
-      viewPlan.output.find(_.name.equalsIgnoreCase(n))
-    def groupViewCol(a: AttributeReference): Option[Attribute] =
-      normed.get(a.exprId).flatMap(viewCol).filter(_.dataType == a.dataType)
-    val projections = ae.map {
-      case a: AttributeReference if normed.contains(a.exprId) =>
-        Alias(groupViewCol(a).getOrElse(return None), a.name)(exprId = a.exprId)
-      case al @ Alias(a: AttributeReference, _) if normed.contains(a.exprId) =>
-        Alias(groupViewCol(a).getOrElse(return None), al.name)(exprId = al.exprId)
-      case al: Alias =>
-        phiOf(al).filter(p => valueOk(p._1)) match {
-          case Some((_, p)) =>
-            Alias(viewCol(s"__q${phis.indexOf(p)}").getOrElse(return None),
-              al.name)(exprId = al.exprId)
-          case None => return None
-        }
-      case _ => return None
-    }
-    var mappable = true
-    val mapped = ctx.filters.map(_.transform {
-      case a: AttributeReference =>
-        groupViewCol(a) match {
-          case Some(vc) => vc
-          case None     => mappable = false; a
-        }
-    })
-    if (!mappable) return None
-    val base =
-      if (mapped.isEmpty) viewPlan
-      else Filter(mapped.reduce(And), viewPlan)
-    Some(Project(projections, base))
+    val pick = MultiTreeMatch.pick(ctx, hits, ge).getOrElse(return None)
+    val (reg, tree) = (pick.hit.reg, pick.hit.tree)
+    val valueSet = Set(tree.measureCols.head.toLowerCase(java.util.Locale.ROOT))
+    val (ps, phiOut) = phis(ae, pick.hit.measureNorm(ctx, valueSet)(_).isDefined)
+      .getOrElse(return None)
+    val outs = pick.outputs(ae)(phiOut).getOrElse(return None)
+    Serving.frame(reg, pick.hit.fresh)(
+      MultiQuantileJoinView.quantiles(spark, reg.viewRoot, ps))(
+      MultiQuantileJoinView.compensatedQuantiles(spark, reg.roots, reg.viewRoot,
+        tree.edges, tree.groupCols, tree.measureCols.head, ps, tree.bins))
+      .flatMap(df => pick.plan(widen(df, tree.groupCols, ps), outs))
   }
 }

@@ -101,21 +101,21 @@ object JoinView {
     * the IN-pushdown restriction path (below that, one restriction costs
     * ONE Spark job and the standing scan prunes by an In filter; above
     * it, the bloom + broadcast-join path). Bounds driver memory at
-    * cap × tuple-width (≈ a few MB at the default) — the same
-    * model-sized-collect posture as bloom sizing and PQ codebooks. */
-  private[graft] val SmallKeyCapConf = "spark.graft.join.smallKeyCap"
-  // 1024, not larger: a bigger In-set would still be cheap to EXECUTE,
-  // but every plan/event stringification enumerates In values
-  // (sources.In.toString and InSet.toString are untruncated), measured
-  // as seconds of driver string-building per lifecycle at 12k+ keys
-  private[graft] val SmallKeyCapDefault = 1024
+    * cap × tuple-width (≈ a few MB) — the same
+    * model-sized-collect posture as bloom sizing and PQ codebooks.
+    *
+    * 1024, not larger: a bigger In-set would still be cheap to EXECUTE,
+    * but every plan/event stringification enumerates In values
+    * (sources.In.toString and InSet.toString are untruncated), measured
+    * as seconds of driver string-building per lifecycle at 12k+ keys. */
+  private[graft] val SmallKeyCap = 1024
 
   /** The distinct key tuples of a delta/dirty set, probed ONCE per
     * restriction (optimization-guide §1.2: fewer passes/actions —
     * the previous shape paid FOUR driver actions per restriction:
     * checkpoint, min/max, count, bloom build).
     *
-    *   - SMALL sets (≤ [[SmallKeyCapConf]], inlineable key types): the
+    *   - SMALL sets (≤ [[SmallKeyCap]], inlineable key types): the
     *     tuples live on the driver after ONE job; `df` is a
     *     LocalRelation, range and count are driver-computed, and
     *     [[prefiltered]] restricts with an exact In filter that reaches
@@ -179,11 +179,9 @@ object JoinView {
            org.apache.spark.sql.types.ShortType => true
       case _ => false
     }
-    val cap = spark.conf.getOption(SmallKeyCapConf)
-      .map(_.toInt).getOrElse(SmallKeyCapDefault)
     // ONE full pass computes the distinct (checkpointed — every later
     // probe is partition-local over it), then one fused tiny aggregate
-    // for (count, head range). A limit(cap).collect() probe instead
+    // for (count, head range). A limit(SmallKeyCap).collect() probe instead
     // would pay CollectLimit's incremental take — several SEQUENTIAL
     // scheduling rounds per probe (measured slower than the jobs saved).
     val ck = sel.localCheckpoint(true)
@@ -197,8 +195,8 @@ object JoinView {
     val n = st.getLong(0)
     val lo = if (headIntegral && !st.isNullAt(1)) Some(st.getLong(1)) else None
     val hi = if (headIntegral && !st.isNullAt(2)) Some(st.getLong(2)) else None
-    if (n <= cap && sel.schema.forall(f => inlineable(f.dataType))) {
-      val rows = ck.collect() // tiny: ≤ cap checkpointed tuples
+    if (n <= SmallKeyCap && sel.schema.forall(f => inlineable(f.dataType))) {
+      val rows = ck.collect() // tiny: ≤ SmallKeyCap checkpointed tuples
       new DeltaKeys(
         spark.createDataFrame(java.util.Arrays.asList(rows: _*), sel.schema),
         n, headIntegral, lo, hi, Some(rows))

@@ -3,8 +3,9 @@ package graft
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-import graft.plans.MaterializedAggJoins
-import graft.sources.{NdvJoinView, NdvView, SnapshotStore}
+import graft.plans.{MaterializedAggJoins, MaterializedMultiJoins}
+import graft.sources.{MultiNdvJoinView, NdvView, SnapshotStore}
+import graft.sources.MultiAggJoinView.Edge
 
 /** Distinct-count-over-join view contract: after ANY commit sequence the
   * merged-sketch estimate is BIT-EQUAL to a single-pass
@@ -37,11 +38,11 @@ class NdvJoinViewSpec extends SparkSpec {
   }
 
   private def refresh(l: String, r: String, v: String): Int =
-    NdvJoinView.refresh(spark, l, r, v, Seq("c_id"), Seq("o_cust"),
+    MultiNdvJoinView.refresh(spark, Seq(l, r), v, Seq(Edge(0, Seq("c_id"), Seq("o_cust"))),
       Seq("seg", "status"), "user_id")
 
   private def viewRows(v: String): Set[(String, String, Long)] =
-    NdvJoinView.read(spark, v).collect()
+    MultiNdvJoinView.read(spark, v).collect()
       .map(x => (x.getAs[String]("seg"), x.getAs[String]("status"),
         x.getAs[Long]("approx_user_id"))).toSet
 
@@ -98,7 +99,7 @@ class NdvJoinViewSpec extends SparkSpec {
 
       // compact folds partials; content unchanged; idempotent replay
       val content = viewRows(v)
-      NdvJoinView.compact(spark, v)
+      MultiNdvJoinView.compact(spark, v)
       assert(viewRows(v) == content)
       val before = SnapshotStore.currentVersion(v)
       refresh(l, r, v)
@@ -111,7 +112,7 @@ class NdvJoinViewSpec extends SparkSpec {
       SnapshotStore.append(custDF(0L to 30L: _*), l)
       SnapshotStore.append(ordersDF(1L to 90L: _*), r)
       refresh(l, r, v)
-      MaterializedAggJoins.enableNdv(l, r, v, "c_id", "o_cust",
+      MaterializedMultiJoins.enableNdv(Seq(l, r), v, Seq(Edge(0, Seq("c_id"), Seq("o_cust"))),
         Seq("seg", "status"), "user_id")
       def q(): DataFrame = {
         val lf = SnapshotStore.read(spark, l)
@@ -132,7 +133,7 @@ class NdvJoinViewSpec extends SparkSpec {
       assert(got == rows(q()) && got.nonEmpty,
         "served estimate must be bit-equal to the single-pass aggregate")
 
-      MaterializedAggJoins.enableNdv(l, r, v, "c_id", "o_cust",
+      MaterializedMultiJoins.enableNdv(Seq(l, r), v, Seq(Edge(0, Seq("c_id"), Seq("o_cust"))),
         Seq("seg", "status"), "user_id")
       // a SUM over the join must not be served by an ndv view
       val sumQ = {
@@ -162,7 +163,7 @@ class NdvJoinViewSpec extends SparkSpec {
       SnapshotStore.append(custDF(0L to 30L: _*), l)
       SnapshotStore.append(ordersDF(1L to 60L: _*), r)
       refresh(l, r, v)
-      MaterializedAggJoins.enableNdv(l, r, v, "c_id", "o_cust",
+      MaterializedMultiJoins.enableNdv(Seq(l, r), v, Seq(Edge(0, Seq("c_id"), Seq("o_cust"))),
         Seq("seg", "status"), "user_id", serveStale = true)
       def q(): DataFrame = {
         val lf = SnapshotStore.read(spark, l)
@@ -185,7 +186,7 @@ class NdvJoinViewSpec extends SparkSpec {
       assert(got == rows(q()) && got.nonEmpty,
         "compensated sketch union must be bit-equal to the single pass")
 
-      MaterializedAggJoins.enableNdv(l, r, v, "c_id", "o_cust",
+      MaterializedMultiJoins.enableNdv(Seq(l, r), v, Seq(Edge(0, Seq("c_id"), Seq("o_cust"))),
         Seq("seg", "status"), "user_id", serveStale = true)
       SnapshotStore.deleteWhere(spark, r, col("o_id") === 5)
       assert(!graft.plans.PlanProbe.scansAny(q(), "/view"),

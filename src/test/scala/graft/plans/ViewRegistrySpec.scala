@@ -210,8 +210,7 @@ class ViewRegistrySpec extends SparkSpec with BeforeAndAfterAll {
     // magg and mndv again, through the two-table facade
     val aggJoin = magg.copy(enable = () => MaterializedAggJoins.enable(cust, orders,
       v("magg"), "c_id", "o_cust", Seq("seg"), Seq("total")), facade = MaterializedAggJoins)
-    val ndvJoin = mndv.copy(enable = () => MaterializedAggJoins.enableNdv(cust, orders,
-      v("mndv"), "c_id", "o_cust", Seq("seg"), "o_id"), facade = MaterializedAggJoins)
+    val ndvJoin = mndv.copy(facade = MaterializedAggJoins)
     val all = Seq(rollup, ndv, quantile, join, aggJoin, ndvJoin, mquantile, tree3)
     val facades: Seq[(String, MaterializedViews.Facade, Set[String], String)] = Seq(
       ("Rollups", MaterializedRollups, Set("rollup_a", "ndv"), src),
@@ -232,6 +231,50 @@ class ViewRegistrySpec extends SparkSpec with BeforeAndAfterAll {
       }
     }
     unregisterAll()
+  }
+
+  test("one aggregate-shape table: the single-table and tree rules serve and decline alike") {
+    // (aggregate of %s, over the sketch column, serves from both views, or
+    // only from the single-table one — the tree view keeps no extents)
+    val shapes: Seq[(String, Boolean, Boolean, Boolean)] = Seq(
+      ("count(1)", false, true, true),
+      ("sum(CAST(%s AS DECIMAL(18,2)))", false, true, true),
+      ("sum(CAST(%s AS DECIMAL(30,2)))", false, true, true),
+      ("avg(CAST(%s AS DECIMAL(18,2)))", false, true, true),
+      ("avg(CAST(%s AS DECIMAL(30,2)))", false, true, true),
+      ("min(%s)", false, true, false),
+      ("max(%s)", false, true, false),
+      (s"hll_sketch_estimate(hll_sketch_agg(%s, ${NdvView.LgK}))", true, true, true),
+      ("sum(CAST(%s AS DECIMAL(17,2)))", false, false, false),
+      ("sum(CAST(%s AS DECIMAL(31,2)))", false, false, false),
+      ("sum(CAST(%s AS DECIMAL(18,3)))", false, false, false),
+      ("sum(%s)", false, false, false),
+      (s"hll_sketch_estimate(hll_sketch_agg(%s, ${NdvView.LgK - 1}))", true, false, false),
+      ("approx_count_distinct(%s)", true, false, false))
+    def single(shape: String, sketch: Boolean): DataFrame =
+      byDay(series).agg(expr(shape.format(if (sketch) "user_id" else "value")).as("a"))
+    def tree(shape: String, sketch: Boolean): DataFrame =
+      overJoin(shape.format(if (sketch) "o_id" else "total") + " AS a")
+    def rows(df: DataFrame): Set[String] = df.collect().map(_.toString).toSet
+    val views = Seq(rollup, ndv, magg, mndv)
+    // polarity: served reads only its view; declined reads none
+    def check(what: String, df: DataFrame, view: String, serves: Boolean,
+              base: => Set[String]): Unit =
+      if (serves) {
+        assert(PlanProbe.scansOnly(df, view), s"$what must serve")
+        assert(rows(df) == base, s"$what: served value differs from the base plan's")
+      } else assert(!views.exists(s => PlanProbe.scansAny(df, s.view)), s"$what must decline")
+    unregisterAll()
+    val base = shapes.collect { case (shape, sketch, true, treeToo) =>
+      shape -> (rows(single(shape, sketch)),
+        if (treeToo) rows(tree(shape, sketch)) else Set.empty[String])
+    }.toMap
+    views.foreach(_.enable())
+    try for ((shape, sketch, serves, treeServes) <- shapes) {
+      val (oneView, treeView) = if (sketch) (ndv.view, mndv.view) else (rollup.view, magg.view)
+      check(s"single-table $shape", single(shape, sketch), oneView, serves, base(shape)._1)
+      check(s"tree $shape", tree(shape, sketch), treeView, treeServes, base(shape)._2)
+    } finally unregisterAll()
   }
 }
 
